@@ -102,9 +102,11 @@ object OptProbe {
         val dir = graft.GraftQuery.tempDir("graft_bm25topk_probe") + "/idx"
         val idx = graft.operators.Bm25Index.buildAndSave(
           docs, dir, "doc_id", "text", buckets = 64)
-        val st = spark.read.parquet(s"$dir/stats").head()
+        val store = new org.apache.hadoop.fs.Path(dir)
+        def sub(name: String) = graft.operators.CommitLog.readSub(spark, store, name).get
+        val st = sub("stats").head()
         val n = st.getLong(st.fieldIndex("n"))
-        val avgdl = st.getDouble(st.fieldIndex("avgdl"))
+        val avgdl = st.getLong(st.fieldIndex("sum_dl")).toDouble / n
         val queries = Seq(
           "q1" -> "spark join window", "q2" -> "merge batch stream",
           "q3" -> "vector hash scan")
@@ -118,12 +120,12 @@ object OptProbe {
           math.floorMod(
             spark.range(1).select(hash(lit(t))).head().getInt(0), 64))
           .distinct
-        def hit = spark.read.parquet(s"$dir/postings")
+        def hit = sub("postings")
           .filter(col("tb").isin(tbs: _*))
           .join(qterms, Seq("term"))
         def score(withDf: org.apache.spark.sql.DataFrame): Long = {
           withDf
-            .join(spark.read.parquet(s"$dir/doclen"), Seq("doc_id"))
+            .join(sub("doclen"), Seq("doc_id"))
             .withColumn("graft_t",
               log(lit(1.0) + (lit(n.toDouble) - col("df") + 0.5) / (col("df") + 0.5)) *
                 (col("tf") * (k1 + 1)) /
@@ -199,8 +201,8 @@ object OptProbe {
       if (which("bm25")) {
         val docs = sources.Tables.documents(spark, sfDir)
         val dir = graft.GraftQuery.tempDir("graft_bm25_probe") + "/idx"
-        time("bm25 buildAndSaveLog") {
-          graft.operators.Bm25Index.buildAndSaveLog(
+        time("bm25 buildAndSave") {
+          graft.operators.Bm25Index.buildAndSave(
             docs.filter(col("doc_id") % 2 === 0), dir, "doc_id", "text",
             buckets = 16)
         }
@@ -208,8 +210,8 @@ object OptProbe {
           graft.operators.Bm25Index.append(spark, dir,
             docs.filter(col("doc_id") % 2 === 1))
         }
-        time("bm25 loadLog+topK") {
-          graft.operators.Bm25Index.loadLog(spark, dir)
+        time("bm25 load+topK") {
+          graft.operators.Bm25Index.load(spark, dir)
             .topK(
               Seq(
                 "q1" -> "spark join window",

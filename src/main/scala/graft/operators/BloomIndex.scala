@@ -52,8 +52,8 @@ object BloomIndex {
       numBits: Long = 8000000L): Long = {
     val store = new Path(targetPath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(CommitLog.isLog(fs, store),
-      s"bloom index needs a commit-log store ($targetPath has no _log/)")
+    CommitLog.adopt(spark, store)
+    require(CommitLog.isLog(fs, store), s"bloom index target $targetPath does not exist")
     val v = CommitLog.currentVersion(fs, store)
     val snapshot = CommitLog.read(spark, store, Some(v)).getOrElse(return v)
     val storeUri = fs.makeQualified(store).toUri.getPath

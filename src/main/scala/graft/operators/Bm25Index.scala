@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
   * that corpus pass once at build and then touches only the postings of
   * the QUERY'S terms per call.
   *
-  * Layout:
+  * Layout (one commit-log store, see [[Bm25Index.buildAndSave]]):
   * {{{
   * idx/postings/tb=<murmur3(term) % buckets>/   (term, doc_id, tf)
   * idx/doclen/                                   (doc_id, dl)
-  * idx/stats/                                    (n, avgdl) — 1 row
+  * idx/stats/                                    (n, sum_dl, buckets, …) — 1 row
   * }}}
   *
   * The postings table is hive-partitioned by a hash bucket of the term,
@@ -116,82 +116,15 @@ object Bm25Index {
   }
 
   /** Build and persist the index: ONE tokenize pass feeds postings and
-    * doc lengths, exactly like [[Bm25.topK]]'s online form. */
-  def buildAndSave(
-      docs: DataFrame,
-      path: String,
-      idCol: String,
-      textCol: String,
-      buckets: Int = 64): Bm25Index = {
-    require(buckets > 0)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // One tokenize+tf pass for postings; doclen is a NARROW projection
-    // (r18-opt: the lazy `toks` frame was recomputed by every action —
-    // postings, doclen and stats each re-tokenized AND re-shuffled the
-    // corpus; but dl ≡ the token count per doc ≡ size(split(text)), a
-    // per-row expression needing no explode and no exchange at all —
-    // the null-text filter reproduces explode's drop of null docs).
-    // Stats aggregates the just-written (tiny, flat) doclen table.
-    docs.select(
-        col(idCol).as("doc_id"),
-        explode(split(col(textCol), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .withColumn("tb", pmod(hash(col("term")), lit(buckets)))
-      .write.partitionBy("tb").parquet(s"$path/postings")
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        size(split(col(textCol), " ")).cast("long").as("dl"))
-      .write.parquet(s"$path/doclen")
-    // stats via collect-then-write: the SAME single scan of the flat
-    // doclen table, now also carrying the in-batch duplicate-id guard
-    // (r19, per the r18 advice): doclen is one row per input row while
-    // postings merges per (doc_id, term), so a duplicate id inside one
-    // build batch would silently inflate n/avgdl and fan out topK's
-    // doclen join — refuse loudly instead, mirroring append()'s
-    // cross-batch guard.
-    val a = spark.read.parquet(s"$path/doclen")
-      .agg(count(lit(1)).as("cnt"), avg(col("dl")).as("avgdl"),
-        count(col("doc_id")).as("cntid"),
-        count_distinct(col("doc_id")).as("ndist"))
-      .head()
-    require(a.getLong(2) == a.getLong(3),
-      s"bm25 build batch contains duplicate doc ids " +
-        s"(${a.getLong(2)} rows, ${a.getLong(3)} distinct) — a doc indexed " +
-        "twice would double its postings; dedup the corpus first")
-    writeOneRow(spark, s"$path/stats",
-      new org.apache.spark.sql.types.StructType()
-        .add("n", "long", nullable = false)
-        .add("avgdl", "double")
-        .add("buckets", "int", nullable = false),
-      org.apache.spark.sql.Row(a.getLong(0),
-        if (a.isNullAt(1)) null else java.lang.Double.valueOf(a.getDouble(1)),
-        buckets))
-    load(spark, path)
-  }
-
-  def load(spark: SparkSession, path: String): Bm25Index = {
-    val stats = spark.read.parquet(s"$path/stats").head()
-    new Bm25Index(
-      path,
-      spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/doclen"),
-      stats.getLong(stats.fieldIndex("n")),
-      stats.getDouble(stats.fieldIndex("avgdl")),
-      stats.getInt(stats.fieldIndex("buckets")))
-  }
-
-  // ------------------------------------------------- commit-log variant
-
-  /** The log-backed index: same three sub-tables, maintained as ONE
-    * commit-log store so an [[append]] publishes postings + doclen +
-    * stats in a single atomic manifest (the multi-table-store shape
-    * [[CommitLog.readSub]] exists for). What the log buys over the
-    * Swap-based [[IvfIndex.append]] machinery:
+    * doc lengths, exactly like [[Bm25.topK]]'s online form. The three
+    * sub-tables are maintained as ONE commit-log store so an [[append]]
+    * publishes postings + doclen + stats in a single atomic manifest
+    * (the multi-table-store shape [[CommitLog.readSub]] exists for). A
+    * build over an existing index replaces it as a new version. What the
+    * log buys over three independently written dirs:
     *
     *  - atomicity ACROSS tables — a crash mid-append leaves the previous
-    *    version fully intact (no postings-updated/stats-stale window a
-    *    three-dir swap would have);
+    *    version fully intact (no postings-updated/stats-stale window);
     *  - snapshot isolation — a query pinned at version v scores against
     *    consistent (postings, doclen, stats) even while appends land;
     *  - time travel — rank against last week's corpus for free.
@@ -209,7 +142,7 @@ object Bm25Index {
     *
     * Layout under one log root:
     * {{{
-    * idx/_graft_log/                       numbered manifests (CAS publish)
+    * idx/_log/                             numbered manifests (CAS publish)
     * idx/postings/tb=<bucket>/             (term, doc_id, tf) — additive
     * idx/doclen/                           (doc_id, dl)       — additive
     * idx/stats/                            1 row, REPLACED per append
@@ -219,7 +152,7 @@ object Bm25Index {
     * stats dir; two racing appends conflict there and serialize loudly
     * through the log's OCC retry contract.
     */
-  def buildAndSaveLog(
+  def buildAndSave(
       docs: DataFrame,
       path: String,
       idCol: String,
@@ -236,7 +169,7 @@ object Bm25Index {
       CommitLog.currentVersion(Swap.fsOf(spark, store), store),
       retireNames = Nil, wholeStore = true,
       meta = meta + ("operation" -> "bm25-build"))
-    loadLog(spark, path)
+    load(spark, path)
   }
 
   /** Incrementally add documents to a log-backed index — one tokenize
@@ -256,12 +189,15 @@ object Bm25Index {
     val store = new org.apache.hadoop.fs.Path(path)
     val fs = Swap.fsOf(spark, store)
     require(CommitLog.isLog(fs, store),
-      s"$path is not a log-backed BM25 index — build with buildAndSaveLog " +
-        "(plain buildAndSave stores have no append path)")
+      s"$path is not a log-backed BM25 index — it was built before the " +
+        "commit log and has no append path; rebuild it with buildAndSave")
     val base = CommitLog.currentVersion(fs, store)
     val st = CommitLog.readSub(spark, store, "stats", Some(base))
       .getOrElse(throw new IllegalStateException(s"no stats at $path v$base"))
       .head()
+    require(st.schema.fieldNames.contains("sum_dl"),
+      s"$path was built before the commit log (its stats hold no token " +
+        "total) and has no append path; rebuild it with buildAndSave")
     val (n0, sumDl0, buckets) = (
       st.getLong(st.fieldIndex("n")),
       st.getLong(st.fieldIndex("sum_dl")),
@@ -291,33 +227,40 @@ object Bm25Index {
     AppendStats(n2 - n0, n2, sum2.toDouble / n2, v)
   }
 
-  /** Load a log-backed index, optionally pinned at `version` (snapshot-
-    * isolated: concurrent appends never shift this index's scores). */
-  def loadLog(
+  /** Load an index, optionally pinned at `version` (snapshot-isolated:
+    * concurrent appends never shift this index's scores). An index built
+    * before the commit log is adopted first ([[CommitLog.adopt]]); its
+    * stats row holds the average doc length itself rather than the
+    * token total. */
+  def load(
       spark: SparkSession,
       path: String,
       version: Option[Long] = None): Bm25Index = {
     val store = new org.apache.hadoop.fs.Path(path)
     val fs = Swap.fsOf(spark, store)
+    CommitLog.adopt(spark, store)
     val v = version.getOrElse(CommitLog.currentVersion(fs, store))
     def sub(name: String) = CommitLog.readSub(spark, store, name, Some(v))
       .getOrElse(throw new IllegalStateException(
-        s"log-backed BM25 index at $path v$v has no $name sub-table"))
+        s"BM25 index at $path v$v has no $name sub-table"))
     val st = sub("stats").head()
     val n = st.getLong(st.fieldIndex("n"))
+    val avgdl =
+      if (st.schema.fieldNames.contains("sum_dl"))
+        st.getLong(st.fieldIndex("sum_dl")).toDouble / n
+      else st.getDouble(st.fieldIndex("avgdl"))
     new Bm25Index(
       path,
       sub("postings"),
       sub("doclen"),
       n,
-      st.getLong(st.fieldIndex("sum_dl")).toDouble / n,
+      avgdl,
       st.getInt(st.fieldIndex("buckets")))
   }
 
   /** Stage one corpus delta (postings + doclen + replacement stats)
-    * under `staging` — shared by the initial log build (base totals 0)
-    * and every append. ONE tokenize pass feeds all three, exactly like
-    * [[buildAndSave]]. */
+    * under `staging` — shared by the initial build (base totals 0) and
+    * every append. ONE tokenize pass feeds all three. */
   private def stageDelta(
       docs: DataFrame,
       idCol: String,
@@ -348,9 +291,9 @@ object Bm25Index {
         size(split(col(textCol), " ")).cast("long").as("dl"))
       .write.parquet(s"$staging/doclen")
     // stats via collect-then-write — same single doclen scan, now also
-    // the in-batch duplicate-id guard (see buildAndSave): append() only
-    // guards ids against PREVIOUS batches; a duplicate inside one delta
-    // would double-count silently.
+    // the in-batch duplicate-id guard: append() only guards ids against
+    // PREVIOUS batches; a duplicate inside one delta would double its
+    // postings and inflate n/avgdl silently.
     val a = spark.read.parquet(s"$staging/doclen")
       .agg(count(lit(1)).as("cnt"), sum(col("dl")).as("sdl"),
         count(col("doc_id")).as("cntid"),

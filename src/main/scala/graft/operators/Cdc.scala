@@ -91,7 +91,7 @@ object Cdc {
       val deletes = winners.filter(col(opCol) === "D")
         .select(keyCols.map(col): _*)
 
-      Merge.into(spark, targetPath, upserts, keyCols, log = Some(true))
+      Merge.into(spark, targetPath, upserts, keyCols)
       // safe to release after: whereIn executes its rewrite before
       // returning, and the returned frame reads only the store
       Delete.whereIn(spark, targetPath, deletes, keyCols)
@@ -124,6 +124,7 @@ object Cdc {
     require(keyCols.nonEmpty, "applyChanges needs at least one key column")
     val store = new Path(targetPath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CommitLog.adopt(spark, store)
 
     // exact-duplicate redelivery is normal at-least-once output, not a
     // corrupt feed (see applyChanges)

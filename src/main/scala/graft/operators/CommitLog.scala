@@ -3,10 +3,11 @@ package graft.operators
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Optimistic-concurrency commit log for parquet stores — the
-  * concurrent-writer upgrade path the staged-swap protocol (Swap.scala)
-  * names: a minimal Delta/Iceberg-style transaction log instead of
-  * in-place directory swaps.
+/** Optimistic-concurrency commit log for parquet stores — the one write
+  * protocol of every graft store: a minimal Delta/Iceberg-style
+  * transaction log instead of in-place directory swaps. Stores written
+  * by the retired staged-swap protocol come under the log through
+  * [[adopt]].
   *
   * Layout: data files live in the store exactly as before (hive
   * partition dirs or flat), but the TRUTH about which files make up the
@@ -48,7 +49,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * manifest content is FULLY written and closed before publication, so a
   * reader never observes a torn manifest.
   *
-  * Crash posture (simpler than the swap matrix — that is the point):
+  * Crash posture (simpler than the retired swap matrix):
   * nothing is visible until the CAS, so a crash at ANY earlier point
   * (files half-staged, files moved in, tmp manifest written) leaves the
   * table bit-for-bit at its previous version; the leftovers are orphans
@@ -77,11 +78,10 @@ object CommitLog {
     * all history) rather than on the partitions they write: two commits
     * that both carry it conflict — writers serialize fail-loud under
     * plain OCC — while readers and disjoint-partition writers of OTHER
-    * operators are unaffected. This is the commit-log replacement for
-    * the store lease: same single-writer guarantee, but enforced by the
-    * atomic manifest CAS instead of lock-file heuristics (no TTL, no
-    * stale-takeover window), and the loser knows its computation is
-    * stale, not merely that someone holds a lock. */
+    * operators are unaffected: a single-writer guarantee enforced by the
+    * atomic manifest CAS (no lock file, no TTL, no stale-takeover
+    * window), and the loser knows its computation is stale, not merely
+    * that someone holds a lock. */
   val SerialToken = "__serial__"
   /** Full file-list checkpoint cadence (replay never walks more than
     * this many manifests). */
@@ -148,20 +148,10 @@ object CommitLog {
 
   def logDir(store: Path): Path = new Path(store, LogDirName)
 
-  /** A store is log-backed iff `_log/` exists — the mode switch every
-    * store operator sniffs (existing swap-based stores keep their lease
-    * protocol untouched). */
+  /** A store is log-backed iff `_log/` exists. Every store operator
+    * writes through the log; a store without one is either a fresh path
+    * or a legacy store that [[adopt]] brings under the log. */
   def isLog(fs: FileSystem, store: Path): Boolean = fs.exists(logDir(store))
-
-  /** Session default for NEW stores ("spark.graft.store.commitLog").
-    * Existing stores keep whichever mode they were created with. */
-  def confEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.store.commitLog").exists(_.toBoolean)
-
-  /** Log mode applies when the store already has a log, or does not
-    * exist yet and the session default asks for one. */
-  def active(spark: SparkSession, fs: FileSystem, store: Path): Boolean =
-    isLog(fs, store) || (!fs.exists(store) && confEnabled(spark))
 
   // ------------------------------------------------------------- manifest IO
 
@@ -1052,6 +1042,66 @@ object CommitLog {
       casPublish(fs, tmp, new Path(logDir(store), checkpointName(v)))
       ()
     }
+
+  /** Bring a store written by the retired staged-swap protocol under the
+    * log, once: roll forward any swap its last legacy writer left half
+    * done ([[Swap.recover]]), then publish a v1 manifest listing every
+    * data file in the store as it stands. No data moves or is rewritten;
+    * the operator that called adopt then commits on top of v1 as on any
+    * log store. A no-op for log stores and fresh paths.
+    *
+    * An incremental-agg batch marker (`_graft_last_batch`, in the store
+    * or as the older `<store>._graft_last_batch` sibling) becomes v1's
+    * `batchId` meta, so the stream's replay guard survives adoption; the
+    * sibling file is removed once v1 is published. An unreadable marker
+    * fails loudly — which batches were applied is unknown.
+    *
+    * `configSidecar`: a `key=value`-per-line file in which the legacy
+    * writer pinned the store's config (the admission stores' `<store>.meta`);
+    * its entries become v1 meta — where the log layout keeps them — and
+    * the file is removed once v1 is published. Adopt checks no layout: an
+    * operator whose log layout differs from its legacy one refuses such a
+    * store BEFORE calling adopt, so a refused store is left untouched. */
+  def adopt(
+      spark: SparkSession,
+      store: Path,
+      configSidecar: Option[Path] = None): Unit = {
+    val fs = Swap.fsOf(spark, store)
+    if (isLog(fs, store)) return
+    Swap.recover(spark, store)
+    if (!fs.exists(store)) return
+    val inStore = new Path(store, IncrementalAgg.BatchMarker)
+    val sibling = new Path(store.toString + "." + IncrementalAgg.BatchMarker)
+    val marker = Seq(inStore, sibling).find(fs.exists)
+    val batchMeta = marker.map { p =>
+      val text = readFully(fs, p).trim
+      val id = scala.util.Try(text.toLong).getOrElse(
+        throw new IllegalStateException(
+          s"unreadable batch marker $p (content: " +
+            s"${if (text.isEmpty) "<empty>" else text}) — cannot tell which " +
+            "batches are applied; rebuild the store or restore the marker"))
+      "batchId" -> id.toString
+    }.toMap
+    val sidecar = configSidecar.filter(fs.exists)
+    val configMeta = sidecar.toSeq.flatMap { p =>
+      readFully(fs, p).split("\n").map(_.trim).filter(_.contains("="))
+        .map { l => val Array(k, v) = l.split("=", 2); k -> v }
+    }.toMap
+    val files = dataFilesUnder(fs, store, store)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rows = files.filter(_.endsWith(".parquet"))
+      .map(f => f -> fileFooterInfo(conf, new Path(store, f), None)._1).toMap
+    val m = Manifest(1L, Set(WholeStore), files, Nil,
+      configMeta ++ batchMeta + ("operation" -> "adopt"), fileRows = rows)
+    fs.mkdirs(logDir(store))
+    val tmp = new Path(logDir(store), ".tmp-" + java.util.UUID.randomUUID().toString)
+    writeFully(fs, tmp, renderManifest(m))
+    // a lost race means a concurrent caller adopted the same files
+    casPublish(fs, tmp, new Path(logDir(store), manifestName(1L)))
+    fs.delete(sibling, false)
+    sidecar.foreach(fs.delete(_, false))
+    ()
+  }
 
   /** Latest manifest's meta map (empty when no commits) — e.g. the
     * incremental-agg batch high-water mark, committed atomically WITH

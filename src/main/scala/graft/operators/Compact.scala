@@ -10,13 +10,10 @@ import org.apache.spark.sql.functions._
   * per tiny file) long before I/O matters.
   *
   * Protocol: stage the rewritten files FULLY, row-count-check them, then
-  * swap via two renames (same crash posture as Merge: a failure leaves
-  * either the old store or the old store in a hidden `.graft-old-<tag>-`
-  * sibling, never a half store). Staging/retired dirs are dot-prefixed
-  * so Spark/Hadoop readers skip them — a partition compaction stages
-  * INSIDE the store root, and a visible staged copy would read as a
-  * bogus partition with duplicated rows. Data content is preserved
-  * exactly; file layout is not (that is the point). Use [[Layout]]
+  * publish one [[CommitLog]] manifest that swaps them for the files they
+  * replace (same crash posture as every log writer: nothing is visible
+  * before the manifest CAS). Data content is preserved exactly; file
+  * layout is not (that is the point). Use [[Layout]]
   * writers instead when the rewrite should also re-order rows.
   */
 object Compact {
@@ -33,7 +30,7 @@ object Compact {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
 
   /** Exact row count from the parquet FOOTERS — driver-side metadata
-    * reads, no cluster job. Both the no-op stats and the pre/post-swap
+    * reads, no cluster job. Both the no-op stats and the pre/post-commit
     * parity check use this: compaction must never need a full data scan
     * just to count (at 100 TB the no-op probe would otherwise cost as
     * much as the rewrite it avoids). */
@@ -60,89 +57,49 @@ object Compact {
     files.map(p =>
       footerRows(spark, Array(fsOf(spark, p).getFileStatus(p)))).sum
 
-  /** Compact one flat parquet dir to ~`targetFileBytes` files. Returns the
-    * stats; no-ops (and skips the rewrite entirely) when the dir already
-    * has ≤ the target file count. Recovers an interrupted previous swap
-    * first (see [[Swap.recoverWholeDir]]) — a crash between the swap's two
-    * renames leaves the store path missing with the row-count-checked
-    * rewrite fully staged, and completing the rename loses nothing. The
-    * [[Swap.Hidden]] dot-prefixed sibling naming matters here: a partition
-    * compaction stages INSIDE the store root, and a visible staged copy
-    * would read as a bogus partition with duplicated rows. */
+  /** Compact one flat store to ~`targetFileBytes` files. Returns the
+    * stats; no-ops (and skips the rewrite entirely) when the store
+    * already has ≤ the target file count. A plain parquet dir is adopted
+    * first ([[CommitLog.adopt]]); the rewrite is row-count-checked from
+    * footers and published as one whole-store manifest, so read the
+    * result through [[CommitLog.read]] (the replaced files stay on disk
+    * until [[CommitLog.vacuum]]). */
   def compactDir(
       spark: SparkSession,
       dir: String,
-      targetFileBytes: Long = 128L << 20,
-      lease: Option[Swap.Lease] = None): CompactStats = {
+      targetFileBytes: Long = 128L << 20): CompactStats = {
     val target = new Path(dir)
     val fs = fsOf(spark, target)
-    // lone staging without a retired pair is unknown provenance for a
-    // compaction (the store is never first-written through a stage)
-    Swap.recoverWholeDir(spark, target, Swap.Hidden, allowLoneStaging = false)
-    val files = dataFiles(spark, target)
+    CommitLog.adopt(spark, target)
+    val readVersion = CommitLog.currentVersion(fs, target)
+    val files = CommitLog.snapshotFiles(fs, target, readVersion)
+      .map(f => fs.getFileStatus(new Path(target, f))).toArray
     val bytes = files.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val before = footerRows(spark, files)
     if (files.length <= nOut)
       return CompactStats(files.length, files.length, bytes, before)
 
-    val tag = Swap.newTag()
-    val staging = Swap.Hidden.staging(target, tag)
-    val retired = Swap.Hidden.retired(target, tag)
+    val staging = Swap.Suffix.staging(target, Swap.newTag())
     // repartition, not coalesce: coalesce folds into the SCAN tasks and
     // would chain the read parallelism to nOut; repartition keeps the
     // read wide and only funnels at the write.
-    spark.read.parquet(dir).repartition(nOut).write.parquet(staging.toString)
-    val after = footerRows(spark, dataFiles(spark, staging))
+    CommitLog.read(spark, target, Some(readVersion)).get
+      .repartition(nOut).write.parquet(staging.toString)
+    val staged = dataFiles(spark, staging)
+    val after = footerRows(spark, staged)
     if (after != before) {
       fs.delete(staging, true)
       throw new IllegalStateException(
         s"compaction row mismatch for $dir: $before -> $after (store untouched)")
     }
-    Swap.commitWholeDir(fs, target, staging, retired, lease)
-    CompactStats(files.length, dataFiles(spark, target).length, bytes, before)
+    CommitLog.commitStaged(spark, target, staging, readVersion,
+      Nil, wholeStore = true)
+    CompactStats(files.length, staged.length, bytes, before)
   }
 
-  /** Compact a hive-partitioned store: each `pcol=v` dir compacts
-    * independently, and ONLY dirs holding more than `maxFilesPerDir`
-    * files rewrite — trickle ingest concentrates small files in hot
-    * partitions, and cold partitions keep their files (and their
-    * modification identity) untouched. Returns per-partition stats for
-    * the dirs that were rewritten. */
-  def compactStore(
-      spark: SparkSession,
-      storePath: String,
-      pcol: String,
-      targetFileBytes: Long = 128L << 20,
-      maxFilesPerDir: Int = 8,
-      lease: Option[Swap.Lease] = None): Map[String, CompactStats] = {
-    val root = new Path(storePath)
-    val fs = fsOf(spark, root)
-    // A store fed only empty batches so far has no directory yet (apply()
-    // skips on empty prepare); a maintenance tick then must be a no-op,
-    // not a FileNotFoundException that crash-loops the stream.
-    if (!fs.exists(root)) return Map.empty
-    // the STORE-root lease covers every slice-dir swap below; acquire one
-    // here only when the caller (e.g. Scd2.maintain) doesn't already hold it
-    def run(l: Swap.Lease): Map[String, CompactStats] =
-      fs.listStatus(root)
-        // dot-prefixed staging/retired leftovers are invisible to Spark
-        // reads and are NOT partitions — never compact (or recurse into)
-        // them from here; compactDir's own recovery handles them
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(pcol + "="))
-        .filter(s => dataFiles(spark, s.getPath).length > maxFilesPerDir)
-        .map { s =>
-          s.getPath.getName ->
-            compactDir(spark, s.getPath.toString, targetFileBytes, Some(l))
-        }.toMap
-    lease match {
-      case Some(l) => run(l)
-      case None => Swap.withStoreLease(spark, root)(run)
-    }
-  }
-
-  /** Compact a COMMIT-LOG-backed hive-partitioned store ([[CommitLog]]):
-    * each fragmented partition rewrites into ~target-sized files and
+  /** Compact a hive-partitioned store ([[CommitLog]]-backed; a plain
+    * partitioned dir is adopted first): each fragmented partition rewrites into ~target-sized files and
     * commits its own manifest (removed = the partition's live files,
     * added = the compacted ones), so compaction is just another
     * optimistic writer — it runs lock-free beside ingest into OTHER
@@ -162,6 +119,7 @@ object Compact {
       maxFilesPerDir: Int = 8): Map[String, CompactStats] = {
     val root = new Path(storePath)
     val fs = fsOf(spark, root)
+    CommitLog.adopt(spark, root)
     val readVersion = CommitLog.currentVersion(fs, root)
     val live = CommitLog.snapshotFiles(fs, root, readVersion)
     val byDir = live.groupBy(f => f.takeWhile(_ != '/'))

@@ -44,9 +44,8 @@ object Delete {
   def where(spark: SparkSession, targetPath: String, predicate: Column): DataFrame = {
     val store = new Path(targetPath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(CommitLog.isLog(fs, store),
-      s"row-level DELETE needs a commit-log store ($targetPath has no _log/); " +
-        "legacy swap stores rewrite via Merge/whole-store paths")
+    CommitLog.adopt(spark, store)
+    require(CommitLog.isLog(fs, store), s"DELETE target $targetPath does not exist")
 
     val readVersion = CommitLog.currentVersion(fs, store)
     val snapshot = CommitLog.read(spark, store, Some(readVersion)).getOrElse {
@@ -107,8 +106,8 @@ object Delete {
     require(keyCols.nonEmpty, "set-based DELETE needs at least one key column")
     val store = new Path(targetPath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(CommitLog.isLog(fs, store),
-      s"set-based DELETE needs a commit-log store ($targetPath has no _log/)")
+    CommitLog.adopt(spark, store)
+    require(CommitLog.isLog(fs, store), s"DELETE target $targetPath does not exist")
 
     val readVersion = CommitLog.currentVersion(fs, store)
     val snapshot = CommitLog.read(spark, store, Some(readVersion)).getOrElse {
@@ -185,8 +184,8 @@ object Delete {
     val store = new Path(targetPath)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = store.getFileSystem(conf)
-    require(CommitLog.isLog(fs, store),
-      s"expire needs a commit-log store ($targetPath has no _log/)")
+    CommitLog.adopt(spark, store)
+    require(CommitLog.isLog(fs, store), s"expire target $targetPath does not exist")
 
     val readVersion = CommitLog.currentVersion(fs, store)
     val snapshot = CommitLog.read(spark, store, Some(readVersion)).getOrElse {

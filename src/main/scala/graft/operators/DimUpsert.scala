@@ -55,41 +55,43 @@ object DimUpsert {
       fact: DataFrame,
       keyCol: String): DataFrame = {
 
-    // Hadoop FS, not java.io.File — the store may be hdfs:// or s3a://;
-    // a local-only check would silently treat an existing remote dim as
-    // absent and overwrite it with restarted surrogate keys.
-    def storeExists: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dimPath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
-    // the read-maxSk → assign → append cycle runs under the dim store's
-    // single-writer lease: two concurrent upserts would otherwise both
-    // read the same max and mint overlapping surrogate keys
-    Swap.withStoreLease(spark, new org.apache.hadoop.fs.Path(dimPath)) { _ =>
-    val dimExists = storeExists
-    val dim: DataFrame =
-      if (dimExists) spark.read.parquet(dimPath)
-      else fact.sparkSession.createDataFrame(
+    // The dim is a commit-log store: the read-maxSk → assign → append
+    // cycle commits with the SerialToken, so two concurrent upserts that
+    // read the same max cannot both mint overlapping surrogate keys — the
+    // loser fails with CommitLog.ConflictException and publishes nothing;
+    // under dimUpsertStream that fails the trigger, and the restarted
+    // query replays the batch against the new dim.
+    val store = new org.apache.hadoop.fs.Path(dimPath)
+    val fs = Swap.fsOf(spark, store)
+    CommitLog.adopt(spark, store)
+    val readVersion = CommitLog.currentVersion(fs, store)
+    val existing = CommitLog.read(spark, store, Some(readVersion))
+    val dim: DataFrame = existing.getOrElse(
+      fact.sparkSession.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         new org.apache.spark.sql.types.StructType()
           .add(keyCol, fact.schema(keyCol).dataType)
-          .add("sk", org.apache.spark.sql.types.LongType))
+          .add("sk", org.apache.spark.sql.types.LongType)))
 
-    val maxSk = if (dimExists) dim.agg(coalesce(max("sk"), lit(0L))).head().getLong(0) else 0L
+    val maxSk =
+      if (existing.isDefined) dim.agg(coalesce(max("sk"), lit(0L))).head().getLong(0) else 0L
 
     // unseen natural keys → fresh surrogate keys above the current max
     val unseen = fact.select(keyCol).distinct()
       .join(dim.select(keyCol), Seq(keyCol), "left_anti")
     if (!unseen.isEmpty) {
+      val staging = Swap.Suffix.staging(store, Swap.newTag())
       assignSurrogates(spark, unseen, keyCol, fact.schema(keyCol).dataType, maxSk)
-        .write.mode(if (dimExists) "append" else "overwrite").parquet(dimPath)
+        .write.parquet(staging.toString)
+      CommitLog.commitStaged(spark, store, staging, readVersion, Nil,
+        wholeStore = false, meta = Map("operation" -> "dim-upsert"),
+        extraTouched = Seq(CommitLog.SerialToken))
     }
 
     // store may legitimately still not exist (first call with an empty
     // fact batch) — fall back to the in-memory empty dim
-    val updated = if (storeExists) spark.read.parquet(dimPath) else dim
+    val updated = CommitLog.read(spark, store).getOrElse(dim)
     fact.join(broadcast(updated), Seq(keyCol))
-    }
   }
 
   /** A18 against a LIVE SQL store: the dim table round-trips through

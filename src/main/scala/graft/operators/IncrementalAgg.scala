@@ -17,25 +17,36 @@ import org.apache.spark.sql.functions._
   * merge — the same algebra Spark's own partial/final aggregation uses,
   * persisted across batches.
   *
-  * Store writes use the staged-swap protocol (write fully, then two
-  * renames) — see Merge.
+  * Store writes stage the folded store and publish it as one
+  * [[CommitLog]] manifest — see Merge.
   */
 object IncrementalAgg {
 
-  /** Name of the batch high-water-mark file kept INSIDE the store dir.
-    * The leading underscore keeps it invisible to parquet scans, and
-    * living inside the dir means the staged-swap rename commits it
-    * atomically WITH the data it describes. */
+  /** Name of the batch high-water-mark file a legacy (pre-log) store
+    * kept INSIDE its dir; [[CommitLog.adopt]] carries it into the first
+    * manifest's `batchId` meta. */
   val BatchMarker = "_graft_last_batch"
 
   /** Fold one batch into the store at `path`.
     * Store schema: `keyCols* , n, sum, min, max` (+ `hll` binary when
     * `distinctCol` is set).
-    * @param batchId when set, recorded in the store's [[BatchMarker]] file
-    *   as part of the same directory swap that commits the data — there is
-    *   no state where the fold is applied but the marker says otherwise
-    *   (the exactly-once contract [[graft.streaming.StreamOps.applyAggBatchOnce]]
-    *   relies on).
+    *
+    * Flat store: key-sized, every fold is a whole-store rewrite — two
+    * concurrent folds conflict by design (one wins, the loser re-runs
+    * against the new state). BUCKETED store (`buckets = Some(n)`): keys
+    * hash into `kb = 0..n-1` hive partitions and a fold rewrites ONLY the
+    * buckets the batch touched — at a billion-key store a trickle batch
+    * touching 1% of buckets pays 1% of the rewrite. The bucket count
+    * rides every commit's meta and is checked per fold (a different n
+    * would hash keys into the wrong partitions and silently split
+    * groups).
+    *
+    * @param batchId when set, recorded in the commit's manifest meta —
+    *   committed atomically WITH the fold it describes, so there is no
+    *   state where the fold is applied but the mark says otherwise (the
+    *   exactly-once contract [[graft.streaming.StreamOps.applyAggBatchOnce]]
+    *   relies on). A batch at or below the recorded mark is a replay and
+    *   folds nothing.
     * @param distinctCol when set, the store also maintains a MERGEABLE
     *   HLL sketch of this column per key (Datasketches, via Spark's
     *   hll_sketch_agg/hll_union): incremental approximate COUNT DISTINCT
@@ -53,8 +64,6 @@ object IncrementalAgg {
       keyCols: Seq[String],
       valueCol: String,
       batchId: Option[Long] = None,
-      lease: Option[Swap.Lease] = None,
-      log: Option[Boolean] = None,
       distinctCol: Option[String] = None,
       buckets: Option[Int] = None): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")
@@ -79,134 +88,66 @@ object IncrementalAgg {
     }
 
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Swap.fsOf(spark, target)
+    CommitLog.adopt(spark, target)
+    val readVersion = CommitLog.currentVersion(fs, target)
+    val tipMeta = CommitLog.tipMeta(fs, target)
+    if (readVersion > 0) {
+      val storeBuckets = tipMeta.get("buckets").map(_.toInt)
+      require(storeBuckets == buckets,
+        s"incremental-agg store $path was built with buckets=$storeBuckets " +
+          s"but this update passes buckets=$buckets — rebuild the store " +
+          "or match the configuration")
+    }
+    // store-level replay guard, anchored at the SAME version the fold
+    // reads: a batch at or below the manifest's high-water mark is a
+    // replay and must not double-count. A racing fold that lands
+    // between this read and the commit below CONFLICTS at the CAS
+    // (wholeStore overlaps everything; bucketed folds carry the
+    // SerialToken), so check-and-fold behave as one atomic step.
+    val lastApplied = tipMeta.get("batchId").map(_.toLong).getOrElse(-1L)
+    if (batchId.exists(_ <= lastApplied))
+      return CommitLog.read(spark, target).getOrElse(partial.limit(0))
+    val meta = batchId.map(id => Map("batchId" -> id.toString)).getOrElse(Map.empty) ++
+      buckets.map(n => Map("buckets" -> n.toString)).getOrElse(Map.empty)
+    val kbExpr = buckets.map(n => pmod(hash(keyCols.map(col): _*), lit(n)))
 
-    // Commit-log mode. Flat store: key-sized, every fold is a
-    // whole-store rewrite — two concurrent folds conflict by design (one
-    // wins, the loser re-runs against the new state; with the lease they
-    // deadlocked-or-died, with OCC they serialize themselves). BUCKETED
-    // store (`buckets = Some(n)`): keys hash into `kb = 0..n-1` hive
-    // partitions and a fold rewrites ONLY the buckets the batch touched —
-    // at a billion-key store a trickle batch touching 1% of buckets pays
-    // 1% of the rewrite, the difference between a materialized view that
-    // keeps up and one that falls behind. The bucket count rides every
-    // commit's meta and is checked per fold (a different n would hash
-    // keys into the wrong partitions and silently split groups). The
-    // batch high-water mark rides the manifest's meta map, committed
-    // atomically WITH the fold it describes — same contract the legacy
-    // mode gets from writing the marker file inside the staged dir.
-    if (CommitLog.isLog(fs, target) ||
-        (!fs.exists(target) && (lease.isEmpty &&
-          log.getOrElse(CommitLog.confEnabled(spark))))) {
-      val readVersion = CommitLog.currentVersion(fs, target)
-      val tipMeta = CommitLog.tipMeta(fs, target)
-      if (readVersion > 0) {
-        val storeBuckets = tipMeta.get("buckets").map(_.toInt)
-        require(storeBuckets == buckets,
-          s"incremental-agg store $path was built with buckets=$storeBuckets " +
-            s"but this update passes buckets=$buckets — rebuild the store " +
-            "or match the configuration")
-      }
-      // store-level replay guard, anchored at the SAME version the fold
-      // reads: a batch at or below the manifest's high-water mark is a
-      // replay and must not double-count. A racing fold that lands
-      // between this read and the commit below CONFLICTS at the CAS
-      // (wholeStore overlaps everything; bucketed folds carry the
-      // SerialToken), so check-and-fold behave as one atomic step — the
-      // log-mode replacement for the lease that spans marker-check and
-      // fold in legacy mode.
-      val lastApplied = tipMeta.get("batchId").map(_.toLong).getOrElse(-1L)
-      if (batchId.exists(_ <= lastApplied))
-        return CommitLog.read(spark, target).getOrElse(partial.limit(0))
-      val meta = batchId.map(id => Map("batchId" -> id.toString)).getOrElse(Map.empty) ++
-        buckets.map(n => Map("buckets" -> n.toString)).getOrElse(Map.empty)
-      val kbExpr = buckets.map(n => pmod(hash(keyCols.map(col): _*), lit(n)))
-
-      buckets match {
-        case None =>
-          val existing = CommitLog.read(spark, target, Some(readVersion))
-          val out = existing match {
-            case None => partial
-            case Some(store) => checkShape(store); foldInto(store, partial, keyCols)
+    buckets match {
+      case None =>
+        val existing = CommitLog.read(spark, target, Some(readVersion))
+        val out = existing match {
+          case None => partial
+          case Some(store) => checkShape(store); foldInto(store, partial, keyCols)
+        }
+        val staging = Swap.Suffix.staging(target, Swap.newTag())
+        out.write.parquet(staging.toString)
+        CommitLog.commitStaged(spark, target, staging, readVersion,
+          Nil, wholeStore = true, meta = meta)
+      case Some(n) =>
+        val partialKb = partial.withColumn("kb", kbExpr.get).persist()
+        val touched = partialKb.select("kb").distinct()
+          .collect().map(_.getInt(0)).sorted
+        val existing = CommitLog.read(spark, target, Some(readVersion))
+          .map { store =>
+            checkShape(store)
+            // partition-pruned: only the touched buckets' files scan
+            store.filter(col("kb").isin(touched.map(Integer.valueOf).toSeq: _*))
+              .drop("kb")
           }
-          val staging = Swap.Suffix.staging(target, Swap.newTag())
-          out.write.parquet(staging.toString)
-          CommitLog.commitStaged(spark, target, staging, readVersion,
-            Nil, wholeStore = true, meta = meta)
-        case Some(n) =>
-          val partialKb = partial.withColumn("kb", kbExpr.get).persist()
-          val touched = partialKb.select("kb").distinct()
-            .collect().map(_.getInt(0)).sorted
-          val existing = CommitLog.read(spark, target, Some(readVersion))
-            .map { store =>
-              checkShape(store)
-              // partition-pruned: only the touched buckets' files scan
-              store.filter(col("kb").isin(touched.map(Integer.valueOf).toSeq: _*))
-                .drop("kb")
-            }
-          val out = existing match {
-            case None => partialKb.drop("kb")
-            case Some(store) => foldInto(store, partialKb.drop("kb"), keyCols)
-          }
-          val staging = Swap.Suffix.staging(target, Swap.newTag())
-          out.withColumn("kb", kbExpr.get)
-            .write.partitionBy("kb").parquet(staging.toString)
-          CommitLog.commitStaged(spark, target, staging, readVersion,
-            retireNames = touched.map("kb=" + _).toSeq, wholeStore = false,
-            meta = meta,
-            extraTouched = Seq(CommitLog.SerialToken)) // folds never commute with replays
-          partialKb.unpersist()
-      }
-      return CommitLog.read(spark, target).get
+        val out = existing match {
+          case None => partialKb.drop("kb")
+          case Some(store) => foldInto(store, partialKb.drop("kb"), keyCols)
+        }
+        val staging = Swap.Suffix.staging(target, Swap.newTag())
+        out.withColumn("kb", kbExpr.get)
+          .write.partitionBy("kb").parquet(staging.toString)
+        CommitLog.commitStaged(spark, target, staging, readVersion,
+          retireNames = touched.map("kb=" + _).toSeq, wholeStore = false,
+          meta = meta,
+          extraTouched = Seq(CommitLog.SerialToken)) // folds never commute with replays
+        partialKb.unpersist()
     }
-    require(buckets.isEmpty,
-      s"bucketed incremental-agg stores need the commit log (store $path " +
-        "is legacy swap-mode) — create the store with " +
-        "spark.graft.store.commitLog=true or log = Some(true)")
-
-    // single-writer lease across the whole fold (first-write rename
-    // included): two streams folding into one store must fail loudly.
-    // A caller that already holds the store lease (applyAggBatchOnce
-    // spans marker-check + fold under one lease) passes it in.
-    def run(held: Swap.Lease): DataFrame = {
-
-    def writeMarker(dir: org.apache.hadoop.fs.Path): Unit =
-      batchId.foreach { id =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(dir, BatchMarker), true)
-        try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-      }
-
-    if (!fs.exists(target)) {
-      // first batch: stage + single rename, so data and marker appear
-      // together or not at all
-      val staging = new org.apache.hadoop.fs.Path(
-        path + ".staging-" + java.util.UUID.randomUUID().toString.take(8))
-      partial.write.parquet(staging.toString)
-      writeMarker(staging)
-      if (!fs.rename(staging, target)) {
-        fs.delete(staging, true)
-        throw new java.io.IOException(s"could not move $staging to $target")
-      }
-      return spark.read.parquet(path)
-    }
-
-    val store = spark.read.parquet(path)
-    checkShape(store)
-    val merged = foldInto(store, partial, keyCols)
-
-    val tag = Swap.newTag()
-    val staging = Swap.Suffix.staging(target, tag)
-    val retired = Swap.Suffix.retired(target, tag)
-    merged.write.parquet(staging.toString)
-    writeMarker(staging)
-    Swap.commitWholeDir(fs, target, staging, retired, Some(held))
-    spark.read.parquet(path)
-    }
-
-    lease match {
-      case Some(l) => run(l)
-      case None => Swap.withStoreLease(spark, target)(run)
-    }
+    CommitLog.read(spark, target).get
   }
 
   /** Mergeable-statistic combine over a full outer join: a key present
@@ -232,15 +173,13 @@ object IncrementalAgg {
         greatest(col("s.max"), col("p.max")).as("max")) ++ hllOut: _*)
   }
 
-  /** Read the store — commit-log snapshot when log-backed, plain parquet
-    * read otherwise. */
+  /** Read the store at its commit-log tip (a legacy store is adopted
+    * first). */
   def readStore(spark: SparkSession, path: String): DataFrame = {
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (CommitLog.isLog(fs, target))
-      CommitLog.read(spark, target).getOrElse(
-        throw new IllegalStateException(s"incremental-agg log store $path is empty"))
-    else spark.read.parquet(path)
+    CommitLog.adopt(spark, target)
+    CommitLog.read(spark, target).getOrElse(
+      throw new IllegalStateException(s"incremental-agg store $path is empty"))
   }
 
   /** Read the store with the derived average attached. */

@@ -50,6 +50,7 @@ object IncrementalJoin {
       meta: Map[String, String] = Map.empty): Long = {
     val storeP = new Path(store)
     val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CommitLog.adopt(spark, storeP)
     val staging = Swap.Suffix.staging(storeP, Swap.newTag())
     df.write.mode("overwrite").parquet(staging.toString)
     CommitLog.commitStaged(spark, storeP, staging,

@@ -77,29 +77,38 @@ final class IvfIndex private (
       .limit(k)
   }
 
-  /** Persist the index: the assigned table lands hive-partitioned by
-    * `list_id` (so a loaded index's probes PRUNE to nprobe/nlist of the
-    * files on disk — the read-side payoff of IVF), centroids + column
-    * names + per-list build-time mean assignment distance (the drift
-    * baseline [[IvfIndex.append]] checks against) in a small sidecar
-    * table. Build once, query many, append incrementally. */
   /** Build-time drift baseline, carried from [[IvfIndex.build]] so save()
     * reuses the fused-stats job instead of re-aggregating; a LOADED index
     * (no baseline in hand) recomputes it on save as before. */
   private[operators] var buildMeanD: Option[Map[Int, Double]] = None
 
+  /** Persist the index as a [[CommitLog]] store at `path`: the assigned
+    * table lands under `data/` hive-partitioned by `list_id` (so a loaded
+    * index's probes PRUNE to nprobe/nlist of the files on disk — the
+    * read-side payoff of IVF), centroids + column names + per-list
+    * build-time mean assignment distance (the drift baseline
+    * [[IvfIndex.append]] checks against) under `centroids/`. Both tables
+    * publish in ONE manifest, so a failed save leaves no half-written
+    * index. An existing `path` is refused before anything is written.
+    * Build once, query many, append incrementally. */
   def save(path: String): Unit = {
     val spark = assigned.sparkSession
-    assigned.write.partitionBy("list_id").parquet(s"$path/data")
+    val root = new org.apache.hadoop.fs.Path(path)
+    IvfIndex.requireFreshPath(spark, root)
     import spark.implicits._
     val meanD = buildMeanD.getOrElse(
       IvfIndex.meanAssignDist2(assigned, vecCol, centroids))
+    val staging = Swap.Suffix.staging(root, Swap.newTag())
+    assigned.write.partitionBy("list_id").parquet(s"$staging/data")
     centroids.toSeq.map { case (i, c) =>
       (i, c, idCol, vecCol, meanD.getOrElse(i, Double.NaN), clusterR2)
     }
       .toDF("list_id", "centroid", "id_col", "vec_col", "mean_dist2",
         "cluster_r2")
-      .coalesce(1).write.parquet(s"$path/centroids")
+      .coalesce(1).write.parquet(s"$staging/centroids")
+    CommitLog.commitStaged(spark, root, staging, 0L, Nil,
+      wholeStore = true, meta = Map("operation" -> "ivf-save"))
+    ()
   }
 }
 
@@ -251,15 +260,34 @@ object IvfIndex {
     else math.max(0.0, math.min(1.0, 1.0 - within / total))
   }
 
+  /** Refuse an existing index path up front — before a caller's fit or
+    * write spends any work on an index that could not be published. */
+  private[operators] def requireFreshPath(
+      spark: org.apache.spark.sql.SparkSession,
+      root: org.apache.hadoop.fs.Path): Unit =
+    require(!Swap.fsOf(spark, root).exists(root),
+      s"index path $root already exists — remove it or save to a new path")
+
+  /** One sub-table of a saved index at `version` (an index saved before
+    * the commit log is adopted first). */
+  private[operators] def readIndexSub(
+      spark: org.apache.spark.sql.SparkSession,
+      root: org.apache.hadoop.fs.Path,
+      sub: String,
+      version: Long): DataFrame =
+    CommitLog.readSub(spark, root, sub, Some(version)).getOrElse(
+      throw new IllegalArgumentException(
+        s"no $sub at $root — not an IVF index?"))
+
   /** Load an index written by [[IvfIndex.save]]. The assigned table is
     * read lazily from its `list_id=` partitions — topK's list filter
     * becomes a partition filter, touching nprobe/nlist of the store. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    // roll forward an append interrupted mid-swap before reading
-    Swap.recoverDirs(spark, new org.apache.hadoop.fs.Path(s"$path/data"),
-      Swap.Suffix)
-    val meta = readSidecar(spark, path)
-    new IvfIndex(spark.read.parquet(s"$path/data"), meta.centroids,
+    val root = new org.apache.hadoop.fs.Path(path)
+    CommitLog.adopt(spark, root)
+    val v = CommitLog.currentVersion(Swap.fsOf(spark, root), root)
+    val meta = readSidecar(readIndexSub(spark, root, "centroids", v), path)
+    new IvfIndex(readIndexSub(spark, root, "data", v), meta.centroids,
       meta.idCol, meta.vecCol, meta.clusterR2)
   }
 
@@ -272,9 +300,7 @@ object IvfIndex {
       // NaN when the index predates the structure stat
       clusterR2: Double)
 
-  private def readSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String): Sidecar = {
-    val df = spark.read.parquet(s"$path/centroids")
+  private def readSidecar(df: DataFrame, path: String): Sidecar = {
     val hasBaseline = df.columns.contains("mean_dist2")
     val meta = df.collect()
     require(meta.nonEmpty, s"no centroids at $path/centroids — not an IVF index?")
@@ -296,8 +322,8 @@ object IvfIndex {
 
   /** L2-normalized double array from a float-array vector column —
     * fused native kernel (r19: the composed form below is an
-    * interpreted CodegenFallback HOF tree; the GRAFT_PHASE_PROBE build
-    * split measured ~1 ms/row of pure interpretation across
+    * interpreted CodegenFallback HOF tree; a per-phase timing of the
+    * build measured ~1 ms/row of pure interpretation across
     * nvec/assign/residual/dist2 at sf0.1). Bit-identical values —
     * IvfKernelParitySpec pins every kernel against its composed
     * witness. */
@@ -358,9 +384,9 @@ object IvfIndex {
     * (one broadcast of the nlist×dim centroid table — the same
     * normalized-Euclidean metric the build used), and only the TOUCHED
     * `list_id=` partitions are rewritten (old rows + new rows staged,
-    * then swapped via the shared marker-gated Swap protocol under the
-    * store's single-writer lease — crash rolls forward, concurrent
-    * appends fail loudly).
+    * then published as one [[CommitLog]] manifest — a crash leaves the
+    * previous version intact, and appends into the same lists conflict
+    * loudly).
     *
     * Centroids do not move on append, so quality degrades if the new
     * data's distribution drifts from the build sample: each list's new
@@ -378,72 +404,82 @@ object IvfIndex {
       maxDriftRatio: Double = 4.0,
       minRowsForDrift: Long = 50L): Map[Int, ListAppendStats] = {
     import spark.implicits._
-    val dataRoot = new org.apache.hadoop.fs.Path(s"$path/data")
-    val fs = Swap.fsOf(spark, dataRoot)
-    Swap.withStoreLease(spark, dataRoot) { lease =>
-      Swap.recoverDirs(spark, dataRoot, Swap.Suffix)
-      val meta = readSidecar(spark, path)
-      val stored = spark.read.parquet(dataRoot.toString)
-      require(
-        newRows.columns.toSet == stored.columns.toSet - "list_id",
-        s"append schema ${newRows.columns.sorted.mkString(",")} != index " +
-          s"schema ${(stored.columns.toSet - "list_id").toSeq.sorted.mkString(",")}")
+    val root = new org.apache.hadoop.fs.Path(path)
+    CommitLog.adopt(spark, root)
+    val base = CommitLog.currentVersion(Swap.fsOf(spark, root), root)
+    val meta = readSidecar(readIndexSub(spark, root, "centroids", base), path)
+    val stored = readIndexSub(spark, root, "data", base)
+    require(
+      newRows.columns.toSet == stored.columns.toSet - "list_id",
+      s"append schema ${newRows.columns.sorted.mkString(",")} != index " +
+        s"schema ${(stored.columns.toSet - "list_id").toSeq.sorted.mkString(",")}")
 
-      // nearest-centroid assignment: rows × nlist broadcast expansion,
-      // folded back map-side by min_by before the per-id shuffle
-      val cents = meta.centroids.toSeq.toDF("graft_cl", "graft_centroid")
-      val assignedNew = newRows
-        .withColumn("graft_nvec", nvecExpr(meta.vecCol))
-        .crossJoin(broadcast(cents))
-        .withColumn("graft_d2", dist2Expr(col("graft_nvec"), col("graft_centroid")))
-        .groupBy(col(meta.idCol))
-        .agg(
-          min_by(
-            struct(col("graft_cl").as("list_id") +:
-              newRows.columns.filterNot(_ == meta.idCol).map(col): _*),
-            col("graft_d2")).as("graft_s"),
-          min(col("graft_d2")).as("graft_d2"))
-        .select(col(meta.idCol), col("graft_s.*"), col("graft_d2"))
-        .persist()
+    // nearest-centroid assignment: rows × nlist broadcast expansion,
+    // folded back map-side by min_by before the per-id shuffle
+    val cents = meta.centroids.toSeq.toDF("graft_cl", "graft_centroid")
+    val assignedNew = newRows
+      .withColumn("graft_nvec", nvecExpr(meta.vecCol))
+      .crossJoin(broadcast(cents))
+      .withColumn("graft_d2", dist2Expr(col("graft_nvec"), col("graft_centroid")))
+      .groupBy(col(meta.idCol))
+      .agg(
+        min_by(
+          struct(col("graft_cl").as("list_id") +:
+            newRows.columns.filterNot(_ == meta.idCol).map(col): _*),
+          col("graft_d2")).as("graft_s"),
+        min(col("graft_d2")).as("graft_d2"))
+      .select(col(meta.idCol), col("graft_s.*"), col("graft_d2"))
+      .persist()
 
-      val stats = assignedNew.groupBy(col("list_id"))
-        .agg(count(lit(1)).as("n"), avg(col("graft_d2")).as("d2"))
-        .collect()
-        .map { r =>
-          val (lid, n, d2) = (r.getInt(0), r.getLong(1), r.getDouble(2))
-          val ratio = meta.baselineDist2.get(lid)
-            .filter(_ > 0).filter(_ => n >= minRowsForDrift).map(d2 / _)
-          lid -> ListAppendStats(n, d2, ratio)
-        }.toMap
-      if (stats.isEmpty) { assignedNew.unpersist(); return Map.empty }
-      val drifted = stats.filter(_._2.driftRatio.exists(_ > maxDriftRatio))
-      if (drifted.nonEmpty) {
-        assignedNew.unpersist()
-        throw new IllegalStateException(
-          s"IVF append drift check failed for lists " +
-            drifted.map { case (l, s) =>
-              f"$l (ratio ${s.driftRatio.get}%.2f over ${s.rows} rows)"
-            }.mkString("[", ", ", "]") +
-            s" — mean assignment distance exceeds $maxDriftRatio× the " +
-            "build-time baseline; the new data's distribution has moved " +
-            "away from the centroids, rebuild the index instead of " +
-            "appending into degraded lists")
-      }
-
-      // rewrite ONLY the touched list partitions: old rows read through
-      // partition pruning, merged with the new, staged, swapped
-      val touched = stats.keySet.toSeq.sorted
-      val merged = stored
-        .filter(col("list_id").isin(touched: _*))
-        .unionByName(assignedNew.drop("graft_d2"))
-      val tag = Swap.newTag()
-      val staging = Swap.Suffix.staging(dataRoot, tag)
-      val retired = Swap.Suffix.retired(dataRoot, tag)
-      merged.write.partitionBy("list_id").parquet(staging.toString)
-      Swap.commitDirs(fs, dataRoot, staging, retired,
-        touched.map("list_id=" + _), Some(lease))
+    val stats = assignedNew.groupBy(col("list_id"))
+      .agg(count(lit(1)).as("n"), avg(col("graft_d2")).as("d2"))
+      .collect()
+      .map { r =>
+        val (lid, n, d2) = (r.getInt(0), r.getLong(1), r.getDouble(2))
+        val ratio = meta.baselineDist2.get(lid)
+          .filter(_ > 0).filter(_ => n >= minRowsForDrift).map(d2 / _)
+        lid -> ListAppendStats(n, d2, ratio)
+      }.toMap
+    if (stats.isEmpty) { assignedNew.unpersist(); return Map.empty }
+    val drifted = stats.filter(_._2.driftRatio.exists(_ > maxDriftRatio))
+    if (drifted.nonEmpty) {
       assignedNew.unpersist()
-      stats
+      throw new IllegalStateException(
+        s"IVF append drift check failed for lists " +
+          drifted.map { case (l, s) =>
+            f"$l (ratio ${s.driftRatio.get}%.2f over ${s.rows} rows)"
+          }.mkString("[", ", ", "]") +
+          s" — mean assignment distance exceeds $maxDriftRatio× the " +
+          "build-time baseline; the new data's distribution has moved " +
+          "away from the centroids, rebuild the index instead of " +
+          "appending into degraded lists")
     }
+
+    // rewrite ONLY the touched list partitions: old rows read through
+    // partition pruning, merged with the new, staged, committed
+    val touched = stats.keySet.toSeq.sorted
+    val merged = stored
+      .filter(col("list_id").isin(touched: _*))
+      .unionByName(assignedNew.drop("graft_d2"))
+    commitAppend(spark, root, base, merged, touched)
+    assignedNew.unpersist()
+    stats
+  }
+
+  /** Stage `merged` (the touched lists' old + new rows) and publish one
+    * manifest retiring those lists' files — appends touching disjoint
+    * lists commit concurrently, overlapping ones conflict. */
+  private[operators] def commitAppend(
+      spark: org.apache.spark.sql.SparkSession,
+      root: org.apache.hadoop.fs.Path,
+      base: Long,
+      merged: DataFrame,
+      touched: Seq[Int]): Unit = {
+    val staging = Swap.Suffix.staging(root, Swap.newTag())
+    merged.write.partitionBy("list_id").parquet(s"$staging/data")
+    CommitLog.commitStaged(spark, root, staging, base,
+      touched.map("data/list_id=" + _), wholeStore = false,
+      meta = Map("operation" -> "ivf-append"))
+    ()
   }
 }

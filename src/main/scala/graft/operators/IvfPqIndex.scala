@@ -148,16 +148,21 @@ final class IvfPqIndex private (
       .limit(k)
   }
 
-  /** Persist: codes partitioned by list_id (probe pruning), coarse
-    * centroids + drift baseline and the PQ codebooks as sidecars. The
-    * baseline comes from `assigned` (the build-time vectors) — the codes
-    * table itself holds no floats to measure. */
+  /** Persist as a [[CommitLog]] store: codes under `data/` partitioned
+    * by list_id (probe pruning), coarse centroids + drift baseline under
+    * `centroids/` and the PQ codebooks under `codebooks/` — all three
+    * staged, then published in ONE manifest, so a failed save leaves no
+    * half-written index. The baseline comes from `assigned` (the
+    * build-time vectors) — the codes table itself holds no floats to
+    * measure. */
   private[operators] def save(
       path: String, assigned: DataFrame,
       meanDIn: Option[Map[Int, Double]] = None): Unit = {
     val spark = codes.sparkSession
     import spark.implicits._
-    codes.write.partitionBy("list_id").parquet(s"$path/data")
+    val root = new org.apache.hadoop.fs.Path(path)
+    val staging = Swap.Suffix.staging(root, Swap.newTag())
+    codes.write.partitionBy("list_id").parquet(s"$staging/data")
     val meanD = meanDIn.getOrElse(
       IvfIndex.meanAssignDist2(assigned, vecCol, coarse))
     coarse.toSeq.map { case (i, c) =>
@@ -165,11 +170,14 @@ final class IvfPqIndex private (
     }
       .toDF("list_id", "centroid", "id_col", "vec_col", "mean_dist2",
         "residual", "cluster_r2")
-      .coalesce(1).write.parquet(s"$path/centroids")
+      .coalesce(1).write.parquet(s"$staging/centroids")
     codebooks.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
     }.toSeq.toDF("subspace", "code", "centroid")
-      .coalesce(1).write.parquet(s"$path/codebooks")
+      .coalesce(1).write.parquet(s"$staging/codebooks")
+    CommitLog.commitStaged(spark, root, staging, 0L, Nil,
+      wholeStore = true, meta = Map("operation" -> "ivf-pq-save"))
+    ()
   }
 }
 
@@ -206,17 +214,8 @@ object IvfPqIndex {
       residual: Boolean = true): IvfPqIndex = {
     val spark = df.sparkSession
     require(maxFitRows > 0, s"maxFitRows must be positive, got $maxFitRows")
-    // builder-local phase attribution (GRAFT_PHASE_PROBE=1): stderr
-    // timers only, zero behavior change when unset
-    def ph[T](label: String)(f: => T): T =
-      if (!sys.env.contains("GRAFT_PHASE_PROBE")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[phase] pq $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
+    // an existing path could never be published — refuse before the fit
+    IvfIndex.requireFreshPath(spark, new org.apache.hadoop.fs.Path(path))
 
     val withNvec = df.withColumn("graft_nvec", IvfIndex.nvecExpr(vecCol))
     // deterministic fit input: the maxFitRows lowest-(string-)id rows,
@@ -228,14 +227,12 @@ object IvfPqIndex {
     // paid seconds of fixed scheduling overhead EACH for a sample that
     // fits in an array (measured: 18 s → sub-second per index build).
     val sample: Array[Array[Double]] =
-      ph("sample collect") {
-        withNvec
-          .select(col(idCol).cast("string").as("graft_sid"), col("graft_nvec"))
-          .orderBy("graft_sid")
-          .limit(maxFitRows)
-          .collect()
-          .map(_.getSeq[Double](1).toArray)
-      }
+      withNvec
+        .select(col(idCol).cast("string").as("graft_sid"), col("graft_nvec"))
+        .orderBy("graft_sid")
+        .limit(maxFitRows)
+        .collect()
+        .map(_.getSeq[Double](1).toArray)
     val nSample = sample.length
     require(nSample > 0, "empty fit sample — the input is empty")
     val dim = sample(0).length
@@ -244,11 +241,9 @@ object IvfPqIndex {
     val ksubEff = math.min(ksub.toLong, nSample / 2L).toInt.max(2)
 
     // coarse IVF fit (same normalized space/metric as IvfIndex.build)
-    val coarse = ph("coarse fit") {
-      LocalKMeans
-        .fit(sample, math.min(nlist, nSample).max(2), seed)
-        .zipWithIndex.map { case (v, i) => (i, v) }
-    }
+    val coarse = LocalKMeans
+      .fit(sample, math.min(nlist, nSample).max(2), seed)
+      .zipWithIndex.map { case (v, i) => (i, v) }
 
     // per-subspace codebooks over the sample's subvector slices — of the
     // RESIDUALS when residual-coding (sample assigned to its coarse list
@@ -259,11 +254,9 @@ object IvfPqIndex {
         Array.tabulate(v.length)(i => v(i) - cent(i))
       }
       else sample
-    val codebooks: Array[Array[Array[Double]]] = ph("codebook fits") {
-      Array.tabulate(m) { s =>
-        val slices = fitSrc.map(_.slice(s * dsub, (s + 1) * dsub))
-        LocalKMeans.fit(slices, ksubEff, seed + 1 + s) // distinct stream per subspace
-      }
+    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
+      val slices = fitSrc.map(_.slice(s * dsub, (s + 1) * dsub))
+      LocalKMeans.fit(slices, ksubEff, seed + 1 + s) // distinct stream per subspace
     }
 
     val assigned = withNvec
@@ -274,14 +267,12 @@ object IvfPqIndex {
     val codes = encode(assigned, idCol, codebooks)
     // one aggregate job for r2 AND the drift baseline save() persists
     // (was two scans of the cached assigned frame — IvfIndex.buildStats)
-    val (meanD, r2) = ph("buildStats") {
-      IvfIndex.buildStats(assigned, vecCol, coarse)
-    }
+    val (meanD, r2) = IvfIndex.buildStats(assigned, vecCol, coarse)
     val index = new IvfPqIndex(codes, coarse, codebooks, idCol, vecCol,
       residual, r2)
-    ph("save") { index.save(path, assigned.drop("graft_src"), Some(meanD)) }
+    index.save(path, assigned.drop("graft_src"), Some(meanD))
     assigned.unpersist()
-    ph("load") { load(spark, path) }
+    load(spark, path)
   }
 
   /** graft_nvec − this row's coarse centroid, as a pure column over the
@@ -346,14 +337,21 @@ object IvfPqIndex {
         .pqEncode(col("graft_src"), codebooks).as("pq_code"))
 
   def load(spark: SparkSession, path: String): IvfPqIndex = {
-    Swap.recoverDirs(spark, new org.apache.hadoop.fs.Path(s"$path/data"),
-      Swap.Suffix)
-    val centMeta = spark.read.parquet(s"$path/centroids").collect()
-    require(centMeta.nonEmpty, s"no centroids at $path/centroids — not an IVF-PQ index?")
+    val root = new org.apache.hadoop.fs.Path(path)
+    CommitLog.adopt(spark, root)
+    loadAt(spark, root, CommitLog.currentVersion(Swap.fsOf(spark, root), root))
+  }
+
+  private def loadAt(
+      spark: SparkSession,
+      root: org.apache.hadoop.fs.Path,
+      v: Long): IvfPqIndex = {
+    val centMeta = IvfIndex.readIndexSub(spark, root, "centroids", v).collect()
+    require(centMeta.nonEmpty, s"no centroids at $root/centroids — not an IVF-PQ index?")
     val coarse = centMeta.map(r =>
       (r.getInt(r.fieldIndex("list_id")),
         r.getSeq[Double](r.fieldIndex("centroid")).toArray)).sortBy(_._1)
-    val bookRows = spark.read.parquet(s"$path/codebooks").collect()
+    val bookRows = IvfIndex.readIndexSub(spark, root, "codebooks", v).collect()
     val m = bookRows.map(_.getInt(0)).max + 1
     val codebooks = Array.tabulate(m) { s =>
       bookRows.filter(_.getInt(0) == s).sortBy(_.getInt(1))
@@ -367,7 +365,7 @@ object IvfPqIndex {
       if (!head.schema.fieldNames.contains("cluster_r2")) Double.NaN
       else head.getDouble(head.fieldIndex("cluster_r2"))
     new IvfPqIndex(
-      spark.read.parquet(s"$path/data"),
+      IvfIndex.readIndexSub(spark, root, "data", v),
       coarse, codebooks,
       head.getString(head.fieldIndex("id_col")),
       head.getString(head.fieldIndex("vec_col")),
@@ -377,8 +375,8 @@ object IvfPqIndex {
   /** Incremental append — same contract and machinery as
     * [[IvfIndex.append]]: nearest EXISTING coarse centroid, per-list
     * drift gate against the build-time baseline (fail loudly pre-write),
-    * only touched list partitions rewritten via the staged swap under
-    * the store lease. New vectors are PQ-encoded with the FROZEN
+    * only touched list partitions rewritten and published as one
+    * [[CommitLog]] manifest. New vectors are PQ-encoded with the FROZEN
     * codebooks — like the coarse centroids, they only move on rebuild,
     * which is exactly what the drift gate decides. */
   def append(
@@ -388,66 +386,59 @@ object IvfPqIndex {
       maxDriftRatio: Double = 4.0,
       minRowsForDrift: Long = 50L): Map[Int, IvfIndex.ListAppendStats] = {
     import spark.implicits._
-    val dataRoot = new org.apache.hadoop.fs.Path(s"$path/data")
-    val fs = Swap.fsOf(spark, dataRoot)
-    Swap.withStoreLease(spark, dataRoot) { lease =>
-      Swap.recoverDirs(spark, dataRoot, Swap.Suffix)
-      val index = load(spark, path)
-      require(newRows.columns.contains(index.idCol) &&
-        newRows.columns.contains(index.vecCol),
-        s"append needs columns ${index.idCol}, ${index.vecCol}")
-      val baseline = spark.read.parquet(s"$path/centroids").collect()
-        .map(r => r.getInt(r.fieldIndex("list_id")) ->
-          r.getDouble(r.fieldIndex("mean_dist2")))
-        .filterNot(_._2.isNaN).toMap
+    val root = new org.apache.hadoop.fs.Path(path)
+    CommitLog.adopt(spark, root)
+    val base = CommitLog.currentVersion(Swap.fsOf(spark, root), root)
+    val index = loadAt(spark, root, base)
+    require(newRows.columns.contains(index.idCol) &&
+      newRows.columns.contains(index.vecCol),
+      s"append needs columns ${index.idCol}, ${index.vecCol}")
+    val baseline = IvfIndex.readIndexSub(spark, root, "centroids", base).collect()
+      .map(r => r.getInt(r.fieldIndex("list_id")) ->
+        r.getDouble(r.fieldIndex("mean_dist2")))
+      .filterNot(_._2.isNaN).toMap
 
-      val assignedNew = newRows
-        .select(col(index.idCol), col(index.vecCol))
-        .withColumn("graft_nvec", IvfIndex.nvecExpr(index.vecCol))
-        .withColumn("list_id", assignExpr(index.coarse.map(_._2)))
-        .withColumn("graft_d2",
-          IvfIndex.dist2Expr(col("graft_nvec"),
-            element_at(
-              typedLit(index.coarse.sortBy(_._1).map(_._2.toSeq).toSeq),
-              col("list_id") + 1)))
-        .withColumn("graft_src",
-          if (index.residual) residualCol(index.coarse) else col("graft_nvec"))
-        .persist()
+    val assignedNew = newRows
+      .select(col(index.idCol), col(index.vecCol))
+      .withColumn("graft_nvec", IvfIndex.nvecExpr(index.vecCol))
+      .withColumn("list_id", assignExpr(index.coarse.map(_._2)))
+      .withColumn("graft_d2",
+        IvfIndex.dist2Expr(col("graft_nvec"),
+          element_at(
+            typedLit(index.coarse.sortBy(_._1).map(_._2.toSeq).toSeq),
+            col("list_id") + 1)))
+      .withColumn("graft_src",
+        if (index.residual) residualCol(index.coarse) else col("graft_nvec"))
+      .persist()
 
-      val stats = assignedNew.groupBy(col("list_id"))
-        .agg(count(lit(1)).as("n"), avg(col("graft_d2")).as("d2"))
-        .collect()
-        .map { r =>
-          val (lid, n, d2) = (r.getInt(0), r.getLong(1), r.getDouble(2))
-          val ratio = baseline.get(lid)
-            .filter(_ > 0).filter(_ => n >= minRowsForDrift).map(d2 / _)
-          lid -> IvfIndex.ListAppendStats(n, d2, ratio)
-        }.toMap
-      if (stats.isEmpty) { assignedNew.unpersist(); return Map.empty }
-      val drifted = stats.filter(_._2.driftRatio.exists(_ > maxDriftRatio))
-      if (drifted.nonEmpty) {
-        assignedNew.unpersist()
-        throw new IllegalStateException(
-          s"IVF-PQ append drift check failed for lists " +
-            drifted.map { case (l, s) =>
-              f"$l (ratio ${s.driftRatio.get}%.2f over ${s.rows} rows)"
-            }.mkString("[", ", ", "]") +
-            s" — rebuild the index instead of appending into degraded lists")
-      }
-
-      val newCodes = encode(assignedNew, index.idCol, index.codebooks)
-      val touched = stats.keySet.toSeq.sorted
-      val merged = index.codes
-        .filter(col("list_id").isin(touched: _*))
-        .unionByName(newCodes)
-      val tag = Swap.newTag()
-      val staging = Swap.Suffix.staging(dataRoot, tag)
-      val retired = Swap.Suffix.retired(dataRoot, tag)
-      merged.write.partitionBy("list_id").parquet(staging.toString)
-      Swap.commitDirs(fs, dataRoot, staging, retired,
-        touched.map("list_id=" + _), Some(lease))
+    val stats = assignedNew.groupBy(col("list_id"))
+      .agg(count(lit(1)).as("n"), avg(col("graft_d2")).as("d2"))
+      .collect()
+      .map { r =>
+        val (lid, n, d2) = (r.getInt(0), r.getLong(1), r.getDouble(2))
+        val ratio = baseline.get(lid)
+          .filter(_ > 0).filter(_ => n >= minRowsForDrift).map(d2 / _)
+        lid -> IvfIndex.ListAppendStats(n, d2, ratio)
+      }.toMap
+    if (stats.isEmpty) { assignedNew.unpersist(); return Map.empty }
+    val drifted = stats.filter(_._2.driftRatio.exists(_ > maxDriftRatio))
+    if (drifted.nonEmpty) {
       assignedNew.unpersist()
-      stats
+      throw new IllegalStateException(
+        s"IVF-PQ append drift check failed for lists " +
+          drifted.map { case (l, s) =>
+            f"$l (ratio ${s.driftRatio.get}%.2f over ${s.rows} rows)"
+          }.mkString("[", ", ", "]") +
+          s" — rebuild the index instead of appending into degraded lists")
     }
+
+    val newCodes = encode(assignedNew, index.idCol, index.codebooks)
+    val touched = stats.keySet.toSeq.sorted
+    val merged = index.codes
+      .filter(col("list_id").isin(touched: _*))
+      .unionByName(newCodes)
+    IvfIndex.commitAppend(spark, root, base, merged, touched)
+    assignedNew.unpersist()
+    stats
   }
 }

@@ -10,12 +10,9 @@ import org.apache.spark.sql.functions._
   * unmatched source rows are INSERTED, untouched target rows are kept.
   *
   * Write protocol: the merged result is written to a staging directory
-  * next to the target, then swapped in with two FS renames — readers never
-  * observe a half-written store, and a crash mid-merge leaves either the
-  * old store or the new one, not a mix. (A table format with a
-  * transaction log — Delta/Iceberg — would make the swap atomic under
-  * concurrent writers too; single-writer parquet is the environment's
-  * stand-in, mirroring how DimUpsert models the reference's SQL dim.)
+  * next to the target, then published by one [[CommitLog]] manifest —
+  * readers never observe a half-written store, and a crash mid-merge
+  * leaves the previous version intact.
   *
   * Scale notes (100 TB): the only fact-sized operations are one left-anti
   * shuffle join on the key columns and the rewrite itself. MERGE on a
@@ -32,27 +29,25 @@ object Merge {
     * most one row per key (checked — SQL MERGE raises on multiple matches
     * rather than picking one nondeterministically).
     *
-    * Store modes: a store with a `_log/` dir is COMMIT-LOG backed
-    * (see [[CommitLog]]) — reads pin a snapshot version, writes publish
-    * manifests with optimistic concurrency, and partition-scoped merges
-    * on DISJOINT partitions may run concurrently with no lock. A store
-    * without one uses the legacy staged-swap + single-writer-lease
-    * protocol. New stores pick the log when `log = Some(true)` or the
-    * session default `spark.graft.store.commitLog` is set.
+    * The store is COMMIT-LOG backed (see [[CommitLog]]): reads pin a
+    * snapshot version, writes publish manifests with optimistic
+    * concurrency, and partition-scoped merges on DISJOINT partitions may
+    * run concurrently with no lock. A fresh path becomes a log store; a
+    * store written before the log is adopted first ([[CommitLog.adopt]]).
     *
     * @param prunePartitions partition column to scope the rewrite: only
     *   target partitions the merge can change — those the source writes
     *   into plus, when the partition value is not part of the key, those
     *   holding a matched key whose partition value moved — are read,
-    *   merged and swapped; others are left untouched on disk. The column
-    *   must be one the store was `partitionBy`'d on; NULL partition
+    *   merged and committed; others are left untouched on disk. The
+    *   column must be one the store was `partitionBy`'d on; NULL partition
     *   values are rejected in this mode.
     * @param evolveSchema when true, the source may carry NEW columns:
     *   they are appended to the store's schema and existing rows read
     *   back NULL for them (parquet's schema-merge semantics). Columns may
     *   only be added, never dropped — source must still contain every
     *   target column.
-    * @return the merged frame (read back from the swapped-in store).
+    * @return the merged frame (read back from the committed snapshot).
     */
   def into(
       spark: SparkSession,
@@ -60,71 +55,30 @@ object Merge {
       source: DataFrame,
       keyCols: Seq[String],
       prunePartitions: Option[String] = None,
-      evolveSchema: Boolean = false,
-      log: Option[Boolean] = None): DataFrame = {
+      evolveSchema: Boolean = false): DataFrame = {
     require(keyCols.nonEmpty, "MERGE needs at least one key column")
 
-    val hconf = spark.sparkContext.hadoopConfiguration
     val target = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = target.getFileSystem(hconf)
-
-    val logMode = CommitLog.isLog(fs, target) ||
-      (!fs.exists(target) && log.getOrElse(CommitLog.confEnabled(spark)))
-
-    // Legacy mode: the whole merge cycle (recover → read → stage → swap)
-    // runs under the store's single-writer lease — a second concurrent
-    // merge fails loudly at acquire instead of interleaving staged swaps.
-    // Log mode needs neither lease nor recovery: nothing is visible until
-    // the manifest CAS, and concurrent DISJOINT merges are the feature.
-    def withProtocol[T](f: Option[Swap.Lease] => T): T =
-      if (logMode) f(None)
-      else Swap.withStoreLease(spark, target)(l => f(Some(l)))
-
-    withProtocol { lease =>
-
-    if (!logMode) {
-      // recover any interrupted previous merge before reading the store:
-      // whole-dir swap crash window (store path missing, staged copy
-      // complete) and partition-scoped swap crash window (touched dirs
-      // retired, staged replacements pending behind the intent marker)
-      // allowLoneStaging=false: Merge's FIRST write is direct (the
-      // insert-all below, no staging), so a lone staging sibling with the
-      // store missing is unknown provenance — treating it as "fresh" would
-      // silently rebuild from this one batch and discard whatever the
-      // staging holds. Fail loudly instead (Swap's documented contract).
-      Swap.recoverWholeDir(spark, target, Swap.Suffix, allowLoneStaging = false)
-      if (fs.exists(target)) Swap.recoverDirs(spark, target, Swap.Suffix)
-    }
+    val fs = Swap.fsOf(spark, target)
+    CommitLog.adopt(spark, target)
 
     // OCC anchor: the snapshot version this merge's computation reads;
     // commitStaged checks every later commit for partition overlap
-    val readVersion = if (logMode) CommitLog.currentVersion(fs, target) else 0L
-    val hasData =
-      if (logMode) readVersion > 0 &&
-        CommitLog.snapshotFiles(fs, target, readVersion).nonEmpty
-      else fs.exists(target)
+    val readVersion = CommitLog.currentVersion(fs, target)
+    val snapshot = CommitLog.snapshotFiles(fs, target, readVersion)
+    val staging = Swap.Suffix.staging(target, Swap.newTag())
 
-    if (!hasData) {
-      // nothing to match: MERGE degenerates to insert-all
-      if (logMode) {
-        // lay out by the prune column from the FIRST write: a mixed
-        // flat+partitioned store reads ambiguously (root files have the
-        // column as data, partition dirs as a path), so the layout is
-        // fixed at creation and partition-scoped merges find real dirs
-        val staging = Swap.Suffix.staging(target, Swap.newTag())
-        val w = source.write
-        prunePartitions.fold(w)(w.partitionBy(_)).parquet(staging.toString)
-        CommitLog.commitStaged(spark, target, staging, readVersion,
-          Nil, wholeStore = true, schema = Some(source.schema))
-        return CommitLog.read(spark, target).get
-      }
-      // same layout rule as log mode: partition the store from its first
-      // write when a prune column is declared — a later partition-scoped
-      // merge against a flat store would otherwise leave a mixed layout
-      // whose directory read silently drops the root-level files
+    if (snapshot.isEmpty) {
+      // nothing to match: MERGE degenerates to insert-all. Lay out by the
+      // prune column from the FIRST write: a mixed flat+partitioned store
+      // reads ambiguously (root files have the column as data, partition
+      // dirs as a path), so the layout is fixed at creation and
+      // partition-scoped merges find real dirs
       val w = source.write
-      prunePartitions.fold(w)(w.partitionBy(_)).parquet(targetPath)
-      return spark.read.parquet(targetPath)
+      prunePartitions.fold(w)(w.partitionBy(_)).parquet(staging.toString)
+      CommitLog.commitStaged(spark, target, staging, readVersion,
+        Nil, wholeStore = true, schema = Some(source.schema))
+      return CommitLog.read(spark, target).get
     }
 
     // With schema evolution the store may hold files of BOTH schemas
@@ -132,17 +86,10 @@ object Merge {
     // read must union footers rather than sample one — otherwise the
     // evolved columns silently vanish depending on which file Spark picks
     // for inference. mergeSchema costs one footer read per file; only
-    // paid when evolution is on. Log mode pins the read to the OCC base
-    // version — the plan scans exactly the snapshot the conflict check
-    // covers, even if the tip moves mid-merge.
-    def readStore(): DataFrame =
-      if (logMode)
-        CommitLog.read(spark, target, Some(readVersion), evolveSchema).get
-      else if (evolveSchema)
-        spark.read.option("mergeSchema", "true").parquet(targetPath)
-      else spark.read.parquet(targetPath)
-
-    val current = readStore()
+    // paid when evolution is on. The read pins the OCC base version — the
+    // plan scans exactly the snapshot the conflict check covers, even if
+    // the tip moves mid-merge.
+    val current = CommitLog.read(spark, target, Some(readVersion), evolveSchema).get
     if (evolveSchema) {
       val missing = current.columns.toSet -- source.columns.toSet
       require(missing.isEmpty,
@@ -159,32 +106,23 @@ object Merge {
       .agg(count(lit(1)).as("graft_n")).filter(col("graft_n") > 1).limit(1).count()
     require(dupKeys == 0, s"source has multiple rows for the same key ${keyCols.mkString(",")}")
 
+    def mergedFrom(base: DataFrame): DataFrame =
+      base.join(source.select(keyCols.map(col): _*), keyCols, "left_anti")
+        .unionByName(source, allowMissingColumns = evolveSchema)
+
     // A store created WITHOUT a prune column holds root-level files
     // (pcol is a data column, not a path) — a partition-scoped rewrite
     // cannot retire rows from those, and a mixed flat+partitioned layout
-    // is ambiguous to read (the directory scan silently drops whichever
-    // shape loses partition inference). Convert with ONE whole-store
-    // partitioned rewrite; subsequent merges prune normally.
-    val storeIsFlat =
-      if (logMode)
-        CommitLog.snapshotFiles(fs, target, readVersion).exists(!_.contains('/'))
-      else fs.listStatus(target).exists(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet"))
+    // is ambiguous to read. Convert with ONE whole-store partitioned
+    // rewrite; subsequent merges prune normally.
+    val storeIsFlat = snapshot.exists(!_.contains('/'))
 
     prunePartitions match {
       case Some(pcol) if storeIsFlat =>
-        val tag = Swap.newTag()
-        val staging = Swap.Suffix.staging(target, tag)
-        val merged = current
-          .join(source.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(source, allowMissingColumns = evolveSchema)
+        val merged = mergedFrom(current)
         merged.write.partitionBy(pcol).parquet(staging.toString)
-        if (logMode)
-          CommitLog.commitStaged(spark, target, staging, readVersion,
-            Nil, wholeStore = true, schema = Some(merged.schema))
-        else
-          Swap.commitWholeDir(fs, target, staging,
-            Swap.Suffix.retired(target, tag), lease)
+        CommitLog.commitStaged(spark, target, staging, readVersion,
+          Nil, wholeStore = true, schema = Some(merged.schema))
       case Some(pcol) =>
         // Partition-scoped merge: rewrite only partitions the merge can
         // change. Those are (a) partitions the source writes into, and —
@@ -225,54 +163,25 @@ object Merge {
             Option(p)
           }
           .distinct
-        // Stage the merged output FULLY before touching the target: the
-        // merge plan scans the target, and an in-place overwrite would
-        // race its own recompute (cache eviction / task retry mid-write
-        // re-reads files the write is replacing). Write-to-staging then
-        // swap partition dirs — same protocol as the unpruned branch,
-        // scoped to the touched partitions. A touched partition with no
-        // output rows simply has no staged dir: its old dir is retired
-        // and never replaced, which also clears stale files that dynamic
-        // overwrite (rewriting only partitions PRESENT in the output)
-        // would leave behind.
-        // Swap via the shared marker-gated protocol (Swap.commitDirs):
-        // retire the old touched dirs, then move staged dirs in. Not
-        // atomic across partitions (parquet has no transaction log), but
-        // once the intent marker lands a crash ROLLS FORWARD on the next
-        // merge; before it, the target is untouched. The staged dir name
-        // is the writer's own encoding of the partition value, so the
-        // leftover handling inside commitDirs (zero-row dirs the row
-        // scan missed) name-matches exactly.
-        val tag = Swap.newTag()
-        val staging = Swap.Suffix.staging(target, tag)
-        val retired = Swap.Suffix.retired(target, tag)
-        val merged = scoped
-          .join(source.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(source, allowMissingColumns = evolveSchema)
+        // Stage the merged output FULLY, then publish one manifest that
+        // retires every file of the touched partition dirs. A touched
+        // partition with no output rows simply has no staged dir: its
+        // old files are retired and never replaced. Every staged dir is
+        // retired too: a file the row scan cannot see (zero rows) in a
+        // partition the output rewrites must not survive beside it.
+        val merged = mergedFrom(scoped)
         merged.write.partitionBy(pcol).parquet(staging.toString)
-        if (logMode)
-          CommitLog.commitStaged(spark, target, staging, readVersion,
-            oldDirs.map(_.getName).toSeq, wholeStore = false,
-            schema = Some(merged.schema))
-        else
-          Swap.commitDirs(fs, target, staging, retired,
-            oldDirs.map(_.getName).toSeq, lease)
+        val stagedDirs = fs.listStatus(staging).filter(_.isDirectory)
+          .map(_.getPath.getName)
+        CommitLog.commitStaged(spark, target, staging, readVersion,
+          (oldDirs.map(_.getName) ++ stagedDirs).distinct.toSeq, wholeStore = false,
+          schema = Some(merged.schema))
       case None =>
-        val tag = Swap.newTag()
-        val staging = Swap.Suffix.staging(target, tag)
-        val retired = Swap.Suffix.retired(target, tag)
-        val merged = current
-          .join(source.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(source, allowMissingColumns = evolveSchema)
+        val merged = mergedFrom(current)
         merged.write.parquet(staging.toString)
-        if (logMode)
-          CommitLog.commitStaged(spark, target, staging, readVersion,
-            Nil, wholeStore = true, schema = Some(merged.schema))
-        else
-          Swap.commitWholeDir(fs, target, staging, retired, lease)
+        CommitLog.commitStaged(spark, target, staging, readVersion,
+          Nil, wholeStore = true, schema = Some(merged.schema))
     }
-    if (logMode) CommitLog.read(spark, target, mergeSchema = evolveSchema).get
-    else readStore()
-    }
+    CommitLog.read(spark, target, mergeSchema = evolveSchema).get
   }
 }

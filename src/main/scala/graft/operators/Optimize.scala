@@ -43,8 +43,8 @@ object Optimize {
     require(numFiles > 0, "numFiles must be positive")
     val store = new Path(targetPath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(CommitLog.isLog(fs, store),
-      s"OPTIMIZE targets commit-log stores ($targetPath has no _log/)")
+    CommitLog.adopt(spark, store)
+    require(CommitLog.isLog(fs, store), s"OPTIMIZE target $targetPath does not exist")
 
     val readVersion = CommitLog.currentVersion(fs, store)
     val df = CommitLog.read(spark, store, Some(readVersion))

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * fact-sized. The store is laid out in SLICES (hive partitions on a
   * synthetic column): `open` holds all current versions; `c<yyyy-MM>`
   * holds the versions CLOSED in that month. A batch rewrites exactly two
-  * slice dirs — `open` and the batch month's closed slice — with Merge's
-  * staged-write + dir-swap protocol; a 100 TB-era dimension's history
+  * slice dirs — `open` and the batch month's closed slice — as one
+  * [[CommitLog]] manifest; a 100 TB-era dimension's history
   * accumulated over years is untouched on disk by a trickle batch, and
   * never even scanned (the read is partition-pruned to the two touched
   * slices).
@@ -42,68 +42,31 @@ object Scd2 {
   /** Closed-version slice for a batch timestamp: its calendar month. */
   private def closedSlice(batchTs: String): String = "c" + batchTs.substring(0, 7)
 
-  /** Recover an interrupted store rewrite before any read or write: the
-    * legacy-layout migration uses the whole-dir swap (crash window =
-    * store path missing, staged copy complete) and every batch apply
-    * uses the marker-gated partition-dir swap (crash window = hot slice
-    * dirs retired, staged replacements not yet moved in). Without this,
-    * a crash mid-swap leaves the store with NO open slice and the next
-    * apply() silently reopens every key as new — corruption, not an
-    * error. After recovery, a sliced store that still lacks an open
-    * slice has unknown provenance: fail loudly. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = Swap.fsOf(spark, target)
-    // log-backed stores have no swap crash states to recover: nothing is
-    // visible until a manifest CAS, so every on-disk snapshot is complete
-    if (CommitLog.isLog(fs, target)) return
-    // allowLoneStaging=false: SCD2's FIRST write is direct (apply writes
-    // the initial sliced store without staging), so a lone staging with
-    // the store missing is unknown provenance, not a fresh store.
-    Swap.recoverWholeDir(spark, target, Swap.Suffix, allowLoneStaging = false)
-    if (!fs.exists(target)) return
-    Swap.recoverDirs(spark, target, Swap.Suffix)
-    // maintain() compacts SLICE dirs via the Hidden-naming whole-dir
-    // swap (staging sits INSIDE the store root); a crash between its two
-    // renames leaves that slice dir missing with `.graft-staging-…` /
-    // `.graft-old-…` siblings. Roll those forward here too — otherwise a
-    // mechanically recoverable store fails the open-slice check below
-    // and bricks the stream until manual repair (maintain() itself calls
-    // recover() first, so it could never reach Compact's own recovery).
-    // ONE listing serves both this scan and the slice check below;
-    // re-list only when recovery actually acted on a slice dir.
-    val listed = fs.listStatus(target)
-    val recoveredSlices = listed.map(_.getPath.getName)
-      .flatMap(Swap.Hidden.parse(_).map(_._2))
-      .distinct
-      .filter(_.startsWith(SliceCol + "="))
-    recoveredSlices.foreach { sliceName =>
-      Swap.recoverWholeDir(spark, new org.apache.hadoop.fs.Path(target, sliceName),
-        Swap.Hidden, allowLoneStaging = false)
-    }
-    val slices = (if (recoveredSlices.nonEmpty) fs.listStatus(target) else listed)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(SliceCol + "="))
-      .map(_.getPath.getName)
-    if (slices.nonEmpty && !slices.contains(SliceCol + "=" + OpenSlice))
-      throw new IllegalStateException(
-        s"SCD2 store $path has closed slices [${slices.mkString(",")}] but no " +
-          s"$SliceCol=$OpenSlice dir and no recoverable swap leftovers — " +
-          "current versions are missing; restore the store manually")
-  }
-
-  /** The raw sliced store — commit-log snapshot when the store is
-    * log-backed (crash-safe by construction, no recovery pass), legacy
-    * recovered-directory read otherwise. */
+  /** The raw sliced store at its commit-log tip. A store written before
+    * the log is adopted first ([[CommitLog.adopt]], which also rolls
+    * forward a swap its legacy writer left half done). A store that has
+    * closed slices but no open slice has lost its current versions:
+    * reading on would silently reopen every key as new, so it fails
+    * loudly instead. */
   private def readSliced(spark: SparkSession, path: String): DataFrame = {
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = Swap.fsOf(spark, target)
-    if (CommitLog.isLog(fs, target))
-      CommitLog.read(spark, target).getOrElse(
-        throw new IllegalStateException(s"SCD2 log store $path is empty"))
-    else {
-      recover(spark, path)
-      spark.read.parquet(path)
-    }
+    CommitLog.adopt(spark, target)
+    val v = CommitLog.currentVersion(fs, target)
+    requireOpenSlice(target, CommitLog.snapshotFiles(fs, target, v))
+    CommitLog.read(spark, target, Some(v)).getOrElse(
+      throw new IllegalStateException(s"SCD2 store $path is empty"))
+  }
+
+  private def requireOpenSlice(
+      target: org.apache.hadoop.fs.Path, files: Seq[String]): Unit = {
+    val slices = files
+      .map(_.takeWhile(_ != '/')).filter(_.startsWith(SliceCol + "=")).distinct
+    if (slices.nonEmpty && !slices.contains(SliceCol + "=" + OpenSlice))
+      throw new IllegalStateException(
+        s"SCD2 store $target has closed slices [${slices.sorted.mkString(",")}] " +
+          s"but no $SliceCol=$OpenSlice dir — current versions are missing; " +
+          "restore the store manually")
   }
 
   /** The store with the slice column dropped — the logical SCD2 table. */
@@ -113,14 +76,18 @@ object Scd2 {
   /** Apply one delta batch to the SCD2 store at `path`. `batchTs` is the
     * effectivity timestamp ("yyyy-MM-dd HH:mm:ss"); passing it explicitly
     * (not now()) keeps replays deterministic.
+    *
+    * Optimistic concurrency on the two touched slice dirs: two applies
+    * race on `open` by construction, so one wins and the other gets a
+    * ConflictException to re-run; readers pin snapshots, and maintenance
+    * on disjoint slices runs beside the writer.
     * @return the updated store, read back. */
   def apply(
       spark: SparkSession,
       path: String,
       batch: DataFrame,
       keyCol: String,
-      batchTs: String,
-      log: Option[Boolean] = None): DataFrame = {
+      batchTs: String): DataFrame = {
     val attrCols = batch.columns.filterNot(_ == keyCol).toSeq
     require(attrCols.nonEmpty, "SCD2 needs at least one attribute column")
     require(!batch.columns.contains(SliceCol),
@@ -137,43 +104,29 @@ object Scd2 {
       .withColumn("is_current", lit(true))
 
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logMode = CommitLog.isLog(fs, target) ||
-      (!fs.exists(target) && log.getOrElse(CommitLog.confEnabled(spark)))
-    // Legacy mode: the whole cycle (recover → read → stage → swap) runs
-    // under the store's single-writer lease: a second concurrent apply
-    // fails at acquire instead of staging against a store the first is
-    // rewriting. Log mode: optimistic concurrency on the two touched
-    // slice dirs — two applies race on `open` by construction, so one
-    // wins and the other gets a ConflictException to re-run; what the
-    // log buys SCD2 is lock-free coexistence with readers (snapshot
-    // pinning) and with maintenance on disjoint slices.
-    def withProtocol[T](f: Option[Swap.Lease] => T): T =
-      if (logMode) f(None)
-      else Swap.withStoreLease(spark, target)(l => f(Some(l)))
-    withProtocol { lease =>
-    if (!logMode) recover(spark, path)
-    val readVersion = if (logMode) CommitLog.currentVersion(fs, target) else 0L
-    val hasData =
-      if (logMode) readVersion > 0 &&
-        CommitLog.snapshotFiles(fs, target, readVersion).nonEmpty
-      else fs.exists(target)
-    if (!hasData) {
-      val first = asVersion.withColumn(SliceCol, lit(OpenSlice))
-      if (logMode) {
-        val staging = Swap.Suffix.staging(target, Swap.newTag())
-        first.write.partitionBy(SliceCol).parquet(staging.toString)
-        CommitLog.commitStaged(spark, target, staging, readVersion,
-          Nil, wholeStore = true)
-      } else first.write.partitionBy(SliceCol).parquet(path)
+    val fs = Swap.fsOf(spark, target)
+    CommitLog.adopt(spark, target)
+    val (readVersion, files) = {
+      val v = CommitLog.currentVersion(fs, target)
+      val files = CommitLog.snapshotFiles(fs, target, v)
+      if (!migrateLegacyLayout(spark, target, v, files)) (v, files)
+      else {
+        val migrated = CommitLog.currentVersion(fs, target)
+        (migrated, CommitLog.snapshotFiles(fs, target, migrated))
+      }
+    }
+    val staging = Swap.Suffix.staging(target, Swap.newTag())
+    if (files.isEmpty) {
+      asVersion.withColumn(SliceCol, lit(OpenSlice))
+        .write.partitionBy(SliceCol).parquet(staging.toString)
+      CommitLog.commitStaged(spark, target, staging, readVersion,
+        Nil, wholeStore = true)
       return read(spark, path)
     }
-    if (!logMode) lease.foreach(migrateLegacyLayout(spark, fs, path, _))
+    requireOpenSlice(target, files)
 
     val slice = closedSlice(batchTs)
-    val store =
-      if (logMode) CommitLog.read(spark, target, Some(readVersion)).get
-      else spark.read.parquet(path)
+    val store = CommitLog.read(spark, target, Some(readVersion)).get
     // partition-pruned reads: only the open slice (current versions) and
     // this month's closed slice are ever scanned; other history slices
     // stay cold
@@ -214,59 +167,41 @@ object Scd2 {
       .unionByName(
         keptOpen.unionByName(newVersions).withColumn(SliceCol, lit(OpenSlice)))
 
-    // staged write, then commit: log mode publishes a manifest retiring
-    // the two touched slice dirs' files (OCC-checked against commits
-    // since readVersion); legacy mode swaps the dirs behind the intent
-    // marker (once it lands, any crash rolls FORWARD via recover();
-    // before it, the store is untouched and a half staging is discarded).
-    val tag = Swap.newTag()
-    val staging = Swap.Suffix.staging(target, tag)
-    val retired = Swap.Suffix.retired(target, tag)
+    // staged write, then one manifest retiring the two touched slice
+    // dirs' files (OCC-checked against commits since readVersion)
     val touchedSlices = Seq(OpenSlice, slice).distinct.map(SliceCol + "=" + _)
     updated.write.partitionBy(SliceCol).parquet(staging.toString)
-    if (logMode) {
-      CommitLog.commitStaged(spark, target, staging, readVersion,
-        touchedSlices, wholeStore = false)
-      CommitLog.read(spark, target).get.drop(SliceCol)
-    } else {
-      Swap.commitDirs(fs, target, staging, retired, touchedSlices, lease)
-      // not read(): recovery already ran at entry and the swap just
-      // committed — re-running it would pay two more store listings plus a
-      // parent-dir sibling scan on EVERY trickle batch for nothing
-      spark.read.parquet(path).drop(SliceCol)
-    }
-    }
+    CommitLog.commitStaged(spark, target, staging, readVersion,
+      touchedSlices, wholeStore = false)
+    CommitLog.read(spark, target).get.drop(SliceCol)
   }
 
   /** One-time migration of a store written before the sliced layout
-    * (flat parquet, no `graft_slice=` dirs): derive each row's slice and
-    * rewrite once with the staged-swap protocol. */
+    * (flat parquet, no `graft_slice=` dirs; adopted as-is): derive each
+    * row's slice and rewrite once as a whole-store commit. Returns
+    * whether it committed. */
   private def migrateLegacyLayout(
       spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String,
-      lease: Swap.Lease): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val sliced = fs.listStatus(target)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith(SliceCol + "="))
-    if (sliced) return
-    val legacy = spark.read.parquet(path)
+      target: org.apache.hadoop.fs.Path,
+      version: Long,
+      files: Seq[String]): Boolean = {
+    if (files.isEmpty || files.exists(_.startsWith(SliceCol + "="))) return false
+    val legacy = CommitLog.read(spark, target, Some(version)).get
     // a non-current version with NULL valid_to would land in the hive
     // default partition, which asOfStore's slice pruning silently drops
     // from every point-in-time read — reject the malformed store instead
     val malformed = legacy
       .filter(!col("is_current") && col("valid_to").isNull).limit(1).count()
     require(malformed == 0,
-      s"legacy SCD2 store $path has closed versions with NULL valid_to — " +
+      s"legacy SCD2 store $target has closed versions with NULL valid_to — " +
         "cannot derive their slice; repair the store before migrating")
     val withSlice = legacy.withColumn(SliceCol,
       when(col("is_current"), lit(OpenSlice))
         .otherwise(concat(lit("c"), date_format(col("valid_to"), "yyyy-MM"))))
-    val tag = Swap.newTag()
-    val staging = Swap.Suffix.staging(target, tag)
-    val retired = Swap.Suffix.retired(target, tag)
+    val staging = Swap.Suffix.staging(target, Swap.newTag())
     withSlice.write.partitionBy(SliceCol).parquet(staging.toString)
-    Swap.commitWholeDir(fs, target, staging, retired, Some(lease))
+    CommitLog.commitStaged(spark, target, staging, version, Nil, wholeStore = true)
+    true
   }
 
   /** Table maintenance: compact slice dirs that trickle batches have
@@ -275,25 +210,21 @@ object Scd2 {
     * time accumulates small files in exactly those hot dirs — the
     * listing/task-scheduling small-file failure mode Compact exists for.
     * Cold month slices keep their files untouched (Compact skips dirs at
-    * or under `maxFilesPerDir`). Content-preserving, crash-safe (each
-    * slice dir swaps whole via the row-count-checked staged swap), and
-    * safe to run between batches of a live scd2Stream — single-writer
-    * per store, like every parquet store here. */
+    * or under `maxFilesPerDir`). Content-preserving; each slice commits
+    * its own manifest, so maintenance runs beside writers on other
+    * slices and loses politely on the hot ones. Then it vacuums (default
+    * retention: the tip and the version before it): every apply retires
+    * the slice files it rewrites, and maintenance is when they leave the
+    * disk. */
   def maintain(
       spark: SparkSession,
       path: String,
       targetFileBytes: Long = 128L << 20,
       maxFilesPerDir: Int = 8): Map[String, Compact.CompactStats] = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    if (CommitLog.isLog(Swap.fsOf(spark, target), target))
-      // per-slice manifest commits; OCC lets maintenance run beside
-      // writers on other slices and lose politely on the hot ones
+    val stats =
       Compact.compactLogStore(spark, path, SliceCol, targetFileBytes, maxFilesPerDir)
-    else Swap.withStoreLease(spark, target) { lease =>
-      recover(spark, path)
-      Compact.compactStore(
-        spark, path, SliceCol, targetFileBytes, maxFilesPerDir, Some(lease))
-    }
+    CommitLog.vacuum(spark, new org.apache.hadoop.fs.Path(path))
+    stats
   }
 
   /** Point-in-time lookup: the version of each key valid at `asOf`. */

@@ -3,187 +3,26 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The ONE staged-swap protocol behind every store rewrite in graft
-  * (Merge, Scd2, Compact, IncrementalAgg / StreamOps.applyAggBatchOnce).
-  * Each of those operators used to carry its own copy of the
-  * stage/retire/rename/recover dance — four separate crash matrices to
-  * keep correct, and bug classes fixed in one (e.g. interrupted-swap
-  * roll-forward) had to be re-fixed in the others. This utility is that
-  * matrix, once.
+/** Staging names and the crash recovery of graft's retired staged-swap
+  * protocol. Every store now commits through [[CommitLog]]; what stays
+  * here is what that protocol still needs:
   *
-  * Two shapes:
+  *  - the staging-name helpers writers stage under before a manifest
+  *    commit ([[Suffix]] for a store root, [[Hidden]] for dirs staged
+  *    next to a store's own dirs, [[newTag]], [[fsOf]]);
+  *  - the roll-forward of a swap a legacy (pre-log) writer left half
+  *    done, which [[CommitLog.adopt]] runs once before it publishes a
+  *    legacy store's files as the log's first version ([[recover]]).
   *
-  *  - WHOLE-DIR swap: the caller fully writes a staged replacement for
-  *    `target`, then [[commitWholeDir]] does rename(target→retired),
-  *    rename(staging→target), delete(retired). A crash between the two
-  *    renames leaves the store path MISSING with a complete staging and
-  *    a retired pre-swap copy; [[recoverWholeDir]] rolls that forward.
-  *
-  *  - PARTITION-DIR swap: the caller stages a rewrite of SOME partition
-  *    dirs of `target` (trickle batches touch two slices of a years-old
-  *    store; the rest stays cold on disk). [[commitDirs]] first commits
-  *    an intent marker (atomic rename of a `_`-prefixed file inside
-  *    staging, invisible to parquet readers) listing the dirs to retire
-  *    — from that point every crash ROLLS FORWARD via [[recoverDirs]];
-  *    before it, a crash rolls back (staging is garbage, target is
-  *    untouched). A retire failure mid-commit renames already-retired
-  *    dirs back before throwing, so an explicit failure never strands
-  *    the store without its hot partitions.
-  *
-  * Naming is pluggable because the staged siblings must be invisible to
-  * readers in BOTH placements: a store-root swap stages at
-  * `<target>.staging-<tag>` (outside the store, nothing to hide), while
-  * a partition-dir swap stages INSIDE the store root, where a visible
-  * sibling would read back as a bogus partition of duplicated rows —
-  * those use dot-prefixed hidden names (Spark/Hadoop skip `.`/`_`
-  * prefixes in reads and partition discovery).
-  *
-  * Single-writer per store, like every parquet-backed store here; a
-  * table format with a transaction log (Delta/Iceberg) is the
-  * concurrent-writer upgrade path. Until then the single-writer RULE is
-  * enforced, not assumed: every write cycle holds the store's `.lock`
-  * lease (see [[withStoreLease]]), so a second concurrent writer fails
-  * loudly at acquire instead of silently interleaving staged swaps —
-  * at 100 TB with several ingest jobs pointed at one store, that is the
-  * difference between an operational error message and quiet data loss.
+  * The legacy protocol had two shapes. A WHOLE-DIR swap renamed
+  * target→retired, then staging→target; a crash between the two renames
+  * leaves the store path MISSING with a complete staging and a retired
+  * copy ([[recoverWholeDir]] rolls it forward). A PARTITION-DIR swap
+  * committed an intent marker ([[DirsMarker]]) inside its staging before
+  * retiring the touched dirs; after the marker a crash rolls forward,
+  * before it the staging is garbage ([[recoverDirs]]).
   */
 object Swap {
-
-  // ------------------------------------------------------------------ lease
-
-  /** `<store>.lock` — single-writer lease file, sibling of the store root
-    * (same placement as the `.staging-`/`.old-` swap dirs and the
-    * near-dup `.meta` sidecar, so cleaning a store's siblings cleans its
-    * lock too). Content: `token\nexpiryEpochMs`. */
-  val LockSuffix = ".lock"
-
-  /** Default lease TTL. Generous on purpose: it only matters when a
-    * writer DIES holding the lease (takeover happens after expiry), while
-    * a slow-but-alive writer past its TTL risks losing the lease to a
-    * contender — commit-time [[checkHeld]] turns that into a loud failure
-    * rather than an interleaved swap. Writers with longer cycles (a huge
-    * compaction) pass a bigger ttl. */
-  val DefaultLeaseTtlMs: Long = 30L * 60 * 1000
-
-  final case class Lease(lockPath: Path, token: String)
-
-  private def readLock(fs: FileSystem, lockPath: Path): Option[(String, Long)] =
-    try {
-      val in = fs.open(lockPath)
-      val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
-      text.split("\n").map(_.trim) match {
-        case Array(token, expiry) => Some((token, expiry.toLong))
-        case _ => None // torn write of a foreign lock: treat as held-unknown
-      }
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Acquire the store's single-writer lease or throw. Mutual exclusion
-    * comes from atomic create-if-absent (`fs.create(overwrite = false)`)
-    * — atomic on HDFS and local FS; on object stores without conditional
-    * writes this degrades to best-effort, the same caveat their rename
-    * already carries. An expired lease is taken over: the holder crashed
-    * mid-cycle, and whatever it left half-done is exactly what the
-    * recover* roll-forward already handles. A torn/unreadable lock file
-    * counts as held (fail loud, never steal a live writer's lease). */
-  def acquireLease(
-      fs: FileSystem,
-      store: Path,
-      ttlMs: Long = DefaultLeaseTtlMs): Lease = {
-    val lockPath = new Path(store.toString + LockSuffix)
-    val token = java.util.UUID.randomUUID().toString
-    def tryCreate(): Boolean =
-      try {
-        val out = fs.create(lockPath, false)
-        try out.write(
-          s"$token\n${System.currentTimeMillis() + ttlMs}".getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    def contended(holder: Option[(String, Long)]): Nothing = {
-      val who = holder match {
-        case Some((t, e)) =>
-          s"token ${t.take(8)}.., expires ${new java.sql.Timestamp(e)}"
-        case None => "unreadable lock"
-      }
-      throw new IllegalStateException(
-        s"store $store is write-locked by another writer ($who) — " +
-          "concurrent writers on a parquet-backed store would interleave " +
-          "staged swaps; wait for the holder, or delete " +
-          s"$lockPath if the holder is known dead")
-    }
-    if (tryCreate()) return Lease(lockPath, token)
-    val holder = readLock(fs, lockPath)
-    holder match {
-      case Some((_, expiry)) if expiry < System.currentTimeMillis() =>
-        // Stale: holder died mid-cycle. Takeover must be ATOMIC —
-        // delete-then-create lets two contenders that both read the
-        // expired lock both delete, the second delete removing the
-        // first's freshly created lock, leaving TWO writers holding
-        // "valid" leases. Rename the stale lock to a contender-unique
-        // sibling instead: exactly one rename succeeds; losers fall
-        // through to normal contention against whoever re-creates.
-        val claimed = new Path(lockPath.toString + ".stale-" + token)
-        if (fs.rename(lockPath, claimed)) {
-          fs.delete(claimed, false)
-          if (tryCreate()) Lease(lockPath, token)
-          else contended(readLock(fs, lockPath)) // lost the re-create race
-        } else contended(readLock(fs, lockPath)) // lost the takeover race
-      case other if other.isEmpty && tryCreate() =>
-        Lease(lockPath, token) // holder released between our create and read
-      case other => contended(other)
-    }
-  }
-
-  /** Throw if `lease` is no longer the lock file's current token — the
-    * writer outlived its TTL and a contender took over. Called by
-    * [[commitWholeDir]]/[[commitDirs]] right before the critical renames,
-    * narrowing the expiry race to the rename window itself. */
-  def checkHeld(fs: FileSystem, lease: Lease): Unit = {
-    val current = readLock(fs, lease.lockPath)
-    require(
-      current.exists(_._1 == lease.token),
-      s"write lease on ${lease.lockPath} was lost (now " +
-        s"${current.map(_._1.take(8) + "…").getOrElse("absent")}) — another " +
-        "writer took over after this one exceeded its TTL; aborting before " +
-        "the swap interleaves with the new holder's")
-  }
-
-  /** Release only if still held — deleting a successor's lock would let a
-    * third writer in behind its back. Read-token-then-delete has the same
-    * non-atomicity as the old takeover path (a successor can move in
-    * between the read and the delete, and the delete then removes the
-    * successor's LIVE lock); instead rename the lock file out to a
-    * holder-unique name first — atomic claim — then verify the claimed
-    * file really carries our token. If it does not, we renamed a
-    * successor's lock (our lease expired mid-cycle and was taken over):
-    * rename it straight back. Should even that rename-back lose to a
-    * third writer creating afresh in the gap, the successor's commit-time
-    * [[checkHeld]] fails loudly — never a silent interleave. */
-  def releaseLease(fs: FileSystem, lease: Lease): Unit = {
-    val claimed = new Path(lease.lockPath.toString + ".release-" + lease.token)
-    if (!fs.rename(lease.lockPath, claimed)) return // gone or taken over
-    readLock(fs, claimed) match {
-      case Some((t, _)) if t == lease.token => fs.delete(claimed, false)
-      case _ =>
-        if (!fs.rename(claimed, lease.lockPath)) fs.delete(claimed, false)
-    }
-  }
-
-  /** Run one write cycle (recover → stage → commit) under the store's
-    * lease. */
-  def withStoreLease[T](
-      spark: SparkSession,
-      store: Path,
-      ttlMs: Long = DefaultLeaseTtlMs)(f: Lease => T): T = {
-    val fs = fsOf(spark, store)
-    val lease = acquireLease(fs, store, ttlMs)
-    try f(lease) finally releaseLease(fs, lease)
-  }
 
   /** Intent marker inside a staged partition-dir swap: its presence
     * means "retire list is final, roll forward"; `_` prefix keeps it
@@ -194,6 +33,31 @@ object Swap {
 
   def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Roll forward every swap a legacy writer of `store` can have left
+    * half done, once, before [[CommitLog.adopt]] lists the store's
+    * files: whole-dir swaps of the store root ([[Suffix]] naming for
+    * Merge/Scd2/IncrementalAgg, [[Hidden]] for compaction), partition-dir
+    * swaps into the root, and one level down the swaps that targeted a
+    * top-level dir (partition-dir swaps into an index's `data/`, whole-dir
+    * compactions of an SCD2 slice). With the store missing, a lone
+    * [[Suffix]] staging is a crashed first write: the path is fresh. */
+  def recover(spark: SparkSession, store: Path): Unit = {
+    val fs = fsOf(spark, store)
+    recoverWholeDir(spark, store, Suffix, allowLoneStaging = true)
+    recoverWholeDir(spark, store, Hidden, allowLoneStaging = false)
+    if (!fs.exists(store)) return
+    recoverDirs(spark, store, Suffix)
+    // one listing names every top-level dir that has swap siblings
+    val names = fs.listStatus(store).map(_.getPath.getName)
+    val SuffixSibling = """(.+)\.(?:staging|old)-[^.]+""".r
+    names.flatMap(Hidden.parse(_).map(_._2)).distinct.foreach { n =>
+      recoverWholeDir(spark, new Path(store, n), Hidden, allowLoneStaging = false)
+    }
+    names.collect { case SuffixSibling(n) => n }.distinct
+      .filter(n => fs.exists(new Path(store, n)))
+      .foreach(n => recoverDirs(spark, new Path(store, n), Suffix))
+  }
 
   /** Where the staged/retired siblings of a target live and what they
     * are called. */
@@ -261,37 +125,6 @@ object Swap {
     else fs.listStatus(parent).map(_.getPath.getName)
   }
 
-  // ---------------------------------------------------------------- whole dir
-
-  /** Swap a fully-staged replacement into `target`. The staging dir must
-    * be COMPLETELY written (and verified — row counts, markers) before
-    * calling: after the first rename the old store is gone from its
-    * path, and recovery assumes staging needs no further work. */
-  def commitWholeDir(
-      fs: FileSystem,
-      target: Path,
-      staging: Path,
-      retired: Path,
-      lease: Option[Lease] = None): Unit = {
-    lease.foreach(checkHeld(fs, _))
-    if (!fs.rename(target, retired)) {
-      fs.delete(staging, true)
-      throw new java.io.IOException(s"could not retire $target")
-    }
-    if (!fs.rename(staging, target)) {
-      if (fs.rename(retired, target)) { // roll back: store restored
-        fs.delete(staging, true)
-        throw new java.io.IOException(
-          s"could not swap $staging into $target (previous store restored)")
-      }
-      throw new java.io.IOException(
-        s"could not swap $staging into $target and the retired copy at " +
-          s"$retired could not be restored — recovery will roll the " +
-          "staged copy forward on the next access")
-    }
-    fs.delete(retired, true)
-  }
-
   /** Roll an interrupted whole-dir swap forward. A crash between
     * rename(target→retired) and rename(staging→target) leaves `target`
     * MISSING with the full rewrite staged (it was completely written
@@ -318,7 +151,7 @@ object Swap {
     val stagings = siblings.flatMap(naming.stagingTag(target, _))
     val olds = siblings.flatMap(naming.retiredTag(target, _))
     // A staging carrying the PARTITION-swap intent marker belongs to
-    // commitDirs, not to any whole-dir swap: it is a live roll-forward
+    // a partition-dir swap, not to any whole-dir swap: it is a live roll-forward
     // copy that recoverDirs must complete (partition swaps run against
     // an EXISTING target root, so "target exists + marker staging" is
     // that protocol's normal crash state). Never treat it — or its
@@ -367,19 +200,6 @@ object Swap {
     }
   }
 
-  // ----------------------------------------------------------- partition dirs
-
-  private def writeMarker(fs: FileSystem, staging: Path, retireNames: Seq[String]): Unit = {
-    // write-then-rename so the marker appears ATOMICALLY complete: a torn
-    // retire list rolled forward would skip retiring some dirs and
-    // resurrect their old rows next to the staged replacements
-    val tmp = new Path(staging, DirsMarker + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(retireNames.mkString("\n").getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, new Path(staging, DirsMarker)))
-      throw new java.io.IOException(s"could not commit swap marker in $staging")
-  }
-
   private def readMarker(fs: FileSystem, staging: Path): Seq[String] = {
     val in = fs.open(new Path(staging, DirsMarker))
     val text =
@@ -393,59 +213,6 @@ object Swap {
 
   private def stagedDirs(fs: FileSystem, staging: Path): Array[Path] =
     fs.listStatus(staging).filter(_.isDirectory).map(_.getPath)
-
-  /** Swap staged partition dirs into `target`, retiring `retireNames`
-    * (dir names directly under `target`; a retired name with no staged
-    * replacement is simply removed — e.g. a partition whose rows all
-    * moved elsewhere). The staging dir must be completely written.
-    * Crash posture: before the intent marker lands, `target` is
-    * untouched and recovery discards staging; after it, recovery rolls
-    * the swap forward. An explicit retire FAILURE (rename returns false,
-    * no crash) rolls already-retired dirs back and restores the store
-    * before throwing. */
-  def commitDirs(
-      fs: FileSystem,
-      target: Path,
-      staging: Path,
-      retired: Path,
-      retireNames: Seq[String],
-      lease: Option[Lease] = None): Unit = {
-    lease.foreach(checkHeld(fs, _))
-    writeMarker(fs, staging, retireNames) // point of no return: roll forward
-    fs.mkdirs(retired)
-    val retiredSoFar = scala.collection.mutable.ArrayBuffer[String]()
-    retireNames.foreach { n =>
-      val d = new Path(target, n)
-      if (fs.exists(d)) {
-        if (!fs.rename(d, new Path(retired, n))) {
-          // roll back: restore the store to its pre-swap state before
-          // throwing — never strand it without its hot partitions. The
-          // cleanup deletes are GATED on every rename-back succeeding:
-          // a failed rename-back means the retired dir still holds the
-          // only pre-swap copy of that partition, and deleting it would
-          // destroy data while the exception claims the store is fine.
-          // In that case leave staging AND retired in place — the
-          // committed marker makes the next recoverDirs roll the whole
-          // swap FORWARD (idempotent over the dirs already restored).
-          val restoredAll = retiredSoFar.forall(m =>
-            fs.rename(new Path(retired, m), new Path(target, m)))
-          if (restoredAll) {
-            fs.delete(staging, true)
-            fs.delete(retired, true)
-            throw new java.io.IOException(s"could not retire partition dir $d " +
-              "(already-retired dirs restored, store unchanged)")
-          }
-          throw new java.io.IOException(s"could not retire partition dir $d " +
-            "and some already-retired dirs could not be restored — staging " +
-            "and retired copies preserved; recovery will roll the swap forward")
-        }
-        retiredSoFar += n
-      }
-    }
-    moveStagedIn(fs, target, staging, retired)
-    fs.delete(staging, true)
-    fs.delete(retired, true)
-  }
 
   /** Move every staged dir into the store. A dest that still exists is
     * an old leftover the retire list missed (e.g. a dir whose files hold
@@ -472,8 +239,7 @@ object Swap {
     * sibling WITHOUT the intent marker is a pre-commit crash (the store
     * was never touched — discard it); one WITH the marker rolls forward
     * (idempotent: dirs already retired or already moved skip
-    * themselves). Call before reading or writing a store maintained with
-    * [[commitDirs]]. */
+    * themselves). */
   def recoverDirs(spark: SparkSession, target: Path, naming: Naming): Unit = {
     val fs = fsOf(spark, target)
     val siblings = siblingNames(fs, target)

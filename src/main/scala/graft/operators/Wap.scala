@@ -57,6 +57,7 @@ object Wap {
     require(maxAudits > 0, s"maxAudits must be positive, got $maxAudits")
     val store = new Path(targetPath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CommitLog.adopt(spark, store)
 
     var lastConflict: CommitLog.ConflictException = null
     var audits = 0

@@ -349,7 +349,7 @@ object CurationQueries {
              |WHERE rk <= 10 ORDER BY query_id, doc_id""".stripMargin)),
 
     // BM25 through the COMMIT-LOG index with an incremental append
-    // (operators/Bm25Index.buildAndSaveLog/append): build on the even
+    // (operators/Bm25Index.buildAndSave/append): build on the even
     // doc ids, append the odd ones — one atomic manifest moves
     // postings + doclen + stats — then query the appended tip. BM25
     // freezes nothing at build time (df/n/avgdl recompute from the
@@ -362,12 +362,12 @@ object CurationQueries {
       (s, d) => {
         val dir = graft.GraftQuery.tempDir("graft_bm25lq") + "/idx"
         val docs = Tables.documents(s, d)
-        graft.operators.Bm25Index.buildAndSaveLog(
+        graft.operators.Bm25Index.buildAndSave(
           docs.filter(col("doc_id") % 2 === 0), dir, "doc_id", "text",
           buckets = 16)
         graft.operators.Bm25Index.append(s, dir,
           docs.filter(col("doc_id") % 2 === 1))
-        graft.operators.Bm25Index.loadLog(s, dir)
+        graft.operators.Bm25Index.load(s, dir)
           .topK(
             Seq(
               "q1" -> "spark join window",

@@ -115,13 +115,13 @@ object LateralMapQueries {
     // The store is COMMIT-LOG backed (CommitLog.scala): the first call
     // creates log version v1, the merge publishes v2 via the optimistic
     // CAS protocol — so the gated row exercises the transaction-log read
-    // AND write paths, not just the legacy dir swap.
+    // AND write paths.
     GraftQuery(
       "q_merge",
       (s, d) => {
         val tmp = graft.GraftQuery.tempDir("graft_merge") + "/t"
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"))
         val updates = cust.filter(col("c_custkey") <= 100)
           .withColumn("c_name", upper(col("c_name")))
         val inserts = cust.filter(col("c_custkey") <= 100)

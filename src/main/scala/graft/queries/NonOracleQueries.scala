@@ -150,7 +150,7 @@ object NonOracleQueries {
           graft.operators.IncrementalAgg.update(s, tmp,
             li.filter(col("l_orderkey") % 3 === i),
             Seq("l_returnflag"), "l_quantity",
-            distinctCol = Some("l_suppkey"), log = Some(true))
+            distinctCol = Some("l_suppkey"))
         }
         graft.operators.IncrementalAgg.withDistinct(
           graft.operators.IncrementalAgg.readStore(s, tmp))
@@ -899,8 +899,8 @@ object NonOracleQueries {
 
     // Small-file compaction (table maintenance), ORACLE-GATED (promoted
     // r12): a store trickle-written as 32 tiny files folds to ~1 per
-    // 128 MB through the REAL swap-protocol rewrite, then the COMPACTED
-    // files are read back and digested — count, keyed arithmetic
+    // 128 MB through the REAL commit-log rewrite, then the COMPACTED
+    // snapshot is read back and digested — count, keyed arithmetic
     // checksum, quantity sum, distinct keys. The oracle computes the
     // same digests over the original table, so a hash match proves the
     // rewrite preserved content exactly. File-count behavior (32 → ~1,
@@ -916,7 +916,7 @@ object NonOracleQueries {
         val st = graft.operators.Compact.compactDir(s, dir)
         require(st.filesAfter < st.filesBefore,
           s"compaction did not reduce files: $st")
-        s.read.parquet(dir).agg(
+        graft.operators.CommitLog.read(s, new org.apache.hadoop.fs.Path(dir)).get.agg(
           count(lit(1)).as("n_rows"),
           sum(col("l_orderkey") * lit(131071L) + col("l_partkey") * lit(8191L))
             .as("key_digest"),

@@ -26,7 +26,7 @@ object StoreQueries {
       (s, d) => {
         val tmp = graft.GraftQuery.tempDir("graft_scd2q") + "/dim"
         val sup = Tables.supplier(s, d).select(col("s_suppkey"), col("s_name"))
-        Scd2.apply(s, tmp, sup, "s_suppkey", "2024-01-01 00:00:00", log = Some(true))
+        Scd2.apply(s, tmp, sup, "s_suppkey", "2024-01-01 00:00:00")
         val b2 = sup.filter(col("s_suppkey") <= 30)
           .withColumn("s_name",
             when(col("s_suppkey") % 2 === 0, upper(col("s_name")))
@@ -132,8 +132,7 @@ object StoreQueries {
         val li = Tables.lineitem(s, d)
         (0 until 3).foreach { i =>
           IncrementalAgg.update(s, tmp,
-            li.filter(col("l_orderkey") % 3 === i), Seq("l_returnflag"), "l_quantity",
-            log = Some(true))
+            li.filter(col("l_orderkey") % 3 === i), Seq("l_returnflag"), "l_quantity")
         }
         IncrementalAgg.withAvg(IncrementalAgg.readStore(s, tmp))
           .select(
@@ -161,7 +160,7 @@ object StoreQueries {
       (s, d) => {
         val tmp = graft.GraftQuery.tempDir("graft_delq") + "/t"
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"))
         graft.operators.Delete.where(s, tmp, col("c_custkey") % 10 === 0)
           .orderBy("c_custkey")
       },
@@ -178,7 +177,7 @@ object StoreQueries {
       (s, d) => {
         val tmp = graft.GraftQuery.tempDir("graft_cfq") + "/t"
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"))
         val upd = cust.filter(col("c_custkey") % 7 === 0)
           .withColumn("c_name", upper(col("c_name")))
           .unionByName(cust.filter(col("c_custkey") < 50).select(
@@ -224,7 +223,7 @@ object StoreQueries {
       (s, d) => {
         val tmp = graft.GraftQuery.tempDir("graft_ttq") + "/t"
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"))
         val updates = cust.filter(col("c_custkey") % 10 === 0)
           .withColumn("c_name", lower(col("c_name")))
         graft.operators.Merge.into(s, tmp, updates, Seq("c_custkey"))
@@ -255,7 +254,7 @@ object StoreQueries {
         val tmp = graft.GraftQuery.tempDir("graft_optq") + "/t"
         val cust = Tables.customer(s, d)
           .select(col("c_custkey"), col("c_nationkey"), col("c_name"))
-        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"))
         graft.operators.Optimize.zorder(
           s, tmp, Seq("c_custkey", "c_nationkey"), numFiles = 8)
         graft.operators.Optimize.readRange(
@@ -327,7 +326,7 @@ object StoreQueries {
           expr("timestampdiff(MICROSECOND, timestamp_ntz'1970-01-01 00:00:00', ts)")
             .as("us"),
           col("event_type"))
-        graft.operators.Merge.into(s, tmp, ev, Seq("event_id"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, ev, Seq("event_id"))
         graft.operators.Optimize.zorder(s, tmp, Seq("us"), numFiles = 8)
         graft.operators.Delete
           .expire(s, tmp, "us", cutoff = 1704844800000000L) // 2024-01-10 UTC
@@ -351,7 +350,7 @@ object StoreQueries {
         val tmp = graft.GraftQuery.tempDir("graft_bfq") + "/t"
         val ords = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        graft.operators.Merge.into(s, tmp, ords, Seq("o_orderkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, ords, Seq("o_orderkey"))
         graft.operators.BloomIndex.build(s, tmp, "o_custkey",
           expectedItemsPerFile = 100000L, numBits = 800000L)
         graft.operators.BloomIndex
@@ -375,7 +374,7 @@ object StoreQueries {
       (s, d) => {
         val tmp = graft.GraftQuery.tempDir("graft_cdcq") + "/t"
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"))
         val feed = cust.filter(col("c_custkey") % 7 === 0)
           .select(col("c_custkey"), upper(col("c_name")).as("c_name"),
             lit(2L).as("seq"), lit("U").as("op"))
@@ -447,7 +446,7 @@ object StoreQueries {
         val src = base + "/src"
         val dst = base + "/clone"
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        graft.operators.Merge.into(s, src, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, src, cust, Seq("c_custkey"))
         graft.operators.CommitLog.shallowClone(s,
           new org.apache.hadoop.fs.Path(src),
           new org.apache.hadoop.fs.Path(dst))
@@ -483,7 +482,7 @@ object StoreQueries {
         val tmp = graft.GraftQuery.tempDir("graft_rstq") + "/t"
         val p = new org.apache.hadoop.fs.Path(tmp)
         val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"), log = Some(true))
+        graft.operators.Merge.into(s, tmp, cust, Seq("c_custkey"))
         graft.operators.Merge.into(s, tmp,
           cust.filter(col("c_custkey") % 3 === 0)
             .withColumn("c_name", lit("BROKEN")), Seq("c_custkey"))

@@ -189,17 +189,16 @@ object Avro {
     * function over the pinned element schema, arrays/maps hoist their
     * element converter once — value-for-value identical to
     * [[toSparkValue]] (nested records millis-normalize per field exactly
-    * as [[recordToRow]] does; bare array/map timestamp elements stay on
-    * the micros reading, matching the generic path's behavior). */
+    * as [[recordToRow]] does), except that array/map timestamp elements
+    * millis-normalize by their own logical type, which the schema-less
+    * generic path cannot see. */
   private[sources] def rowReader(
       avroSchema: Schema, st: StructType): GenericRecord => Row = {
     val n = st.fields.length
     val pos: Array[Int] = st.fields.map(f => avroSchema.getField(f.name).pos())
     val convs: Array[Any => Any] = st.fields.map { f =>
       val fieldSch = unwrap(avroSchema.getField(f.name).schema())
-      val isMillis = fieldSch.exists(s =>
-        Option(s.getLogicalType).exists(_.getName.endsWith("-millis")))
-      valueReader(f.dataType, isMillis, fieldSch)
+      valueReader(f.dataType, fieldSch.exists(isMillisSchema), fieldSch)
     }
     rec => {
       val arr = new Array[Any](n)
@@ -286,11 +285,12 @@ object Avro {
       }
       case at: ArrayType => sch match {
         case Some(as) if as.getType == Schema.Type.ARRAY =>
-          // element conversions mirror toSparkValue: timestamps read as
-          // micros (no field-level millis flag exists for bare elements),
-          // record elements millis-normalize via their own rowReader
-          val ec = valueReader(at.elementType, isMillis = false,
-            Some(unwrap(as.getElementType).getOrElse(as.getElementType)))
+          // a timestamp element millis-normalizes by its OWN logical
+          // type (an externally written timestamp-millis element would
+          // otherwise read 1000× off); record elements millis-normalize
+          // per field via their own rowReader
+          val es = unwrap(as.getElementType).getOrElse(as.getElementType)
+          val ec = valueReader(at.elementType, isMillisSchema(es), Some(es))
           val conv: Any => Any = {
             case a: java.util.Collection[_] =>
               a.asScala.map(v => if (v == null) null else ec(v)).toSeq
@@ -301,8 +301,8 @@ object Avro {
       }
       case mt: MapType => sch match {
         case Some(ms) if ms.getType == Schema.Type.MAP =>
-          val vc = valueReader(mt.valueType, isMillis = false,
-            Some(unwrap(ms.getValueType).getOrElse(ms.getValueType)))
+          val vs = unwrap(ms.getValueType).getOrElse(ms.getValueType)
+          val vc = valueReader(mt.valueType, isMillisSchema(vs), Some(vs))
           val conv: Any => Any = {
             case m: java.util.Map[_, _] =>
               m.asScala.map { case (k, x) =>
@@ -332,14 +332,13 @@ object Avro {
       sch: Schema, st: StructType): Row => GenericRecord = {
     val fields = sch.getFields.asScala.toArray
     val idx: Array[Int] = fields.map(f => st.fieldIndex(f.name()))
-    val nullOk: Array[Boolean] = fields.map(f =>
-      f.schema().getType == Schema.Type.UNION &&
-        f.schema().getTypes.asScala.exists(_.getType == Schema.Type.NULL))
+    val nullOk: Array[Boolean] = fields.map(f => acceptsNull(f.schema()))
+    val recName = sch.getFullName
     val convs: Array[Any => Any] = fields.map { f =>
       val unwrapped = unwrap(f.schema()).getOrElse(f.schema())
-      valueWriter(unwrapped, Some(st.fields(st.fieldIndex(f.name())).dataType))
+      valueWriter(unwrapped, Some(st.fields(st.fieldIndex(f.name())).dataType),
+        s"field ${f.name()} of $recName")
     }
-    val recName = sch.getFullName
     row => {
       val rec = new GenericData.Record(sch)
       var i = 0
@@ -365,7 +364,7 @@ object Avro {
     * the GenericRecordBuilder-per-nested-record generic path at ~2-3×);
     * without it they fall back to [[toAvroValue]]. */
   private def valueWriter(
-      sch: Schema, dt: Option[DataType] = None): Any => Any = sch.getType match {
+      sch: Schema, dt: Option[DataType], what: String): Any => Any = sch.getType match {
     case Schema.Type.INT if sch.getLogicalType != null => {
       case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
       case d: java.time.LocalDate => d.toEpochDay.toInt
@@ -397,10 +396,12 @@ object Avro {
     case Schema.Type.ARRAY => dt match {
       case Some(ArrayType(et, _)) =>
         val elemSch = sch.getElementType
-        val ec = valueWriter(unwrap(elemSch).getOrElse(elemSch), Some(et))
+        val elem = s"element of $what"
+        val ec = valueWriter(unwrap(elemSch).getOrElse(elemSch), Some(et), elem)
+        val nul = nullWriter(elemSch, elem)
         val conv: Any => Any = {
           case a: scala.collection.Seq[_] =>
-            a.map(v => if (v == null) null else ec(v)).asJava
+            a.map(v => if (v == null) nul() else ec(v)).asJava
           case x => x
         }
         conv
@@ -409,11 +410,13 @@ object Avro {
     case Schema.Type.MAP => dt match {
       case Some(MapType(_, vt, _)) =>
         val vSch = sch.getValueType
-        val vc = valueWriter(unwrap(vSch).getOrElse(vSch), Some(vt))
+        val value = s"value of $what"
+        val vc = valueWriter(unwrap(vSch).getOrElse(vSch), Some(vt), value)
+        val nul = nullWriter(vSch, value)
         val conv: Any => Any = {
           case m: scala.collection.Map[_, _] =>
             m.map { case (k, x) =>
-              k.toString -> (if (x == null) null else vc(x))
+              k.toString -> (if (x == null) nul() else vc(x))
             }.asJava
           case x => x
         }
@@ -423,13 +426,30 @@ object Avro {
     case _ => identity
   }
 
+  /** Whether `s` (a field, element or map-value schema) has a null
+    * branch. */
+  private def acceptsNull(s: Schema): Boolean =
+    s.getType == Schema.Type.UNION &&
+      s.getTypes.asScala.exists(_.getType == Schema.Type.NULL)
+
+  /** What a null array element / map value encodes to: null when `s` has
+    * a null branch; otherwise the same named refusal a record field
+    * gets, instead of an NPE deep inside the Hadoop datum writer. */
+  private def nullWriter(s: Schema, what: String): () => Any =
+    if (acceptsNull(s)) () => null
+    else () => throw new IllegalArgumentException(
+      s"$what does not accept null (avro schema has no null branch)")
+
+  /** Whether an unwrapped schema carries a `*-millis` logical type. */
+  private def isMillisSchema(s: Schema): Boolean =
+    Option(s.getLogicalType).exists(_.getName.endsWith("-millis"))
+
   private[sources] def recordToRow(r: GenericRecord, st: StructType): Row =
     Row.fromSeq(st.fields.toSeq.map { f =>
       val raw = r.get(f.name)
       // normalize timestamp-millis to micros-backed Instant
       val fieldSchema = r.getSchema.getField(f.name).schema()
-      val isMillis = unwrap(fieldSchema).exists(s =>
-        Option(s.getLogicalType).exists(_.getName.endsWith("-millis")))
+      val isMillis = unwrap(fieldSchema).exists(isMillisSchema)
       (raw, f.dataType) match {
         case (l: java.lang.Long, TimestampType) if isMillis =>
           java.time.Instant.ofEpochMilli(l)

@@ -224,6 +224,7 @@ object StreamOps {
         val enriched = graft.operators.DimUpsert.upsert(
           batch.sparkSession, dimPath, batch, keyCol)
         sink(enriched, batchId)
+        vacuumOnCadence(batch.sparkSession, dimPath, batchId)
       }
       .start()
 
@@ -286,12 +287,13 @@ object StreamOps {
       prepare: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
     facts.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val prepared = prepare(batch)
         if (!prepared.isEmpty) {
           graft.operators.Merge.into(batch.sparkSession, targetPath, prepared, keyCols)
           ()
         }
+        vacuumOnCadence(batch.sparkSession, targetPath, batchId)
       }
       .start()
 
@@ -340,8 +342,8 @@ object StreamOps {
     val store = new org.apache.hadoop.fs.Path(targetPath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the append sink is log-native: a fresh path becomes a log store
-    // (exactly-once NEEDS the atomic manifest); an existing legacy swap
-    // store cannot take appends safely and is refused
+    // (exactly-once NEEDS the atomic manifest); a store written before
+    // the log has no append high-water mark and is refused
     require(graft.operators.CommitLog.isLog(fs, store) || !fs.exists(store),
       s"append sink needs a commit-log store; $targetPath exists without _log/")
     val last = graft.operators.CommitLog.lastMeta(fs, store, "appendBatchId")
@@ -411,10 +413,10 @@ object StreamOps {
     if (!graft.operators.CommitLog.isLog(fs, store)) {
       require(!fs.exists(store),
         s"$indexPath exists without a commit log — the streaming BM25 sink " +
-          "is log-native (exactly-once needs the atomic manifest); plain " +
-          "buildAndSave stores cannot take appends")
+          "is log-native (exactly-once needs the atomic manifest); an index " +
+          "built before the commit log cannot take appends")
       if (batch.isEmpty) return false
-      graft.operators.Bm25Index.buildAndSaveLog(
+      graft.operators.Bm25Index.buildAndSave(
         batch, indexPath, idCol, textCol, buckets, meta = tag)
       return true
     }
@@ -644,8 +646,8 @@ object StreamOps {
     * graft.operators.IncrementalAgg) — the streaming materialized-view
     * refresh. Unlike MERGE/dim-upsert, the fold is NOT idempotent (a
     * replayed batch would double-count), so the last applied batchId is
-    * committed inside the store by the same rename that commits the data,
-    * and replays are skipped — exactly-once store state under
+    * committed in the same manifest that commits the data, and replays
+    * are skipped — exactly-once store state under
     * foreachBatch's at-least-once delivery. */
   def incrementalAggStream(
       facts: DataFrame,
@@ -667,11 +669,15 @@ object StreamOps {
   /** The guarded fold behind [[incrementalAggStream]]: applies the batch
     * only when `batchId` is beyond the store's recorded high-water mark.
     *
-    * Exactly-once protocol: the marker lives INSIDE the store directory
-    * and is written into the staging dir that IncrementalAgg's swap
-    * renames into place — data and marker commit in the same atomic
-    * rename, so no crash point leaves an applied fold with a stale
-    * marker (which would double-count on replay) or vice versa.
+    * Exactly-once protocol: the mark rides the manifest meta of the fold
+    * it describes — one CAS commits both, so no crash point leaves an
+    * applied fold with a stale mark (which would double-count on replay)
+    * or vice versa — and update() itself skips replays anchored at the
+    * fold's own read version (a racing fold conflicts at the CAS, so
+    * check-and-fold is atomic without a lock). A store that holds data
+    * but never recorded a mark was not maintained by the stream: which
+    * batches it holds is unknown, so it is refused rather than
+    * re-applied.
     *
     * @return true when the batch was applied, false when skipped as a
     *         replay. */
@@ -683,89 +689,43 @@ object StreamOps {
       batchId: Long,
       distinctCol: Option[String] = None,
       buckets: Option[Int] = None): Boolean = {
+    import graft.operators.CommitLog
     val spark = batch.sparkSession
     val store = new org.apache.hadoop.fs.Path(storePath)
-    val marker = new org.apache.hadoop.fs.Path(
-      store, graft.operators.IncrementalAgg.BatchMarker)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // Commit-log stores: no lease, no marker file — the high-water mark
-    // rides the manifest meta, and update() itself skips replays
-    // anchored at the fold's own read version (a racing fold conflicts
-    // at the CAS, so check-and-fold is atomic without a lock).
-    if (graft.operators.CommitLog.active(spark, fs, store)) {
-      val last = graft.operators.CommitLog.tipMeta(fs, store)
-        .get("batchId").map(_.toLong).getOrElse(-1L)
-      if (batchId <= last) return false
-      graft.operators.IncrementalAgg.update(
-        spark, storePath, batch, keyCols, valueCol, batchId = Some(batchId),
-        log = Some(true), distinctCol = distinctCol, buckets = buckets)
-      return true
-    }
-    require(buckets.isEmpty,
-      s"bucketed incremental-agg stores need the commit log (store " +
-        s"$storePath is legacy swap-mode)")
-
-    // one lease spans marker-check AND fold: two streams pointed at the
-    // same store would otherwise both pass `batchId <= last` and
-    // double-apply the batch before serializing on the inner lease
-    graft.operators.Swap.withStoreLease(spark, store) { lease =>
-
-    // Interrupted-swap recovery: IncrementalAgg.update commits by
-    // rename(store → .old-tag) then rename(.staging-tag → store). A crash
-    // between the two leaves NO store dir — treating that as "fresh"
-    // would silently rebuild from one batch and discard all history
-    // (still sitting in .old-tag). The staged dir was fully written
-    // (data + marker) before the first rename, so the one completable
-    // case is rolled forward; anything else fails loudly instead of
-    // guessing. allowLoneStaging: a lone .staging-* is a first-batch
-    // crash mid-write and will be rebuilt by replay — genuinely fresh.
-    graft.operators.Swap.recoverWholeDir(
-      spark, store, graft.operators.Swap.Suffix, allowLoneStaging = true)
-
-    def readMarkerFile(p: org.apache.hadoop.fs.Path): Long = {
-      val in = fs.open(p)
-      val line =
-        try new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-          .readLine()
-        finally in.close()
-      // never NPE/NumberFormat into a wedged stream: an unreadable
-      // marker means the store's provenance is unknown — fail loudly
-      // with the recovery path instead of guessing
-      try {
-        require(line != null && line.trim.nonEmpty)
-        line.trim.toLong
-      } catch {
-        case _: Exception => throw new IllegalStateException(
-          s"unreadable batch marker $p (content: ${Option(line).getOrElse("<empty>")}) — " +
-            "cannot tell which batches are applied; rebuild the store or " +
-            "restore the marker before resuming the stream")
-      }
-    }
-
-    // stores written before the in-store marker kept it as a SIBLING file
-    // (storePath + "._graft_last_batch") — honor it as the high-water mark
-    // and migrate: the next applied batch commits the in-store marker, then
-    // the legacy file is removed
-    val legacyMarker = new org.apache.hadoop.fs.Path(
-      storePath + "." + graft.operators.IncrementalAgg.BatchMarker)
-    val last =
-      if (!fs.exists(store)) -1L
-      else if (fs.exists(marker)) readMarkerFile(marker)
-      else if (fs.exists(legacyMarker)) readMarkerFile(legacyMarker)
-      else throw new IllegalStateException(
+    CommitLog.adopt(spark, store)
+    val last = CommitLog.lastMeta(fs, store, "batchId").map(_.toLong)
+    if (last.isEmpty && CommitLog.nonEmpty(fs, store))
+      throw new IllegalStateException(
         s"store $storePath exists but has no batch marker — it was not " +
           "maintained by incrementalAggStream, so replay safety is unknown; " +
-          "start from a fresh store path or add the marker manually")
-    if (batchId <= last) return false
+          "start from a fresh store path")
+    if (batchId <= last.getOrElse(-1L)) return false
     graft.operators.IncrementalAgg.update(
       spark, storePath, batch, keyCols, valueCol, batchId = Some(batchId),
-      lease = Some(lease), distinctCol = distinctCol)
-    // the in-store marker is now committed; the legacy sibling is migrated
-    if (fs.exists(legacyMarker)) fs.delete(legacyMarker, false)
+      distinctCol = distinctCol, buckets = buckets)
+    vacuumOnCadence(spark, storePath, batchId)
     true
-    }
   }
+
+  /** Micro-batches between vacuums of a store that a stream rewrites in
+    * place (the merge, dim-upsert and incremental-agg streams; SCD2 and
+    * the admission stores vacuum in their maintenance pass). Every commit
+    * retires the files it replaces, and on a log store they stay on disk
+    * until a vacuum — a flat incremental-agg fold would otherwise add a
+    * full copy of the store per trigger, forever. Vacuum keeps its
+    * default retention (the tip and the version before it), so a reader
+    * pinned one version back is unaffected. */
+  private[graft] val VacuumEvery = 8
+
+  private def vacuumOnCadence(
+      spark: org.apache.spark.sql.SparkSession,
+      storePath: String,
+      batchId: Long): Unit =
+    if (batchId > 0 && batchId % VacuumEvery == 0) {
+      graft.operators.CommitLog.vacuum(spark, new org.apache.hadoop.fs.Path(storePath))
+      ()
+    }
 
   /** Running per-key event counters (A19 StatisticsRecorder, streaming
     * form): emits (key, cumulative count) on every update.
@@ -944,10 +904,10 @@ object StreamOps {
     * in hand and verifies exactly.
     *
     * Exactly-once admissions without a marker: admitted signatures land
-    * in a `batch=<id>` hive partition OVERWRITTEN per attempt, and the
+    * in a `batch=<id>` hive partition REPLACED per attempt, and the
     * history join excludes rows of the current batchId — a replayed
     * batch dedups against strictly-older history, recomputes the same
-    * admitted set, and overwrites its own partition idempotently. */
+    * admitted set, and replaces its own partition idempotently. */
   def nearDupStream(
       docs: DataFrame,
       storePath: String,
@@ -983,13 +943,32 @@ object StreamOps {
   /** The per-batch step behind [[nearDupStream]] (driveable directly in
     * tests and backfills). Returns the admitted rows of `batch`.
     *
-    * Store layout (all maintained by [[maintainNearDupStore]]):
-    *  - `<store>/batch=<id>/`       admitted MinHash signatures
-    *  - `<store>.bands/batch=<id>/` their exploded LSH band keys
-    *  - `<store>.buckets/batch=<id>/` partial bucket counts per batch
-    *  - `<store>.meta`              numHashes/bands/shingleN sidecar
+    * Store layout: one commit-log root holds three tables (all folded
+    * by [[maintainNearDupStore]]):
     *
-    * The band/bucket sidecars are what keep the per-batch cost from
+    * {{{
+    * store/_log/...            numbered manifests (truth; the LSH config
+    *                           and the replay high-water mark ride meta)
+    * store/sigs/batch=<id>/    admitted MinHash signatures
+    * store/bands/batch=<id>/   their exploded LSH band keys
+    * store/buckets/batch=<id>/ partial bucket counts per batch
+    * }}}
+    *
+    * ONE manifest admits a batch's signatures, band keys and bucket
+    * partials ATOMICALLY, and commits carry
+    * [[graft.operators.CommitLog.SerialToken]], so any concurrent writer
+    * (second stream, backfill, maintenance) loses the CAS race loudly
+    * with a ConflictException instead of corrupting admissions — the
+    * foreachBatch retry then replays the batch against the new tip.
+    * Reads pin the version the admission decisions were computed
+    * against, so a fold landing mid-batch cannot shift history under
+    * the verify join. Replays retire-and-replace the batch's own dirs in
+    * the same commit. A legacy store (signatures in root-level
+    * `batch=<id>` dirs, with or without the `<store>.bands` /
+    * `<store>.buckets` sibling roots) is refused before anything touches
+    * it: rebuild it by replay.
+    *
+    * The band/bucket tables are what keep the per-batch cost from
     * growing with corpus history: without them every trigger re-exploded
     * the ENTIRE signature store (x bands) and re-aggregated the bucket
     * histogram from scratch — O(history) work per micro-batch, growing
@@ -1016,30 +995,18 @@ object StreamOps {
       maxBucket: Int = 1000,
       maxVerifyFetch: Int = 100000): DataFrame = {
     import graft.functions.TextFunctions._
+    import graft.operators.CommitLog
     val spark = batch.sparkSession
     val store = new org.apache.hadoop.fs.Path(storePath)
-    val bandsRoot = new org.apache.hadoop.fs.Path(storePath + BandsSuffix)
-    val bucketsRoot = new org.apache.hadoop.fs.Path(storePath + BucketsSuffix)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // mode sniff, same rule as every store operator: an existing `_log/`
-    // (or a NEW store under the session's commit-log default) takes the
-    // manifest protocol; existing swap-based stores keep the lease
-    if (graft.operators.CommitLog.active(spark, fs, store))
-      return applyNearDupBatchLog(batch, storePath, batchId, idCol, textCol,
-        numHashes, bands, shingleN, threshold, maxBucket, maxVerifyFetch)
-
-    // the signature store and its sidecars mutate below (own-partition
-    // deletes + three partition writes): hold the store's single-writer
-    // lease so a concurrent backfill or second stream fails loudly
-    graft.operators.Swap.withStoreLease(spark, store) { _ =>
-
-    // roll forward any maintenance fold interrupted mid-swap; folds
-    // preserve content (old batches move into batch=-1), so a fold that
-    // completed on one store root but crashed before the next leaves the
-    // three roots differently partitioned yet semantically consistent
-    Seq(store, bandsRoot, bucketsRoot).foreach(
-      graft.operators.Swap.recoverDirs(spark, _, graft.operators.Swap.Suffix))
+    refuseLegacyNearDupStore(fs, store)
+    CommitLog.adopt(spark, store)
+    val baseV = CommitLog.currentVersion(fs, store)
+    val tipMeta = CommitLog.tipMeta(fs, store)
+    if (baseV > 0) requireLogConfig(tipMeta, storePath, numHashes, bands, shingleN)
+    requireReplayable(batchId,
+      tipMeta.get("maxBatch").map(_.toLong).getOrElse(-1L), storePath)
 
     // one fused text→signature pass over the batch
     val sigB = batch.select(
@@ -1050,110 +1017,71 @@ object StreamOps {
       explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
       .select(col("graft_id"), col("graft_band.band"), col("graft_band.bucket"))
 
-    // Replay-protocol guard — fail LOUD, before anything is deleted.
-    // Maintenance folds move older batches into batch=-1 and keep only
-    // the LATEST batch replayable; replaying an already-folded batch id
-    // would find its own prior admissions in batch=-1, pass the
-    // same-batch exclusion below, and silently drop the entire batch as
-    // duplicates of itself. Out-of-protocol replays (a checkpoint
-    // restored to before the store's high-water mark, or a backfill
-    // interleaved with maintenance) must surface here instead.
-    if (fs.exists(store)) {
-      val live = fs.listStatus(store).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-      val maxLive = if (live.nonEmpty) live.max else -1L
-      require(
-        batchId >= maxLive,
-        s"out-of-protocol replay: batch $batchId is older than the newest " +
-          s"admitted batch $maxLive in $storePath — its prior admissions may " +
-          "already be folded into batch=-1, which would silently flag the " +
-          "replay as duplicates of itself; only the latest batch may replay " +
-          "(reset the checkpoint and store consistently, or rebuild the store)")
-    }
-
-    // history = all admitted signatures from STRICTLY OLDER batches (the
-    // same-batch exclusion is what makes replays idempotent: an earlier
-    // attempt's own partition must not flag the recomputed batch as dups
-    // of itself). Own partitions are deleted up front in all THREE
-    // stores: a crashed attempt can leave partial parquet files there,
-    // and even schema inference over them could wedge the replay.
-    Seq(store, bandsRoot, bucketsRoot).foreach { r =>
-      val own = new org.apache.hadoop.fs.Path(r, s"batch=$batchId")
-      if (fs.exists(own)) fs.delete(own, true)
-    }
-    val hasHistory = fs.exists(store) &&
-      fs.listStatus(store).exists(_.getPath.getName.startsWith("batch="))
-
-    // a store written with a different numHashes would zip_with against
-    // mismatched signature widths and SILENTLY skew every similarity
-    // estimate; a different bands/shingleN would bucket inconsistently.
-    // The config sidecar is checked per batch in O(1); a pre-sidecar
-    // store validates its width ONCE as an aggregate over all history
-    // (min==max==numHashes — a 1-row probe could sample a lucky row of a
-    // mixed-width store) and then records the sidecar.
-    ensureNearDupMeta(spark, fs, storePath, hasHistory, numHashes, bands, shingleN)
-    // stores created before the band/bucket sidecars existed: derive
-    // both from the signature store once (write-then-rename; a crash
-    // mid-write leaves only a .tmp that gets rebuilt, and a crash
-    // BETWEEN the two sidecars resumes with just the missing one)
-    if (hasHistory && (!fs.exists(bandsRoot) || !fs.exists(bucketsRoot)))
-      bootstrapNearDupSidecars(spark, fs, storePath, numHashes, bands)
-
-    val history = (if (hasHistory)
-      spark.read.parquet(storePath).filter(col("batch") =!= batchId)
+    // history = the pinned snapshot at baseV, minus the current batch
+    // (same-batch exclusion keeps replays idempotent — a prior attempt's
+    // own rows must not flag the recomputed batch as dups of itself)
+    val sigsHist = CommitLog.readSub(spark, store, "sigs", Some(baseV))
+      .map(_.filter(col("batch") =!= batchId))
+    val hasHistory = sigsHist.isDefined
+    val history = sigsHist
+      .map(_.select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig")))
+      .getOrElse(sigB
         .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
-    else
-      sigB.select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
-        .limit(0)).persist()
-
-    // precomputed band keys + bucket histogram — READ, never recomputed
-    val bandH = if (hasHistory)
-      spark.read.parquet(bandsRoot.toString).filter(col("batch") =!= batchId)
-        .select("hist_id", "band", "bucket")
-    else
-      history.select(col("hist_id"), lit(0).as("band"), lit(0L).as("bucket"))
-        .limit(0)
-    // hot-bucket cap on the history side — the standard LSH skew guard:
-    // a boilerplate bucket holding half the corpus must not cross-join
-    // against every future batch. Summing per-batch partials costs
-    // O(partial rows); maintenance folds keep that near O(distinct
-    // buckets).
-    val smallBuckets = (if (hasHistory)
-      spark.read.parquet(bucketsRoot.toString).filter(col("batch") =!= batchId)
-        .groupBy("band", "bucket").agg(sum("n").as("n"))
-    else
-      bandH.groupBy("band", "bucket").agg(count(lit(1)).as("n")))
+        .limit(0))
+      .persist()
+    val bandH = CommitLog.readSub(spark, store, "bands", Some(baseV))
+      .map(_.filter(col("batch") =!= batchId).select("hist_id", "band", "bucket"))
+      .getOrElse(history
+        .select(col("hist_id"), lit(0).as("band"), lit(0L).as("bucket"))
+        .limit(0))
+    val smallBuckets = CommitLog.readSub(spark, store, "buckets", Some(baseV))
+      .map(_.filter(col("batch") =!= batchId)
+        .groupBy("band", "bucket").agg(sum("n").as("n")))
+      .getOrElse(bandH.groupBy("band", "bucket").agg(count(lit(1)).as("n")))
       .filter(col("n") <= maxBucket)
       .select("band", "bucket")
+
     val (admitted, candidates) = nearDupAdmitCore(
       batch, idCol, textCol, sigB, bandB, history, bandH, smallBuckets,
-      _ => spark.read.parquet(storePath).filter(col("batch") =!= batchId),
+      // manifest-stats file pruning on top of the pushed range cover:
+      // the candidate ids' gap-split ranges drop whole files whose
+      // recorded graft_id range cannot match
+      candIds => prunedRead(spark, store, Some("sigs"), baseV, idRanges(candIds))
+        .map(_.filter(col("batch") =!= batchId))
+        .getOrElse(history.select(
+          col("hist_id").as("graft_id"), col("hist_sig").as("graft_sig"))
+          .limit(0)),
       hasHistory, numHashes, bands, shingleN, threshold, maxVerifyFetch)
-    // admitted signatures (+ their band keys and bucket-count partial) →
-    // this batch's own partitions; overwrite makes the replayed attempt
-    // idempotent, and a crash between the three writes replays the whole
-    // batch (foreachBatch commits only after the sink returns), which
-    // deletes and rewrites all three. The writes also MATERIALIZE the
-    // admitted cache, so the inner caches can be released here — a
-    // long-running stream must not accumulate per-batch persists
-    // (nearDupStream releases `admitted` itself after the sink runs).
+
+    // stage all three tables, publish ONE manifest. The writes also
+    // materialize the admitted cache, so the inner caches release here.
+    val staging = graft.operators.Swap.Suffix.staging(
+      store, graft.operators.Swap.newTag())
     val sigA = sigB
       .join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
       .persist()
-    sigA.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+    sigA.write.parquet(
+      new org.apache.hadoop.fs.Path(staging, s"sigs/batch=$batchId").toString)
     val bandA = sigA.select(col("graft_id").as("hist_id"),
       explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
       .select(col("hist_id"), col("graft_band.band"), col("graft_band.bucket"))
-    bandA.write.mode("overwrite").parquet(s"$storePath$BandsSuffix/batch=$batchId")
+    bandA.write.parquet(
+      new org.apache.hadoop.fs.Path(staging, s"bands/batch=$batchId").toString)
     bandA.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$storePath$BucketsSuffix/batch=$batchId")
+      .write.parquet(
+        new org.apache.hadoop.fs.Path(staging, s"buckets/batch=$batchId").toString)
+    CommitLog.commitStaged(spark, store, staging, baseV,
+      retireNames = Seq(
+        s"sigs/batch=$batchId", s"bands/batch=$batchId", s"buckets/batch=$batchId"),
+      wholeStore = false,
+      meta = nearDupLogMeta(numHashes, bands, shingleN, batchId),
+      extraTouched = Seq(CommitLog.SerialToken),
+      statsCol = Some("graft_id")) // band/bucket files lack it → no stats
     sigA.unpersist()
     sigB.unpersist()
     history.unpersist()
     candidates.unpersist()
     admitted
-    }
   }
 
   /** Per-micro-batch distribution drift against PINNED baselines — the
@@ -1165,7 +1093,7 @@ object StreamOps {
     * histograms), so the per-trigger cost is one tiny aggregate over the
     * BATCH per monitored column; the baseline table is never re-scanned,
     * the same never-O(history)-per-trigger economics as the dedup
-    * stores' sidecars.
+    * stores' band/bucket tables.
     *
     * Emits one row per monitored column per trigger:
     * (column, kind, psi, chi2 [NaN for numeric], rows_cur) — route it to
@@ -1195,9 +1123,9 @@ object StreamOps {
       .start()
   }
 
-  /** The candidate → verify → admit middle shared by the legacy and
-    * commit-log store modes — everything between "history frames are in
-    * hand" and "write the admitted rows", which is mode-independent.
+  /** The candidate → verify → admit middle of [[applyNearDupBatch]] —
+    * everything between "history frames are in hand" and "write the
+    * admitted rows".
     *
     * History signatures for the verify join: the candidate id set is
     * bounded by batch size × maxBucket, so in the common case it is tiny
@@ -1307,13 +1235,11 @@ object StreamOps {
     }
   }
 
-  /** Manifest-meta keys of a commit-log dedup store: the LSH config
-    * (validated per batch in O(1), replacing the `.meta` sidecar) and
-    * the admission high-water mark (replacing the live-dir listing the
-    * replay guard reads in legacy mode — and surviving folds, which a
-    * listing does not: after a fold only `batch=-1` is live, but the
-    * manifest still knows the newest admitted batch). Carried forward on
-    * EVERY commit, so tipMeta always answers. */
+  /** Manifest-meta keys of a near-dup store: the LSH config (validated
+    * per batch in O(1)) and the admission high-water mark (surviving
+    * folds: after a fold only `batch=-1` is live, but the manifest still
+    * knows the newest admitted batch). Carried forward on EVERY commit,
+    * so tipMeta always answers. */
   private def nearDupLogMeta(
       numHashes: Int, bands: Int, shingleN: Int, maxBatch: Long) =
     Map(
@@ -1348,144 +1274,132 @@ object StreamOps {
         "replay as duplicates of itself; only the latest batch may replay " +
         "(reset the checkpoint and store consistently, or rebuild the store)")
 
-  /** Commit-log mode of [[applyNearDupBatch]]. One store root holds the
-    * three tables as sub-dirs under a single `_log/`:
-    *
-    * {{{
-    * store/_log/...            numbered manifests (truth)
-    * store/sigs/batch=<id>/    admitted MinHash signatures
-    * store/bands/batch=<id>/   their exploded LSH band keys
-    * store/buckets/batch=<id>/ partial bucket counts per batch
-    * }}}
-    *
-    * so ONE manifest admits a batch's signatures, band keys, and bucket
-    * partials ATOMICALLY — the legacy mode's crash window between its
-    * three partition writes (replayed via whole-batch rewrite) simply
-    * does not exist, and neither do lease files: commits carry
-    * [[graft.operators.CommitLog.SerialToken]], so any concurrent writer
-    * (second stream, backfill, maintenance) loses the CAS race loudly
-    * with a ConflictException instead of corrupting admissions — the
-    * foreachBatch retry then replays the batch against the new tip.
-    * Reads pin the version the admission decisions were computed
-    * against, so a fold landing mid-batch cannot shift history under
-    * the verify join. Replays retire-and-replace the batch's own dirs
-    * in the same commit (the manifest IS the overwrite). Deletion
-    * defers to [[graft.operators.CommitLog.vacuum]]. */
-  private def applyNearDupBatchLog(
-      batch: DataFrame,
-      storePath: String,
-      batchId: Long,
-      idCol: String,
-      textCol: String,
-      numHashes: Int,
-      bands: Int,
-      shingleN: Int,
-      threshold: Double,
-      maxBucket: Int,
-      maxVerifyFetch: Int): DataFrame = {
-    import graft.functions.TextFunctions._
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The newest admitted batch of a single-root admission store (exact,
+    * embedding, hamming, frame-hamming): the manifest's `maxBatch`, or —
+    * on a store adopted from the legacy layout, which recorded none — the
+    * highest top-level `batch=<id>` dir in the snapshot. A fold keeps the
+    * newest batch in its own dir, so the derivation survives folds. -1
+    * for an empty store. */
+  private def admittedMaxBatch(
+      fs: org.apache.hadoop.fs.FileSystem,
+      store: org.apache.hadoop.fs.Path,
+      meta: Map[String, String],
+      baseV: Long): Long =
+    meta.get("maxBatch").map(_.toLong).getOrElse(
+      graft.operators.CommitLog.snapshotFiles(fs, store, baseV)
+        .flatMap(_.split('/').headOption).distinct
+        .filter(_.startsWith("batch="))
+        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
+        .foldLeft(-1L)(math.max))
 
-    val baseV = CommitLog.currentVersion(fs, store)
-    val tipMeta = CommitLog.tipMeta(fs, store)
-    if (baseV > 0) requireLogConfig(tipMeta, storePath, numHashes, bands, shingleN)
-    requireReplayable(batchId,
-      tipMeta.get("maxBatch").map(_.toLong).getOrElse(-1L), storePath)
+  /** Adopt a single-root admission store: its legacy layout (top-level
+    * `batch=<id>` dirs) is the log layout, and the config its legacy
+    * writer pinned in the `<store>.meta` sidecar (planes/dim, chunks)
+    * seeds v1's meta, where the log layout keeps it. */
+  private def adoptSingleRootStore(
+      spark: org.apache.spark.sql.SparkSession,
+      store: org.apache.hadoop.fs.Path): Unit =
+    graft.operators.CommitLog.adopt(spark, store,
+      Some(new org.apache.hadoop.fs.Path(store.toString + ".meta")))
 
-    // one fused text→signature pass over the batch
-    val sigB = batch.select(
-      col(idCol).as("graft_id"),
-      minhashTextSignature(col(textCol), shingleN, numHashes).as("graft_sig"))
-      .persist()
-    val bandB = sigB.select(col("graft_id"),
-      explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
-      .select(col("graft_id"), col("graft_band.band"), col("graft_band.bucket"))
-
-    // history = the pinned snapshot at baseV, minus the current batch
-    // (same-batch exclusion keeps replays idempotent — a prior attempt's
-    // own rows must not flag the recomputed batch as dups of itself)
-    val sigsHist = CommitLog.readSub(spark, store, "sigs", Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = sigsHist.isDefined
-    val history = sigsHist
-      .map(_.select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig")))
-      .getOrElse(sigB
-        .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
-        .limit(0))
-      .persist()
-    val bandH = CommitLog.readSub(spark, store, "bands", Some(baseV))
-      .map(_.filter(col("batch") =!= batchId).select("hist_id", "band", "bucket"))
-      .getOrElse(history
-        .select(col("hist_id"), lit(0).as("band"), lit(0L).as("bucket"))
-        .limit(0))
-    val smallBuckets = CommitLog.readSub(spark, store, "buckets", Some(baseV))
-      .map(_.filter(col("batch") =!= batchId)
-        .groupBy("band", "bucket").agg(sum("n").as("n")))
-      .getOrElse(bandH.groupBy("band", "bucket").agg(count(lit(1)).as("n")))
-      .filter(col("n") <= maxBucket)
-      .select("band", "bucket")
-
-    val (admitted, candidates) = nearDupAdmitCore(
-      batch, idCol, textCol, sigB, bandB, history, bandH, smallBuckets,
-      // manifest-stats file pruning on top of the pushed range cover:
-      // the candidate ids' gap-split ranges drop whole files whose
-      // recorded graft_id range cannot match
-      candIds => prunedRead(spark, store, Some("sigs"), baseV, idRanges(candIds))
-        .map(_.filter(col("batch") =!= batchId))
-        .getOrElse(history.select(
-          col("hist_id").as("graft_id"), col("hist_sig").as("graft_sig"))
-          .limit(0)),
-      hasHistory, numHashes, bands, shingleN, threshold, maxVerifyFetch)
-
-    // stage all three tables, publish ONE manifest. The writes also
-    // materialize the admitted cache, so the inner caches release here.
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    val sigA = sigB
-      .join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
-      .persist()
-    sigA.write.parquet(
-      new org.apache.hadoop.fs.Path(staging, s"sigs/batch=$batchId").toString)
-    val bandA = sigA.select(col("graft_id").as("hist_id"),
-      explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
-      .select(col("hist_id"), col("graft_band.band"), col("graft_band.bucket"))
-    bandA.write.parquet(
-      new org.apache.hadoop.fs.Path(staging, s"bands/batch=$batchId").toString)
-    bandA.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"buckets/batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(
-        s"sigs/batch=$batchId", s"bands/batch=$batchId", s"buckets/batch=$batchId"),
-      wholeStore = false,
-      meta = nearDupLogMeta(numHashes, bands, shingleN, batchId),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_id")) // band/bucket files lack it → no stats
-    sigA.unpersist()
-    sigB.unpersist()
-    history.unpersist()
-    candidates.unpersist()
-    admitted
+  /** A MinHash admission store written before the log kept its
+    * signatures in root-level `batch=<id>` dirs, with its band and bucket
+    * tables as sibling roots (`<store>.bands`, `<store>.buckets`) or,
+    * older still, not at all. The log layout keeps the three tables as
+    * `sigs/`, `bands/` and `buckets/` sub-tables, so neither legacy
+    * layout can be adopted file for file: it is refused before anything
+    * touches the store. */
+  private def refuseLegacyNearDupStore(
+      fs: org.apache.hadoop.fs.FileSystem,
+      store: org.apache.hadoop.fs.Path): Unit = {
+    if (graft.operators.CommitLog.isLog(fs, store)) return
+    val siblings = Seq(".bands", ".buckets")
+      .map(s => new org.apache.hadoop.fs.Path(store.toString + s))
+      .filter(fs.exists)
+    val rootBatches = fs.exists(store) && fs.listStatus(store)
+      .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
+    if (siblings.nonEmpty || rootBatches)
+      throw new IllegalArgumentException(
+        s"$store is a legacy MinHash admission store (root-level batch=<id> " +
+          "signature dirs" +
+          (if (siblings.isEmpty) "" else
+            s", sibling roots ${siblings.map(_.getName).mkString(", ")}") +
+          ") whose layout differs from the commit-log layout and cannot be " +
+          "adopted — rebuild it by replaying the stream into a fresh path")
   }
 
-  /** Commit-log mode of [[maintainNearDupStore]]: fold every batch
-    * except the newest (and the previous `batch=-1`) into a fresh
-    * sorted `batch=-1` PER SUB-TABLE, retired and replaced by ONE
-    * manifest — the legacy mode's crash window BETWEEN per-root folds
-    * (store folded, sidecars not) does not exist. Row-count parity is
-    * checked from parquet footers before the commit for the two
-    * content-preserving folds (the bucket fold legitimately
-    * re-aggregates). */
-  private def maintainNearDupStoreLog(
+  /** Row-group-prunable cover for a candidate id set: sort the ids, split
+    * at the `maxRanges - 1` widest gaps, and return OR-of-BETWEEN over the
+    * resulting tight ranges (plus a single [min,max] range for string
+    * ids, whose gap widths are not meaningful). The cover is a SUPERSET
+    * of the ids — callers keep the exact In filter on top — so it only
+    * affects which row groups are read, never which rows qualify. None
+    * for empty or unsupported id types (cover skipped, exact filter still
+    * applies). */
+  private[graft] def idCoverFilter(
+      idCol: org.apache.spark.sql.Column,
+      ids: Array[Any],
+      maxRanges: Int = 32): Option[org.apache.spark.sql.Column] =
+    idRanges(ids, maxRanges).map(rs =>
+      rs.map { case (lo, hi) => idCol >= lit(lo) && idCol <= lit(hi) }
+        .reduce(_ || _))
+
+  /** The driver-side range cover behind [[idCoverFilter]], reusable for
+    * FILE-level pruning against commit-log manifest stats: a superset of
+    * `ids` as ≤ `maxRanges` [lo, hi] pairs (typed endpoints). */
+  private[graft] def idRanges(
+      ids: Array[Any],
+      maxRanges: Int = 32): Option[Seq[(Any, Any)]] = {
+    if (ids.isEmpty) None
+    else if (ids.forall(v => v.isInstanceOf[java.lang.Long] ||
+      v.isInstanceOf[java.lang.Integer] ||
+      v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Byte])) {
+      // endpoints keep their ORIGINAL boxed type: a widening cast on the
+      // column side (int col vs long literal) can block parquet pushdown
+      val sorted = ids.map(v => (v.asInstanceOf[Number].longValue, v))
+        .distinctBy(_._1).sortBy(_._1)
+      val gaps = (1 until sorted.length)
+        .map(i => (sorted(i)._1 - sorted(i - 1)._1, i))
+        .filter(_._1 > 1)
+        .sortBy(-_._1)
+        .take(maxRanges - 1)
+        .map(_._2).sorted
+      val bounds = (0 +: gaps) :+ sorted.length
+      Some(bounds.sliding(2)
+        .map { case Seq(a, b) => (sorted(a)._2, sorted(b - 1)._2) }.toSeq)
+    } else if (ids.forall(_.isInstanceOf[String])) {
+      val xs = ids.map(_.asInstanceOf[String])
+      Some(Seq((xs.min, xs.max)))
+    } else None
+  }
+
+  /** Maintenance for a [[nearDupStream]] store: fold every batch
+    * partition except the latest into a single sorted `batch=-1` dir
+    * (merging with the previous fold) in each of the three tables.
+    * Trickle ingest otherwise accumulates one tiny dir per trigger
+    * forever — the listing/task-scheduling small-file failure mode — and
+    * the bucket-histogram partials would re-sum one partial per trigger
+    * ever. The LATEST batch keeps its own partition: under at-least-once
+    * foreachBatch only the most recent batch can replay, and a replay
+    * needs its own partition excludable (batch =!= id) and deletable;
+    * folded older batches keep working because batch=-1 passes the
+    * exclusion filter for every live id.
+    *
+    * Crash posture: the three folds retire and replace their batch dirs
+    * in ONE manifest, so there is no state where one table is folded and
+    * another is not. Signature and band folds are content-preserving and
+    * row-count-verified from parquet footers before the commit; the
+    * bucket fold re-aggregates partials (one row per bucket afterwards)
+    * so its row count legitimately shrinks. */
+  def maintainNearDupStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      targetFileBytes: Long): Unit = {
+      targetFileBytes: Long = 128L << 20): Unit = {
     import graft.operators.CommitLog
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    refuseLegacyNearDupStore(fs, store)
+    CommitLog.adopt(spark, store)
     val baseV = CommitLog.currentVersion(fs, store)
     if (baseV == 0) return
     val files = CommitLog.snapshotFiles(fs, store, baseV)
@@ -1557,196 +1471,12 @@ object StreamOps {
     ()
   }
 
-  private[graft] val BandsSuffix = ".bands"
-  private[graft] val BucketsSuffix = ".buckets"
-  private[graft] val MetaSuffix = ".meta"
-
-  /** Row-group-prunable cover for a candidate id set: sort the ids, split
-    * at the `maxRanges - 1` widest gaps, and return OR-of-BETWEEN over the
-    * resulting tight ranges (plus a single [min,max] range for string
-    * ids, whose gap widths are not meaningful). The cover is a SUPERSET
-    * of the ids — callers keep the exact In filter on top — so it only
-    * affects which row groups are read, never which rows qualify. None
-    * for empty or unsupported id types (cover skipped, exact filter still
-    * applies). */
-  private[graft] def idCoverFilter(
-      idCol: org.apache.spark.sql.Column,
-      ids: Array[Any],
-      maxRanges: Int = 32): Option[org.apache.spark.sql.Column] =
-    idRanges(ids, maxRanges).map(rs =>
-      rs.map { case (lo, hi) => idCol >= lit(lo) && idCol <= lit(hi) }
-        .reduce(_ || _))
-
-  /** The driver-side range cover behind [[idCoverFilter]], reusable for
-    * FILE-level pruning against commit-log manifest stats: a superset of
-    * `ids` as ≤ `maxRanges` [lo, hi] pairs (typed endpoints). */
-  private[graft] def idRanges(
-      ids: Array[Any],
-      maxRanges: Int = 32): Option[Seq[(Any, Any)]] = {
-    if (ids.isEmpty) None
-    else if (ids.forall(v => v.isInstanceOf[java.lang.Long] ||
-      v.isInstanceOf[java.lang.Integer] ||
-      v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Byte])) {
-      // endpoints keep their ORIGINAL boxed type: a widening cast on the
-      // column side (int col vs long literal) can block parquet pushdown
-      val sorted = ids.map(v => (v.asInstanceOf[Number].longValue, v))
-        .distinctBy(_._1).sortBy(_._1)
-      val gaps = (1 until sorted.length)
-        .map(i => (sorted(i)._1 - sorted(i - 1)._1, i))
-        .filter(_._1 > 1)
-        .sortBy(-_._1)
-        .take(maxRanges - 1)
-        .map(_._2).sorted
-      val bounds = (0 +: gaps) :+ sorted.length
-      Some(bounds.sliding(2)
-        .map { case Seq(a, b) => (sorted(a)._2, sorted(b - 1)._2) }.toSeq)
-    } else if (ids.forall(_.isInstanceOf[String])) {
-      val xs = ids.map(_.asInstanceOf[String])
-      Some(Seq((xs.min, xs.max)))
-    } else None
-  }
-
-  /** Validate (or create) the `<store>.meta` config sidecar. */
-  private def ensureNearDupMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String,
-      hasHistory: Boolean,
-      numHashes: Int,
-      bands: Int,
-      shingleN: Int): Unit = {
-    val metaPath = new org.apache.hadoop.fs.Path(storePath + MetaSuffix)
-    if (fs.exists(metaPath)) {
-      val in = fs.open(metaPath)
-      val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
-      val m = text.split("\n").map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-      require(
-        m.get("numHashes").contains(numHashes.toString) &&
-          m.get("bands").contains(bands.toString) &&
-          m.get("shingleN").contains(shingleN.toString),
-        s"signature store at $storePath was built with " +
-          s"(numHashes=${m.getOrElse("numHashes", "?")}, " +
-          s"bands=${m.getOrElse("bands", "?")}, " +
-          s"shingleN=${m.getOrElse("shingleN", "?")}), this stream uses " +
-          s"($numHashes, $bands, $shingleN) — rebuild the store or match " +
-          "the configuration")
-    } else {
-      if (hasHistory) {
-        // legacy pre-sidecar store: the signature width is checkable
-        // retroactively (bands/shingleN are not — signatures don't
-        // record them; they are recorded as THIS config from here on)
-        val w = spark.read.parquet(storePath)
-          .agg(min(size(col("graft_sig"))).as("lo"),
-            max(size(col("graft_sig"))).as("hi")).collect().head
-        if (!w.isNullAt(0)) require(
-          w.getInt(0) == numHashes && w.getInt(1) == numHashes,
-          s"signature store at $storePath holds widths " +
-            s"[${w.getInt(0)}, ${w.getInt(1)}], this stream uses " +
-            s"numHashes=$numHashes — rebuild the store or match the " +
-            "configuration")
-      }
-      val tmp = new org.apache.hadoop.fs.Path(metaPath.toString + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
-        s"numHashes=$numHashes\nbands=$bands\nshingleN=$shingleN\n"
-          .getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, metaPath))
-        throw new java.io.IOException(s"could not write sidecar $metaPath")
-    }
-  }
-
-  /** One-time derivation of the band/bucket sidecars from a signature
-    * store written before they existed. O(history) ONCE, not per batch.
-    * Each sidecar builds only if missing (a crash between the two
-    * resumes with just the missing one — the bucket partials then derive
-    * from the already-committed band store, which is cheaper anyway). */
-  private def bootstrapNearDupSidecars(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String,
-      numHashes: Int,
-      bands: Int): Unit = {
-    import graft.functions.TextFunctions._
-    def writeVia(df: DataFrame, dest: String): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(dest + ".tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      df.write.partitionBy("batch").parquet(tmp.toString)
-      if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dest)))
-        throw new java.io.IOException(s"could not commit sidecar store $dest")
-    }
-    val bandsDest = storePath + BandsSuffix
-    if (!fs.exists(new org.apache.hadoop.fs.Path(bandsDest)))
-      writeVia(
-        spark.read.parquet(storePath)
-          .select(col("batch"), col("graft_id").as("hist_id"),
-            explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
-          .select(col("batch"), col("hist_id"),
-            col("graft_band.band"), col("graft_band.bucket")),
-        bandsDest)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(storePath + BucketsSuffix)))
-      writeVia(
-        spark.read.parquet(bandsDest).groupBy("batch", "band", "bucket")
-          .agg(count(lit(1)).as("n")),
-        storePath + BucketsSuffix)
-  }
-
-  /** Maintenance for a [[nearDupStream]] store: fold every batch
-    * partition except the latest into a single `batch=-1` dir (merging
-    * with the previous fold) in the signature store and both sidecars.
-    * Trickle ingest otherwise accumulates one tiny dir per trigger
-    * forever — the listing/task-scheduling small-file failure mode — and
-    * the bucket-histogram partials would re-sum one partial per trigger
-    * ever. The LATEST batch keeps its own partition: under at-least-once
-    * foreachBatch only the most recent batch can replay, and a replay
-    * needs its own partition excludable (batch =!= id) and deletable;
-    * folded older batches keep working because batch=-1 passes the
-    * exclusion filter for every live id.
-    *
-    * Crash posture: each root folds via the staged partition-dir swap
-    * ([[graft.operators.Swap.commitDirs]]) — marker-gated roll-forward,
-    * recovered at the top of every applyNearDupBatch. Signature and band
-    * folds are content-preserving and row-count-verified from parquet
-    * footers; the bucket fold re-aggregates partials (one row per bucket
-    * afterwards) so its row count legitimately shrinks. */
-  def maintainNearDupStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (graft.operators.CommitLog.isLog(fs, store))
-      return maintainNearDupStoreLog(spark, storePath, targetFileBytes)
-    // ONE lease on the signature-store root covers all three roots (the
-    // sidecars are derived siblings nobody writes independently)
-    graft.operators.Swap.withStoreLease(
-      spark, new org.apache.hadoop.fs.Path(storePath)) { _ =>
-      // folds also SORT: the signature store by graft_id (tight row-group
-      // min/max for the candidate verify join's id lookups + better
-      // compression), the band store by its join key (runs of equal
-      // buckets compress and map-side combine well)
-      foldBatchPartitions(spark, storePath, targetFileBytes, reagg = None,
-        sortCols = Seq("graft_id"))
-      foldBatchPartitions(spark, storePath + BandsSuffix, targetFileBytes,
-        reagg = None, sortCols = Seq("band", "bucket", "hist_id"))
-      foldBatchPartitions(spark, storePath + BucketsSuffix, targetFileBytes,
-        reagg = Some(df => df.groupBy("band", "bucket").agg(sum("n").as("n"))),
-        sortCols = Seq("band", "bucket"))
-    }
-  }
-
   /** Incremental corpus EXACT dedup: each micro-batch is checked against
     * a persistent fingerprint store of everything ever admitted — the
     * restart-survivable form of `dropDuplicates`, whose state dies with
     * its checkpoint. Same store protocol as [[nearDupStream]] minus the
     * LSH machinery: admitted (id, md5-of-text) rows land in a
-    * `batch=<id>` partition overwritten per attempt (exactly-once
+    * `batch=<id>` partition replaced per attempt (exactly-once
     * admissions without a marker), maintenance folds trigger-grain
     * partitions into `batch=-1` SORTED by fingerprint (per-batch cost
     * stays O(compacted + deltas), and the history lookup's pushed
@@ -1793,36 +1523,20 @@ object StreamOps {
       idCol: String = "doc_id",
       textCol: String = "text",
       maxFetch: Int = 100000): DataFrame = {
+    import graft.operators.CommitLog
     val spark = batch.sparkSession
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    if (graft.operators.CommitLog.active(spark, fs, store))
-      return applyExactDedupBatchLog(batch, storePath, batchId, idCol,
-        textCol, maxFetch)
-
-    graft.operators.Swap.withStoreLease(spark, store) { _ =>
-    graft.operators.Swap.recoverDirs(spark, store, graft.operators.Swap.Suffix)
-
-    // replay-protocol guard — identical contract to the near-dup store:
-    // only the newest admitted batch may replay; anything older may
-    // already be folded into batch=-1, where its own prior admissions
-    // would flag the replay as duplicates of itself
-    if (fs.exists(store)) {
-      val live = fs.listStatus(store).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-      val maxLive = if (live.nonEmpty) live.max else -1L
-      require(batchId >= maxLive,
-        s"out-of-protocol replay: batch $batchId is older than the newest " +
-          s"admitted batch $maxLive in $storePath — only the latest batch " +
-          "may replay (reset the checkpoint and store consistently, or " +
-          "rebuild the store)")
-    }
-    val own = new org.apache.hadoop.fs.Path(store, s"batch=$batchId")
-    if (fs.exists(own)) fs.delete(own, true) // crashed attempt's partials
-    val hasHistory = fs.exists(store) &&
-      fs.listStatus(store).exists(_.getPath.getName.startsWith("batch="))
+    adoptSingleRootStore(spark, store)
+    val baseV = CommitLog.currentVersion(fs, store)
+    requireReplayable(batchId,
+      admittedMaxBatch(fs, store, CommitLog.tipMeta(fs, store), baseV),
+      storePath)
+    // pinned snapshot minus the current batch (replay idempotence)
+    val histAll = CommitLog.read(spark, store, Some(baseV))
+      .map(_.filter(col("batch") =!= batchId))
+    val hasHistory = histAll.isDefined
 
     val fpB = batch.select(
       col(idCol).as("graft_id"),
@@ -1839,13 +1553,18 @@ object StreamOps {
       if (!hasHistory || batchFps.isEmpty) fpB.select("graft_fp").limit(0)
       else if (batchFps.length <= maxFetch) {
         val cover = idCoverFilter(col("graft_fp"), batchFps)
-        spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_fp").isInCollection(batchFps.toSeq))
-          .select("graft_fp")
-      } else
-        spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-          .select("graft_fp")
+        // manifest-stats file pruning first (folds sort by fingerprint,
+        // so per-file ranges are tight), pushed filters inside the kept
+        // files second
+        prunedRead(spark, store, None, baseV, idRanges(batchFps)) match {
+          case None => fpB.select("graft_fp").limit(0)
+          case Some(df) => df
+            .filter(col("batch") =!= batchId)
+            .where(cover.getOrElse(lit(true)))
+            .filter(col("graft_fp").isInCollection(batchFps.toSeq))
+            .select("graft_fp")
+        }
+      } else histAll.get.select("graft_fp")
 
     val dupOfHistory = fpB
       .join(history, Seq("graft_fp"), "left_semi")
@@ -1860,34 +1579,32 @@ object StreamOps {
     val admitted = batch
       .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
       .persist()
-    // admitted fingerprints → this batch's own partition; the write also
-    // materializes the admitted cache so fpB can be released here
+    val staging = graft.operators.Swap.Suffix.staging(
+      store, graft.operators.Swap.newTag())
     fpB.join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
-      .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      .write.parquet(
+        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
+    CommitLog.commitStaged(spark, store, staging, baseV,
+      retireNames = Seq(s"batch=$batchId"),
+      wholeStore = false,
+      meta = Map("maxBatch" -> batchId.toString),
+      extraTouched = Seq(CommitLog.SerialToken),
+      statsCol = Some("graft_fp"))
     fpB.unpersist()
     admitted
-    }
   }
 
   /** Maintenance for an [[exactDedupStream]] store: fold every batch
     * partition except the latest into `batch=-1`, sorted by fingerprint
     * (row-group-prunable history lookups, better compression). Same
-    * crash posture as the near-dup folds: staged partition-dir swap,
-    * marker-gated roll-forward, footer row-count parity. */
+    * crash posture as the near-dup folds: one manifest, footer
+    * row-count parity before it. */
   def maintainExactDedupStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (graft.operators.CommitLog.isLog(fs, store))
-      return maintainExactDedupStoreLog(spark, storePath, targetFileBytes)
-    graft.operators.Swap.withStoreLease(
-      spark, new org.apache.hadoop.fs.Path(storePath)) { _ =>
-      foldBatchPartitions(spark, storePath, targetFileBytes, reagg = None,
-        sortCols = Seq("graft_fp"))
-    }
-  }
+      targetFileBytes: Long = 128L << 20): Unit =
+    foldLogStoreBatches(spark, storePath, targetFileBytes,
+      sortCols = Seq("graft_fp"), statsCol = Some("graft_fp"))
 
   /** Incremental EMBEDDING near-dup dedup (r17 verdict item 5 — the
     * semantic twin of [[nearDupStream]] / [[exactDedupStream]]): each
@@ -1912,14 +1629,14 @@ object StreamOps {
     * old store).
     *
     * Store protocol = the signature-store protocol verbatim: admitted
-    * rows land in a `batch=<id>` hive partition OVERWRITTEN per attempt
+    * rows land in a `batch=<id>` hive partition REPLACED per attempt
     * (exactly-once admissions without a marker), only the newest batch
     * may replay (guarded loudly), maintenance folds old partitions into
-    * `batch=-1`, and a `.meta` sidecar pins (planes, dim) — a store
+    * `batch=-1`, and the manifest meta pins (planes, dim) — a store
     * bucketed under different planes would block inconsistently, and a
-    * different dim would silently truncate every dot product. Commit-log
-    * mode engages the same way as the text stores (existing `_log/`, or
-    * a new store under the session default). */
+    * different dim would silently truncate every dot product. History
+    * reads pin a snapshot and prune files by the manifest's per-file
+    * bucket range. */
   def embeddingNearDupStream(
       vecs: DataFrame,
       storePath: String,
@@ -1955,197 +1672,15 @@ object StreamOps {
       planes: Int = 8,
       maxBucketFetch: Int = 100000): DataFrame = {
     require(planes >= 1 && planes <= 30, s"planes=$planes out of range")
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    if (graft.operators.CommitLog.active(spark, fs, store))
-      return applyEmbeddingNearDupBatchLog(batch, storePath, batchId, idCol,
-        vecCol, threshold, planes, maxBucketFetch)
-
-    graft.operators.Swap.withStoreLease(spark, store) { _ =>
-    graft.operators.Swap.recoverDirs(spark, store, graft.operators.Swap.Suffix)
-
-    if (fs.exists(store)) {
-      val live = fs.listStatus(store).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-      val maxLive = if (live.nonEmpty) live.max else -1L
-      requireReplayable(batchId, maxLive, storePath)
-    }
-    val own = new org.apache.hadoop.fs.Path(store, s"batch=$batchId")
-    if (fs.exists(own)) fs.delete(own, true) // crashed attempt's partials
-    val hasHistory = fs.exists(store) &&
-      fs.listStatus(store).exists(_.getPath.getName.startsWith("batch="))
-
-    val dim = {
-      val r = batch.agg(max(size(col(vecCol)))).head
-      if (r.isNullAt(0)) 0 else r.getInt(0)
-    }
-    ensureEmbeddingMeta(fs, storePath, planes, dim,
-      batchEmpty = dim == 0)
-
-    val sigB = batch.select(
-      col(idCol).as("graft_id"),
-      col(vecCol).as("graft_vec"),
-      (if (dim == 0) lit(0L)
-       else graft.operators.Similarity
-         .replayableHyperplaneBucket(col(vecCol), planes, dim))
-        .as("graft_bucket"))
-      .persist()
-
-    val histRead: Array[Any] => DataFrame = buckets => {
-      val cover = idCoverFilter(col("graft_bucket"), buckets)
-      spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-        .where(cover.getOrElse(lit(true)))
-        .filter(col("graft_bucket").isInCollection(buckets.toSeq))
-    }
-    val histFull = () =>
-      spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-
-    val admitted = embeddingAdmitCore(
-      batch, idCol, sigB, histRead, histFull, hasHistory, threshold,
-      maxBucketFetch)
-    // admitted vectors+buckets → this batch's own partition; the write
-    // materializes the admitted cache so sigB can be released here
-    sigB.join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
-      .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-    sigB.unpersist()
-    admitted
-    }
-  }
-
-  /** The candidate → verify → admit middle shared by the legacy and
-    * commit-log embedding store modes. Cross-batch verify is EXACT
-    * cosine against bucket-mate history vectors (round-4, the
-    * [[graft.operators.Similarity.exactPairs]] contract); within-batch
-    * the larger id of a qualifying pair drops. */
-  private def embeddingAdmitCore(
-      batch: DataFrame,
-      idCol: String,
-      sigB: DataFrame,
-      histRead: Array[Any] => DataFrame,
-      histFull: () => DataFrame,
-      hasHistory: Boolean,
-      threshold: Double,
-      maxBucketFetch: Int): DataFrame = {
-    import graft.operators.Similarity
-    val capProbe = math.min(maxBucketFetch.toLong + 1L, Int.MaxValue.toLong).toInt
-    val batchBuckets: Array[Any] =
-      if (hasHistory) sigB.select("graft_bucket").distinct().limit(capProbe)
-        .collect().map(_.get(0))
-      else Array.empty[Any]
-    val history =
-      if (!hasHistory || batchBuckets.isEmpty)
-        sigB.select(col("graft_id").as("hist_id"),
-          col("graft_vec").as("hist_vec"),
-          col("graft_bucket").as("hist_bucket")).limit(0)
-      else {
-        val src = if (batchBuckets.length <= maxBucketFetch)
-          histRead(batchBuckets) else histFull()
-        src.select(col("graft_id").as("hist_id"),
-          col("graft_vec").as("hist_vec"),
-          col("graft_bucket").as("hist_bucket"))
-      }
-    val dupOfHistory = sigB
-      .join(history, col("graft_bucket") === col("hist_bucket"))
-      .filter(round(Similarity.cosine(col("graft_vec"), col("hist_vec")), 4)
-        >= threshold)
-      .select(col("graft_id").as(idCol)).distinct()
-    // within-batch: bucket-blocked exact pairs, larger id drops (the
-    // text stream's pairwise convention — Dedup.dedupNear's id_b rule)
-    val dupInBatch = sigB.as("l")
-      .join(sigB.as("r"),
-        col("l.graft_bucket") === col("r.graft_bucket") &&
-          col("l.graft_id") < col("r.graft_id"))
-      .filter(round(Similarity.cosine(col("l.graft_vec"), col("r.graft_vec")), 4)
-        >= threshold)
-      .select(col("r.graft_id").as(idCol)).distinct()
-    batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
-      .persist()
-  }
-
-  /** Validate (or create) the `<store>.meta` sidecar pinning the bucket
-    * function config: `planes` (blocking layout) and `dim` (dot-product
-    * width). An empty first batch defers creation — there is nothing to
-    * pin yet and no admission that depends on it. */
-  private def ensureEmbeddingMeta(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String,
-      planes: Int,
-      dim: Int,
-      batchEmpty: Boolean): Unit = {
-    val metaPath = new org.apache.hadoop.fs.Path(storePath + MetaSuffix)
-    if (fs.exists(metaPath)) {
-      val in = fs.open(metaPath)
-      val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
-      val m = text.split("\n").map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-      require(
-        m.get("planes").contains(planes.toString) &&
-          (batchEmpty || m.get("dim").contains(dim.toString)),
-        s"embedding store at $storePath was built with " +
-          s"(planes=${m.getOrElse("planes", "?")}, " +
-          s"dim=${m.getOrElse("dim", "?")}), this stream uses " +
-          s"(planes=$planes, dim=$dim) — rebuild the store or match the " +
-          "configuration")
-    } else if (!batchEmpty) {
-      val tmp = new org.apache.hadoop.fs.Path(metaPath.toString + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"planes=$planes\ndim=$dim\n".getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, metaPath))
-        throw new java.io.IOException(s"could not write sidecar $metaPath")
-    }
-  }
-
-  /** Maintenance for an [[embeddingNearDupStream]] store: fold every
-    * batch partition except the latest into `batch=-1`, sorted by
-    * bucket (the history lookup's pushed bucket cover then hits tight
-    * row groups) — same crash posture as the text-store folds. */
-  def maintainEmbeddingNearDupStore(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (graft.operators.CommitLog.isLog(fs, store))
-      return maintainEmbeddingNearDupStoreLog(spark, storePath, targetFileBytes)
-    graft.operators.Swap.withStoreLease(
-      spark, new org.apache.hadoop.fs.Path(storePath)) { _ =>
-      foldBatchPartitions(spark, storePath, targetFileBytes, reagg = None,
-        sortCols = Seq("graft_bucket", "graft_id"))
-    }
-  }
-
-  /** Commit-log mode of [[applyEmbeddingNearDupBatch]]: single-level log
-    * store, pinned-snapshot history, manifest-stats file pruning on the
-    * bucket column, replay high-water mark + (planes, dim) in the
-    * manifest meta. */
-  private def applyEmbeddingNearDupBatchLog(
-      batch: DataFrame,
-      storePath: String,
-      batchId: Long,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      planes: Int,
-      maxBucketFetch: Int): DataFrame = {
     import graft.operators.CommitLog
     val spark = batch.sparkSession
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+    adoptSingleRootStore(spark, store)
     val baseV = CommitLog.currentVersion(fs, store)
     val meta = CommitLog.tipMeta(fs, store)
-    requireReplayable(batchId,
-      meta.get("maxBatch").map(_.toLong).getOrElse(-1L), storePath)
+    requireReplayable(batchId, admittedMaxBatch(fs, store, meta, baseV), storePath)
 
     val dim = {
       val r = batch.agg(max(size(col(vecCol)))).head
@@ -2204,12 +1739,65 @@ object StreamOps {
     admitted
   }
 
-  /** Commit-log mode of [[maintainEmbeddingNearDupStore]]: one manifest
-    * folds every batch but the newest into a bucket-sorted `batch=-1`. */
-  private def maintainEmbeddingNearDupStoreLog(
+  /** The candidate → verify → admit middle of
+    * [[applyEmbeddingNearDupBatch]]. Cross-batch verify is EXACT
+    * cosine against bucket-mate history vectors (round-4, the
+    * [[graft.operators.Similarity.exactPairs]] contract); within-batch
+    * the larger id of a qualifying pair drops. */
+  private def embeddingAdmitCore(
+      batch: DataFrame,
+      idCol: String,
+      sigB: DataFrame,
+      histRead: Array[Any] => DataFrame,
+      histFull: () => DataFrame,
+      hasHistory: Boolean,
+      threshold: Double,
+      maxBucketFetch: Int): DataFrame = {
+    import graft.operators.Similarity
+    val capProbe = math.min(maxBucketFetch.toLong + 1L, Int.MaxValue.toLong).toInt
+    val batchBuckets: Array[Any] =
+      if (hasHistory) sigB.select("graft_bucket").distinct().limit(capProbe)
+        .collect().map(_.get(0))
+      else Array.empty[Any]
+    val history =
+      if (!hasHistory || batchBuckets.isEmpty)
+        sigB.select(col("graft_id").as("hist_id"),
+          col("graft_vec").as("hist_vec"),
+          col("graft_bucket").as("hist_bucket")).limit(0)
+      else {
+        val src = if (batchBuckets.length <= maxBucketFetch)
+          histRead(batchBuckets) else histFull()
+        src.select(col("graft_id").as("hist_id"),
+          col("graft_vec").as("hist_vec"),
+          col("graft_bucket").as("hist_bucket"))
+      }
+    val dupOfHistory = sigB
+      .join(history, col("graft_bucket") === col("hist_bucket"))
+      .filter(round(Similarity.cosine(col("graft_vec"), col("hist_vec")), 4)
+        >= threshold)
+      .select(col("graft_id").as(idCol)).distinct()
+    // within-batch: bucket-blocked exact pairs, larger id drops (the
+    // text stream's pairwise convention — Dedup.dedupNear's id_b rule)
+    val dupInBatch = sigB.as("l")
+      .join(sigB.as("r"),
+        col("l.graft_bucket") === col("r.graft_bucket") &&
+          col("l.graft_id") < col("r.graft_id"))
+      .filter(round(Similarity.cosine(col("l.graft_vec"), col("r.graft_vec")), 4)
+        >= threshold)
+      .select(col("r.graft_id").as(idCol)).distinct()
+    batch
+      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
+      .persist()
+  }
+
+  /** Maintenance for an [[embeddingNearDupStream]] store: fold every
+    * batch partition except the latest into `batch=-1`, sorted by
+    * bucket (the history lookup's pushed bucket cover then hits tight
+    * row groups) — same crash posture as the text-store folds. */
+  def maintainEmbeddingNearDupStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      targetFileBytes: Long): Unit =
+      targetFileBytes: Long = 128L << 20): Unit =
     foldLogStoreBatches(spark, storePath, targetFileBytes,
       sortCols = Seq("graft_bucket", "graft_id"), statsCol = Some("graft_bucket"))
 
@@ -2241,15 +1829,14 @@ object StreamOps {
     * over the support only — never a member-level pair expansion).
     *
     * Store protocol = the signature-store protocol verbatim: admitted
-    * rows land in a `batch=<id>` hive partition OVERWRITTEN per attempt,
+    * rows land in a `batch=<id>` hive partition REPLACED per attempt,
     * only the newest batch may replay (guarded loudly), maintenance
-    * folds old partitions into `batch=-1`, and a `.meta` sidecar pins
+    * folds old partitions into `batch=-1`, and the manifest meta pins
     * `chunks` (the packed band-key layout — a store banded under a
     * different chunk split would probe garbage silently). `maxHamming`
     * is a per-call semantic knob like the embedding store's `threshold`,
     * not a layout property. Rows with a NULL fingerprint never pair and
-    * are admitted (the batch core's convention). Commit-log mode engages
-    * like the other stores (existing `_log/`, or session default). */
+    * are admitted (the batch core's convention). */
   def hammingNearDupStream(
       fps: DataFrame,
       storePath: String,
@@ -2342,54 +1929,55 @@ object StreamOps {
       chunks: Int = 0,
       maxBucketFetch: Int = 200000): DataFrame = {
     val nChunks = hammingStoreChunks(maxHamming, chunks)
+    import graft.operators.CommitLog
     val spark = batch.sparkSession
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    if (graft.operators.CommitLog.active(spark, fs, store))
-      return applyHammingNearDupBatchLog(batch, storePath, batchId, idCol,
-        hashCol, maxHamming, nChunks, maxBucketFetch)
+    adoptSingleRootStore(spark, store)
+    val baseV = CommitLog.currentVersion(fs, store)
+    val meta = CommitLog.tipMeta(fs, store)
+    requireReplayable(batchId, admittedMaxBatch(fs, store, meta, baseV), storePath)
+    require(meta.get("chunks").forall(_.toInt == nChunks),
+      s"hamming store at $storePath was banded with " +
+        s"chunks=${meta.getOrElse("chunks", "?")}, this stream uses " +
+        s"chunks=$nChunks — rebuild the store or match the layout")
 
-    graft.operators.Swap.withStoreLease(spark, store) { _ =>
-    graft.operators.Swap.recoverDirs(spark, store, graft.operators.Swap.Suffix)
-
-    if (fs.exists(store)) {
-      val live = fs.listStatus(store).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-      val maxLive = if (live.nonEmpty) live.max else -1L
-      requireReplayable(batchId, maxLive, storePath)
-    }
-    val own = new org.apache.hadoop.fs.Path(store, s"batch=$batchId")
-    if (fs.exists(own)) fs.delete(own, true) // crashed attempt's partials
-    val hasHistory = fs.exists(store) &&
-      fs.listStatus(store).exists(_.getPath.getName.startsWith("batch="))
-
-    val batchEmpty = batch.isEmpty
-    ensureHammingMeta(fs, storePath, nChunks, batchEmpty)
+    val histAll = CommitLog.read(spark, store, Some(baseV))
+      .map(_.filter(col("batch") =!= batchId))
+    val hasHistory = histAll.isDefined
 
     val histRead: Array[Any] => DataFrame = buckets => {
       val cover = idCoverFilter(col("graft_bucket"), buckets)
-      spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-        .where(cover.getOrElse(lit(true)))
-        .filter(col("graft_bucket").isInCollection(buckets.toSeq))
+      prunedRead(spark, store, None, baseV, idRanges(buckets)) match {
+        case None => batch.select(col(idCol).as("graft_id"),
+          col(hashCol).as("graft_sh"), lit(0L).as("graft_bucket")).limit(0)
+        case Some(df) => df
+          .filter(col("batch") =!= batchId)
+          .where(cover.getOrElse(lit(true)))
+          .filter(col("graft_bucket").isInCollection(buckets.toSeq))
+      }
     }
-    val histFull = () =>
-      spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-
     val admitted = hammingAdmitCore(
-      batch, idCol, hashCol, histRead, histFull, hasHistory, maxHamming,
-      nChunks, maxBucketFetch)
-    // admitted support exploded to exact band rows → this batch's own
-    // partition (the write materializes the admitted cache)
+      batch, idCol, hashCol, histRead, () => histAll.get, hasHistory,
+      maxHamming, nChunks, maxBucketFetch)
+    val staging = graft.operators.Swap.Suffix.staging(
+      store, graft.operators.Swap.newTag())
     admittedBandRows(admitted, idCol, hashCol, nChunks)
-      .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      .write.parquet(
+        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
+    CommitLog.commitStaged(spark, store, staging, baseV,
+      retireNames = Seq(s"batch=$batchId"),
+      wholeStore = false,
+      meta = Map("maxBatch" -> batchId.toString,
+        "chunks" -> nChunks.toString),
+      extraTouched = Seq(CommitLog.SerialToken),
+      statsCol = Some("graft_bucket"))
     admitted
-    }
   }
 
-  /** The candidate → verify → admit middle shared by the legacy and
-    * commit-log hamming store modes. Cross-batch: the batch SUPPORT
+  /** The candidate → verify → admit middle of
+    * [[applyHammingNearDupBatch]]. Cross-batch: the batch SUPPORT
     * (distinct hash values) probes bucket-mate history with the radius-1
     * flip expansion, exact `bit_count(xor) <= maxHamming` verify, and
     * ids recover by a hash join (whole identical classes drop together).
@@ -2464,120 +2052,13 @@ object StreamOps {
       .withColumn("graft_bucket",
         explode(hammingBandKeys(col("graft_sh"), nChunks, expand = false)))
 
-  /** Validate (or create) the `<store>.meta` sidecar pinning `chunks` —
-    * the packed band-key layout. An empty first batch defers creation. */
-  private def ensureHammingMeta(
-      fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String,
-      nChunks: Int,
-      batchEmpty: Boolean): Unit = {
-    val metaPath = new org.apache.hadoop.fs.Path(storePath + MetaSuffix)
-    if (fs.exists(metaPath)) {
-      val in = fs.open(metaPath)
-      val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          new String(buf.toByteArray, "UTF-8")
-        } finally in.close()
-      val m = text.split("\n").map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-      require(m.get("chunks").contains(nChunks.toString),
-        s"hamming store at $storePath was banded with " +
-          s"chunks=${m.getOrElse("chunks", "?")}, this stream uses " +
-          s"chunks=$nChunks — rebuild the store or match the layout")
-    } else if (!batchEmpty) {
-      val tmp = new org.apache.hadoop.fs.Path(metaPath.toString + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"chunks=$nChunks\n".getBytes("UTF-8"))
-      finally out.close()
-      if (!fs.rename(tmp, metaPath))
-        throw new java.io.IOException(s"could not write sidecar $metaPath")
-    }
-  }
-
   /** Maintenance for a [[hammingNearDupStream]] store: fold every batch
     * partition except the latest into `batch=-1`, sorted by bucket (the
     * history lookup's pushed bucket cover then hits tight row groups). */
   def maintainHammingNearDupStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (graft.operators.CommitLog.isLog(fs, store))
-      return maintainHammingNearDupStoreLog(spark, storePath, targetFileBytes)
-    graft.operators.Swap.withStoreLease(spark, store) { _ =>
-      foldBatchPartitions(spark, storePath, targetFileBytes, reagg = None,
-        sortCols = Seq("graft_bucket", "graft_sh"))
-    }
-  }
-
-  /** Commit-log mode of [[applyHammingNearDupBatch]]: single-level log
-    * store, pinned-snapshot history, manifest-stats file pruning on the
-    * bucket column, replay high-water mark + `chunks` in the manifest. */
-  private def applyHammingNearDupBatchLog(
-      batch: DataFrame,
-      storePath: String,
-      batchId: Long,
-      idCol: String,
-      hashCol: String,
-      maxHamming: Int,
-      nChunks: Int,
-      maxBucketFetch: Int): DataFrame = {
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val baseV = CommitLog.currentVersion(fs, store)
-    val meta = CommitLog.tipMeta(fs, store)
-    requireReplayable(batchId,
-      meta.get("maxBatch").map(_.toLong).getOrElse(-1L), storePath)
-    require(meta.get("chunks").forall(_.toInt == nChunks),
-      s"hamming store at $storePath was banded with " +
-        s"chunks=${meta.getOrElse("chunks", "?")}, this stream uses " +
-        s"chunks=$nChunks — rebuild the store or match the layout")
-
-    val histAll = CommitLog.read(spark, store, Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = histAll.isDefined
-
-    val histRead: Array[Any] => DataFrame = buckets => {
-      val cover = idCoverFilter(col("graft_bucket"), buckets)
-      prunedRead(spark, store, None, baseV, idRanges(buckets)) match {
-        case None => batch.select(col(idCol).as("graft_id"),
-          col(hashCol).as("graft_sh"), lit(0L).as("graft_bucket")).limit(0)
-        case Some(df) => df
-          .filter(col("batch") =!= batchId)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_bucket").isInCollection(buckets.toSeq))
-      }
-    }
-    val admitted = hammingAdmitCore(
-      batch, idCol, hashCol, histRead, () => histAll.get, hasHistory,
-      maxHamming, nChunks, maxBucketFetch)
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    admittedBandRows(admitted, idCol, hashCol, nChunks)
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(s"batch=$batchId"),
-      wholeStore = false,
-      meta = Map("maxBatch" -> batchId.toString,
-        "chunks" -> nChunks.toString),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_bucket"))
-    admitted
-  }
-
-  /** Commit-log mode of [[maintainHammingNearDupStore]]: one manifest
-    * folds every batch but the newest into a bucket-sorted `batch=-1`. */
-  private def maintainHammingNearDupStoreLog(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      targetFileBytes: Long): Unit =
+      targetFileBytes: Long = 128L << 20): Unit =
     foldLogStoreBatches(spark, storePath, targetFileBytes,
       sortCols = Seq("graft_bucket", "graft_sh"), statsCol = Some("graft_bucket"))
 
@@ -2609,10 +2090,9 @@ object StreamOps {
     * sampling very short clips should lower the knob).
     *
     * Store protocol = the signature-store protocol verbatim (per-attempt
-    * `batch=<id>` overwrite, only-newest replay guard, bucket-sorted
-    * `batch=-1` folds, `.meta`/manifest pins `chunks` — the key layout;
-    * `maxHamming`/`minMatchedFrames` are per-call semantic knobs);
-    * commit-log mode engages like the other stores. */
+    * `batch=<id>` replacement, only-newest replay guard, bucket-sorted
+    * `batch=-1` folds, manifest meta pins `chunks` — the key layout;
+    * `maxHamming`/`minMatchedFrames` are per-call semantic knobs). */
   def frameHammingNearDupStream(
       frames: DataFrame,
       storePath: String,
@@ -2665,53 +2145,56 @@ object StreamOps {
       chunks: Int = 0,
       maxBucketFetch: Int = 200000): DataFrame = {
     val nChunks = hammingStoreChunks(maxHamming, chunks)
+    import graft.operators.CommitLog
     val spark = batch.sparkSession
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    if (graft.operators.CommitLog.active(spark, fs, store))
-      return applyFrameHammingNearDupBatchLog(batch, storePath, batchId,
-        idCol, posCol, hashCol, maxHamming, minMatchedFrames, nChunks,
-        maxBucketFetch)
+    adoptSingleRootStore(spark, store)
+    val baseV = CommitLog.currentVersion(fs, store)
+    val meta = CommitLog.tipMeta(fs, store)
+    requireReplayable(batchId, admittedMaxBatch(fs, store, meta, baseV), storePath)
+    require(meta.get("chunks").forall(_.toInt == nChunks),
+      s"frame hamming store at $storePath was banded with " +
+        s"chunks=${meta.getOrElse("chunks", "?")}, this stream uses " +
+        s"chunks=$nChunks — rebuild the store or match the layout")
 
-    graft.operators.Swap.withStoreLease(spark, store) { _ =>
-    graft.operators.Swap.recoverDirs(spark, store, graft.operators.Swap.Suffix)
-
-    if (fs.exists(store)) {
-      val live = fs.listStatus(store).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-      val maxLive = if (live.nonEmpty) live.max else -1L
-      requireReplayable(batchId, maxLive, storePath)
-    }
-    val own = new org.apache.hadoop.fs.Path(store, s"batch=$batchId")
-    if (fs.exists(own)) fs.delete(own, true) // crashed attempt's partials
-    val hasHistory = fs.exists(store) &&
-      fs.listStatus(store).exists(_.getPath.getName.startsWith("batch="))
-
-    val batchEmpty = batch.isEmpty
-    ensureHammingMeta(fs, storePath, nChunks, batchEmpty)
+    val histAll = CommitLog.read(spark, store, Some(baseV))
+      .map(_.filter(col("batch") =!= batchId))
+    val hasHistory = histAll.isDefined
 
     val histRead: Array[Any] => DataFrame = buckets => {
       val cover = idCoverFilter(col("graft_bucket"), buckets)
-      spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-        .where(cover.getOrElse(lit(true)))
-        .filter(col("graft_bucket").isInCollection(buckets.toSeq))
+      prunedRead(spark, store, None, baseV, idRanges(buckets)) match {
+        case None => batch.select(col(idCol).as("graft_id"),
+          lit(0L).as("graft_pos"), col(hashCol).as("graft_sh"),
+          lit(0L).as("graft_bucket")).limit(0)
+        case Some(df) => df
+          .filter(col("batch") =!= batchId)
+          .where(cover.getOrElse(lit(true)))
+          .filter(col("graft_bucket").isInCollection(buckets.toSeq))
+      }
     }
-    val histFull = () =>
-      spark.read.parquet(storePath).filter(col("batch") =!= batchId)
-
     val admitted = frameHammingAdmitCore(
-      batch, idCol, posCol, hashCol, histRead, histFull, hasHistory,
-      maxHamming, minMatchedFrames, nChunks, maxBucketFetch)
+      batch, idCol, posCol, hashCol, histRead, () => histAll.get,
+      hasHistory, maxHamming, minMatchedFrames, nChunks, maxBucketFetch)
+    val staging = graft.operators.Swap.Suffix.staging(
+      store, graft.operators.Swap.newTag())
     admittedFrameBandRows(admitted, idCol, posCol, hashCol, nChunks)
-      .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+      .write.parquet(
+        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
+    CommitLog.commitStaged(spark, store, staging, baseV,
+      retireNames = Seq(s"batch=$batchId"),
+      wholeStore = false,
+      meta = Map("maxBatch" -> batchId.toString,
+        "chunks" -> nChunks.toString),
+      extraTouched = Seq(CommitLog.SerialToken),
+      statsCol = Some("graft_bucket"))
     admitted
-    }
   }
 
-  /** The candidate → verify → admit middle shared by the legacy and
-    * commit-log frame-store modes. Within-batch: the batch operator
+  /** The candidate → verify → admit middle of
+    * [[applyFrameHammingNearDupBatch]]. Within-batch: the batch operator
     * verbatim — aligned-frame pairs via the distinct-first multi-index
     * join (`groupCols = posCol`), count per item pair, larger id drops
     * at ≥ `minMatchedFrames`. Cross-batch: batch frames probe
@@ -2796,175 +2279,9 @@ object StreamOps {
   def maintainFrameHammingNearDupStore(
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (graft.operators.CommitLog.isLog(fs, store))
-      return foldLogStoreBatches(spark, storePath, targetFileBytes,
-        sortCols = Seq("graft_bucket", "graft_id"),
-        statsCol = Some("graft_bucket"))
-    graft.operators.Swap.withStoreLease(spark, store) { _ =>
-      foldBatchPartitions(spark, storePath, targetFileBytes, reagg = None,
-        sortCols = Seq("graft_bucket", "graft_id"))
-    }
-  }
-
-  /** Commit-log mode of [[applyFrameHammingNearDupBatch]] — the scalar
-    * store's log mode with the frame-store schema: single-level log,
-    * pinned-snapshot history, manifest-stats file pruning on the bucket
-    * column, replay high-water mark + `chunks` in the manifest. */
-  private def applyFrameHammingNearDupBatchLog(
-      batch: DataFrame,
-      storePath: String,
-      batchId: Long,
-      idCol: String,
-      posCol: String,
-      hashCol: String,
-      maxHamming: Int,
-      minMatchedFrames: Int,
-      nChunks: Int,
-      maxBucketFetch: Int): DataFrame = {
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val baseV = CommitLog.currentVersion(fs, store)
-    val meta = CommitLog.tipMeta(fs, store)
-    requireReplayable(batchId,
-      meta.get("maxBatch").map(_.toLong).getOrElse(-1L), storePath)
-    require(meta.get("chunks").forall(_.toInt == nChunks),
-      s"frame hamming store at $storePath was banded with " +
-        s"chunks=${meta.getOrElse("chunks", "?")}, this stream uses " +
-        s"chunks=$nChunks — rebuild the store or match the layout")
-
-    val histAll = CommitLog.read(spark, store, Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = histAll.isDefined
-
-    val histRead: Array[Any] => DataFrame = buckets => {
-      val cover = idCoverFilter(col("graft_bucket"), buckets)
-      prunedRead(spark, store, None, baseV, idRanges(buckets)) match {
-        case None => batch.select(col(idCol).as("graft_id"),
-          lit(0L).as("graft_pos"), col(hashCol).as("graft_sh"),
-          lit(0L).as("graft_bucket")).limit(0)
-        case Some(df) => df
-          .filter(col("batch") =!= batchId)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_bucket").isInCollection(buckets.toSeq))
-      }
-    }
-    val admitted = frameHammingAdmitCore(
-      batch, idCol, posCol, hashCol, histRead, () => histAll.get,
-      hasHistory, maxHamming, minMatchedFrames, nChunks, maxBucketFetch)
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    admittedFrameBandRows(admitted, idCol, posCol, hashCol, nChunks)
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(s"batch=$batchId"),
-      wholeStore = false,
-      meta = Map("maxBatch" -> batchId.toString,
-        "chunks" -> nChunks.toString),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_bucket"))
-    admitted
-  }
-
-  /** Commit-log mode of [[applyExactDedupBatch]]: the fingerprint store
-    * is a plain single-level log store (`store/_log/` +
-    * `store/batch=<id>/`) — one manifest per batch, replays
-    * retire-and-replace their own partition, the replay high-water mark
-    * rides the manifest meta (surviving folds, which the legacy live-dir
-    * listing does not), and concurrent writers serialize loudly through
-    * [[graft.operators.CommitLog.SerialToken]] instead of a lease. */
-  private def applyExactDedupBatchLog(
-      batch: DataFrame,
-      storePath: String,
-      batchId: Long,
-      idCol: String,
-      textCol: String,
-      maxFetch: Int): DataFrame = {
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val baseV = CommitLog.currentVersion(fs, store)
-    requireReplayable(batchId,
-      CommitLog.tipMeta(fs, store).get("maxBatch").map(_.toLong).getOrElse(-1L),
-      storePath)
-    // pinned snapshot minus the current batch (replay idempotence)
-    val histAll = CommitLog.read(spark, store, Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = histAll.isDefined
-
-    val fpB = batch.select(
-      col(idCol).as("graft_id"),
-      md5(col(textCol).cast("string")).as("graft_fp"))
-      .persist()
-
-    // cap+1 probe mirrors the near-dup verify fetch
-    val capProbe = math.min(maxFetch.toLong + 1L, Int.MaxValue.toLong).toInt
-    val batchFps: Array[Any] =
-      if (hasHistory) fpB.select("graft_fp").distinct().limit(capProbe)
-        .collect().map(_.get(0))
-      else Array.empty[Any]
-    val history =
-      if (!hasHistory || batchFps.isEmpty) fpB.select("graft_fp").limit(0)
-      else if (batchFps.length <= maxFetch) {
-        val cover = idCoverFilter(col("graft_fp"), batchFps)
-        // manifest-stats file pruning first (folds sort by fingerprint,
-        // so per-file ranges are tight), pushed filters inside the kept
-        // files second
-        prunedRead(spark, store, None, baseV, idRanges(batchFps)) match {
-          case None => fpB.select("graft_fp").limit(0)
-          case Some(df) => df
-            .filter(col("batch") =!= batchId)
-            .where(cover.getOrElse(lit(true)))
-            .filter(col("graft_fp").isInCollection(batchFps.toSeq))
-            .select("graft_fp")
-        }
-      } else histAll.get.select("graft_fp")
-
-    val dupOfHistory = fpB
-      .join(history, Seq("graft_fp"), "left_semi")
-      .select(col("graft_id").as(idCol))
-    // within-batch: min id per fingerprint survives
-    val dupInBatch = fpB
-      .join(fpB.groupBy("graft_fp").agg(min("graft_id").as("graft_keep")),
-        Seq("graft_fp"))
-      .filter(col("graft_id") =!= col("graft_keep"))
-      .select(col("graft_id").as(idCol))
-
-    val admitted = batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
-      .persist()
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    fpB.join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(s"batch=$batchId"),
-      wholeStore = false,
-      meta = Map("maxBatch" -> batchId.toString),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_fp"))
-    fpB.unpersist()
-    admitted
-  }
-
-  /** Commit-log mode of [[maintainExactDedupStore]]: one manifest folds
-    * every batch but the newest into a sorted `batch=-1`, parity-checked
-    * from footers pre-commit. */
-  private def maintainExactDedupStoreLog(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      targetFileBytes: Long): Unit =
+      targetFileBytes: Long = 128L << 20): Unit =
     foldLogStoreBatches(spark, storePath, targetFileBytes,
-      sortCols = Seq("graft_fp"), statsCol = Some("graft_fp"))
+      sortCols = Seq("graft_bucket", "graft_id"), statsCol = Some("graft_bucket"))
 
   /** Shared single-level log-store fold (exact-dedup and embedding
     * stores): one manifest folds every batch but the newest into
@@ -2980,6 +2297,7 @@ object StreamOps {
     import graft.operators.CommitLog
     val store = new org.apache.hadoop.fs.Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    adoptSingleRootStore(spark, store)
     val baseV = CommitLog.currentVersion(fs, store)
     if (baseV == 0) return
     val files = CommitLog.snapshotFiles(fs, store, baseV)
@@ -3016,7 +2334,8 @@ object StreamOps {
     CommitLog.commitStaged(spark, store, staging, baseV,
       retireNames = foldIds.map("batch=" + _),
       wholeStore = false,
-      meta = CommitLog.tipMeta(fs, store),
+      // config + maxBatch carry forward; the tip's operation label does not
+      meta = CommitLog.tipMeta(fs, store) - "operation",
       extraTouched = Seq(CommitLog.SerialToken),
       statsCol = statsCol) // sorted fold → tight per-file ranges
     // same rationale as the near-dup fold: maintenance is when the store
@@ -3025,64 +2344,4 @@ object StreamOps {
     ()
   }
 
-  /** Fold all `batch=<id>` dirs of `rootPath` except the highest id into
-    * `batch=-1`. No-op when there is nothing to fold. (Test-visible so
-    * the crash window BETWEEN per-root folds — store folded, sidecars
-    * not — can be driven directly.) */
-  private[graft] def foldBatchPartitions(
-      spark: org.apache.spark.sql.SparkSession,
-      rootPath: String,
-      targetFileBytes: Long,
-      reagg: Option[DataFrame => DataFrame],
-      sortCols: Seq[String] = Nil): Unit = {
-    val root = new org.apache.hadoop.fs.Path(rootPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    graft.operators.Swap.recoverDirs(spark, root, graft.operators.Swap.Suffix)
-    val partDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-    val ids = partDirs.map(_.getPath.getName.stripPrefix("batch=").toLong)
-    val live = ids.filter(_ >= 0)
-    if (live.isEmpty) return
-    val maxId = live.max
-    val foldIds = ids.filter(_ < maxId).sorted // includes a previous -1
-    if (foldIds.count(_ >= 0) == 0) return     // only the fold itself left
-    val foldNames = foldIds.map("batch=" + _)
-    val foldBytes = partDirs
-      .filter(s => foldNames.contains(s.getPath.getName))
-      .flatMap(s => fs.listStatus(s.getPath))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(foldBytes.toDouble / targetFileBytes).toInt)
-    val folded = spark.read.parquet(rootPath)
-      .filter(col("batch").isin(foldIds: _*)).drop("batch")
-    val combined = reagg.fold(folded)(f => f(folded))
-    // range-partition + sort (not a global sort): each output file holds
-    // a contiguous key range, so parquet row-group min/max stats prune
-    // point lookups and similar rows compress together
-    val out =
-      if (sortCols.isEmpty) combined.repartition(nOut)
-      else combined
-        .repartitionByRange(nOut, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    val tag = graft.operators.Swap.newTag()
-    val staging = graft.operators.Swap.Suffix.staging(root, tag)
-    val retired = graft.operators.Swap.Suffix.retired(root, tag)
-    out.write.parquet(new org.apache.hadoop.fs.Path(staging, "batch=-1").toString)
-    // content parity before the point of no return: a fold must never
-    // lose rows (footer reads, no cluster job; skipped when the fold
-    // legitimately re-aggregates)
-    if (reagg.isEmpty) {
-      val before = graft.operators.Compact.footerRowsIn(
-        spark, foldNames.map(new org.apache.hadoop.fs.Path(root, _)))
-      val after = graft.operators.Compact.footerRowsIn(
-        spark, Seq(new org.apache.hadoop.fs.Path(staging, "batch=-1")))
-      if (before != after) {
-        fs.delete(staging, true)
-        throw new IllegalStateException(
-          s"fold row mismatch for $rootPath: $before -> $after (store untouched)")
-      }
-    }
-    graft.operators.Swap.commitDirs(fs, root, staging, retired, foldNames.toSeq)
-  }
 }

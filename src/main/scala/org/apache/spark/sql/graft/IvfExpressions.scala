@@ -8,8 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
 /** Fused native kernels for the IVF / IVF-PQ vector pipeline (r19,
-  * VERDICT r18 item 6 — measured, not assumed: the GRAFT_PHASE_PROBE
-  * split of `IvfPqIndex.buildAndSave` at sf0.1 attributed its wall
+  * VERDICT r18 item 6 — measured, not assumed: a per-phase timing
+  * of `IvfPqIndex.buildAndSave` at sf0.1 attributed its wall
   * almost entirely to materializing the composed higher-order-function
   * expressions — `nvecExpr` (transform + aggregate + transform),
   * `assignExpr` (nlist × aggregate(zip_with)), `residualCol` (zip_with),

@@ -24,8 +24,7 @@ class BloomIndexSpec extends AnyFunSuite {
     val rows = (1L to 400L).map { k =>
       (k, (k % 8) * 1000L + k / 8, "p" + (k % 4))
     }.toDF("k", "uid", "p")
-    Merge.into(spark, store, rows, Seq("k"), prunePartitions = Some("p"),
-      log = Some(true))
+    Merge.into(spark, store, rows, Seq("k"), prunePartitions = Some("p"))
   }
 
   test("lookup equals the plain filter and scans FEWER files than the " +

@@ -26,8 +26,7 @@ class CdcSpec extends AnyFunSuite {
     "out-of-order arrivals lose") {
     val store = tmp("graft_cdc") + "/s"
     Merge.into(spark, store,
-      (1L to 10L).map(k => (k, "base" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+      (1L to 10L).map(k => (k, "base" + k)).toDF("k", "v"), Seq("k"))
     val feed = Seq(
       (1L, "upd1-late", 5L, "U"),  // wins for k=1
       (1L, "upd1-early", 2L, "U"), // loses (lower seq)
@@ -50,8 +49,7 @@ class CdcSpec extends AnyFunSuite {
   test("re-applying the same feed is idempotent") {
     val store = tmp("graft_cdc_idem") + "/s"
     Merge.into(spark, store,
-      (1L to 5L).map(k => (k, "base" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+      (1L to 5L).map(k => (k, "base" + k)).toDF("k", "v"), Seq("k"))
     val feed = Seq(
       (1L, "u1", 2L, "U"), (2L, "x", 2L, "D"), (9L, "n9", 1L, "I"))
       .toDF("k", "v", "seq", "op")
@@ -64,7 +62,7 @@ class CdcSpec extends AnyFunSuite {
   test("a tie at the winning sequence refuses loudly, store untouched") {
     val store = tmp("graft_cdc_tie") + "/s"
     Merge.into(spark, store,
-      Seq((1L, "base")).toDF("k", "v"), Seq("k"), log = Some(true))
+      Seq((1L, "base")).toDF("k", "v"), Seq("k"))
     val v0 = CommitLog.currentVersion(
       new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration),
       new Path(store))
@@ -83,7 +81,7 @@ class CdcSpec extends AnyFunSuite {
     "cleanly; only DIFFERING payloads at the winning seq refuse") {
     val store = tmp("graft_cdc_redeliver") + "/s"
     Merge.into(spark, store,
-      Seq((1L, "base")).toDF("k", "v"), Seq("k"), log = Some(true))
+      Seq((1L, "base")).toDF("k", "v"), Seq("k"))
     // the same action delivered twice — normal at-least-once output
     val feed = Seq((1L, "upd", 3L, "U"), (1L, "upd", 3L, "U"),
       (2L, "new", 1L, "I"), (2L, "new", 1L, "I"))
@@ -102,7 +100,7 @@ class CdcSpec extends AnyFunSuite {
     val store = tmp("graft_cdc_part") + "/s"
     Merge.into(spark, store,
       Seq((1L, "a", "p0"), (2L, "b", "p1")).toDF("k", "v", "p"),
-      Seq("k"), prunePartitions = Some("p"), log = Some(true))
+      Seq("k"), prunePartitions = Some("p"))
     // insert-only: no existing file holds any winner key
     Cdc.applyChangesAtomic(spark, store,
       Seq((3L, "c", "p1", 1L, "I")).toDF("k", "v", "p", "seq", "op"),
@@ -126,7 +124,7 @@ class CdcSpec extends AnyFunSuite {
       (2L, Some("a"), "x3"), (2L, None, "x4"))
       .toDF("k1", "k2", "v")
     // merge key = the composite (k1, k2)
-    Merge.into(spark, store, rows, Seq("k1", "k2"), log = Some(true))
+    Merge.into(spark, store, rows, Seq("k1", "k2"))
     val kill = Seq((1L, "b"), (2L, "a"), (7L, "zz")).toDF("k1", "k2")
     val out = Delete.whereIn(spark, store, kill, Seq("k1", "k2"))
     val left = out.select("v").as[String].collect().toSet

@@ -31,8 +31,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     val store = tmp("graft_cf") + "/s"
     // v1: full load
     Merge.into(spark, store,
-      (1L to 6L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+      (1L to 6L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"))
     // v2: update 2 keys, insert 1 — whole-store rewrite carries the rest
     Merge.into(spark, store,
       Seq((1L, "V1"), (2L, "V2"), (7L, "v7")).toDF("k", "v"), Seq("k"))
@@ -52,8 +51,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     "changes (untouched partitions never enter the diff)") {
     val store = tmp("graft_cf_part") + "/s"
     val init = (1L to 12L).map(k => (k, "v" + k, "p" + (k % 3))).toDF("k", "v", "p")
-    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"),
-      log = Some(true))
+    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"))
     Merge.into(spark, store, Seq((3L, "NEW", "p0")).toDF("k", "v", "p"),
       Seq("k"), prunePartitions = Some("p"))
     val changes = ChangeFeed.between(spark, new Path(store), 1, 2, Seq("k"))
@@ -67,8 +65,7 @@ class ChangeFeedSpec extends AnyFunSuite {
 
   test("since() is the incremental-consumer loop: poll, commit, poll again") {
     val store = tmp("graft_cf_since") + "/s"
-    Merge.into(spark, store, Seq((1L, "a")).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+    Merge.into(spark, store, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
     val (c1, tip1) = ChangeFeed.since(spark, new Path(store), 0, Seq("k"))
     assert(tip1 == 1 && c1.count() == 1)
     Merge.into(spark, store, Seq((2L, "b")).toDF("k", "v"), Seq("k"))
@@ -85,7 +82,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     "null-extended, the union aligns to the widest schema") {
     val store = tmp("graft_cf_evo") + "/s"
     Merge.into(spark, store, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
-      Seq("k"), log = Some(true))
+      Seq("k"))
     Merge.into(spark, store,
       Seq((2L, "B", 9L), (3L, "c", 7L)).toDF("k", "v", "extra"),
       Seq("k"), evolveSchema = true)
@@ -103,8 +100,7 @@ class ChangeFeedSpec extends AnyFunSuite {
 
   test("window bounds are validated against store history") {
     val store = tmp("graft_cf_bounds") + "/s"
-    Merge.into(spark, store, Seq((1L, "a")).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+    Merge.into(spark, store, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
     intercept[IllegalArgumentException] {
       ChangeFeed.between(spark, new Path(store), 0, 99, Seq("k"))
     }

@@ -21,8 +21,7 @@ class CloneSpec extends AnyFunSuite {
 
   private def mk(src: String): Unit =
     Merge.into(spark, src,
-      (1L to 100L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+      (1L to 100L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"))
 
   private def dataFilesUnder(dir: String): Seq[String] = {
     def walk(p: Path): Seq[String] =
@@ -99,7 +98,7 @@ class CloneSpec extends AnyFunSuite {
     val src = tmp("graft_cl_bad_src") + "/s"
     Merge.into(spark, src,
       (1L to 20L).map(k => (k, "v" + k, "p" + (k % 2))).toDF("k", "v", "p"),
-      Seq("k"), prunePartitions = Some("p"), log = Some(true))
+      Seq("k"), prunePartitions = Some("p"))
     intercept[IllegalArgumentException] {
       CommitLog.shallowClone(spark, new Path(src),
         new Path(tmp("graft_cl_bad_dst") + "/c"))

@@ -12,17 +12,25 @@ class CompactSpec extends AnyFunSuite {
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  // a compacted store's replaced files stay on disk until vacuum: once
+  // compaction has put a store under the log, read its snapshot
+  private def read(path: String) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (CommitLog.isLog(Swap.fsOf(spark, p), p)) CommitLog.read(spark, p).get
+    else spark.read.parquet(path)
+  }
+
   // order-insensitive content fingerprint; bit_xor can't overflow where
   // an ANSI sum of full-range hashes would
   private def contentHash(path: String): Long =
-    spark.read.parquet(path)
+    read(path)
       .agg(expr("bit_xor(xxhash64(k, v))")).head().getLong(0)
 
   test("compactStore on a store that was never created is a no-op, not " +
     "a FileNotFoundException — an all-empty-batch stream's maintenance " +
     "tick must not crash-loop") {
     val missing = tmp("graft_compact_missing") + "/never_written"
-    assert(Compact.compactStore(spark, missing, "slice").isEmpty)
+    assert(Compact.compactLogStore(spark, missing, "slice").isEmpty)
     assert(Scd2.maintain(spark, missing + "/dim").isEmpty)
   }
 
@@ -95,7 +103,7 @@ class CompactSpec extends AnyFunSuite {
     assert(spark.read.parquet(store).count() == before) // not doubled
     assert(spark.read.parquet(store).select("p").distinct().count() == 1)
     // and compactStore never treats the leftover as a partition
-    val stats = Compact.compactStore(spark, store, "p",
+    val stats = Compact.compactLogStore(spark, store, "p",
       targetFileBytes = 1L << 30, maxFilesPerDir = 999)
     assert(stats.isEmpty, stats)
   }
@@ -111,18 +119,18 @@ class CompactSpec extends AnyFunSuite {
     def files(p: String) = new java.io.File(s"$store/p=$p").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toSet
     val coldBefore = files("cold")
-    val totalBefore = spark.read.parquet(store).count()
-    val hashBefore = spark.read.parquet(store)
+    val totalBefore = read(store).count()
+    val hashBefore = read(store)
       .agg(expr("bit_xor(xxhash64(k, v, p))")).head().getLong(0)
 
-    val stats = Compact.compactStore(spark, store, "p",
+    val stats = Compact.compactLogStore(spark, store, "p",
       targetFileBytes = 1L << 30, maxFilesPerDir = 8)
 
     assert(stats.keySet == Set("p=hot"), stats) // cold under the cap
     assert(stats("p=hot").filesBefore == 20 && stats("p=hot").filesAfter == 1)
     assert(files("cold") == coldBefore) // untouched, same names + mtimes
-    assert(spark.read.parquet(store).count() == totalBefore)
-    assert(spark.read.parquet(store)
+    assert(read(store).count() == totalBefore)
+    assert(read(store)
       .agg(expr("bit_xor(xxhash64(k, v, p))")).head().getLong(0)
       == hashBefore)
   }

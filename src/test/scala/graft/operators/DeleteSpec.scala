@@ -26,8 +26,7 @@ class DeleteSpec extends AnyFunSuite {
     "partitions' files survive by name") {
     val store = tmp("graft_del_prune") + "/s"
     val init = (1L to 40L).map(k => (k, "v" + k, "p" + (k % 4))).toDF("k", "v", "p")
-    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"),
-      log = Some(true))
+    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"))
     val before = snapshotFileSet(store)
 
     // all matches live in partition p=1 (k % 4 == 1)
@@ -48,7 +47,7 @@ class DeleteSpec extends AnyFunSuite {
   test("no matches → no commit, version unchanged") {
     val store = tmp("graft_del_noop") + "/s"
     Merge.into(spark, store, Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
-      Seq("k"), log = Some(true))
+      Seq("k"))
     val v = CommitLog.currentVersion(fs, new Path(store))
     val out = Delete.where(spark, store, $"k" > 100)
     assert(out.count() == 2)
@@ -59,7 +58,7 @@ class DeleteSpec extends AnyFunSuite {
     val store = tmp("graft_del_null") + "/s"
     val init = Seq((1L, Some("x")), (2L, None), (3L, Some("y")))
       .toDF("k", "v")
-    Merge.into(spark, store, init, Seq("k"), log = Some(true))
+    Merge.into(spark, store, init, Seq("k"))
     // v = 'x' is NULL for k=2: that row must stay
     val out = Delete.where(spark, store, $"v" === "x")
     assert(out.select("k").as[Long].collect().toSet == Set(2L, 3L))
@@ -68,8 +67,7 @@ class DeleteSpec extends AnyFunSuite {
   test("a file whose rows ALL match is retired with no replacement") {
     val store = tmp("graft_del_all") + "/s"
     val init = (1L to 10L).map(k => (k, "p" + (k % 2))).toDF("k", "p")
-    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"),
-      log = Some(true))
+    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"))
     val out = Delete.where(spark, store, $"p" === "p1")
     assert(out.select("k").as[Long].collect().toSet ==
       (1L to 10L).filter(_ % 2 == 0).toSet)
@@ -80,8 +78,7 @@ class DeleteSpec extends AnyFunSuite {
     "rewrite is the table, not a mask)") {
     val store = tmp("graft_del_merge") + "/s"
     Merge.into(spark, store,
-      (1L to 10L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+      (1L to 10L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"))
     Delete.where(spark, store, $"k" % 2 === 0)
     Merge.into(spark, store, Seq((100L, "new")).toDF("k", "v"), Seq("k"))
     val keys = CommitLog.read(spark, new Path(store)).get
@@ -94,7 +91,7 @@ class DeleteSpec extends AnyFunSuite {
     "file is rewritten — one commit") {
     val store = tmp("graft_exp_clustered") + "/s"
     val rows = (1L to 400L).map(k => (k, k * 100L, "v" + k)).toDF("k", "us", "v")
-    Merge.into(spark, store, rows, Seq("k"), log = Some(true))
+    Merge.into(spark, store, rows, Seq("k"))
     Optimize.zorder(spark, store, Seq("us"), numFiles = 4)
     val p = new Path(store)
     val before = snapshotFileSet(store)
@@ -134,8 +131,7 @@ class DeleteSpec extends AnyFunSuite {
     "cutoff above everything empties the store via a drop-only commit") {
     val store = tmp("graft_exp_edges") + "/s"
     Merge.into(spark, store,
-      (1L to 50L).map(k => (k, k * 10L)).toDF("k", "us"), Seq("k"),
-      log = Some(true))
+      (1L to 50L).map(k => (k, k * 10L)).toDF("k", "us"), Seq("k"))
     val p = new Path(store)
     val v0 = CommitLog.currentVersion(fs, p)
     assert(Delete.expire(spark, store, "us", cutoff = 5L).count() == 50)
@@ -151,7 +147,7 @@ class DeleteSpec extends AnyFunSuite {
     val rows = Seq[(Long, Option[Long])](
       (1L, Some(10L)), (2L, None), (3L, Some(500L)), (4L, None))
       .toDF("k", "us")
-    Merge.into(spark, store, rows, Seq("k"), log = Some(true))
+    Merge.into(spark, store, rows, Seq("k"))
     val out = Delete.expire(spark, store, "us", cutoff = 100L)
     assert(out.select("k").as[Long].collect().toSet == Set(2L, 3L, 4L))
   }

@@ -23,7 +23,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     batches.foreach { b =>
       IncrementalAgg.update(spark, path, b.toDF("k", "v"), Seq("k"), "v")
     }
-    val got = IncrementalAgg.withAvg(spark.read.parquet(path))
+    val got = IncrementalAgg.withAvg(IncrementalAgg.readStore(spark, path))
       .select("k", "n", "sum", "min", "max", "avg")
       .as[(String, Long, Double, Double, Double, Double)]
       .collect().sortBy(_._1)
@@ -113,8 +113,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     def fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // 40 keys over 8 buckets, then a second batch touching ONE key
     val b1 = (0 until 400).map(i => (s"k${i % 40}", i.toDouble))
-    IncrementalAgg.update(spark, path, b1.toDF("k", "v"), Seq("k"), "v",
-      log = Some(true), buckets = Some(8))
+    IncrementalAgg.update(spark, path, b1.toDF("k", "v"), Seq("k"), "v", buckets = Some(8))
     val before = CommitLog.snapshotFiles(fs, store,
       CommitLog.currentVersion(fs, store)).toSet
     IncrementalAgg.update(spark, path,
@@ -141,33 +140,28 @@ class IncrementalAggSpec extends AnyFunSuite {
         Seq(("a", 1.0)).toDF("k", "v"), Seq("k"), "v", buckets = Some(16))
     }
     assert(e.getMessage.contains("buckets"))
-    // bucketing needs the log: a legacy store refuses
-    val legacy = freshStore()
-    val e2 = intercept[IllegalArgumentException] {
-      IncrementalAgg.update(spark, legacy,
-        Seq(("a", 1.0)).toDF("k", "v"), Seq("k"), "v", buckets = Some(8))
-    }
-    assert(e2.getMessage.contains("commit log"))
+    // every fresh path is a log store, so bucketing needs no opt-in
+    val fresh = freshStore()
+    IncrementalAgg.update(spark, fresh,
+      Seq(("a", 1.0)).toDF("k", "v"), Seq("k"), "v", buckets = Some(8))
+    assert(CommitLog.isLog(fs, new org.apache.hadoop.fs.Path(fresh)))
   }
 
   test("log-store replay guard: a batch at or below the manifest " +
     "high-water mark is skipped store-level and stream-level") {
     val logPath = freshStore()
-    spark.conf.set("spark.graft.store.commitLog", "true")
-    try {
-      assert(graft.streaming.StreamOps.applyAggBatchOnce(
-        Seq(("a", 1.0)).toDF("k", "v"), logPath, Seq("k"), "v", 0L))
-      assert(graft.streaming.StreamOps.applyAggBatchOnce(
-        Seq(("b", 2.0)).toDF("k", "v"), logPath, Seq("k"), "v", 1L))
-      // stream-level replay: returns false, store untouched
-      assert(!graft.streaming.StreamOps.applyAggBatchOnce(
-        Seq(("a", 99.0)).toDF("k", "v"), logPath, Seq("k"), "v", 1L))
-      // store-level replay (direct update call): also skipped
-      IncrementalAgg.update(spark, logPath,
-        Seq(("a", 99.0)).toDF("k", "v"), Seq("k"), "v", batchId = Some(0L))
-      val out = IncrementalAgg.readStore(spark, logPath)
-        .select("k", "n", "sum").as[(String, Long, Double)].collect().toSet
-      assert(out == Set(("a", 1L, 1.0), ("b", 1L, 2.0)), out.toString)
-    } finally spark.conf.unset("spark.graft.store.commitLog")
+    assert(graft.streaming.StreamOps.applyAggBatchOnce(
+      Seq(("a", 1.0)).toDF("k", "v"), logPath, Seq("k"), "v", 0L))
+    assert(graft.streaming.StreamOps.applyAggBatchOnce(
+      Seq(("b", 2.0)).toDF("k", "v"), logPath, Seq("k"), "v", 1L))
+    // stream-level replay: returns false, store untouched
+    assert(!graft.streaming.StreamOps.applyAggBatchOnce(
+      Seq(("a", 99.0)).toDF("k", "v"), logPath, Seq("k"), "v", 1L))
+    // store-level replay (direct update call): also skipped
+    IncrementalAgg.update(spark, logPath,
+      Seq(("a", 99.0)).toDF("k", "v"), Seq("k"), "v", batchId = Some(0L))
+    val out = IncrementalAgg.readStore(spark, logPath)
+      .select("k", "n", "sum").as[(String, Long, Double)].collect().toSet
+    assert(out == Set(("a", 1L, 1.0), ("b", 1L, 2.0)), out.toString)
   }
 }

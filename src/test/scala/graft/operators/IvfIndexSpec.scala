@@ -101,7 +101,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val built = IvfIndex.build(e.filter($"vec_id" < 400), "vec_id", "embedding", nlist = 4)
     built.save(dir)
     built.assigned.unpersist()
-    val before = spark.read.parquet(s"$dir/data").count()
+    val before = IvfIndex.load(spark, dir).assigned.count()
     val drifters = e.filter($"vec_id" >= 400)
     assert(drifters.count() == 100) // fixture holds vec_id 0..499
     val ex = intercept[IllegalStateException] {
@@ -109,11 +109,11 @@ class IvfIndexSpec extends AnyFunSuite {
         maxDriftRatio = 1e-9, minRowsForDrift = 1)
     }
     assert(ex.getMessage.contains("drift"), ex.getMessage)
-    assert(spark.read.parquet(s"$dir/data").count() == before, "store touched")
+    assert(IvfIndex.load(spark, dir).assigned.count() == before, "store touched")
     // with the default (sane) ratio the same rows append fine
     val stats = IvfIndex.append(spark, dir, drifters, maxDriftRatio = 1e9)
     assert(stats.values.map(_.rows).sum == 100)
-    assert(spark.read.parquet(s"$dir/data").count() == before + 100)
+    assert(IvfIndex.load(spark, dir).assigned.count() == before + 100)
   }
 
   test("IVF assignment is complete and deterministic under a seed") {

@@ -188,7 +188,7 @@ class IvfPqSpec extends AnyFunSuite {
       assert(top.head._1 == 7L, top.toSeq.toString)
     }
     // legacy store: strip the flag column from the centroids sidecar —
-    // the load must fall back to vector-coded scoring
+    // the load must adopt it and fall back to vector-coded scoring
     val centDir = java.nio.file.Paths.get(dirV, "centroids")
     val legacy = spark.read.parquet(centDir.toString).drop("residual")
     val tmp = dirV + "/centroids_legacy"
@@ -197,6 +197,8 @@ class IvfPqSpec extends AnyFunSuite {
     java.nio.file.Files.walk(centDir).iterator().asScala.toSeq.reverse
       .foreach(java.nio.file.Files.delete)
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp), centDir)
+    // an index that predates the flag also predates the commit log
+    graft.GraftQuery.deleteRecursively(new java.io.File(dirV, CommitLog.LogDirName))
     val loaded = IvfPqIndex.load(spark, dirV)
     assert(!loaded.residual)
     val top = loaded.topK(data, probe, 3, nprobe = 4, poolK = 150)
@@ -281,5 +283,41 @@ class IvfPqSpec extends AnyFunSuite {
         maxDriftRatio = 1.05, minRowsForDrift = 5L)
     }
     assert(IvfPqIndex.load(spark, dir).codes.count() == cnt)
+  }
+
+  test("an existing index path is refused before any fit job runs; a " +
+    "save publishes data, centroids and codebooks in ONE commit") {
+    val data = corpus(200)
+    val taken = tmpDir("graft_pq_taken") + "/idx"
+    new java.io.File(taken).mkdirs()
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-refusal-probe", "refused build")
+    val e = try intercept[IllegalArgumentException] {
+      IvfPqIndex.buildAndSave(data, taken, "vec_id", "embedding",
+        nlist = 4, m = 8, ksub = 16)
+    } finally sc.clearJobGroup()
+    assert(e.getMessage.contains(taken), e.getMessage)
+    // status events arrive in order: once a later marker job is visible,
+    // any job the refused build started would be visible too
+    sc.setJobGroup("graft-refusal-marker", "marker")
+    try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (sc.statusTracker.getJobIdsForGroup("graft-refusal-marker").isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
+    val ran = sc.statusTracker.getJobIdsForGroup("graft-refusal-probe")
+    assert(ran.isEmpty, s"${ran.length} Spark jobs ran before the refusal")
+    val ivf = IvfIndex.build(data, "vec_id", "embedding", nlist = 4)
+    try intercept[IllegalArgumentException](ivf.save(taken))
+    finally ivf.assigned.unpersist()
+
+    val dir = tmpDir("graft_pq_one") + "/idx"
+    IvfPqIndex.buildAndSave(data, dir, "vec_id", "embedding",
+      nlist = 4, m = 8, ksub = 16).codes.unpersist()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = Swap.fsOf(spark, root)
+    assert(CommitLog.currentVersion(fs, root) == 1L)
+    val tables = CommitLog.readManifest(fs, root, 1L).added
+      .map(_.takeWhile(_ != '/')).toSet
+    assert(tables == Set("data", "centroids", "codebooks"), tables)
   }
 }

@@ -22,7 +22,7 @@ class LogMetaSpec extends AnyFunSuite {
     "store untouched; conforming commits pass") {
     val store = tmp("graft_meta_chk") + "/s"
     Merge.into(spark, store, Seq((1L, 10.0), (2L, 20.0)).toDF("k", "price"),
-      Seq("k"), log = Some(true))
+      Seq("k"))
     CommitLog.setConstraint(spark, new Path(store), "positive_price", "price > 0")
     val vBefore = CommitLog.currentVersion(fs, new Path(store))
 
@@ -40,7 +40,7 @@ class LogMetaSpec extends AnyFunSuite {
   test("declaring a constraint the EXISTING data violates is refused") {
     val store = tmp("graft_meta_exist") + "/s"
     Merge.into(spark, store, Seq((1L, -1.0)).toDF("k", "price"),
-      Seq("k"), log = Some(true))
+      Seq("k"))
     intercept[CommitLog.ConstraintException] {
       CommitLog.setConstraint(spark, new Path(store), "positive_price", "price > 0")
     }
@@ -53,7 +53,7 @@ class LogMetaSpec extends AnyFunSuite {
     "dropConstraint lifts enforcement") {
     val store = tmp("graft_meta_null") + "/s"
     Merge.into(spark, store, Seq((1L, Some(1.0))).toDF("k", "price"),
-      Seq("k"), log = Some(true))
+      Seq("k"))
     CommitLog.setConstraint(spark, new Path(store), "positive_price", "price > 0")
     // NULL price: predicate is NULL → passes
     Merge.into(spark, store,
@@ -68,7 +68,7 @@ class LogMetaSpec extends AnyFunSuite {
     "declaring manifest can be gone; the checkpoint carries the set)") {
     val store = tmp("graft_meta_ckpt") + "/s"
     Merge.into(spark, store, Seq((0L, 1.0)).toDF("k", "price"),
-      Seq("k"), log = Some(true))
+      Seq("k"))
     CommitLog.setConstraint(spark, new Path(store), "positive_price", "price > 0")
     // push well past a checkpoint boundary (CheckpointEvery = 10)
     (1L to 12L).foreach { i =>
@@ -90,8 +90,7 @@ class LogMetaSpec extends AnyFunSuite {
     def real: Long = CommitLog.read(spark, p).get.count()
 
     Merge.into(spark, store,
-      (1L to 100L).map(k => (k, k * 2)).toDF("k", "x"), Seq("k"),
-      log = Some(true))
+      (1L to 100L).map(k => (k, k * 2)).toDF("k", "x"), Seq("k"))
     assert(fast.contains(100L) && real == 100L)
 
     Delete.where(spark, store, $"k" % 10 === 0)

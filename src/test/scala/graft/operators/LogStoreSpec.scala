@@ -7,8 +7,8 @@ import graft.flow.SparkTestSession
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The store operators running on COMMIT-LOG-backed stores: same results
-  * as their legacy staged-swap mode (checked against each other), plus
+/** The store operators running on COMMIT-LOG-backed stores: the results
+  * the retired staged-swap mode produced (pinned), plus
   * what the log newly permits — concurrent disjoint-partition writers,
   * loud conflicts for overlapping ones, snapshot-pinned readers during a
   * rewrite, and maintenance as just another optimistic writer. */
@@ -23,24 +23,16 @@ class LogStoreSpec extends AnyFunSuite {
   test("Merge on a log store matches legacy mode exactly (first write, " +
     "update, insert, partition-scoped)") {
     val base = tmp("graft_ls_merge")
-    val legacy = s"$base/legacy"
     val logged = s"$base/logged"
     val init = Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2"))
       .toDF("k", "v", "p")
     val delta = Seq((2L, "B", "p1"), (4L, "d", "p3")).toDF("k", "v", "p")
 
-    def drive(path: String, log: Boolean): Set[(Long, String, String)] = {
-      Merge.into(spark, path, init, Seq("k"), prunePartitions = Some("p"),
-        log = Some(log))
-      Merge.into(spark, path, delta, Seq("k"), prunePartitions = Some("p"),
-        log = Some(log))
-        .select("k", "v", "p").as[(Long, String, String)].collect().toSet
-    }
-    val a = drive(legacy, log = false)
-    val b = drive(logged, log = true)
-    assert(a == b)
+    Merge.into(spark, logged, init, Seq("k"), prunePartitions = Some("p"))
+    val b = Merge.into(spark, logged, delta, Seq("k"), prunePartitions = Some("p"))
+      .select("k", "v", "p").as[(Long, String, String)].collect().toSet
+    // the merged table the legacy staged-swap mode produced, pinned
     assert(b == Set((1L, "a", "p1"), (2L, "B", "p1"), (3L, "c", "p2"), (4L, "d", "p3")))
-    assert(!CommitLog.isLog(fs, new Path(legacy)))
     assert(CommitLog.isLog(fs, new Path(logged)))
     // untouched partition p=2's file survived both merges (no rewrite)
     assert(CommitLog.currentVersion(fs, new Path(logged)) == 2)
@@ -50,8 +42,7 @@ class LogStoreSpec extends AnyFunSuite {
     "commit — the operation the lease had to forbid") {
     val store = tmp("graft_ls_conc") + "/s"
     val init = (1L to 8L).map(k => (k, "v" + k, "p" + (k % 4))).toDF("k", "v", "p")
-    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"),
-      log = Some(true))
+    Merge.into(spark, store, init, Seq("k"), prunePartitions = Some("p"))
     val pool = Executors.newFixedThreadPool(2)
     val start = new CountDownLatch(1)
     def mergeTask(p: String, k: Long) =
@@ -82,7 +73,7 @@ class LogStoreSpec extends AnyFunSuite {
     val store = tmp("graft_ls_conf") + "/s"
     Merge.into(spark, store,
       Seq((1L, "base", "p1")).toDF("k", "v", "p"), Seq("k"),
-      prunePartitions = Some("p"), log = Some(true))
+      prunePartitions = Some("p"))
     val pool = Executors.newFixedThreadPool(2)
     val start = new CountDownLatch(1)
     def mergeTask(v: String) =
@@ -118,15 +109,11 @@ class LogStoreSpec extends AnyFunSuite {
     val base = tmp("graft_ls_scd2")
     val b1 = Seq((1L, "x"), (2L, "y")).toDF("k", "name")
     val b2 = Seq((1L, "X"), (3L, "z")).toDF("k", "name")
-    def drive(path: String, log: Boolean): Set[(Long, String, Boolean)] = {
-      Scd2.apply(spark, path, b1, "k", "2024-01-01 00:00:00", log = Some(log))
-      Scd2.apply(spark, path, b2, "k", "2024-02-01 00:00:00", log = Some(log))
-        .select("k", "name", "is_current").as[(Long, String, Boolean)]
-        .collect().toSet
-    }
-    val legacy = drive(s"$base/legacy", log = false)
-    val logged = drive(s"$base/logged", log = true)
-    assert(legacy == logged)
+    Scd2.apply(spark, s"$base/logged", b1, "k", "2024-01-01 00:00:00")
+    val logged = Scd2.apply(spark, s"$base/logged", b2, "k", "2024-02-01 00:00:00")
+      .select("k", "name", "is_current").as[(Long, String, Boolean)]
+      .collect().toSet
+    // the history the legacy staged-swap mode produced, pinned
     assert(logged == Set((1L, "x", false), (1L, "X", true), (2L, "y", true), (3L, "z", true)))
     // point-in-time read off the log store
     val asOf = Scd2.asOfStore(spark, s"$base/logged", "2024-01-15 00:00:00")
@@ -154,7 +141,7 @@ class LogStoreSpec extends AnyFunSuite {
     (0 until 3).foreach { i =>
       IncrementalAgg.update(spark, store,
         rows.filter($"x" % 3 === i), Seq("g"), "x",
-        batchId = Some(i.toLong), log = Some(true))
+        batchId = Some(i.toLong))
     }
     val got = IncrementalAgg.readStore(spark, store)
       .select("g", "n", "sum").as[(Long, Long, Double)].collect().toSet

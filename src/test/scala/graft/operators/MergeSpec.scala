@@ -14,6 +14,18 @@ class MergeSpec extends AnyFunSuite {
   private def freshStore(): String =
     Files.createTempDirectory("graft_merge").toString + "/t"
 
+  // replaced files stay on disk until vacuum: check the committed
+  // snapshot, not the directory listing
+  private def read(path: String) =
+    CommitLog.read(spark, new org.apache.hadoop.fs.Path(path)).get
+  private def liveFiles(path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = Swap.fsOf(spark, p)
+    CommitLog.snapshotFiles(fs, p, CommitLog.currentVersion(fs, p))
+  }
+  private def liveDirs(path: String): Set[String] =
+    liveFiles(path).filter(_.contains('/')).map(_.takeWhile(_ != '/')).toSet
+
   test("merge into a missing store degenerates to insert-all") {
     val path = freshStore()
     val src = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
@@ -28,7 +40,7 @@ class MergeSpec extends AnyFunSuite {
     val out = Merge.into(spark, path, src, Seq("k")).as[(Long, String)].collect().toSet
     assert(out == Set((1L, "a"), (2L, "B2"), (3L, "c"), (9L, "i")))
     // the store itself holds the merged state (not just the returned frame)
-    assert(spark.read.parquet(path).count() == 4)
+    assert(read(path).count() == 4)
   }
 
   test("merging the same source twice is idempotent") {
@@ -113,7 +125,7 @@ class MergeSpec extends AnyFunSuite {
     val out = Merge.into(spark, path, src, Seq("k"), prunePartitions = Some("part"))
       .select("k", "part", "v").as[(Long, String, String)].collect().toSet
     assert(out == Set((1L, "p1", "a"), (2L, "p1", "B2"), (3L, "p2", "c")))
-    assert(spark.read.parquet(path).filter($"k" === 2L).count() == 1,
+    assert(read(path).filter($"k" === 2L).count() == 1,
       "moved key duplicated across partitions")
   }
 
@@ -127,7 +139,7 @@ class MergeSpec extends AnyFunSuite {
     val out = Merge.into(spark, path, src, Seq("k"), prunePartitions = Some("part"))
       .select("k", "part", "v").as[(Long, String, String)].collect().toSet
     assert(out == Set((1L, "p1", "a"), (2L, "p1", "B2")))
-    assert(!new java.io.File(path, "part=p2").exists(),
+    assert(!liveDirs(path).contains("part=p2"),
       "emptied partition directory survived the merge")
   }
 
@@ -147,9 +159,9 @@ class MergeSpec extends AnyFunSuite {
     val out = Merge.into(spark, path, src, Seq("k"), prunePartitions = Some("day"))
       .select("k", "v").as[(Long, String)].collect().toSet
     assert(out == Set((1L, "a"), (2L, "B2")))
-    assert(spark.read.parquet(path).filter($"k" === 2L).count() == 1,
+    assert(read(path).filter($"k" === 2L).count() == 1,
       "moved key duplicated across date partitions")
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    val dirs = liveDirs(path)
     assert(dirs == Set("day=2024-01-01"), s"stale date partition survived: $dirs")
   }
 
@@ -164,8 +176,8 @@ class MergeSpec extends AnyFunSuite {
     val out = Merge.into(spark, path, src, Seq("k"), prunePartitions = Some("ts"))
       .select("k", "v").as[(Long, String)].collect().toSet
     assert(out == Set((1L, "a"), (2L, "B2")))
-    assert(spark.read.parquet(path).filter($"k" === 2L).count() == 1)
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(read(path).filter($"k" === 2L).count() == 1)
+    val dirs = liveDirs(path)
     assert(dirs.size == 1 && dirs.head.startsWith("ts=2024-01-01"),
       s"stale timestamp partition survived: $dirs")
   }
@@ -199,7 +211,7 @@ class MergeSpec extends AnyFunSuite {
     assert(out == Set((1L, "p1", "a"), (2L, "p2", "b")))
     assert(!new java.io.File(leftover, "part=p1").exists(),
       "staged dir was nested inside the leftover partition dir")
-    assert(!new java.io.File(leftover, emptyFile.getName).exists(),
+    assert(!liveFiles(path).contains(s"part=p1/${emptyFile.getName}"),
       "zero-row leftover file survived the swap")
   }
 

@@ -25,7 +25,7 @@ class OptimizeSpec extends AnyFunSuite {
   test("zorder preserves the row set exactly and the old version stays " +
     "readable (snapshot isolation)") {
     val store = tmp("graft_opt_rows") + "/s"
-    Merge.into(spark, store, grid, Seq("id"), log = Some(true))
+    Merge.into(spark, store, grid, Seq("id"))
     val v = Optimize.zorder(spark, store, Seq("x", "y"), numFiles = 8)
     assert(v == 2)
     val after = CommitLog.read(spark, new Path(store)).get
@@ -39,7 +39,7 @@ class OptimizeSpec extends AnyFunSuite {
   test("a range filter on the stats column prunes files via manifest " +
     "stats — the measured z-order payoff") {
     val store = tmp("graft_opt_prune") + "/s"
-    Merge.into(spark, store, grid, Seq("id"), log = Some(true))
+    Merge.into(spark, store, grid, Seq("id"))
     // 16 files → ~4 z-prefix bits; an x-range fixing x's top 2 bits
     // (x ≤ 31 of 0..255) pins 2 of those 4 prefix bits → ~1/4 of files
     // (plus range-boundary stragglers). The point is files hit scale
@@ -61,8 +61,7 @@ class OptimizeSpec extends AnyFunSuite {
     val store = tmp("graft_opt_part") + "/s"
     val df = (0L until 512L).map(i => (i, (i * 193) % 256, "p" + (i % 2)))
       .toDF("id", "x", "p")
-    Merge.into(spark, store, df, Seq("id"), prunePartitions = Some("p"),
-      log = Some(true))
+    Merge.into(spark, store, df, Seq("id"), prunePartitions = Some("p"))
     Optimize.zorder(spark, store, Seq("x", "id"), numFiles = 8)
     val p = new Path(store)
     val files = CommitLog.snapshotFiles(fs, p, CommitLog.currentVersion(fs, p))

@@ -25,8 +25,7 @@ class RestoreSpec extends AnyFunSuite {
     "intermediate version stays readable") {
     val store = tmp("graft_rst") + "/s"
     Merge.into(spark, store,
-      (1L to 20L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))                                   // v1
+      (1L to 20L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k")) // v1
     Merge.into(spark, store,
       Seq((1L, "BROKEN"), (99L, "junk")).toDF("k", "v"), Seq("k")) // v2
     Delete.where(spark, store, $"k" % 5 === 0)            // v3
@@ -44,7 +43,7 @@ class RestoreSpec extends AnyFunSuite {
   test("restore to the tip is a no-op; out-of-range versions refuse") {
     val store = tmp("graft_rst_noop") + "/s"
     Merge.into(spark, store,
-      Seq((1L, "a")).toDF("k", "v"), Seq("k"), log = Some(true))
+      Seq((1L, "a")).toDF("k", "v"), Seq("k"))
     val v = CommitLog.currentVersion(fs, new Path(store))
     assert(CommitLog.restore(spark, new Path(store), v) == v)
     assert(CommitLog.currentVersion(fs, new Path(store)) == v)
@@ -56,8 +55,7 @@ class RestoreSpec extends AnyFunSuite {
   test("history lists every commit with its operation and file deltas") {
     val store = tmp("graft_hist") + "/s"
     Merge.into(spark, store,
-      (1L to 20L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))
+      (1L to 20L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"))
     Delete.where(spark, store, $"k" % 5 === 0)
     CommitLog.restore(spark, new Path(store), 1L)
     val h = CommitLog.history(spark, new Path(store))
@@ -76,8 +74,7 @@ class RestoreSpec extends AnyFunSuite {
   test("a version whose files were vacuumed cannot be restored") {
     val store = tmp("graft_rst_vac") + "/s"
     Merge.into(spark, store,
-      (1L to 10L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k"),
-      log = Some(true))                                   // v1
+      (1L to 10L).map(k => (k, "v" + k)).toDF("k", "v"), Seq("k")) // v1
     Merge.into(spark, store,
       (1L to 10L).map(k => (k, "x" + k)).toDF("k", "v"), Seq("k")) // v2 rewrite
     CommitLog.vacuum(spark, new Path(store), retainVersions = 1,

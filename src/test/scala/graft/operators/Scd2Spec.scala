@@ -14,6 +14,14 @@ class Scd2Spec extends AnyFunSuite {
   private def freshStore(): String =
     Files.createTempDirectory("graft_scd2").toString + "/dim"
 
+  // replaced files stay on disk until vacuum: check the committed
+  // snapshot, not the directory listing
+  private def liveFiles(path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = Swap.fsOf(spark, p)
+    CommitLog.snapshotFiles(fs, p, CommitLog.currentVersion(fs, p))
+  }
+
   test("first batch creates open versions; changes close and re-open; " +
     "unchanged and absent keys are untouched") {
     val path = freshStore()
@@ -116,8 +124,7 @@ class Scd2Spec extends AnyFunSuite {
       Seq((2L, "x")).toDF("id", "v"), "id", "2024-03-01 00:00:00")
     assert(out.count() == 3)
     assert(out.filter($"is_current").count() == 2)
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
+    val dirs = liveFiles(path).map(_.takeWhile(_ != '/')).toSet
     // the legacy closed version (valid_to 2024-02-01) lands in c2024-02
     assert(dirs == Set(s"${Scd2.SliceCol}=open", s"${Scd2.SliceCol}=c2024-02"),
       s"unexpected slice layout: $dirs")
@@ -130,7 +137,7 @@ class Scd2Spec extends AnyFunSuite {
     Scd2.apply(spark, path, Seq((1L, "v1")).toDF("id", "v"), "id", "2024-01-01 00:00:00")
     Scd2.apply(spark, path, Seq((1L, "v2")).toDF("id", "v"), "id", "2024-02-01 00:00:00")
     Scd2.apply(spark, path, Seq((1L, "v3")).toDF("id", "v"), "id", "2024-03-01 00:00:00")
-    val store = spark.read.parquet(path)
+    val store = CommitLog.read(spark, new org.apache.hadoop.fs.Path(path)).get
     assert(Scd2.asOf(store, "2024-01-15 00:00:00").select("v").as[String].head() == "v1")
     assert(Scd2.asOf(store, "2024-02-15 00:00:00").select("v").as[String].head() == "v2")
     // exactly at a boundary the NEW version wins (valid_to exclusive)
@@ -164,14 +171,24 @@ class Scd2Spec extends AnyFunSuite {
 
   test("a crash inside maintain()'s slice compaction (between the swap's " +
     "two renames) recovers on the next read instead of bricking the store") {
-    val path = freshStore()
-    Scd2.apply(spark, path, Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+    // a legacy (pre-log) sliced store: the snapshot files of a log store
+    // copied out without the log
+    val built = freshStore()
+    Scd2.apply(spark, built, Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
       "id", "2024-01-01 00:00:00")
-    Scd2.apply(spark, path, Seq((1L, "a2")).toDF("id", "v"),
+    Scd2.apply(spark, built, Seq((1L, "a2")).toDF("id", "v"),
       "id", "2024-02-01 00:00:00")
-    val before = Scd2.read(spark, path).orderBy("id", "valid_from").collect().toSeq
+    val before = Scd2.read(spark, built).orderBy("id", "valid_from").collect().toSeq
+    val path = freshStore()
+    val builtRoot = new org.apache.hadoop.fs.Path(built)
+    liveFiles(built).foreach { f =>
+      org.apache.hadoop.fs.FileUtil.copy(Swap.fsOf(spark, builtRoot),
+        new org.apache.hadoop.fs.Path(builtRoot, f), Swap.fsOf(spark, builtRoot),
+        new org.apache.hadoop.fs.Path(path, f), false,
+        spark.sparkContext.hadoopConfiguration)
+    }
 
-    // simulate compactDir crashing between rename(open → retired) and
+    // simulate the legacy slice compaction crashing between rename(open → retired) and
     // rename(staging → open): the open slice dir is MISSING, its old
     // copy retired and its rewrite fully staged under Hidden naming
     val root = new org.apache.hadoop.fs.Path(path)
@@ -185,7 +202,8 @@ class Scd2Spec extends AnyFunSuite {
     org.apache.hadoop.fs.FileUtil.copy(fs, retired, fs, staging, false, false,
       spark.sparkContext.hadoopConfiguration)
 
-    // without slice-dir recovery this threw "no graft_slice=open dir"
+    // adopting the store rolls the slice swap forward first; without
+    // slice-dir recovery this threw "no graft_slice=open dir"
     val after = Scd2.read(spark, path).orderBy("id", "valid_from").collect().toSeq
     assert(after == before, "recovered store content changed")
     assert(fs.exists(open) && !fs.exists(staging) && !fs.exists(retired))
@@ -210,11 +228,8 @@ class Scd2Spec extends AnyFunSuite {
     } finally spark.conf.set(coalesceKey, prev)
     val before = Scd2.read(spark, path).orderBy("id", "valid_from")
       .collect().toSeq
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def openFiles() = fs.listStatus(
-      new org.apache.hadoop.fs.Path(path, Scd2.SliceCol + "=" + Scd2.OpenSlice))
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    def openFiles() = liveFiles(path)
+      .count(_.startsWith(Scd2.SliceCol + "=" + Scd2.OpenSlice + "/"))
     val filesBefore = openFiles()
     val stats = Scd2.maintain(spark, path, maxFilesPerDir = 2)
     assert(stats.nonEmpty, "expected the open slice to compact")

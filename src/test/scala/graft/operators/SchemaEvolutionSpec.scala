@@ -25,12 +25,11 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val store = tmp("graft_sev") + "/s"
     Merge.into(spark, store,
       Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("k", "v", "p"),
-      Seq("k"), prunePartitions = Some("p"), log = Some(true))
+      Seq("k"), prunePartitions = Some("p"))
     // evolve: new column w, touching only p1
     Merge.into(spark, store,
       Seq((1L, "A", "p1", 7L)).toDF("k", "v", "p", "w"),
-      Seq("k"), prunePartitions = Some("p"), evolveSchema = true,
-      log = Some(true))
+      Seq("k"), prunePartitions = Some("p"), evolveSchema = true)
 
     // plain read (no mergeSchema flag anywhere): w is there, p2 rows null
     val out = CommitLog.read(spark, new Path(store)).get
@@ -52,18 +51,16 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val store = tmp("graft_sevc") + "/s"
     Merge.into(spark, store,
       Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("k", "v", "p"),
-      Seq("k"), prunePartitions = Some("p"), log = Some(true))
+      Seq("k"), prunePartitions = Some("p"))
     Merge.into(spark, store,
       Seq((1L, "A", "p1", 7L)).toDF("k", "v", "p", "w"),
-      Seq("k"), prunePartitions = Some("p"), evolveSchema = true,
-      log = Some(true))
+      Seq("k"), prunePartitions = Some("p"), evolveSchema = true)
     // Sequential writer: the merge plan itself sees the recorded LONG
     // type and the bad cast fails loudly before anything commits.
     intercept[Exception] {
       Merge.into(spark, store,
         Seq((2L, "B", "p2", "seven")).toDF("k", "v", "p", "w"),
-        Seq("k"), prunePartitions = Some("p"), evolveSchema = true,
-        log = Some(true))
+        Seq("k"), prunePartitions = Some("p"), evolveSchema = true)
     }
     // RACING writer: computed its staged files before the long-typed
     // evolution landed, so its own plan never saw the conflict —
@@ -92,7 +89,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val sp = new Path(store)
     Merge.into(spark, store,
       Seq((1L, "a", "p1", 7L)).toDF("k", "v", "p", "w"),
-      Seq("k"), prunePartitions = Some("p"), log = Some(true))
+      Seq("k"), prunePartitions = Some("p"))
     assert(CommitLog.schemaAt(fs, sp, 1L).exists(_.fieldNames.contains("w")))
     // push past a checkpoint with schema-less commits (empty staging),
     // then vacuum the early manifests away

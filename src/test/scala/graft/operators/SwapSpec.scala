@@ -6,12 +6,14 @@ import graft.flow.SparkTestSession
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared staged-swap protocol's crash matrix, exercised both
-  * directly and through the operators that ride it. The headline case is
-  * the one ADVICE flagged as silent corruption: a crash between retiring
-  * an SCD2 store's open slice and moving the staged replacement in used
-  * to leave the store with NO current versions — the next apply would
-  * quietly reopen every key as new. */
+/** Recovery of the retired staged-swap protocol's crash states, exercised
+  * both directly and through the operators that adopt a legacy store
+  * ([[CommitLog.adopt]] runs the roll-forward once before publishing the
+  * store's files as log version 1). The headline case is the one ADVICE
+  * flagged as silent corruption: a crash between retiring an SCD2
+  * store's open slice and moving the staged replacement in used to leave
+  * the store with NO current versions — the next apply would quietly
+  * reopen every key as new. */
 class SwapSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
@@ -24,6 +26,16 @@ class SwapSpec extends AnyFunSuite {
   private def copyDir(src: String, dst: String): Unit =
     org.apache.hadoop.fs.FileUtil.copy(
       fs, new Path(src), fs, new Path(dst), false, spark.sparkContext.hadoopConfiguration)
+
+  /** The files of a log store's current snapshot, copied to `dst` without
+    * the log — the on-disk shape a legacy swap writer left behind. */
+  private def legacyCopy(src: String, dst: String): Unit = {
+    val p = new Path(src)
+    CommitLog.snapshotFiles(fs, p, CommitLog.currentVersion(fs, p)).foreach { f =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(p, f), fs, new Path(dst, f),
+        false, spark.sparkContext.hadoopConfiguration)
+    }
+  }
 
   private def writeMarker(staging: String, retireNames: Seq[String]): Unit = {
     val out = fs.create(new Path(staging, Swap.DirsMarker), true)
@@ -101,22 +113,20 @@ class SwapSpec extends AnyFunSuite {
     val store = s"$base/dim"
     val b1 = Seq((1L, "NY"), (2L, "SF")).toDF("id", "city")
     val b2 = Seq((1L, "BOS")).toDF("id", "city")
-    Scd2.apply(spark, store, b1, "id", "2024-01-01 00:00:00")
-
-    // expected final state: batch 2 applied on a copy of the store
-    val expectStore = s"$base/expect"
-    copyDir(store, expectStore)
-    val expected = Scd2.apply(spark, expectStore, b2, "id", "2024-02-01 00:00:00")
+    // the legacy store after batch 1, and the state batch 2 leads to
+    val built = s"$base/built"
+    Scd2.apply(spark, built, b1, "id", "2024-01-01 00:00:00")
+    legacyCopy(built, store)
+    val expected = Scd2.apply(spark, built, b2, "id", "2024-02-01 00:00:00")
       .orderBy("id", "valid_from")
       .select("id", "city", "is_current").as[(Long, String, Boolean)].collect().toSeq
+    val donor = s"$base/donor"
+    legacyCopy(built, donor)
 
     // craft the mid-swap crash state on the real store: the staged slices
     // (taken from another full apply) plus the committed intent marker,
     // with the open slice ALREADY RETIRED — the store has no current
     // versions at this instant
-    val donor = s"$base/donor"
-    copyDir(store, donor)
-    Scd2.apply(spark, donor, b2, "id", "2024-02-01 00:00:00")
     val staging = s"$store.staging-crash1"
     fs.mkdirs(new Path(staging))
     val open = s"${Scd2.SliceCol}=open"
@@ -129,7 +139,8 @@ class SwapSpec extends AnyFunSuite {
     assert(fs.rename(new Path(store, open), new Path(retired, open)))
     assert(!fs.exists(new Path(store, open)), "crash state must lack an open slice")
 
-    // read() recovers: the rolled-forward store equals the clean apply
+    // read() adopts the store, rolling the swap forward first: it equals
+    // the clean apply
     val got = Scd2.read(spark, store).orderBy("id", "valid_from")
       .select("id", "city", "is_current").as[(Long, String, Boolean)].collect().toSeq
     assert(got == expected)
@@ -144,8 +155,10 @@ class SwapSpec extends AnyFunSuite {
     "recoverable leftovers fails loudly instead of reopening keys") {
     val base = tmp("graft_swap_scd2bad")
     val store = s"$base/dim"
-    Scd2.apply(spark, store, Seq((1L, "a")).toDF("id", "v"), "id", "2024-01-01 00:00:00")
-    Scd2.apply(spark, store, Seq((1L, "b")).toDF("id", "v"), "id", "2024-02-01 00:00:00")
+    val built = s"$base/built"
+    Scd2.apply(spark, built, Seq((1L, "a")).toDF("id", "v"), "id", "2024-01-01 00:00:00")
+    Scd2.apply(spark, built, Seq((1L, "b")).toDF("id", "v"), "id", "2024-02-01 00:00:00")
+    legacyCopy(built, store)
     fs.delete(new Path(store, s"${Scd2.SliceCol}=open"), true)
     val e = intercept[IllegalStateException] {
       Scd2.read(spark, store)
@@ -189,60 +202,5 @@ class SwapSpec extends AnyFunSuite {
     val rows = out.select("k", "v").as[(Long, String)].collect().toMap
     assert(rows == Map(1L -> "a2", 2L -> "b2"))
     assert(!fs.exists(new Path(staging)) && !fs.exists(new Path(retired)))
-  }
-
-  test("write lease: a second writer fails loudly while the first holds " +
-    "it; release lets the next one in") {
-    val store = new Path(tmp("graft_lease") + "/s")
-    val l1 = Swap.acquireLease(fs, store)
-    val e = intercept[IllegalStateException](Swap.acquireLease(fs, store))
-    assert(e.getMessage.contains("write-locked"), e.getMessage)
-    Swap.releaseLease(fs, l1)
-    val l2 = Swap.acquireLease(fs, store)
-    Swap.releaseLease(fs, l2)
-  }
-
-  test("write lease: an expired lease is taken over; the late original " +
-    "holder then fails checkHeld and cannot commit over the successor") {
-    val base = tmp("graft_lease_stale")
-    val store = new Path(s"$base/s")
-    Seq((1L, "v1")).toDF("k", "v").write.parquet(store.toString)
-    val dead = Swap.acquireLease(fs, store, ttlMs = -1000) // born expired
-    val successor = Swap.acquireLease(fs, store) // stale takeover
-    // the outlived holder must fail loudly at commit, not interleave
-    intercept[IllegalArgumentException](Swap.checkHeld(fs, dead))
-    val staging = s"$store.staging-zz"
-    Seq((9L, "stale")).toDF("k", "v").write.parquet(staging)
-    intercept[IllegalArgumentException](Swap.commitWholeDir(
-      fs, store, new Path(staging), new Path(s"$store.old-zz"), Some(dead)))
-    // store untouched by the refused commit
-    assert(spark.read.parquet(store.toString).count() == 1)
-    // releasing the dead lease must NOT delete the successor's lock
-    Swap.releaseLease(fs, dead)
-    assert(fs.exists(successor.lockPath))
-    Swap.releaseLease(fs, successor)
-    assert(!fs.exists(successor.lockPath))
-  }
-
-  test("writer-level contention: Scd2.apply and Merge.into fail at " +
-    "acquire while a foreign lease is held, and work after release") {
-    val base = tmp("graft_lease_ops")
-    val scd = s"$base/dim"
-    val mrg = s"$base/t"
-    val dup = s"$base/du"
-    Seq((1L, "a")).toDF("k", "v").write.parquet(mrg)
-    val held = Seq(new Path(scd), new Path(mrg), new Path(dup))
-      .map(Swap.acquireLease(fs, _))
-    val batch = Seq((1L, "a")).toDF("s_k", "s_v")
-    intercept[IllegalStateException](
-      Scd2.apply(spark, scd, batch, "s_k", "2024-01-01 00:00:00"))
-    intercept[IllegalStateException](
-      Merge.into(spark, mrg, Seq((1L, "a2")).toDF("k", "v"), Seq("k")))
-    intercept[IllegalStateException](
-      DimUpsert.upsert(spark, dup, Seq((1L, "x")).toDF("k", "v"), "k"))
-    held.foreach(Swap.releaseLease(fs, _))
-    assert(Scd2.apply(spark, scd, batch, "s_k", "2024-01-01 00:00:00").count() == 1)
-    assert(Merge.into(spark, mrg, Seq((1L, "a2")).toDF("k", "v"), Seq("k"))
-      .select("v").as[String].head() == "a2")
   }
 }

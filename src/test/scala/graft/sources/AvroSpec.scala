@@ -258,6 +258,69 @@ class AvroSpec extends AnyFunSuite {
       e2.getMessage.contains("does not accept null"), e2.getMessage)
   }
 
+  test("externally written timestamp-millis array elements and map " +
+    "values decode by their own logical type, not 1000x off") {
+    val schema = new org.apache.avro.Schema.Parser().parse(
+      """{"type": "record", "name": "ext", "fields": [
+        |  {"name": "id", "type": "long"},
+        |  {"name": "ts", "type": {"type": "array",
+        |    "items": {"type": "long", "logicalType": "timestamp-millis"}}},
+        |  {"name": "tm", "type": {"type": "map",
+        |    "values": {"type": "long", "logicalType": "timestamp-millis"}}}
+        |]}""".stripMargin)
+    val dir = tmp("graft_avro_millis") + "/t"
+    new java.io.File(dir).mkdirs()
+    val w = new org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord](
+      new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](
+        schema))
+    w.create(schema, new java.io.File(dir, "part-0.avro"))
+    try {
+      val rec = new org.apache.avro.generic.GenericData.Record(schema)
+      val ms = 1700000000123L // 2023-11-14T22:13:20.123Z
+      rec.put("id", 1L)
+      rec.put("ts", java.util.Arrays.asList(java.lang.Long.valueOf(ms)))
+      rec.put("tm", java.util.Collections.singletonMap("a", java.lang.Long.valueOf(ms)))
+      w.append(rec)
+    } finally w.close()
+    val back = Avro.read(spark, dir)
+    assert(back.schema("ts").dataType == ArrayType(TimestampType, containsNull = false))
+    val got = back.select(
+      unix_millis(element_at(col("ts"), 1)),
+      unix_millis(element_at(col("tm"), "a"))).as[(Long, Long)].head()
+    assert(got == ((1700000000123L, 1700000000123L)), got.toString)
+  }
+
+  test("a null array element or map value whose avro schema has no null " +
+    "branch refuses loudly, naming the field") {
+    val schema = new org.apache.avro.Schema.Parser().parse(
+      """{"type": "record", "name": "strict", "fields": [
+        |  {"name": "id", "type": "long"},
+        |  {"name": "tags", "type": {"type": "array", "items": "string"}},
+        |  {"name": "m", "type": {"type": "map", "values": "long"}},
+        |  {"name": "loose", "type": {"type": "array", "items": ["null", "string"]}}
+        |]}""".stripMargin)
+    val st = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("tags", ArrayType(StringType, containsNull = true), nullable = false),
+      StructField("m", MapType(StringType, LongType, valueContainsNull = true),
+        nullable = false),
+      StructField("loose", ArrayType(StringType, containsNull = true), nullable = false)))
+    val enc = Avro.recordWriter(schema, st)
+    val e = intercept[IllegalArgumentException] {
+      enc(Row(1L, Seq("a", null), Map("k" -> 1L), Seq("x")))
+    }
+    assert(e.getMessage.contains("element of field tags") &&
+      e.getMessage.contains("does not accept null"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      enc(Row(1L, Seq("a"), Map("k" -> null), Seq("x")))
+    }
+    assert(e2.getMessage.contains("value of field m") &&
+      e2.getMessage.contains("does not accept null"), e2.getMessage)
+    // an element schema WITH a null branch still takes the null
+    val rec = enc(Row(1L, Seq("a"), Map("k" -> 1L), Seq(null, "y")))
+    assert(rec.get("loose").asInstanceOf[java.util.List[_]].get(0) == null)
+  }
+
   test("deeply nested shapes round-trip on the compiled converters: " +
     "array of structs, map of arrays, struct of struct") {
     val dir = tmp("graft_avro_deep") + "/t"

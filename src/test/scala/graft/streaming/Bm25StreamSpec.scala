@@ -29,14 +29,14 @@ class Bm25StreamSpec extends AnyFunSuite {
       tmp("graft_bm25s_ck"), "doc_id", "text", buckets = 16)
     try {
       mem.addData(batch1: _*); q.processAllAvailable()
-      val afterB1 = Bm25Index.loadLog(spark, dir).topK(queries, 10)
+      val afterB1 = Bm25Index.load(spark, dir).topK(queries, 10)
         .as[(String, Long, Double)].collect().toSeq
       val directB1 = Bm25.topK(batch1.toDF("doc_id", "text"),
         "doc_id", "text", queries, 10).as[(String, Long, Double)].collect().toSeq
       assert(afterB1 == directB1, "bootstrap batch must equal one-shot over batch 1")
 
       mem.addData(batch2: _*); q.processAllAvailable()
-      val afterB2 = Bm25Index.loadLog(spark, dir).topK(queries, 10)
+      val afterB2 = Bm25Index.load(spark, dir).topK(queries, 10)
         .as[(String, Long, Double)].collect().toSeq
       val directB2 = Bm25.topK((batch1 ++ batch2).toDF("doc_id", "text"),
         "doc_id", "text", queries, 10).as[(String, Long, Double)].collect().toSeq

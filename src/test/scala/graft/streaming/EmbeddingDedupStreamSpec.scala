@@ -18,6 +18,11 @@ class EmbeddingDedupStreamSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  // the store's committed snapshot (replaced files stay on disk until
+  // vacuum, so a directory read would see them)
+  private def logRead(store: String) =
+    graft.operators.CommitLog.read(spark, new org.apache.hadoop.fs.Path(store)).get
+
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft_edup").toString
 
@@ -81,7 +86,7 @@ class EmbeddingDedupStreamSpec extends AnyFunSuite {
     assert(admitted.sorted.toSeq == Seq(1L, 3L, 5L, 6L, 7L, 8L))
 
     // the store holds exactly the admitted vectors with their buckets
-    val stored = spark.read.parquet(store)
+    val stored = logRead(store)
     assert(stored.select("graft_id").as[Long].collect().sorted.toSeq ==
       batchSurvivors)
     assert(stored.columns.toSet ==
@@ -105,7 +110,7 @@ class EmbeddingDedupStreamSpec extends AnyFunSuite {
     val a1r = StreamOps.applyEmbeddingNearDupBatch(b1, store, 1L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a1r == a1)
-    val stored = spark.read.parquet(store)
+    val stored = logRead(store)
       .select("graft_id").as[Long].collect().sorted.toSeq
     assert(stored == Seq(1L, 3L, 5L), s"store $stored")
   }
@@ -119,10 +124,12 @@ class EmbeddingDedupStreamSpec extends AnyFunSuite {
         Seq(Emb(10L * i, unit(1000 + i))).toDF(), store, i.toLong)
     }
     StreamOps.maintainEmbeddingNearDupStore(spark, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
+    val root = new org.apache.hadoop.fs.Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // live batch partitions: the committed snapshot's, not the listing's
+    val parts = graft.operators.CommitLog
+      .snapshotFiles(fs, root, graft.operators.CommitLog.currentVersion(fs, root))
+      .map(_.takeWhile(_ != '/')).distinct.sorted
     assert(parts == Seq("batch=-1", "batch=3"), parts)
     // a near-dup of folded batch-0 content still drops; fresh admits
     val a = StreamOps.applyEmbeddingNearDupBatch(
@@ -130,12 +137,12 @@ class EmbeddingDedupStreamSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a == Seq(101L))
     // a replay of folded batch 1 must fail loudly, store untouched
-    val before = spark.read.parquet(store).count()
+    val before = logRead(store).count()
     intercept[IllegalArgumentException] {
       StreamOps.applyEmbeddingNearDupBatch(
         Seq(Emb(999, unit(9))).toDF(), store, 1L)
     }
-    assert(spark.read.parquet(store).count() == before)
+    assert(logRead(store).count() == before)
   }
 
   test("config drift is rejected loudly: different planes, different dim; " +
@@ -165,51 +172,36 @@ class EmbeddingDedupStreamSpec extends AnyFunSuite {
     "batch, replays retire-and-replace, folds keep history and the " +
     "replay high-water mark survives them") {
     import spark.implicits._
-    val legacy = tmp() + "/vecs"
     val logStore = tmp() + "/vecs"
-    def withLogConf[A](f: => A): A = {
-      spark.conf.set("spark.graft.store.commitLog", "true")
-      try f finally spark.conf.unset("spark.graft.store.commitLog")
-    }
     val batches = Seq(
       Seq(Emb(1, unit(11)), Emb(2, near(11)), Emb(3, unit(22))),
       Seq(Emb(4, near(22)), Emb(5, unit(33))),
       Seq(Emb(6, near(33)), Emb(7, unit(44))))
+    // per-batch admissions of the retired staged-swap store on these
+    // batches, pinned
+    val legacyAdmitted = Seq(Seq(1L, 3L), Seq(5L), Seq(7L))
     val got = batches.zipWithIndex.map { case (b, i) =>
-      val legacyA = StreamOps.applyEmbeddingNearDupBatch(
-        b.toDF(), legacy, i.toLong).select("doc_id").as[Long].collect().sorted.toSeq
-      val logA = withLogConf {
-        StreamOps.applyEmbeddingNearDupBatch(
-          b.toDF(), logStore, i.toLong).select("doc_id").as[Long].collect().sorted.toSeq
-      }
-      assert(logA == legacyA, s"batch $i: log $logA vs legacy $legacyA")
-      logA
-    }
-    assert(got.flatten == Seq(1L, 3L, 5L, 7L))
-    // replay of the latest batch is idempotent in log mode
-    val replay = withLogConf {
       StreamOps.applyEmbeddingNearDupBatch(
-        batches(2).toDF(), logStore, 2L).select("doc_id").as[Long]
-        .collect().sorted.toSeq
+        b.toDF(), logStore, i.toLong).select("doc_id").as[Long].collect().sorted.toSeq
     }
+    assert(got == legacyAdmitted, s"log $got vs legacy $legacyAdmitted")
+    // replay of the latest batch is idempotent
+    val replay = StreamOps.applyEmbeddingNearDupBatch(
+      batches(2).toDF(), logStore, 2L).select("doc_id").as[Long]
+      .collect().sorted.toSeq
     assert(replay == got(2))
     // fold, then dedup against folded history and verify the high-water
     // mark survived (an old batch id must still be refused)
-    withLogConf { StreamOps.maintainEmbeddingNearDupStore(spark, logStore) }
-    val post = withLogConf {
-      StreamOps.applyEmbeddingNearDupBatch(
-        Seq(Emb(8, near(11)), Emb(9, unit(55))).toDF(), logStore, 3L)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-    }
+    StreamOps.maintainEmbeddingNearDupStore(spark, logStore)
+    val post = StreamOps.applyEmbeddingNearDupBatch(
+      Seq(Emb(8, near(11)), Emb(9, unit(55))).toDF(), logStore, 3L)
+      .select("doc_id").as[Long].collect().sorted.toSeq
     assert(post == Seq(9L))
     intercept[IllegalArgumentException] {
-      withLogConf {
-        StreamOps.applyEmbeddingNearDupBatch(
-          Seq(Emb(99, unit(7))).toDF(), logStore, 1L)
-      }
+      StreamOps.applyEmbeddingNearDupBatch(
+        Seq(Emb(99, unit(7))).toDF(), logStore, 1L)
     }
   }
-
   test("history lookup pushes the bucket range into the parquet scan " +
     "after a fold sorts the store by bucket") {
     import spark.implicits._
@@ -220,7 +212,7 @@ class EmbeddingDedupStreamSpec extends AnyFunSuite {
         store, i.toLong)
     }
     StreamOps.maintainEmbeddingNearDupStore(spark, store)
-    val planned = spark.read.parquet(store)
+    val planned = logRead(store)
       .where(org.apache.spark.sql.functions.col("graft_bucket") >= 3L &&
         org.apache.spark.sql.functions.col("graft_bucket") <= 9L)
     val scan = planned.queryExecution.executedPlan.toString

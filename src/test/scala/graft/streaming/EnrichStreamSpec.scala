@@ -26,8 +26,7 @@ class EnrichStreamSpec extends AnyFunSuite {
     val dim = s"$base/dim"
     val ckpt = s"$base/ckpt"
     Merge.into(spark, dim,
-      Seq((1L, "one"), (2L, "two")).toDF("k", "name"), Seq("k"),
-      log = Some(true))
+      Seq((1L, "one"), (2L, "two")).toDF("k", "name"), Seq("k"))
 
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[String], Long)]()
     val in = MemoryStream[EnrichFact]
@@ -44,8 +43,7 @@ class EnrichStreamSpec extends AnyFunSuite {
 
       // dim evolves between batches: k=1 renamed, k=3 appears
       Merge.into(spark, dim,
-        Seq((1L, "ONE"), (3L, "three")).toDF("k", "name"), Seq("k"),
-        log = Some(true))
+        Seq((1L, "ONE"), (3L, "three")).toDF("k", "name"), Seq("k"))
       seen.clear()
       in.addData(EnrichFact(1L, "b"), EnrichFact(3L, "d"))
       q.processAllAvailable()

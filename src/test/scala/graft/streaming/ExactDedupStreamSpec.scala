@@ -15,6 +15,11 @@ class ExactDedupStreamSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  // the store's committed snapshot (replaced files stay on disk until
+  // vacuum, so a directory read would see them)
+  private def logRead(store: String) =
+    graft.operators.CommitLog.read(spark, new org.apache.hadoop.fs.Path(store)).get
+
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft_xdedup").toString
 
@@ -43,7 +48,7 @@ class ExactDedupStreamSpec extends AnyFunSuite {
     val a2r = StreamOps.applyExactDedupBatch(b2, store, 2L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a2r == a2)
-    val stored = spark.read.parquet(store)
+    val stored = logRead(store)
       .select("graft_id").as[Long].collect().sorted.toSeq
     assert(stored == Seq(1L, 3L, 5L, 7L))
   }
@@ -57,10 +62,12 @@ class ExactDedupStreamSpec extends AnyFunSuite {
         Seq(Doc(10L * i, s"text-$i")).toDF(), store, i.toLong)
     }
     StreamOps.maintainExactDedupStore(spark, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
+    val root = new org.apache.hadoop.fs.Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // live batch partitions: the committed snapshot's, not the listing's
+    val parts = graft.operators.CommitLog
+      .snapshotFiles(fs, root, graft.operators.CommitLog.currentVersion(fs, root))
+      .map(_.takeWhile(_ != '/')).distinct.sorted
     assert(parts == Seq("batch=-1", "batch=4"), parts)
     // fold preserved every fingerprint: a dup of folded batch-0 content
     // still drops, fresh content admits
@@ -69,12 +76,12 @@ class ExactDedupStreamSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a == Seq(101L))
     // a replay of folded batch 2 must fail loudly, store untouched
-    val before = spark.read.parquet(store).count()
+    val before = logRead(store).count()
     intercept[IllegalArgumentException] {
       StreamOps.applyExactDedupBatch(
         Seq(Doc(999, "whatever")).toDF(), store, 2L)
     }
-    assert(spark.read.parquet(store).count() == before)
+    assert(logRead(store).count() == before)
   }
 
   test("end-to-end MemoryStream run survives a stream restart on the " +
@@ -123,7 +130,7 @@ class ExactDedupStreamSpec extends AnyFunSuite {
     val fp = probe.select(org.apache.spark.sql.functions.md5(
       org.apache.spark.sql.functions.col("text")).as("f"))
       .as[String].head()
-    val planned = spark.read.parquet(store)
+    val planned = logRead(store)
       .where(org.apache.spark.sql.functions.col("graft_fp") >= fp &&
         org.apache.spark.sql.functions.col("graft_fp") <= fp)
     val scan = planned.queryExecution.executedPlan.toString

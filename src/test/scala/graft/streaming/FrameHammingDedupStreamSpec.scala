@@ -17,6 +17,11 @@ class FrameHammingDedupStreamSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  // the store's committed snapshot (replaced files stay on disk until
+  // vacuum, so a directory read would see them)
+  private def logRead(store: String) =
+    graft.operators.CommitLog.read(spark, new org.apache.hadoop.fs.Path(store)).get
+
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft_fdup").toString
 
@@ -80,7 +85,7 @@ class FrameHammingDedupStreamSpec extends AnyFunSuite {
     assert(admitted.sorted.toSeq == Seq(1L, 4L, 5L))
 
     // store = admitted items × 6 frames × autoChunks(6)=4 exact band rows
-    val stored = spark.read.parquet(dir + "/fps")
+    val stored = logRead(dir + "/fps")
     assert(stored.columns.toSet ==
       Set("graft_id", "graft_pos", "graft_sh", "graft_bucket", "batch"))
     assert(stored.count() == 3 * 6 * 4)
@@ -136,7 +141,7 @@ class FrameHammingDedupStreamSpec extends AnyFunSuite {
       .select("media_id").distinct().as[Long].collect().sorted.toSeq
     assert(a1r == a1)
     // store: only item 1's frames (item 3's null frames occupy nothing)
-    val stored = spark.read.parquet(store)
+    val stored = logRead(store)
     assert(stored.select("graft_id").distinct().as[Long].collect().toSeq == Seq(1L))
     assert(stored.count() == 6 * 4)
   }
@@ -150,10 +155,12 @@ class FrameHammingDedupStreamSpec extends AnyFunSuite {
         item(10L * i, 500 + i).toDF(), store, i.toLong)
     }
     StreamOps.maintainFrameHammingNearDupStore(spark, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
+    val root = new org.apache.hadoop.fs.Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // live batch partitions: the committed snapshot's, not the listing's
+    val parts = graft.operators.CommitLog
+      .snapshotFiles(fs, root, graft.operators.CommitLog.currentVersion(fs, root))
+      .map(_.takeWhile(_ != '/')).distinct.sorted
     assert(parts == Seq("batch=-1", "batch=2"), parts)
     // near-dup of the FOLDED batch-0 item still drops; fresh admits
     val a = StreamOps.applyFrameHammingNearDupBatch(
@@ -170,41 +177,29 @@ class FrameHammingDedupStreamSpec extends AnyFunSuite {
   test("commit-log mode: admissions match the legacy store batch for " +
     "batch; fold keeps history and the replay high-water mark") {
     import spark.implicits._
-    val legacy = tmp() + "/fps"
     val logStore = tmp() + "/fps"
-    def withLogConf[A](f: => A): A = {
-      spark.conf.set("spark.graft.store.commitLog", "true")
-      try f finally spark.conf.unset("spark.graft.store.commitLog")
-    }
     val batches = Seq(
       item(1, 31) ++ item(2, 31, f => Seq(f % 2, 10)), // 2 drops vs 1
       item(3, 31, _ => Seq(5)) ++ item(4, 64),          // 3 drops, 4 admits
       item(5, 64, f => if (f < 4) Seq(12) else Seq(3, 12, 25, 37, 49, 57, 63)))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val legacyA = StreamOps.applyFrameHammingNearDupBatch(
-        b.toDF(), legacy, i.toLong)
-        .select("media_id").distinct().as[Long].collect().sorted.toSeq
-      val logA = withLogConf {
-        StreamOps.applyFrameHammingNearDupBatch(b.toDF(), logStore, i.toLong)
-          .select("media_id").distinct().as[Long].collect().sorted.toSeq
-      }
-      assert(logA == legacyA, s"batch $i: log $logA vs legacy $legacyA")
-    }
-    withLogConf { StreamOps.maintainFrameHammingNearDupStore(spark, logStore) }
-    val post = withLogConf {
-      StreamOps.applyFrameHammingNearDupBatch(
-        (item(8, 31, _ => Seq(2)) ++ item(9, 77)).toDF(), logStore, 3L)
+    // per-batch admissions of the retired staged-swap store on these
+    // batches, pinned
+    val legacyAdmitted = Seq(Seq(1L), Seq(4L), Seq.empty[Long])
+    val got = batches.zipWithIndex.map { case (b, i) =>
+      StreamOps.applyFrameHammingNearDupBatch(b.toDF(), logStore, i.toLong)
         .select("media_id").distinct().as[Long].collect().sorted.toSeq
     }
+    assert(got == legacyAdmitted, s"log $got vs legacy $legacyAdmitted")
+    StreamOps.maintainFrameHammingNearDupStore(spark, logStore)
+    val post = StreamOps.applyFrameHammingNearDupBatch(
+      (item(8, 31, _ => Seq(2)) ++ item(9, 77)).toDF(), logStore, 3L)
+      .select("media_id").distinct().as[Long].collect().sorted.toSeq
     assert(post == Seq(9L), s"admitted $post")
     intercept[IllegalArgumentException] {
-      withLogConf {
-        StreamOps.applyFrameHammingNearDupBatch(
-          item(99, 1).toDF(), logStore, 1L)
-      }
+      StreamOps.applyFrameHammingNearDupBatch(
+        item(99, 1).toDF(), logStore, 1L)
     }
   }
-
   test("video wrapper: a streamed ingest admits each scene once and " +
     "drops a recompressed re-upload of an ADMITTED video cross-batch") {
     import spark.implicits._

@@ -19,6 +19,11 @@ class HammingDedupStreamSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  // the store's committed snapshot (replaced files stay on disk until
+  // vacuum, so a directory read would see them)
+  private def logRead(store: String) =
+    graft.operators.CommitLog.read(spark, new org.apache.hadoop.fs.Path(store)).get
+
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft_hdup").toString
 
@@ -72,7 +77,7 @@ class HammingDedupStreamSpec extends AnyFunSuite {
 
     // the store holds exactly the admitted SUPPORT, exploded to exact
     // band rows: 5 distinct hashes x autoChunks(3)=2 bands
-    val stored = spark.read.parquet(store)
+    val stored = logRead(store)
     assert(stored.columns.toSet ==
       Set("graft_id", "graft_sh", "graft_bucket", "batch"))
     assert(stored.select("graft_sh").distinct().count() == 5)
@@ -98,7 +103,7 @@ class HammingDedupStreamSpec extends AnyFunSuite {
     val a1r = StreamOps.applyHammingNearDupBatch(b1, store, 1L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a1r == a1)
-    val stored = spark.read.parquet(store)
+    val stored = logRead(store)
       .select("graft_id").distinct().as[Long].collect().sorted.toSeq
     assert(stored == Seq(1L, 3L, 5L), s"store $stored")
   }
@@ -112,18 +117,18 @@ class HammingDedupStreamSpec extends AnyFunSuite {
     val a0 = StreamOps.applyHammingNearDupBatch(wave0, store, 0L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a0 == Seq(1L, 2L, 3L), s"admitted $a0") // min id per class
-    assert(spark.read.parquet(store).count() == 3 * 2) // 3 hashes x 2 bands
+    assert(logRead(store).count() == 3 * 2) // 3 hashes x 2 bands
     // 500 more rows over the SAME manifold: nothing admits, store flat
     val wave1 = (501L to 1000L).map(i => FpRow(i, base(1 + (i % 3).toInt))).toDF()
     val a1 = StreamOps.applyHammingNearDupBatch(wave1, store, 1L)
     assert(a1.isEmpty)
-    assert(spark.read.parquet(store).count() == 3 * 2)
+    assert(logRead(store).count() == 3 * 2)
     // null fingerprints never pair and are admitted, but never stored
     val a2 = StreamOps.applyHammingNearDupBatch(
       Seq(FpRow(2000, null), FpRow(2001, null)).toDF(), store, 2L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a2 == Seq(2000L, 2001L))
-    assert(spark.read.parquet(store).count() == 3 * 2)
+    assert(logRead(store).count() == 3 * 2)
   }
 
   test("maintenance folds older batches into batch=-1 sorted by bucket; " +
@@ -135,10 +140,12 @@ class HammingDedupStreamSpec extends AnyFunSuite {
         Seq(FpRow(10L * i, base(1000 + i))).toDF(), store, i.toLong)
     }
     StreamOps.maintainHammingNearDupStore(spark, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(store))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
+    val root = new org.apache.hadoop.fs.Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // live batch partitions: the committed snapshot's, not the listing's
+    val parts = graft.operators.CommitLog
+      .snapshotFiles(fs, root, graft.operators.CommitLog.currentVersion(fs, root))
+      .map(_.takeWhile(_ != '/')).distinct.sorted
     assert(parts == Seq("batch=-1", "batch=3"), parts)
     // a near-dup of folded batch-0 content still drops; fresh admits
     val a = StreamOps.applyHammingNearDupBatch(
@@ -146,12 +153,12 @@ class HammingDedupStreamSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a == Seq(101L))
     // a replay of folded batch 1 must fail loudly, store untouched
-    val before = spark.read.parquet(store).count()
+    val before = logRead(store).count()
     intercept[IllegalArgumentException] {
       StreamOps.applyHammingNearDupBatch(
         Seq(FpRow(999, base(9))).toDF(), store, 1L)
     }
-    assert(spark.read.parquet(store).count() == before)
+    assert(logRead(store).count() == before)
   }
 
   test("config drift is rejected loudly: a different chunk layout; " +
@@ -186,51 +193,36 @@ class HammingDedupStreamSpec extends AnyFunSuite {
     "batch, replays retire-and-replace, folds keep history and the " +
     "replay high-water mark survives them") {
     import spark.implicits._
-    val legacy = tmp() + "/fps"
     val logStore = tmp() + "/fps"
-    def withLogConf[A](f: => A): A = {
-      spark.conf.set("spark.graft.store.commitLog", "true")
-      try f finally spark.conf.unset("spark.graft.store.commitLog")
-    }
     val batches = Seq(
       Seq(FpRow(1, base(11)), FpRow(2, near(11, 4)), FpRow(3, base(22))),
       Seq(FpRow(4, near(22, 9, 17)), FpRow(5, base(33))),
       Seq(FpRow(6, near(33, 50)), FpRow(7, base(44))))
+    // per-batch admissions of the retired staged-swap store on these
+    // batches, pinned
+    val legacyAdmitted = Seq(Seq(1L, 3L), Seq(5L), Seq(7L))
     val got = batches.zipWithIndex.map { case (b, i) =>
-      val legacyA = StreamOps.applyHammingNearDupBatch(
-        b.toDF(), legacy, i.toLong).select("doc_id").as[Long].collect().sorted.toSeq
-      val logA = withLogConf {
-        StreamOps.applyHammingNearDupBatch(
-          b.toDF(), logStore, i.toLong).select("doc_id").as[Long].collect().sorted.toSeq
-      }
-      assert(logA == legacyA, s"batch $i: log $logA vs legacy $legacyA")
-      logA
-    }
-    assert(got.flatten == Seq(1L, 3L, 5L, 7L))
-    // replay of the latest batch is idempotent in log mode
-    val replay = withLogConf {
       StreamOps.applyHammingNearDupBatch(
-        batches(2).toDF(), logStore, 2L).select("doc_id").as[Long]
-        .collect().sorted.toSeq
+        b.toDF(), logStore, i.toLong).select("doc_id").as[Long].collect().sorted.toSeq
     }
+    assert(got == legacyAdmitted, s"log $got vs legacy $legacyAdmitted")
+    // replay of the latest batch is idempotent
+    val replay = StreamOps.applyHammingNearDupBatch(
+      batches(2).toDF(), logStore, 2L).select("doc_id").as[Long]
+      .collect().sorted.toSeq
     assert(replay == got(2))
     // fold, then dedup against folded history and verify the high-water
     // mark survived (an old batch id must still be refused)
-    withLogConf { StreamOps.maintainHammingNearDupStore(spark, logStore) }
-    val post = withLogConf {
-      StreamOps.applyHammingNearDupBatch(
-        Seq(FpRow(8, near(11, 2)), FpRow(9, base(55))).toDF(), logStore, 3L)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-    }
+    StreamOps.maintainHammingNearDupStore(spark, logStore)
+    val post = StreamOps.applyHammingNearDupBatch(
+      Seq(FpRow(8, near(11, 2)), FpRow(9, base(55))).toDF(), logStore, 3L)
+      .select("doc_id").as[Long].collect().sorted.toSeq
     assert(post == Seq(9L))
     intercept[IllegalArgumentException] {
-      withLogConf {
-        StreamOps.applyHammingNearDupBatch(
-          Seq(FpRow(99, base(7))).toDF(), logStore, 1L)
-      }
+      StreamOps.applyHammingNearDupBatch(
+        Seq(FpRow(99, base(7))).toDF(), logStore, 1L)
     }
   }
-
   test("image wrapper: a streamed crawl admits each scene once and drops " +
     "jpeg re-encodes of ADMITTED scenes across batches") {
     import spark.implicits._
@@ -315,7 +307,7 @@ class HammingDedupStreamSpec extends AnyFunSuite {
         store, i.toLong)
     }
     StreamOps.maintainHammingNearDupStore(spark, store)
-    val planned = spark.read.parquet(store)
+    val planned = logRead(store)
       .where(org.apache.spark.sql.functions.col("graft_bucket") >= 3L &&
         org.apache.spark.sql.functions.col("graft_bucket") <= 9L)
     val scan = planned.queryExecution.executedPlan.toString

@@ -15,6 +15,10 @@ class StreamDedupSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  // the committed signature table (the store keeps it under `sigs/`)
+  private def sigsRead(store: String) =
+    graft.operators.CommitLog.readSub(spark, new org.apache.hadoop.fs.Path(store), "sigs").get
+
   // long enough that a one-word edit stays above jaccard 0.9 (an edit
   // moves ~3 of ~n shingles; at ~60 tokens J ≈ 55/61 ≈ 0.9)
   private val base = "the quick brown fox jumps over the lazy dog and " +
@@ -49,7 +53,7 @@ class StreamDedupSpec extends AnyFunSuite {
     assert(a1 == Seq(5L), s"admitted $a1")
 
     // the store holds exactly the admitted signatures
-    val stored = spark.read.parquet(store)
+    val stored = sigsRead(store)
       .select("graft_id").as[Long].collect().sorted.toSeq
     assert(stored == Seq(1L, 3L, 5L), s"store $stored")
   }
@@ -65,7 +69,7 @@ class StreamDedupSpec extends AnyFunSuite {
     val replay = StreamOps.applyNearDupBatch(b0, store, 0L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(replay == first, s"replay $replay vs first $first")
-    val stored = spark.read.parquet(store)
+    val stored = sigsRead(store)
       .select("graft_id").as[Long].collect().sorted.toSeq
     assert(stored == Seq(1L, 2L), s"store $stored")
   }
@@ -82,7 +86,7 @@ class StreamDedupSpec extends AnyFunSuite {
     // every row a near-dup of history
     val b2 = Seq(Doc(7, edit("whenever")), Doc(8, base)).toDF()
     assert(StreamOps.applyNearDupBatch(b2, store, 2L).count() == 0)
-    assert(spark.read.parquet(store).select("graft_id").as[Long]
+    assert(sigsRead(store).select("graft_id").as[Long]
       .collect().toSeq == Seq(1L))
   }
 
@@ -114,16 +118,18 @@ class StreamDedupSpec extends AnyFunSuite {
     assert(a2 == Seq(5L), s"admitted $a2") // 4 near-dups batch-0's doc 1
 
     StreamOps.maintainNearDupStore(spark, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def partNames(p: String) = fs.listStatus(new org.apache.hadoop.fs.Path(p))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
+    val root = new org.apache.hadoop.fs.Path(store)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // live batch partitions of one of the store's three tables
+    def partNames(sub: String) = graft.operators.CommitLog
+      .snapshotFiles(fs, root, graft.operators.CommitLog.currentVersion(fs, root))
+      .filter(_.startsWith(sub + "/")).map(_.split('/')(1)).distinct.sorted
     // batches 0 and 1 folded; the latest (2) keeps its own partition so
-    // an at-least-once replay can still exclude and overwrite itself
-    assert(partNames(store) == Seq("batch=-1", "batch=2"), partNames(store))
-    assert(partNames(store + ".bands") == Seq("batch=-1", "batch=2"))
-    assert(partNames(store + ".buckets") == Seq("batch=-1", "batch=2"))
-    val stored = spark.read.parquet(store)
+    // an at-least-once replay can still exclude and replace itself
+    assert(partNames("sigs") == Seq("batch=-1", "batch=2"), partNames("sigs"))
+    assert(partNames("bands") == Seq("batch=-1", "batch=2"))
+    assert(partNames("buckets") == Seq("batch=-1", "batch=2"))
+    val stored = sigsRead(store)
       .select("graft_id").as[Long].collect().sorted.toSeq
     assert(stored == Seq(1L, 2L, 3L, 5L), s"store $stored")
 
@@ -139,7 +145,7 @@ class StreamDedupSpec extends AnyFunSuite {
 
     // a second maintenance pass with nothing new to fold is a no-op
     StreamOps.maintainNearDupStore(spark, store)
-    assert(spark.read.parquet(store).count() == 4)
+    assert(sigsRead(store).count() == 4)
 
     // out-of-protocol replay of an already-folded batch id fails LOUDLY
     // before touching the store — its prior admissions sit in batch=-1
@@ -149,7 +155,7 @@ class StreamDedupSpec extends AnyFunSuite {
         Seq(Doc(1, base), Doc(2, other)).toDF(), store, 0L)
     }
     assert(e.getMessage.contains("out-of-protocol replay"), e.getMessage)
-    assert(spark.read.parquet(store).count() == 4, "store untouched")
+    assert(sigsRead(store).count() == 4, "store untouched")
   }
 
   test("idCoverFilter: gap-split ranges cover exactly the candidate " +
@@ -174,72 +180,6 @@ class StreamDedupSpec extends AnyFunSuite {
     assert(StreamOps.idCoverFilter(
       org.apache.spark.sql.functions.col("x"),
       Array[Any](java.math.BigDecimal.ONE)).isEmpty)
-  }
-
-  test("a crash between per-root maintenance folds (store folded, " +
-    "sidecars not) leaves the store semantically consistent: dedup and " +
-    "a completing fold both still work") {
-    import spark.implicits._
-    val store = tmp() + "/sigs"
-    val other2 = "a separate corpus fragment on shuffle hash joins sort " +
-      "merge exchanges and broadcast thresholds inside the planner"
-    StreamOps.applyNearDupBatch(Seq(Doc(1, base)).toDF(), store, 0L)
-    StreamOps.applyNearDupBatch(Seq(Doc(2, other)).toDF(), store, 1L)
-    StreamOps.applyNearDupBatch(Seq(Doc(3, other2)).toDF(), store, 2L)
-    // simulate the crash: ONLY the signature store folds; .bands and
-    // .buckets keep their per-batch layout
-    StreamOps.foldBatchPartitions(spark, store, 128L << 20, reagg = None)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def partNames(p: String) = fs.listStatus(new org.apache.hadoop.fs.Path(p))
-      .map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
-    assert(partNames(store) == Seq("batch=-1", "batch=2"))
-    assert(partNames(store + ".bands") == Seq("batch=0", "batch=1", "batch=2"))
-
-    // the mixed layout still dedups correctly against all of history
-    val a3 = StreamOps.applyNearDupBatch(
-      Seq(Doc(4, edit("today")), Doc(5, other2 + " with sufficient extra " +
-        "novel vocabulary appended to remain fully distinct from history")
-      ).toDF(), store, 3L).select("doc_id").as[Long].collect().sorted.toSeq
-    assert(a3 == Seq(5L), s"admitted $a3") // 4 near-dups folded doc 1
-
-    // the next full maintenance pass completes the interrupted fold
-    StreamOps.maintainNearDupStore(spark, store)
-    assert(partNames(store) == Seq("batch=-1", "batch=3"))
-    assert(partNames(store + ".bands") == Seq("batch=-1", "batch=3"))
-    assert(partNames(store + ".buckets") == Seq("batch=-1", "batch=3"))
-    assert(spark.read.parquet(store).select("graft_id").as[Long]
-      .collect().sorted.toSeq == Seq(1L, 2L, 3L, 5L))
-  }
-
-  test("a legacy store without sidecars bootstraps them once and keeps " +
-    "detecting history dups") {
-    import spark.implicits._
-    val store = tmp() + "/sigs"
-    StreamOps.applyNearDupBatch(Seq(Doc(1, base), Doc(2, other)).toDF(), store, 0L)
-    // simulate a store written before the sidecars existed
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(".bands", ".buckets", ".meta").foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(store + s), true)
-    }
-    val a1 = StreamOps.applyNearDupBatch(
-      Seq(Doc(3, edit("sometime")), Doc(4, other + " extended with many " +
-        "fresh tokens so the jaccard overlap stays far below threshold " +
-        "levels across every band of the minhash signature")).toDF(),
-      store, 1L).select("doc_id").as[Long].collect().sorted.toSeq
-    assert(a1 == Seq(4L), s"admitted $a1") // 3 near-dups legacy doc 1
-    assert(fs.exists(new org.apache.hadoop.fs.Path(store + ".bands")))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(store + ".buckets")))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(store + ".meta")))
-
-    // a crash BETWEEN the two sidecar builds resumes with just the
-    // missing one (buckets rebuild from the committed band store)
-    fs.delete(new org.apache.hadoop.fs.Path(store + ".buckets"), true)
-    val a2 = StreamOps.applyNearDupBatch(
-      Seq(Doc(5, edit("whenever"))).toDF(), store, 2L).count()
-    assert(a2 == 0, "near-dup must still be dropped after partial bootstrap")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(store + ".buckets")))
   }
 
   test("a store built with different LSH banding is rejected loudly via " +

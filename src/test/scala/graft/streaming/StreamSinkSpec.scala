@@ -15,6 +15,31 @@ class StreamSinkSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  private def aggRead(store: String) =
+    graft.operators.IncrementalAgg.readStore(spark, store)
+
+  private def lastBatch(store: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(store)
+    graft.operators.CommitLog.lastMeta(
+      graft.operators.Swap.fsOf(spark, p), p, "batchId").map(_.toLong)
+  }
+
+  /** The current snapshot of a log store copied to `dst` without its log
+    * — the on-disk shape a pre-log writer left — plus, when given, the
+    * in-store batch marker such a writer kept. */
+  private def legacyCopy(src: String, dst: String, marker: Option[String]): Unit = {
+    import graft.operators.{CommitLog, Swap}
+    val p = new org.apache.hadoop.fs.Path(src)
+    val fs = Swap.fsOf(spark, p)
+    CommitLog.snapshotFiles(fs, p, CommitLog.currentVersion(fs, p)).foreach { f =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(p, f),
+        fs, new org.apache.hadoop.fs.Path(dst, f), false,
+        spark.sparkContext.hadoopConfiguration)
+    }
+    marker.foreach(m => Files.write(java.nio.file.Paths.get(dst,
+      graft.operators.IncrementalAgg.BatchMarker), m.getBytes("UTF-8")))
+  }
+
   test("streaming partitioned parquet sink fans out by key with exactly-once files") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -96,7 +121,8 @@ class StreamSinkSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val store = spark.read.parquet(s"$dir/store")
+    val store = graft.operators.CommitLog.read(
+      spark, new org.apache.hadoop.fs.Path(s"$dir/store")).get
       .select("user", "value").as[(String, Double)].collect().toMap
     assert(store == Map("a" -> 4.0, "b" -> 3.0)) // one row per key, latest wins
   }
@@ -150,28 +176,25 @@ class StreamSinkSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val out = spark.read.parquet(store)
+    val out = aggRead(store)
       .select("user", "n", "sum", "min", "max")
       .as[(String, Long, Double, Double, Double)].collect().toSet
     assert(out == Set(("a", 3L, 9.0, 1.0, 5.0), ("b", 1L, 10.0, 10.0, 10.0)))
 
     // replay guard: re-applying an already-recorded batchId is a no-op —
     // exactly the restart-replay case foreachBatch can deliver. The
-    // marker is committed INSIDE the store dir by the same rename as the
-    // data (no marker-behind-data crash window).
+    // mark is committed in the same manifest as the data (no
+    // mark-behind-data crash window).
     val replay = Seq(Ev(Timestamp.valueOf("2024-01-01 00:04:00"), "a", 5.0)).toDF()
-    val markerFile = java.nio.file.Paths.get(
-      store, graft.operators.IncrementalAgg.BatchMarker)
-    val lastId = new String(
-      java.nio.file.Files.readAllBytes(markerFile), "UTF-8").trim.toLong
+    val lastId = lastBatch(store).get
     assert(!StreamOps.applyAggBatchOnce(replay, store, Seq("user"), "value", lastId))
-    assert(spark.read.parquet(store)
+    assert(aggRead(store)
       .select("user", "n", "sum", "min", "max")
       .as[(String, Long, Double, Double, Double)].collect().toSet == out,
       "replayed batch must not double-count")
     // a genuinely new batch still applies
     assert(StreamOps.applyAggBatchOnce(replay, store, Seq("user"), "value", lastId + 1))
-    assert(spark.read.parquet(store).filter(col("user") === "a")
+    assert(aggRead(store).filter(col("user") === "a")
       .select("n").as[Long].head() == 4L)
   }
 
@@ -189,13 +212,13 @@ class StreamSinkSpec extends AnyFunSuite {
     }
     assert(eNoMarker.getMessage.contains("no batch marker"))
 
-    // a truncated/empty marker (the old crash-mid-write artifact) raises
-    // a clear error instead of NPE-wedging every subsequent batch
+    // a truncated/empty marker in a pre-log store (the old
+    // crash-mid-write artifact) raises a clear error on adoption instead
+    // of NPE-wedging every subsequent batch
+    val built = s"$dir/built"
+    assert(StreamOps.applyAggBatchOnce(batch, built, Seq("user"), "value", 0L))
     val torn = s"$dir/torn"
-    assert(StreamOps.applyAggBatchOnce(batch, torn, Seq("user"), "value", 0L))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(torn, graft.operators.IncrementalAgg.BatchMarker),
-      Array.emptyByteArray)
+    legacyCopy(built, torn, marker = Some(""))
     val eTorn = intercept[IllegalStateException] {
       StreamOps.applyAggBatchOnce(batch, torn, Seq("user"), "value", 1L)
     }
@@ -206,7 +229,7 @@ class StreamSinkSpec extends AnyFunSuite {
     assert(StreamOps.applyAggBatchOnce(batch, ok, Seq("user"), "value", 0L))
     assert(StreamOps.applyAggBatchOnce(batch, ok, Seq("user"), "value", 1L))
     assert(!StreamOps.applyAggBatchOnce(batch, ok, Seq("user"), "value", 1L))
-    assert(spark.read.parquet(ok).select("n").as[Long].head() == 2L)
+    assert(aggRead(ok).select("n").as[Long].head() == 2L)
   }
 
   test("a crash between the swap's two renames is rolled forward, not " +
@@ -216,32 +239,33 @@ class StreamSinkSpec extends AnyFunSuite {
     val batch = Seq(Ev(Timestamp.valueOf("2024-01-01 00:01:00"), "a", 1.0)).toDF()
 
     // stage the exact on-disk state a crash between rename(store→.old) and
-    // rename(.staging→store) leaves: no store dir, a retired pre-batch
-    // store, and a COMPLETE staged store (data + marker for batch 1)
+    // rename(.staging→store) of a pre-log writer leaves: no store dir, a
+    // retired pre-batch store, and a COMPLETE staged store (data + marker
+    // for batch 1)
     val store = s"$dir/agg"
-    assert(StreamOps.applyAggBatchOnce(batch, store, Seq("user"), "value", 0L))
+    val after0 = s"$dir/after0"
+    assert(StreamOps.applyAggBatchOnce(batch, after0, Seq("user"), "value", 0L))
     val after1 = s"$dir/after1"
     assert(StreamOps.applyAggBatchOnce(batch, after1, Seq("user"), "value", 0L))
     assert(StreamOps.applyAggBatchOnce(batch, after1, Seq("user"), "value", 1L))
-    assert(new java.io.File(store).renameTo(new java.io.File(s"$store.old-t1")))
-    assert(new java.io.File(after1).renameTo(new java.io.File(s"$store.staging-t1")))
+    legacyCopy(after0, s"$store.old-t1", marker = Some("0"))
+    legacyCopy(after1, s"$store.staging-t1", marker = Some("1"))
 
     // the foreachBatch replay of batch 1 completes the swap and is then
     // SKIPPED (the staged marker says 1 is applied) — exactly once
     assert(!StreamOps.applyAggBatchOnce(batch, store, Seq("user"), "value", 1L))
-    assert(spark.read.parquet(store).select("n").as[Long].head() == 2L,
+    assert(aggRead(store).select("n").as[Long].head() == 2L,
       "rolled-forward store must hold both applied batches")
     assert(!new java.io.File(s"$store.old-t1").exists())
     assert(!new java.io.File(s"$store.staging-t1").exists())
     // and the stream proceeds normally afterwards
     assert(StreamOps.applyAggBatchOnce(batch, store, Seq("user"), "value", 2L))
-    assert(spark.read.parquet(store).select("n").as[Long].head() == 3L)
+    assert(aggRead(store).select("n").as[Long].head() == 3L)
 
     // a retired dir WITHOUT a completable staging is unknown provenance:
     // fail loudly with the recovery path, never treat the store as fresh
     val lost = s"$dir/lost"
-    assert(StreamOps.applyAggBatchOnce(batch, lost, Seq("user"), "value", 0L))
-    assert(new java.io.File(lost).renameTo(new java.io.File(s"$lost.old-t9")))
+    legacyCopy(after0, s"$lost.old-t9", marker = Some("0"))
     val e = intercept[IllegalStateException] {
       StreamOps.applyAggBatchOnce(batch, lost, Seq("user"), "value", 1L)
     }
@@ -254,24 +278,24 @@ class StreamSinkSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_incr_legacy").toString
     val batch = Seq(Ev(Timestamp.valueOf("2024-01-01 00:01:00"), "a", 1.0)).toDF()
 
-    // a store maintained by the previous version: no in-store marker,
+    // a store maintained by a pre-log version: no in-store marker,
     // high-water mark in a sibling file storePath + "._graft_last_batch"
+    val built = s"$dir/built"
+    graft.operators.IncrementalAgg.update(spark, built, batch, Seq("user"), "value")
     val store = s"$dir/agg"
-    graft.operators.IncrementalAgg.update(spark, store, batch, Seq("user"), "value")
+    legacyCopy(built, store, marker = None)
     val legacy = java.nio.file.Paths.get(
       store + "." + graft.operators.IncrementalAgg.BatchMarker)
     java.nio.file.Files.write(legacy, "5".getBytes("UTF-8"))
 
     // replays at or below the legacy mark are skipped, not re-applied
     assert(!StreamOps.applyAggBatchOnce(batch, store, Seq("user"), "value", 5L))
-    assert(spark.read.parquet(store).select("n").as[Long].head() == 1L)
-    // the next applied batch commits the in-store marker and removes the
-    // legacy file
-    assert(StreamOps.applyAggBatchOnce(batch, store, Seq("user"), "value", 6L))
+    assert(aggRead(store).select("n").as[Long].head() == 1L)
+    // adoption migrated the mark into the log and removed the legacy file
     assert(!java.nio.file.Files.exists(legacy), "legacy marker left orphaned")
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
-      store, graft.operators.IncrementalAgg.BatchMarker)))
+    assert(StreamOps.applyAggBatchOnce(batch, store, Seq("user"), "value", 6L))
+    assert(lastBatch(store).contains(6L))
     assert(!StreamOps.applyAggBatchOnce(batch, store, Seq("user"), "value", 6L))
-    assert(spark.read.parquet(store).select("n").as[Long].head() == 2L)
+    assert(aggRead(store).select("n").as[Long].head() == 2L)
   }
 }
