@@ -40,6 +40,21 @@ object FixtureMorph {
     finally spark.stop()
   }
 
+  /** documents: swap the first two words on ~half the docs per seed —
+    * shifts shingle sets, boundary pairs, and token positions without
+    * inventing content the generator contract never produces */
+  def documents(docs: DataFrame, seed: Long): DataFrame = {
+    val w = split(col("text"), " ")
+    val swapped = when(size(w) >= 2 && pmod(xxhash64(lit(seed), col("doc_id")), lit(2L)) === 0,
+      concat_ws(" ",
+        concat(array(element_at(w, 2), element_at(w, 1)),
+          slice(w, lit(3), greatest(size(w) - 2, lit(0))))))
+      .otherwise(col("text"))
+    docs.select(
+      col("doc_id"), swapped.as("text"), col("lang"), col("source"),
+      length(swapped).cast("long").as("n_chars"))
+  }
+
   def generate(spark: SparkSession, src: String, dst: String, seed: Long): Unit = {
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
 
@@ -118,18 +133,7 @@ object FixtureMorph {
       jit2(col("value"), 41, col("event_id")).as("value"),
       col("props")), "events")
 
-    // documents: swap the first two words on ~half the docs per seed —
-    // shifts shingle sets, boundary pairs, and token positions without
-    // inventing content the generator contract never produces
-    val w = split(col("text"), " ")
-    val swapped = when(size(w) >= 2 && pmod(xxhash64(lit(seed), col("doc_id")), lit(2L)) === 0,
-      concat_ws(" ",
-        concat(array(element_at(w, 2), element_at(w, 1)),
-          slice(w, lit(3), greatest(size(w) - 2, lit(0))))))
-      .otherwise(col("text"))
-    write(read("documents").select(
-      col("doc_id"), swapped.as("text"), col("lang"), col("source"),
-      length(swapped).cast("long").as("n_chars")), "documents")
+    write(documents(read("documents"), seed), "documents")
 
     // embeddings: per-element relative scaling up to ±5e-3, cast back to
     // float32 — every element moves to a new float lattice point

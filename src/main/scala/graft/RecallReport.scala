@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.CommitLog
+
 /** Driver-visible ANN recall artifact (VERDICT r13 item 4): the ≥0.9
   * recall gates for q_ann_topk / q_ann_topk_q8 / q_ann_topk_pq /
   * q_ann_topk_pca have lived only inside ScalaTest specs; this main
@@ -47,11 +49,15 @@ object RecallReport {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
 
-  private def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-    walk(new java.io.File(path))
+  /** Bytes of an index's committed snapshot: the files its newest
+    * manifest lists — not the `_log/` manifests, and not files a later
+    * commit retired (those stay on disk until vacuum). */
+  private def indexBytes(spark: SparkSession, path: String): Long = {
+    val store = new org.apache.hadoop.fs.Path(path)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CommitLog.snapshotFilesWithStats(fs, store, CommitLog.currentVersion(fs, store))
+      .map { case (f, _) => fs.getFileStatus(new org.apache.hadoop.fs.Path(store, f)).getLen }
+      .sum
   }
 
   /** Deterministic clustered panel with the geometry real embedding
@@ -139,7 +145,7 @@ object RecallReport {
           s""""nlist":8,"m":8,"ksub":32,"cluster_r2":${fmt(pq.clusterR2)},""" +
             s""""nprobe":${pq.autoNprobe},"nprobe_rule":"autoNprobe(R2)",""" +
             s""""poolK":${pq.autoPoolK(k)},"poolK_rule":"autoPoolK(k)"""",
-          _ => dirBytes(pqDir),
+          _ => indexBytes(spark, pqDir),
           (c, _, p, kk) => pq.topK(c, p, kk)), // auto nprobe/poolK
         Variant("pca16", "q_ann_topk_pca",
           s""""k":16,"evr":${fmt(pca.explainedVarianceRatio)},""" +
@@ -150,7 +156,7 @@ object RecallReport {
         Variant("ivf_flat", "(library: IvfIndex)",
           s""""nlist":8,"cluster_r2":${fmt(ivf.clusterR2)},""" +
             s""""nprobe":${ivf.autoNprobe},"nprobe_rule":"autoNprobe(R2)"""",
-          _ => dirBytes(ivfDir),
+          _ => indexBytes(spark, ivfDir),
           (c, _, p, kk) => ivf.topK(p, kk))) // auto nprobe
 
       // deterministic probe panel: the nProbes smallest vec_ids

@@ -82,12 +82,13 @@ object CorpusCuration {
 
     val deduped = if (!nearDup) Dedup.exact(filtered, idCol, textCol)
     else {
-      // The exact-dedup survivors feed the near-dup stage in THREE places
-      // (signature scan, candidate-shingle semi-join, final survivor
-      // anti-join). Persist once so the annotate+filter+dedup chain runs
-      // one time; at 100 TB this is the natural parquet checkpoint
-      // between the exact and near stages. Cache lives as long as the
-      // returned lazy plan — clearCache() between unrelated corpora.
+      // The exact-dedup survivors feed the near-dup stage in TWO places
+      // inside the pair call (signature scan, candidate-shingle
+      // semi-join) and once after it (final survivor anti-join). Persist
+      // once so the annotate+filter+dedup chain runs one time; at 100 TB
+      // this is the natural parquet checkpoint between the exact and
+      // near stages. Cache lives as long as the returned lazy plan —
+      // clearCache() between unrelated corpora.
       val exactDeduped = Dedup.exact(filtered, idCol, textCol).persist()
       // nearDupExact swaps MinHash candidates for the exact-threshold
       // pair graph — survivors become a deterministic function of the

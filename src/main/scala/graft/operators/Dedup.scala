@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   *  - Hot buckets (boilerplate shingles, empty docs) are capped: buckets
   *    larger than `maxBucket` are dropped from candidacy — standard LSH
   *    practice, and the skew guard that keeps one pathological key from
-  *    stalling a 1000-executor join.
+  *    stalling a 1000-executor join. The MinHash self-join paths apply
+  *    the cap inside their one (band, bucket) aggregate (`lshSelfJoin`),
+  *    which never buffers more than `maxBucket` ids per bucket.
   */
 object Dedup {
 
@@ -38,18 +40,18 @@ object Dedup {
     *
     * Pipeline: fused text→signature scan (one codegen'd pass per doc, no
     * shingle materialization — see MinHashTextSig) → band into `bands`
-    * buckets → self-join per (band, bucket) → exact Jaccard verify, with
-    * shingles recomputed ONLY for candidate pairs. At 100 TB the
-    * full-corpus pass therefore reads text and emits k longs per doc;
-    * the shingle arrays exist only for the (tiny) candidate set.
-    * Returns (idA, idB, jaccard) with idA < idB, jaccard ≥ threshold.
+    * buckets → the one capped bucket aggregate of [[lshSelfJoin]] →
+    * exact Jaccard verify, with shingles recomputed ONLY for candidate
+    * pairs. At 100 TB the full-corpus pass therefore reads text and
+    * emits k longs per doc; the shingle arrays exist only for the (tiny)
+    * candidate set. Returns (idA, idB, jaccard) with idA < idB,
+    * jaccard ≥ threshold.
     *
-    * Caching: the signature frame stays persisted for the lifetime of the
-    * returned (lazy) plan — it backs both self-join sides (without the
-    * persist, projection collapse would inline the signature into each of
-    * the `bands` band keys on both sides: measured 139 s → 3 s at sf0.1).
-    * Long-lived sessions should `spark.catalog.clearCache()` (or
-    * unpersist after consuming the result) between unrelated corpora.
+    * Caching: the call runs EAGERLY and returns the verified pair frame
+    * persisted and materialized, owned by the caller — unpersist it
+    * once everything derived from it has materialized. Its internal
+    * caches (candidate pairs, candidate shingles) are released before it
+    * returns, so nothing else stays behind in the session.
     */
   def minhashNearDup(
       df: DataFrame,
@@ -61,41 +63,52 @@ object Dedup {
       threshold: Double = 0.8,
       seed: Long = 42L,
       maxBucket: Int = 1000): DataFrame = {
-
-    val sig = df
+    // separate projection: graft_sig is referenced `bands` times by
+    // bandKeys' slices, so CollapseProject keeps it — the signature
+    // kernel runs once per row, not once per band
+    val banded = df
       .select(
         col(idCol).as("graft_id"),
         minhashTextSignature(col(textCol), shingleN, numHashes, seed).as("graft_sig"))
-      .persist()
-
-    val banded = sig
       .select(col("graft_id"),
         explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
-      .select(col("graft_id"), col("graft_band.band"), col("graft_band.bucket"))
+    lshSelfJoin(df, idCol, textCol, banded, shingleN, threshold, maxBucket)
+  }
 
-    // Skew guard: drop buckets too common to be informative. (A count
-    // window over (band, bucket) would fold guard and join into one
-    // exchange, but WindowExec SORTS each partition — strictly worse than
-    // this hash aggregate + semi-join at scale; measured a wash locally.)
-    val smallBuckets = banded
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket && col("n") >= 2)
-      .select("band", "bucket")
-
-    // STRUCTURAL guard: prune hot/singleton buckets BEFORE the self-join,
-    // so a pathological bucket can never materialize its O(n²) pairs. (A
-    // semi-join applied after the self-join only works if the optimizer
-    // pushes it below the join — correct today, but plan-shape-dependent;
-    // this formulation is safe under any plan.)
-    val pruned = banded.join(smallBuckets, Seq("band", "bucket"), "left_semi")
-
-    val candidates = pruned.as("l")
-      .join(pruned.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.graft_id") < col("r.graft_id"))
-      .select(col("l.graft_id").as("id_a"), col("r.graft_id").as("id_b"))
+  /** The LSH self-join core shared by [[minhashNearDup]] and
+    * [[minhashNearDupReplayableReleasable]], which differ only in how
+    * `banded` (graft_id, graft_band: struct<band, bucket>) is keyed.
+    *
+    *  - ONE exchange over the band rows: a group-by on (band, bucket)
+    *    whose [[org.apache.spark.sql.graft.CappedIdsAgg]] applies the
+    *    skew guard — buckets of fewer than 2 or more than `maxBucket`
+    *    ROWS (null ids count) are dropped, never buffered whole — and
+    *    hands back the bucket's sorted ids, from which the
+    *    id_a < id_b pairs are generated in the same pass.
+    *  - The distinct candidate pairs are materialized ONCE; the exact
+    *    verify recomputes shingles for candidate docs only.
+    *  - Eager and caller-owned: the verified pairs come back persisted
+    *    and materialized, the internal caches already released (the
+    *    [[dedupAgainstFrozen]] convention).
+    */
+  private[operators] def lshSelfJoin(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      banded: DataFrame,
+      shingleN: Int,
+      threshold: Double,
+      maxBucket: Int): DataFrame = {
+    val candidates = banded
+      .groupBy(col("graft_band.band"), col("graft_band.bucket"))
+      .agg(org.apache.spark.sql.graft.CappedIdsAgg
+        .cappedIds(col("graft_id"), maxBucket).as("graft_ids"))
+      .select(col("graft_ids"), posexplode(col("graft_ids")).as(Seq("graft_pos", "id_a")))
+      .select(col("id_a"), explode(slice(col("graft_ids"), col("graft_pos") + 2,
+        size(col("graft_ids")) - col("graft_pos") - 1)).as("id_b"))
       .distinct()
-
+      .persist()
+    candidates.count()
     // Exact verify: shingles are recomputed for candidate DOCS only. The
     // semi-join against candidate ids sits BELOW the shingle projection,
     // so the expensive shingling touches the few docs that reached
@@ -108,7 +121,7 @@ object Dedup {
       .join(candIds, Seq(idCol), "left_semi")
       .select(col(idCol).as("graft_id"), sort_array(array_distinct(shingles(col(textCol), shingleN))).as("graft_sh"))
       .persist()
-    candidates
+    val pairs = candidates
       .join(candShingles.select(col("graft_id").as("id_a"), col("graft_sh").as("sh_a")), "id_a")
       .join(candShingles.select(col("graft_id").as("id_b"), col("graft_sh").as("sh_b")), "id_b")
       // sorted-distinct arrays -> merge-walk jaccard (bit-equal to the
@@ -116,28 +129,34 @@ object Dedup {
       .withColumn("jaccard", jaccardSortedDistinct(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+      .persist()
+    pairs.count()
+    candidates.unpersist()
+    candShingles.unpersist()
+    pairs
   }
 
   /** ORACLE-REPLAYABLE [[minhashNearDup]] (r13 promotion pattern): the
-    * same LSH-banded pipeline — signature, band keys, capped buckets,
-    * self-join, exact Jaccard verify — but built entirely from stages
-    * DuckDB SQL replays bit-identically:
+    * same LSH core — signature, band keys, capped buckets, pairs, exact
+    * Jaccard verify — but keyed entirely by stages DuckDB SQL replays
+    * bit-identically:
     *
     *  - base hash per shingle = 32-bit md5 prefix
     *    ([[graft.functions.TextFunctions.md5Base32]]);
     *  - permutations h_i(x) = (a_i·x + b_i) mod (2³¹−1) with md5-derived
     *    literal coefficients — exact int64, no overflow, no float;
     *  - band key = the band's signature VALUE slice itself (no second
-    *    hash), joined on array equality;
+    *    hash), grouped on array equality;
     *  - hot-bucket cap replayed as HAVING COUNT(*) BETWEEN 2 AND max.
     *
     * The candidate set is therefore a deterministic pure function of the
     * corpus both engines compute identically, and the verify applies the
     * exact shingle Jaccard at the round-4 parity point — which is what
     * lets q_minhash_pairs graduate from rows-only to hash-gated. Same
-    * 100 TB shape as the production path: band-key equi-join, capped
-    * buckets, shingles recomputed for candidate docs only. The fused
-    * xxhash64 kernel ([[minhashNearDup]]) stays the throughput path. */
+    * 100 TB shape as the production path: one capped band aggregate,
+    * shingles recomputed for candidate docs only. The fused xxhash64
+    * kernel ([[minhashNearDup]]) stays the throughput path. Eager and
+    * caller-owned like [[minhashNearDup]]. */
   def minhashNearDupReplayable(
       df: DataFrame,
       idCol: String,
@@ -150,14 +169,14 @@ object Dedup {
     minhashNearDupReplayableReleasable(
       df, idCol, textCol, numHashes, bands, shingleN, threshold, maxBucket)._1
 
-  /** [[minhashNearDupReplayable]] plus an explicit release handle for its
-    * two internal caches (signatures, candidate shingles) — same contract
-    * as [[prefixJaccardNearDupReleasable]]: retention is the right
-    * default for repeated queries over ONE corpus; a long-lived session
-    * churning many corpora must release per corpus or storage memory
-    * grows without bound (DedupCacheReleaseSpec measures the return to
-    * baseline). Call release() only after every derived plan has
-    * materialized. */
+  /** [[minhashNearDupReplayable]] plus a release handle for the one
+    * cache the call leaves behind: its returned pair frame, persisted and
+    * materialized before the call returns (the internal signature and
+    * shingle caches are already gone by then). `release()` unpersists
+    * it — a long-lived session churning many corpora calls it per corpus
+    * once everything derived from the pairs has materialized, or storage
+    * memory grows without bound (PpjoinReleaseSpec measures the return
+    * to baseline). */
   def minhashNearDupReplayableReleasable(
       df: DataFrame,
       idCol: String,
@@ -173,49 +192,18 @@ object Dedup {
     // shingle + k multiply-add-mods, whole-stage codegen) — bit-identical
     // to the composed minhashSignatureReplayable(shingles(...)) form the
     // oracle SQL replays; parity pinned in Md5KernelParitySpec.
-    val sig = df
+    val banded = df
       .select(
         col(idCol).as("graft_id"),
         org.apache.spark.sql.graft.Md5Expressions
           .md5MinhashText(col(textCol), shingleN, numHashes)
           .as("graft_sig"))
-      .persist()
-    val banded = sig
       .select(col("graft_id"), explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"),
           slice(col("graft_sig"), b * rows + 1, rows).as("bucket"))
       }: _*)).as("graft_band"))
-      .select(col("graft_id"), col("graft_band.band"), col("graft_band.bucket"))
-    // Bucket cap as a WINDOW count rather than groupBy + semi-join-back:
-    // one exchange on (band, bucket) instead of three, and the self-join
-    // below joins on the same keys so it reuses that exchange's
-    // partitioning (ReusedExchange on the second side). Same set algebra
-    // the oracle replays as HAVING COUNT(*) BETWEEN 2 AND maxBucket.
-    val bucketWin = org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")
-    val pruned = banded
-      .withColumn("graft_n", count(lit(1)).over(bucketWin))
-      .filter(col("graft_n") <= maxBucket && col("graft_n") >= 2)
-      .drop("graft_n")
-    val candidates = pruned.as("l")
-      .join(pruned.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.graft_id") < col("r.graft_id"))
-      .select(col("l.graft_id").as("id_a"), col("r.graft_id").as("id_b"))
-      .distinct()
-    val candIds = candidates.select(col("id_a").as(idCol))
-      .unionByName(candidates.select(col("id_b").as(idCol)))
-      .distinct()
-    val candShingles = df.select(col(idCol), col(textCol))
-      .join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol).as("graft_id"), sort_array(array_distinct(shingles(col(textCol), shingleN))).as("graft_sh"))
-      .persist()
-    val result = candidates
-      .join(candShingles.select(col("graft_id").as("id_a"), col("graft_sh").as("sh_a")), "id_a")
-      .join(candShingles.select(col("graft_id").as("id_b"), col("graft_sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccardSortedDistinct(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    (result, () => { sig.unpersist(); candShingles.unpersist(); () })
+    val pairs = lshSelfJoin(df, idCol, textCol, banded, shingleN, threshold, maxBucket)
+    (pairs, () => { pairs.unpersist(); () })
   }
 
   /** Cross-corpus near-dup filter: the rows of `corpus` with NO
@@ -252,7 +240,7 @@ object Dedup {
   /** [[dedupAgainst]] plus an explicit release handle for its one
     * internal cache (the candidate-pair frame, consumed by both
     * semi-join prunes and the verify join) — the
-    * [[minhashNearDupReplayableReleasable]] contract: retention is the
+    * [[prefixJaccardNearDupReleasable]] contract: retention is the
     * right default for repeated queries over one corpus pair; long
     * multi-corpus sessions release per pair. Call release() only after
     * the returned plan has materialized. */
@@ -267,8 +255,8 @@ object Dedup {
       bands: Int = 64,
       seed: Long = 42L,
       maxBucket: Int = 1000): (DataFrame, () => Unit) = {
-    // Bucket cap as a WINDOW count (r19 — the minhashNearDupReplayable
-    // spelling, per the r18 advice): the previous groupBy + semi-join cap
+    // Bucket cap as a WINDOW count (r19 — the spelling the MinHash
+    // self-join then used, per the r18 advice): the previous groupBy + semi-join cap
     // consumed each side's banded pipeline TWICE, which is why r18-opt
     // persisted the signature frames — persists that then leaked with no
     // release handle. The window spelling scans each side's 128-hash
@@ -1908,12 +1896,10 @@ object Dedup {
       bands: Int = 16,
       shingleN: Int = 3,
       seed: Long = 42L): DataFrame = {
-    // Persist the (tiny) pair list: nearDupClusters reads it twice to
-    // build the undirected edge list and then iterates — without the
-    // persist every loop round would re-run the whole LSH pipeline.
-    val pairs = minhashNearDup(df, idCol, textCol, numHashes, bands, shingleN, threshold, seed)
-      .persist()
-    dropClusterLosers(df, idCol, pairs)
+    // minhashNearDup hands back its (tiny) pair list persisted and
+    // materialized; dropClusterLosers unpersists it after clustering
+    dropClusterLosers(df, idCol,
+      minhashNearDup(df, idCol, textCol, numHashes, bands, shingleN, threshold, seed))
   }
 
   /** [[dedupNear]] with the EXACT-threshold pair graph

@@ -1041,7 +1041,7 @@ object StreamOps {
       .filter(col("n") <= maxBucket)
       .select("band", "bucket")
 
-    val (admitted, candidates) = nearDupAdmitCore(
+    val (admitted, releaseCore) = nearDupAdmitCore(
       batch, idCol, textCol, sigB, bandB, history, bandH, smallBuckets,
       // manifest-stats file pruning on top of the pushed range cover:
       // the candidate ids' gap-split ranges drop whole files whose
@@ -1080,7 +1080,7 @@ object StreamOps {
     sigA.unpersist()
     sigB.unpersist()
     history.unpersist()
-    candidates.unpersist()
+    releaseCore()
     admitted
   }
 
@@ -1140,8 +1140,9 @@ object StreamOps {
     * `maxVerifyFetch` ids, fall back to the full-scan join against
     * `history`.
     *
-    * Returns (admitted [persisted], candidates [persisted]) — the caller
-    * unpersists both after its writes materialize them. */
+    * Returns (admitted [persisted], release) — release drops the core's
+    * inner caches (the history candidates and the within-batch pair
+    * frame); the caller runs it after its writes materialize admitted. */
   private def nearDupAdmitCore(
       batch: DataFrame,
       idCol: String,
@@ -1157,7 +1158,7 @@ object StreamOps {
       bands: Int,
       shingleN: Int,
       threshold: Double,
-      maxVerifyFetch: Int): (DataFrame, DataFrame) = {
+      maxVerifyFetch: Int): (DataFrame, () => Unit) = {
     val candidates = bandB
       .join(bandH.join(smallBuckets, Seq("band", "bucket"), "left_semi"),
         Seq("band", "bucket"))
@@ -1199,7 +1200,7 @@ object StreamOps {
     val admitted = batch
       .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
       .persist()
-    (admitted, candidates)
+    (admitted, () => { candidates.unpersist(); batchPairs.unpersist(); () })
   }
 
   /** Read a log store (or one sub-table) at a pinned version from an

@@ -489,4 +489,110 @@ class DedupSpec extends AnyFunSuite {
       .as[(String, String)].collect().toMap
     assert(dist == Map("a" -> "a", "b" -> "a", "c" -> "a", "y" -> "y", "z" -> "y"))
   }
+
+  // ---- the MinHash LSH core: bucket cap, null ids, empty input, parity
+
+  /** `groups(k)` docs share one text, so they share a bucket in every
+    * band; texts of different groups share no shingle. */
+  private def capCorpus(groups: Seq[Seq[java.lang.Long]]) = {
+    val rows = groups.zipWithIndex.flatMap { case (ids, g) =>
+      val text = (0 until 12).map(w => s"g${g}w$w").mkString(" ")
+      ids.map(id => (id, text))
+    }
+    rows.toDF("doc_id", "text")
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame) =
+    df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+
+  private def allPairs(ids: Long*) =
+    (for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+
+  test("LSH core cap: buckets of 1, 2 and maxBucket members pair up, " +
+    "a maxBucket + 1 bucket adds nothing, for both keyings") {
+    val L = (x: Long) => java.lang.Long.valueOf(x)
+    val docs = capCorpus(Seq(Seq(L(1)), Seq(L(2), L(3)),
+      Seq(L(4), L(5), L(6), L(7)), Seq(L(8), L(9), L(10), L(11), L(12))))
+    val want = allPairs(2, 3) ++ allPairs(4, 5, 6, 7)
+    assert(pairSet(Dedup.minhashNearDup(docs, "doc_id", "text",
+      numHashes = 32, bands = 8, maxBucket = 4)) == want)
+    assert(pairSet(Dedup.minhashNearDupReplayable(docs, "doc_id", "text",
+      numHashes = 32, bands = 8, maxBucket = 4)) == want)
+    assert(pairSet(Dedup.minhashNearDup(docs, "doc_id", "text",
+      numHashes = 32, bands = 8, maxBucket = 5)) == want ++ allPairs(8, 9, 10, 11, 12))
+  }
+
+  test("LSH core cap: null ids count toward the bucket size but never pair") {
+    val L = (x: Long) => java.lang.Long.valueOf(x)
+    val docs = capCorpus(Seq(
+      Seq(L(50), L(51), null, null, null), // 5 rows: over a cap of 4
+      Seq(L(60), L(61), null, null), // 4 rows: at the cap
+      Seq(L(70), null))) // 2 rows, one id
+    val want = allPairs(60, 61)
+    assert(pairSet(Dedup.minhashNearDup(docs, "doc_id", "text",
+      numHashes = 32, bands = 8, maxBucket = 4)) == want)
+    assert(pairSet(Dedup.minhashNearDupReplayable(docs, "doc_id", "text",
+      numHashes = 32, bands = 8, maxBucket = 4)) == want)
+  }
+
+  test("LSH core cap on hand-built band rows: an over-cap bucket adds no " +
+    "pairs, but a pair it holds still appears when another band joins it") {
+    val rows = Seq(
+      (0, 7L, Seq[java.lang.Long](1L, 2L, 3L, 4L, 5L)), // 5 rows: over cap 4
+      (1, 8L, Seq[java.lang.Long](1L, 2L)), // band 1 re-joins (1, 2)
+      (1, 9L, Seq[java.lang.Long](3L)), // singleton
+      (2, 10L, Seq[java.lang.Long](10L, 11L, 12L, 13L)), // exactly the cap
+      (2, 11L, Seq[java.lang.Long](20L, 21L, null, null, null)), // nulls push it over
+      (3, 12L, Seq[java.lang.Long](30L, null, null)) // one id: no pair
+    ).flatMap { case (band, bucket, ids) => ids.map(id => (id, band, bucket)) }
+      .toDF("graft_id", "band", "bucket")
+      .select(col("graft_id"), struct(col("band"), col("bucket")).as("graft_band"))
+    val docs = Seq(1L, 2L, 3L, 4L, 5L, 10L, 11L, 12L, 13L, 20L, 21L, 30L)
+      .map(id => (id, "same words for every doc")).toDF("doc_id", "text")
+    val pairs = Dedup.lshSelfJoin(docs, "doc_id", "text", rows,
+      shingleN = 3, threshold = 0.0, maxBucket = 4)
+    assert(pairSet(pairs) == allPairs(1, 2) ++ allPairs(10, 11, 12, 13))
+    pairs.unpersist()
+  }
+
+  test("LSH core: empty input returns no pairs for both keyings") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(Dedup.minhashNearDup(empty, "doc_id", "text").count() == 0)
+    assert(Dedup.minhashNearDupReplayable(empty, "doc_id", "text").count() == 0)
+  }
+
+  /** Order-free digest of a (id_a, id_b, jaccard) pair frame. */
+  private def digest(df: org.apache.spark.sql.DataFrame): String = {
+    val lines = df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)]
+      .collect().map { case (a, b, j) => s"$a,$b,$j" }.sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.mkString("\n").getBytes("UTF-8"))
+    s"${lines.length}:" + md.take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("LSH core parity: pair sets with Jaccard on the fixture documents " +
+    "and a FixtureMorph seed equal the pre-core pipeline's, both keyings") {
+    val base = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    val inputs = Seq("sf0.001" -> base,
+      "morph101" -> graft.FixtureMorph.documents(base, 101L))
+    val got = inputs.flatMap { case (name, docs) => Seq(
+      s"$name/xx" -> Dedup.minhashNearDup(docs, "doc_id", "text"),
+      s"$name/xx-low" -> Dedup.minhashNearDup(docs, "doc_id", "text",
+        numHashes = 128, bands = 64, threshold = 0.3, maxBucket = 3),
+      s"$name/md5" -> Dedup.minhashNearDupReplayable(docs, "doc_id", "text"),
+      s"$name/md5-low" -> Dedup.minhashNearDupReplayable(docs, "doc_id", "text",
+        numHashes = 64, bands = 32, threshold = 0.3, maxBucket = 3))
+    }.map { case (k, df) => k -> digest(df) }.toMap
+    // captured from the band → cap → self-join pipeline this core replaced
+    val want = Map(
+      "sf0.001/xx" -> "28:2bbbfd6be3d68c39",
+      "sf0.001/xx-low" -> "27:3e6fa7675d751ebc",
+      "sf0.001/md5" -> "28:2bbbfd6be3d68c39",
+      "sf0.001/md5-low" -> "22:3190185039f5a423",
+      "morph101/xx" -> "27:dfa5eceee4c2d770",
+      "morph101/xx-low" -> "27:9ef8c0bbef90541c",
+      "morph101/md5" -> "27:dfa5eceee4c2d770",
+      "morph101/md5-low" -> "24:0dfc58d6f7fd3c8d")
+    assert(got == want)
+  }
 }

@@ -238,4 +238,25 @@ class StreamDedupSpec extends AnyFunSuite {
       assert(admitted.sorted.toSeq == Seq(10L, 11L), admitted)
     } finally q.stop()
   }
+
+  test("per-batch caches are released: the persisted-RDD set is back at " +
+    "its baseline after each of 4 near-dup batches") {
+    import spark.implicits._
+    val store = tmp() + "/sigs"
+    def cachedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val baseline = cachedIds
+    for (b <- 0 until 4) {
+      // each batch holds a within-batch near-dup pair and one doc that
+      // near-dups history, so every branch of the admission runs
+      val id = 100L * (b + 1)
+      val batch = Seq(Doc(id, edit(s"day$b")), Doc(id + 1, edit(s"night$b")),
+        Doc(id + 2, s"$other batch $b")).toDF()
+      val admitted = StreamOps.applyNearDupBatch(batch, store, b.toLong)
+      val ids = admitted.select("doc_id").as[Long].collect().toSet
+      admitted.unpersist()
+      assert(!ids.contains(id + 1), s"batch $b admitted $ids")
+      assert(cachedIds == baseline,
+        s"batch $b left ${(cachedIds -- baseline).size} RDDs persisted")
+    }
+  }
 }
