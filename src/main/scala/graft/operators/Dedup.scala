@@ -91,7 +91,7 @@ object Dedup {
     *    and materialized, the internal caches already released (the
     *    [[dedupAgainstFrozen]] convention).
     */
-  private[operators] def lshSelfJoin(
+  private[graft] def lshSelfJoin(
       df: DataFrame,
       idCol: String,
       textCol: String,

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import graft.operators.{CommitLog, Swap}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -889,201 +891,6 @@ object StreamOps {
     (q, frozen.release)
   }
 
-  /** Incremental corpus near-dup dedup: each micro-batch of documents is
-    * checked against a persistent MinHash-signature store of everything
-    * ever admitted; near-dups of history (and within the batch) are
-    * dropped, and the admitted docs' signatures append to the store.
-    * This is continuous-ingestion dedup — the batch operator re-run over
-    * the full corpus per day does not scale; this touches only
-    * batch × LSH-bucket-mates.
-    *
-    * Cross-batch similarity is ESTIMATED from signature agreement (the
-    * store holds k-long signatures, never text — at 100 TB the store is
-    * the only thing that persists, and it is fixed-width per doc); the
-    * MinHash estimator's error is ~1/√k. Within-batch dedup has the text
-    * in hand and verifies exactly.
-    *
-    * Exactly-once admissions without a marker: admitted signatures land
-    * in a `batch=<id>` hive partition REPLACED per attempt, and the
-    * history join excludes rows of the current batchId — a replayed
-    * batch dedups against strictly-older history, recomputes the same
-    * admitted set, and replaces its own partition idempotently. */
-  def nearDupStream(
-      docs: DataFrame,
-      storePath: String,
-      checkpoint: String,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleN: Int = 3,
-      threshold: Double = 0.8,
-      maxBucket: Int = 1000,
-      maintainEvery: Int = 32)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = applyNearDupBatch(batch, storePath, batchId, idCol,
-          textCol, numHashes, bands, shingleN, threshold, maxBucket)
-        try sink(admitted, batchId)
-        // per-batch caches must not accumulate across a long-running
-        // stream — admitted is the last one standing (the inner ones are
-        // released inside applyNearDupBatch)
-        finally admitted.unpersist()
-        // periodic store maintenance: fold the one-dir-per-trigger
-        // batch partitions so per-batch read cost stays O(compacted +
-        // recent deltas) instead of O(#triggers ever). Runs AFTER the
-        // sink — a crash mid-fold recovers on the next batch.
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          maintainNearDupStore(batch.sparkSession, storePath)
-      }
-      .start()
-
-  /** The per-batch step behind [[nearDupStream]] (driveable directly in
-    * tests and backfills). Returns the admitted rows of `batch`.
-    *
-    * Store layout: one commit-log root holds three tables (all folded
-    * by [[maintainNearDupStore]]):
-    *
-    * {{{
-    * store/_log/...            numbered manifests (truth; the LSH config
-    *                           and the replay high-water mark ride meta)
-    * store/sigs/batch=<id>/    admitted MinHash signatures
-    * store/bands/batch=<id>/   their exploded LSH band keys
-    * store/buckets/batch=<id>/ partial bucket counts per batch
-    * }}}
-    *
-    * ONE manifest admits a batch's signatures, band keys and bucket
-    * partials ATOMICALLY, and commits carry
-    * [[graft.operators.CommitLog.SerialToken]], so any concurrent writer
-    * (second stream, backfill, maintenance) loses the CAS race loudly
-    * with a ConflictException instead of corrupting admissions — the
-    * foreachBatch retry then replays the batch against the new tip.
-    * Reads pin the version the admission decisions were computed
-    * against, so a fold landing mid-batch cannot shift history under
-    * the verify join. Replays retire-and-replace the batch's own dirs in
-    * the same commit. A legacy store (signatures in root-level
-    * `batch=<id>` dirs, with or without the `<store>.bands` /
-    * `<store>.buckets` sibling roots) is refused before anything touches
-    * it: rebuild it by replay.
-    *
-    * The band/bucket tables are what keep the per-batch cost from
-    * growing with corpus history: without them every trigger re-exploded
-    * the ENTIRE signature store (x bands) and re-aggregated the bucket
-    * histogram from scratch — O(history) work per micro-batch, growing
-    * forever under trickle ingest. Band keys and bucket counts of an
-    * admitted batch never change, so they are written once at admission
-    * and only READ afterwards; after a maintenance fold the bucket scan
-    * is O(distinct buckets + recent deltas), not O(all signatures ever).
-    * The verify join's history read pushes the candidate id set into
-    * the parquet scan as an In filter when it is small (the common case
-    * — bounded by batch size × bucket cap): maintenance folds SORT the
-    * store by graft_id, so row-group min/max stats skip the bulk of a
-    * years-old store and the read approximates an indexed fetch. Above
-    * `maxVerifyFetch` ids it falls back to the full-scan join. */
-  def applyNearDupBatch(
-      batch: DataFrame,
-      storePath: String,
-      batchId: Long,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 128,
-      bands: Int = 16,
-      shingleN: Int = 3,
-      threshold: Double = 0.8,
-      maxBucket: Int = 1000,
-      maxVerifyFetch: Int = 100000): DataFrame = {
-    import graft.functions.TextFunctions._
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    refuseLegacyNearDupStore(fs, store)
-    CommitLog.adopt(spark, store)
-    val baseV = CommitLog.currentVersion(fs, store)
-    val tipMeta = CommitLog.tipMeta(fs, store)
-    if (baseV > 0) requireLogConfig(tipMeta, storePath, numHashes, bands, shingleN)
-    requireReplayable(batchId,
-      tipMeta.get("maxBatch").map(_.toLong).getOrElse(-1L), storePath)
-
-    // one fused text→signature pass over the batch
-    val sigB = batch.select(
-      col(idCol).as("graft_id"),
-      minhashTextSignature(col(textCol), shingleN, numHashes).as("graft_sig"))
-      .persist()
-    val bandB = sigB.select(col("graft_id"),
-      explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
-      .select(col("graft_id"), col("graft_band.band"), col("graft_band.bucket"))
-
-    // history = the pinned snapshot at baseV, minus the current batch
-    // (same-batch exclusion keeps replays idempotent — a prior attempt's
-    // own rows must not flag the recomputed batch as dups of itself)
-    val sigsHist = CommitLog.readSub(spark, store, "sigs", Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = sigsHist.isDefined
-    val history = sigsHist
-      .map(_.select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig")))
-      .getOrElse(sigB
-        .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
-        .limit(0))
-      .persist()
-    val bandH = CommitLog.readSub(spark, store, "bands", Some(baseV))
-      .map(_.filter(col("batch") =!= batchId).select("hist_id", "band", "bucket"))
-      .getOrElse(history
-        .select(col("hist_id"), lit(0).as("band"), lit(0L).as("bucket"))
-        .limit(0))
-    val smallBuckets = CommitLog.readSub(spark, store, "buckets", Some(baseV))
-      .map(_.filter(col("batch") =!= batchId)
-        .groupBy("band", "bucket").agg(sum("n").as("n")))
-      .getOrElse(bandH.groupBy("band", "bucket").agg(count(lit(1)).as("n")))
-      .filter(col("n") <= maxBucket)
-      .select("band", "bucket")
-
-    val (admitted, releaseCore) = nearDupAdmitCore(
-      batch, idCol, textCol, sigB, bandB, history, bandH, smallBuckets,
-      // manifest-stats file pruning on top of the pushed range cover:
-      // the candidate ids' gap-split ranges drop whole files whose
-      // recorded graft_id range cannot match
-      candIds => prunedRead(spark, store, Some("sigs"), baseV, idRanges(candIds))
-        .map(_.filter(col("batch") =!= batchId))
-        .getOrElse(history.select(
-          col("hist_id").as("graft_id"), col("hist_sig").as("graft_sig"))
-          .limit(0)),
-      hasHistory, numHashes, bands, shingleN, threshold, maxVerifyFetch)
-
-    // stage all three tables, publish ONE manifest. The writes also
-    // materialize the admitted cache, so the inner caches release here.
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    val sigA = sigB
-      .join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
-      .persist()
-    sigA.write.parquet(
-      new org.apache.hadoop.fs.Path(staging, s"sigs/batch=$batchId").toString)
-    val bandA = sigA.select(col("graft_id").as("hist_id"),
-      explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
-      .select(col("hist_id"), col("graft_band.band"), col("graft_band.bucket"))
-    bandA.write.parquet(
-      new org.apache.hadoop.fs.Path(staging, s"bands/batch=$batchId").toString)
-    bandA.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"buckets/batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(
-        s"sigs/batch=$batchId", s"bands/batch=$batchId", s"buckets/batch=$batchId"),
-      wholeStore = false,
-      meta = nearDupLogMeta(numHashes, bands, shingleN, batchId),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_id")) // band/bucket files lack it → no stats
-    sigA.unpersist()
-    sigB.unpersist()
-    history.unpersist()
-    releaseCore()
-    admitted
-  }
-
   /** Per-micro-batch distribution drift against PINNED baselines — the
     * streaming form of [[graft.operators.Drift]]: score every trigger's
     * rows against the distribution the curation thresholds (or the
@@ -1123,148 +930,193 @@ object StreamOps {
       .start()
   }
 
-  /** The candidate → verify → admit middle of [[applyNearDupBatch]] —
-    * everything between "history frames are in hand" and "write the
-    * admitted rows".
+  // ------------------------------------------------------- admission stores
+
+  /** A streaming ADMISSION STORE: each micro-batch is checked against
+    * everything admitted so far, its survivors land in a persistent
+    * commit-log store, and the sink receives only the admitted rows —
+    * continuous-ingestion dedup that touches batch × bucket mates, never
+    * the corpus. Five families share ONE lifecycle ([[admitBatch]],
+    * [[foldStore]], [[admissionStream]]) and supply only what differs:
     *
-    * History signatures for the verify join: the candidate id set is
-    * bounded by batch size × maxBucket, so in the common case it is tiny
-    * relative to the store — push it into the parquet read (maintenance
-    * folds sort the store by graft_id, so row-group min/max stats skip
-    * the bulk of years-old history and the read approximates an indexed
-    * fetch). Above spark.sql.parquet.pushdown.inFilterThreshold an In
-    * predicate pushes only as ONE [min,max] range, which prunes nothing
-    * when candidates span the id space — so a gap-split OR-of-BETWEEN
-    * cover over the sorted ids is pushed alongside the exact In filter;
-    * the cover is a superset, the exact In evaluates residually. Above
-    * `maxVerifyFetch` ids, fall back to the full-scan join against
-    * `history`.
+    *  - keying: the batch's probe keys (band keys, md5 fingerprint,
+    *    hyperplane bucket, packed or frame-folded hamming keys), matched
+    *    against the store's `key` column;
+    *  - verify/admit: the cross-batch check against the fetched history,
+    *    plus the within-batch rule (the larger id of a qualifying pair
+    *    drops, or the min id per identical class survives);
+    *  - store rows: the `tables` written at admission — the MinHash store
+    *    keeps `sigs/`, `bands/` and `buckets/` under one root, the others
+    *    write the root only;
+    *  - layout meta pinned in the manifest (LSH config, planes/dim,
+    *    `chunks`): a store probed under a different layout would return
+    *    garbage silently, so drift fails loudly and names the keys.
+    *    Semantic knobs (thresholds, `maxHamming`, `minMatchedFrames`)
+    *    stay per call.
     *
-    * Returns (admitted [persisted], release) — release drops the core's
-    * inner caches (the history candidates and the within-batch pair
-    * frame); the caller runs it after its writes materialize admitted. */
-  private def nearDupAdmitCore(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      sigB: DataFrame,
-      bandB: DataFrame,
-      history: DataFrame,
-      bandH: DataFrame,
-      smallBuckets: DataFrame,
-      histSigs: Array[Any] => DataFrame,
-      hasHistory: Boolean,
-      numHashes: Int,
-      bands: Int,
-      shingleN: Int,
-      threshold: Double,
-      maxVerifyFetch: Int): (DataFrame, () => Unit) = {
-    val candidates = bandB
-      .join(bandH.join(smallBuckets, Seq("band", "bucket"), "left_semi"),
-        Seq("band", "bucket"))
-      .select("graft_id", "hist_id").distinct()
-      .persist() // read twice: id-set probe + verify join
-
-    // cap+1 probe, overflow-safe for maxVerifyFetch = Int.MaxValue
-    val capProbe = math.min(maxVerifyFetch.toLong + 1L, Int.MaxValue.toLong).toInt
-    val candIds =
-      if (hasHistory) candidates.select("hist_id").distinct().limit(capProbe)
-        .collect().map(_.get(0))
-      else Array.empty[Any]
-    val histVerify =
-      if (!hasHistory || candIds.isEmpty) history.limit(0)
-      else if (candIds.length <= maxVerifyFetch) {
-        val cover = idCoverFilter(col("graft_id"), candIds)
-        histSigs(candIds)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_id").isInCollection(candIds.toSeq))
-          .select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig"))
-      } else history
-
-    // MinHash estimator: fraction of agreeing signature positions
-    val agree = size(filter(
-      zip_with(col("graft_sig"), col("hist_sig"), (a, b) => a === b),
-      x => x)).cast("double") / numHashes
-    val dupOfHistory = candidates
-      .join(sigB, "graft_id")
-      .join(histVerify, "hist_id")
-      .filter(agree >= threshold)
-      .select(col("graft_id").as(idCol)).distinct()
-
-    // within-batch: the text is in hand — exact-verified LSH pairs, min
-    // id survives (deterministic, matching Dedup.dedupNear's convention)
-    val batchPairs = graft.operators.Dedup.minhashNearDup(
-      batch, idCol, textCol, numHashes, bands, shingleN, threshold)
-    val dupInBatch = batchPairs.select(col("id_b").as(idCol)).distinct()
-
-    val admitted = batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
-      .persist()
-    (admitted, () => { candidates.unpersist(); batchPairs.unpersist(); () })
+    * The protocol: admitted rows land in a `batch=<id>` partition that a
+    * replayed attempt retires and replaces in the same manifest, and the
+    * history read excludes the current batch, so a replay recomputes the
+    * same admissions. Only the NEWEST batch may replay — the manifest's
+    * `maxBatch` high-water mark survives folds, and an older batch id is
+    * refused before anything is touched (its admissions may already sit
+    * in `batch=-1` and would flag the replay as duplicates of itself).
+    * Every commit carries [[graft.operators.CommitLog.SerialToken]], so a
+    * concurrent writer loses the CAS loudly and foreachBatch re-runs the
+    * batch against the new tip; reads pin the version the decisions were
+    * computed against. History is fetched by key: the batch's distinct
+    * probe keys (at most `maxFetch`) prune files by their manifest stats,
+    * push an In filter plus a gap-split range cover into the parquet
+    * scan ([[idCoverFilter]]), and above `maxFetch` keys the read falls
+    * back to a full scan. Maintenance folds every partition but the
+    * newest into one `batch=-1` sorted by `sortCols`, so per-trigger cost
+    * stays O(compacted + recent deltas) and the pushed cover hits tight
+    * row groups. A store written before the commit log is adopted on
+    * first use ([[graft.operators.CommitLog.adopt]], its `<store>.meta`
+    * sidecar seeding version 1's meta) — except a MinHash store, whose
+    * legacy layout differs and is refused by name. */
+  private final case class AdmissionStore(
+      kind: String,
+      tables: Seq[StoreTable],
+      key: String,
+      strictLayout: Boolean = false) {
+    // sub-tables were sibling roots before the log: not adoptable
+    def adoptable: Boolean = tables.forall(_.sub.isEmpty)
   }
 
-  /** Read a log store (or one sub-table) at a pinned version from an
-    * explicitly PRUNED file list: files whose manifest-recorded
-    * stats-column range overlaps none of the candidate `ranges` are
-    * skipped before any footer is opened — manifest-level pruning on
-    * top of the row-group pruning the pushed filters already do. Files
-    * without stats are always kept (conservative). None when no file
-    * survives — no file can contain the candidates. */
-  private[graft] def prunedRead(
-      spark: org.apache.spark.sql.SparkSession,
-      store: org.apache.hadoop.fs.Path,
+  /** One table of an admission store: the root (`sub` = None) or a
+    * sub-table, folded sorted by `sortCols`; `reagg` re-aggregates
+    * partial rows in the fold (otherwise its row count is checked). */
+  private final case class StoreTable(
       sub: Option[String],
-      version: Long,
-      ranges: Option[Seq[(Any, Any)]]): Option[DataFrame] = {
-    import graft.operators.CommitLog
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = CommitLog.snapshotFilesWithStats(fs, store, version)
-    val slice = sub.fold(all)(s0 => all.filter(_._1.startsWith(s0 + "/")))
-    if (slice.isEmpty) return None
-    val kept = ranges match {
-      case None => slice
-      case Some(rs) => slice.filter { case (_, st) =>
-        st.forall(s => rs.exists { case (lo, hi) => s.overlaps(lo, hi) })
-      }
-    }
-    if (kept.isEmpty) None
-    else {
-      val basePath = sub.fold(store)(s0 => new org.apache.hadoop.fs.Path(store, s0))
-      Some(spark.read.option("basePath", basePath.toString)
-        .parquet(kept.map { case (f, _) =>
-          new org.apache.hadoop.fs.Path(store, f).toString }: _*))
-    }
+      sortCols: Seq[String],
+      reagg: Option[DataFrame => DataFrame] = None) {
+    def prefix: String = sub.fold("")(_ + "/")
+    def dir(batchId: Long): String = s"${prefix}batch=$batchId"
   }
 
-  /** Manifest-meta keys of a near-dup store: the LSH config (validated
-    * per batch in O(1)) and the admission high-water mark (surviving
-    * folds: after a fold only `batch=-1` is live, but the manifest still
-    * knows the newest admitted batch). Carried forward on EVERY commit,
-    * so tipMeta always answers. */
-  private def nearDupLogMeta(
-      numHashes: Int, bands: Int, shingleN: Int, maxBatch: Long) =
-    Map(
-      "numHashes" -> numHashes.toString,
-      "bands" -> bands.toString,
-      "shingleN" -> shingleN.toString,
-      "maxBatch" -> maxBatch.toString)
+  /** A family's parts for one batch, evaluated by the lifecycle in this
+    * order: the probe keys (only when the store has history), the
+    * cross-batch check, the within-batch rule, the store rows. */
+  private trait Keyed {
+    /** the batch's probe keys: one column of values of the store's `key` */
+    def probe: DataFrame
+    /** fetched history rows → the `idCol` ids they make duplicates */
+    def dupOfHistory(history: DataFrame): DataFrame
+    /** the `idCol` ids the within-batch rule drops */
+    def dupInBatch: DataFrame
+    /** admitted rows → one frame per table */
+    def storeRows(admitted: DataFrame): Seq[DataFrame]
+  }
 
-  private def requireLogConfig(
-      meta: Map[String, String],
+  /** The snapshot one batch is admitted against, and the caches its
+    * keying holds until the staged write has materialized `admitted`. */
+  private final class Pinned(
+      spark: SparkSession, store: Path, version: Long, batchId: Long) {
+    private val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def history(sub: Option[String]): Option[DataFrame] =
+      prunedRead(spark, store, sub, version, None)
+        .map(_.filter(col("batch") =!= batchId))
+    def hold(df: DataFrame): DataFrame = { held += df; df }
+    def release(): Unit = held.foreach(_.unpersist())
+  }
+
+  /** Adopt (or refuse) the store, then pin its tip: (version, meta). */
+  private def pinStore(
+      spark: SparkSession, store: Path, spec: AdmissionStore): (Long, Map[String, String]) = {
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (spec.adoptable) CommitLog.adopt(spark, store, Some(new Path(store.toString + ".meta")))
+    else { refuseLegacyNearDupStore(fs, store); CommitLog.adopt(spark, store) }
+    val v = CommitLog.currentVersion(fs, store)
+    (v, if (v == 0) Map.empty else CommitLog.readManifest(fs, store, v).meta)
+  }
+
+  /** The one admission step: adopt → pin → layout check → replay guard →
+    * key → probe → fetch → verify → stage → commit → release. Returns the
+    * admitted rows of `batch`, persisted (the caller unpersists them). */
+  private def admitBatch(
+      batch: DataFrame,
       storePath: String,
-      numHashes: Int,
-      bands: Int,
-      shingleN: Int): Unit =
-    require(
-      meta.get("numHashes").contains(numHashes.toString) &&
-        meta.get("bands").contains(bands.toString) &&
-        meta.get("shingleN").contains(shingleN.toString),
-      s"signature store at $storePath was built with " +
-        s"(numHashes=${meta.getOrElse("numHashes", "?")}, " +
-        s"bands=${meta.getOrElse("bands", "?")}, " +
-        s"shingleN=${meta.getOrElse("shingleN", "?")}), this stream uses " +
-        s"($numHashes, $bands, $shingleN) — rebuild the store or match " +
-        "the configuration")
+      batchId: Long,
+      idCol: String,
+      spec: AdmissionStore,
+      layout: Seq[(String, Option[String])],
+      maxFetch: Int)(
+      family: Pinned => Keyed): DataFrame = {
+    val spark = batch.sparkSession
+    val store = new Path(storePath)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (baseV, meta) = pinStore(spark, store, spec)
+    requireLayout(spec, storePath, meta, layout, versioned = baseV > 0)
+    requireReplayable(batchId, admittedMaxBatch(fs, store, meta, baseV), storePath)
+
+    // the keying caches release after the staged write has materialized
+    // admitted — or on any failure, together with admitted
+    val pinned = new Pinned(spark, store, baseV, batchId)
+    try {
+      val k = family(pinned)
+      val head = spec.tables.head
+      // history presence from the manifest: building the history frame
+      // costs a schema-inference job that only the full-scan fallback needs
+      val hasHistory = CommitLog.snapshotFiles(fs, store, baseV)
+        .exists(_.startsWith(head.prefix))
+      // cap+1 probe, overflow-safe for maxFetch = Int.MaxValue
+      val capProbe = math.min(maxFetch.toLong + 1L, Int.MaxValue.toLong).toInt
+      val keys: Array[Any] =
+        if (!hasHistory) Array.empty
+        else k.probe.distinct().limit(capProbe).collect().map(_.get(0))
+      val fetched =
+        if (keys.isEmpty) None
+        else if (keys.length > maxFetch) pinned.history(head.sub)
+        else {
+          val cover = idCoverFilter(col(spec.key), keys)
+          prunedRead(spark, store, head.sub, baseV, idRanges(keys)).map(_
+            .filter(col("batch") =!= batchId)
+            .where(cover.getOrElse(lit(true)))
+            .filter(col(spec.key).isInCollection(keys.toSeq)))
+        }
+      val inBatch = k.dupInBatch
+      val drops = fetched.map(k.dupOfHistory(_).unionByName(inBatch)).getOrElse(inBatch)
+      val admitted = batch.join(drops.distinct(), Seq(idCol), "left_anti").persist()
+      try {
+        // stage every table, publish ONE manifest
+        val staging = Swap.Suffix.staging(store, Swap.newTag())
+        spec.tables.zip(k.storeRows(admitted)).foreach { case (t, rows) =>
+          rows.write.parquet(new Path(staging, t.dir(batchId)).toString)
+        }
+        CommitLog.commitStaged(spark, store, staging, baseV,
+          retireNames = spec.tables.map(_.dir(batchId)),
+          wholeStore = false,
+          meta = layout.flatMap { case (key, v) => v.orElse(meta.get(key)).map(key -> _) }
+            .toMap + ("maxBatch" -> batchId.toString),
+          extraTouched = Seq(CommitLog.SerialToken),
+          statsCol = Some(spec.key))
+      } catch { case e: Throwable => admitted.unpersist(); throw e }
+      admitted
+    } finally pinned.release()
+  }
+
+  /** Layout drift check. A key this batch cannot tell (None: embedding's
+    * `dim` on an empty batch) is neither checked nor recorded; a key the
+    * store has not recorded is accepted, except by a `strictLayout`
+    * store that already has versions. */
+  private def requireLayout(
+      spec: AdmissionStore,
+      storePath: String,
+      meta: Map[String, String],
+      layout: Seq[(String, Option[String])],
+      versioned: Boolean): Unit = {
+    val ok = layout.forall { case (key, v) =>
+      meta.get(key).fold(!(spec.strictLayout && versioned))(p => v.forall(_ == p))
+    }
+    require(ok,
+      s"${spec.kind} store at $storePath was built with " +
+        layout.map { case (key, _) => s"$key=${meta.getOrElse(key, "?")}" }
+          .mkString("(", ", ", ")") +
+        ", this stream uses " +
+        layout.collect { case (key, Some(v)) => s"$key=$v" }.mkString("(", ", ", ")") +
+        " — rebuild the store or match the configuration")
+  }
 
   private def requireReplayable(
       batchId: Long, maxBatch: Long, storePath: String): Unit =
@@ -1275,33 +1127,22 @@ object StreamOps {
         "replay as duplicates of itself; only the latest batch may replay " +
         "(reset the checkpoint and store consistently, or rebuild the store)")
 
-  /** The newest admitted batch of a single-root admission store (exact,
-    * embedding, hamming, frame-hamming): the manifest's `maxBatch`, or —
-    * on a store adopted from the legacy layout, which recorded none — the
+  /** The newest admitted batch: the manifest's `maxBatch`, or — on a
+    * store adopted from the legacy layout, which recorded none — the
     * highest top-level `batch=<id>` dir in the snapshot. A fold keeps the
     * newest batch in its own dir, so the derivation survives folds. -1
     * for an empty store. */
   private def admittedMaxBatch(
       fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path,
+      store: Path,
       meta: Map[String, String],
       baseV: Long): Long =
     meta.get("maxBatch").map(_.toLong).getOrElse(
-      graft.operators.CommitLog.snapshotFiles(fs, store, baseV)
+      CommitLog.snapshotFiles(fs, store, baseV)
         .flatMap(_.split('/').headOption).distinct
         .filter(_.startsWith("batch="))
         .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
         .foldLeft(-1L)(math.max))
-
-  /** Adopt a single-root admission store: its legacy layout (top-level
-    * `batch=<id>` dirs) is the log layout, and the config its legacy
-    * writer pinned in the `<store>.meta` sidecar (planes/dim, chunks)
-    * seeds v1's meta, where the log layout keeps it. */
-  private def adoptSingleRootStore(
-      spark: org.apache.spark.sql.SparkSession,
-      store: org.apache.hadoop.fs.Path): Unit =
-    graft.operators.CommitLog.adopt(spark, store,
-      Some(new org.apache.hadoop.fs.Path(store.toString + ".meta")))
 
   /** A MinHash admission store written before the log kept its
     * signatures in root-level `batch=<id>` dirs, with its band and bucket
@@ -1312,10 +1153,10 @@ object StreamOps {
     * touches the store. */
   private def refuseLegacyNearDupStore(
       fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path): Unit = {
-    if (graft.operators.CommitLog.isLog(fs, store)) return
+      store: Path): Unit = {
+    if (CommitLog.isLog(fs, store)) return
     val siblings = Seq(".bands", ".buckets")
-      .map(s => new org.apache.hadoop.fs.Path(store.toString + s))
+      .map(s => new Path(store.toString + s))
       .filter(fs.exists)
     val rootBatches = fs.exists(store) && fs.listStatus(store)
       .exists(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
@@ -1329,165 +1170,228 @@ object StreamOps {
           "adopted — rebuild it by replaying the stream into a fresh path")
   }
 
-  /** Row-group-prunable cover for a candidate id set: sort the ids, split
-    * at the `maxRanges - 1` widest gaps, and return OR-of-BETWEEN over the
-    * resulting tight ranges (plus a single [min,max] range for string
-    * ids, whose gap widths are not meaningful). The cover is a SUPERSET
-    * of the ids — callers keep the exact In filter on top — so it only
-    * affects which row groups are read, never which rows qualify. None
-    * for empty or unsupported id types (cover skipped, exact filter still
-    * applies). */
-  private[graft] def idCoverFilter(
-      idCol: org.apache.spark.sql.Column,
-      ids: Array[Any],
-      maxRanges: Int = 32): Option[org.apache.spark.sql.Column] =
-    idRanges(ids, maxRanges).map(rs =>
-      rs.map { case (lo, hi) => idCol >= lit(lo) && idCol <= lit(hi) }
-        .reduce(_ || _))
-
-  /** The driver-side range cover behind [[idCoverFilter]], reusable for
-    * FILE-level pruning against commit-log manifest stats: a superset of
-    * `ids` as ≤ `maxRanges` [lo, hi] pairs (typed endpoints). */
-  private[graft] def idRanges(
-      ids: Array[Any],
-      maxRanges: Int = 32): Option[Seq[(Any, Any)]] = {
-    if (ids.isEmpty) None
-    else if (ids.forall(v => v.isInstanceOf[java.lang.Long] ||
-      v.isInstanceOf[java.lang.Integer] ||
-      v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Byte])) {
-      // endpoints keep their ORIGINAL boxed type: a widening cast on the
-      // column side (int col vs long literal) can block parquet pushdown
-      val sorted = ids.map(v => (v.asInstanceOf[Number].longValue, v))
-        .distinctBy(_._1).sortBy(_._1)
-      val gaps = (1 until sorted.length)
-        .map(i => (sorted(i)._1 - sorted(i - 1)._1, i))
-        .filter(_._1 > 1)
-        .sortBy(-_._1)
-        .take(maxRanges - 1)
-        .map(_._2).sorted
-      val bounds = (0 +: gaps) :+ sorted.length
-      Some(bounds.sliding(2)
-        .map { case Seq(a, b) => (sorted(a)._2, sorted(b - 1)._2) }.toSeq)
-    } else if (ids.forall(_.isInstanceOf[String])) {
-      val xs = ids.map(_.asInstanceOf[String])
-      Some(Seq((xs.min, xs.max)))
-    } else None
-  }
-
-  /** Maintenance for a [[nearDupStream]] store: fold every batch
-    * partition except the latest into a single sorted `batch=-1` dir
-    * (merging with the previous fold) in each of the three tables.
-    * Trickle ingest otherwise accumulates one tiny dir per trigger
-    * forever — the listing/task-scheduling small-file failure mode — and
-    * the bucket-histogram partials would re-sum one partial per trigger
-    * ever. The LATEST batch keeps its own partition: under at-least-once
-    * foreachBatch only the most recent batch can replay, and a replay
-    * needs its own partition excludable (batch =!= id) and deletable;
-    * folded older batches keep working because batch=-1 passes the
-    * exclusion filter for every live id.
-    *
-    * Crash posture: the three folds retire and replace their batch dirs
-    * in ONE manifest, so there is no state where one table is folded and
-    * another is not. Signature and band folds are content-preserving and
-    * row-count-verified from parquet footers before the commit; the
-    * bucket fold re-aggregates partials (one row per bucket afterwards)
-    * so its row count legitimately shrinks. */
-  def maintainNearDupStore(
-      spark: org.apache.spark.sql.SparkSession,
+  /** The one maintenance fold: every batch partition but the newest, in
+    * every table, into a single `batch=-1` (merged with the previous
+    * fold), range-partitioned and sorted by the table's `sortCols`, in
+    * ONE manifest — no state has one table folded and another not. A
+    * content-preserving fold is row-count-checked from parquet footers
+    * before the commit (a re-aggregated one legitimately shrinks). The
+    * newest batch keeps its own partition: only it can replay, and a
+    * replay must be able to exclude and replace itself. Maintenance is
+    * also when the store physically shrinks: it vacuums the retired
+    * files (retention still protects recently pinned readers). */
+  private def foldStore(
+      spark: SparkSession,
       storePath: String,
-      targetFileBytes: Long = 128L << 20): Unit = {
-    import graft.operators.CommitLog
-    val store = new org.apache.hadoop.fs.Path(storePath)
+      spec: AdmissionStore,
+      targetFileBytes: Long): Unit = {
+    val store = new Path(storePath)
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    refuseLegacyNearDupStore(fs, store)
-    CommitLog.adopt(spark, store)
-    val baseV = CommitLog.currentVersion(fs, store)
+    val (baseV, meta) = pinStore(spark, store, spec)
     if (baseV == 0) return
     val files = CommitLog.snapshotFiles(fs, store, baseV)
-    def batchIds(sub: String): Seq[Long] = files
-      .filter(_.startsWith(sub + "/"))
-      .flatMap(_.split('/').lift(1))
-      .distinct
-      .flatMap(n =>
-        scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-    val ids = batchIds("sigs")
+    val prefix = spec.tables.head.prefix
+    val ids = files.filter(_.startsWith(prefix))
+      .flatMap(_.stripPrefix(prefix).split('/').headOption).distinct
+      .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
     val live = ids.filter(_ >= 0)
     if (live.isEmpty) return
-    val maxId = live.max
-    val foldIds = ids.filter(_ < maxId).sorted // includes a previous -1
-    if (!foldIds.exists(_ >= 0)) return        // only the fold itself left
+    val foldIds = ids.filter(_ < live.max).sorted // includes a previous -1
+    if (!foldIds.exists(_ >= 0)) return           // only the fold itself left
 
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    def foldSub(
-        sub: String,
-        reagg: Option[DataFrame => DataFrame],
-        sortCols: Seq[String]): Unit = {
-      val inFiles = files.filter(f =>
-        foldIds.exists(i => f.startsWith(s"$sub/batch=$i/")))
-      if (inFiles.isEmpty) return
-      val bytes = inFiles
-        .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(store, f)).getLen)
-        .sum
-      val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      val folded = CommitLog.readSub(spark, store, sub, Some(baseV)).get
-        .filter(col("batch").isin(foldIds: _*)).drop("batch")
-      val combined = reagg.fold(folded)(f => f(folded))
-      // range-partition + sort (not a global sort): each output file
-      // holds a contiguous key range for row-group pruning + compression
-      val out = combined
-        .repartitionByRange(nOut, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-      val dest = new org.apache.hadoop.fs.Path(staging, s"$sub/batch=-1")
-      out.write.parquet(dest.toString)
-      if (reagg.isEmpty) {
-        val before = graft.operators.Compact.footerRowsOf(spark,
-          inFiles.map(new org.apache.hadoop.fs.Path(store, _)))
-        val after = graft.operators.Compact.footerRowsIn(spark, Seq(dest))
-        if (before != after) {
-          fs.delete(staging, true)
-          throw new IllegalStateException(
-            s"fold row mismatch for $storePath/$sub: $before -> $after " +
-              "(store untouched)")
+    val staging = Swap.Suffix.staging(store, Swap.newTag())
+    spec.tables.foreach { t =>
+      val inFiles = files.filter(f => foldIds.exists(i => f.startsWith(t.dir(i) + "/")))
+      if (inFiles.nonEmpty) {
+        val bytes = inFiles.map(f => fs.getFileStatus(new Path(store, f)).getLen).sum
+        val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+        val folded = prunedRead(spark, store, t.sub, baseV, None).get
+          .filter(col("batch").isin(foldIds: _*)).drop("batch")
+        val sortCols = t.sortCols.map(col)
+        val dest = new Path(staging, t.dir(-1))
+        // range-partition + sort (not a global sort): each output file
+        // holds a contiguous key range for row-group pruning + compression
+        t.reagg.fold(folded)(_(folded))
+          .repartitionByRange(nOut, sortCols: _*)
+          .sortWithinPartitions(sortCols: _*)
+          .write.parquet(dest.toString)
+        if (t.reagg.isEmpty) {
+          val before = graft.operators.Compact.footerRowsOf(spark,
+            inFiles.map(new Path(store, _)))
+          val after = graft.operators.Compact.footerRowsIn(spark, Seq(dest))
+          if (before != after) {
+            fs.delete(staging, true)
+            throw new IllegalStateException(
+              s"fold row mismatch for $storePath${t.sub.fold("")("/" + _)}: " +
+                s"$before -> $after (store untouched)")
+          }
         }
       }
     }
-    foldSub("sigs", None, Seq("graft_id"))
-    foldSub("bands", None, Seq("band", "bucket", "hist_id"))
-    foldSub("buckets",
-      Some(df => df.groupBy("band", "bucket").agg(sum("n").as("n"))),
-      Seq("band", "bucket"))
     CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = foldIds.flatMap(i =>
-        Seq(s"sigs/batch=$i", s"bands/batch=$i", s"buckets/batch=$i")),
+      retireNames = foldIds.flatMap(i => spec.tables.map(_.dir(i))),
       wholeStore = false,
-      meta = CommitLog.tipMeta(fs, store), // config + maxBatch carry forward
+      // layout + maxBatch carry forward; the tip's operation label does not
+      meta = meta - "operation",
       extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_id")) // sorted fold → tight per-file ranges
-    // trickle ingest adds a version per trigger and a fold retires whole
-    // batch dirs; without a vacuum the store never physically shrinks —
-    // maintenance is the natural cadence (retention still protects
-    // recently pinned readers)
+      statsCol = Some(spec.key)) // sorted fold → tight per-file ranges
     CommitLog.vacuum(spark, store)
     ()
   }
 
-  /** Incremental corpus EXACT dedup: each micro-batch is checked against
-    * a persistent fingerprint store of everything ever admitted — the
-    * restart-survivable form of `dropDuplicates`, whose state dies with
-    * its checkpoint. Same store protocol as [[nearDupStream]] minus the
-    * LSH machinery: admitted (id, md5-of-text) rows land in a
-    * `batch=<id>` partition replaced per attempt (exactly-once
-    * admissions without a marker), maintenance folds trigger-grain
-    * partitions into `batch=-1` SORTED by fingerprint (per-batch cost
-    * stays O(compacted + deltas), and the history lookup's pushed
-    * fingerprint range hits tight row groups), and a replay older than
-    * the newest admitted batch fails loudly before anything is deleted.
+  /** The one admission driver: `foreachBatch` runs the family's apply
+    * step, hands the admitted rows to `sink` and unpersists them, then
+    * folds the store every `maintainEvery` batches — AFTER the sink, so a
+    * crash mid-fold recovers on the next batch. */
+  private def admissionStream(
+      input: DataFrame,
+      checkpoint: String,
+      maintainEvery: Int,
+      sink: (DataFrame, Long) => Unit)(
+      apply: (DataFrame, Long) => DataFrame,
+      maintain: SparkSession => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val admitted = apply(batch, batchId)
+        try sink(admitted, batchId)
+        finally admitted.unpersist()
+        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
+          maintain(batch.sparkSession)
+      }
+      .start()
+
+  /** The admitted rows' slice of a keyed batch frame (`graft_id`). */
+  private def admittedOf(keyed: DataFrame, admitted: DataFrame, idCol: String): DataFrame =
+    keyed.join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
+
+  private val NearDupStore = AdmissionStore("signature",
+    Seq(StoreTable(Some("sigs"), Seq("graft_id")),
+      StoreTable(Some("bands"), Seq("band", "bucket", "hist_id")),
+      StoreTable(Some("buckets"), Seq("band", "bucket"),
+        Some(_.groupBy("band", "bucket").agg(sum("n").as("n"))))),
+    key = "graft_id", strictLayout = true)
+
+  /** Incremental corpus near-dup dedup against a MinHash signature store
+    * (the admission-store lifecycle; see [[AdmissionStore]]).
     *
-    * The store holds fingerprints only — fixed-width per doc, never
-    * text; at 100 TB it is the only thing that persists. Pass
-    * pre-normalized text (TextFunctions.normalize) when byte-identical
-    * is too strict a key. */
+    * Cross-batch similarity is ESTIMATED from signature agreement (the
+    * store holds k-long signatures, never text — fixed-width per doc, the
+    * only thing that persists at 100 TB); the MinHash estimator's error
+    * is ~1/√k. Within a batch the text is in hand: LSH pairs are verified
+    * with exact shingle Jaccard and the larger id drops. */
+  def nearDupStream(
+      docs: DataFrame,
+      storePath: String,
+      checkpoint: String,
+      idCol: String = "doc_id",
+      textCol: String = "text",
+      numHashes: Int = 128,
+      bands: Int = 16,
+      shingleN: Int = 3,
+      threshold: Double = 0.8,
+      maxBucket: Int = 1000,
+      maintainEvery: Int = 32)(
+      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    admissionStream(docs, checkpoint, maintainEvery, sink)(
+      applyNearDupBatch(_, storePath, _, idCol, textCol, numHashes, bands,
+        shingleN, threshold, maxBucket),
+      maintainNearDupStore(_, storePath))
+
+  /** The per-batch step behind [[nearDupStream]] (driveable directly in
+    * tests and backfills). Returns the admitted rows of `batch`.
+    *
+    * {{{
+    * store/_log/...            manifests (LSH config + maxBatch in meta)
+    * store/sigs/batch=<id>/    admitted MinHash signatures
+    * store/bands/batch=<id>/   their exploded LSH band keys
+    * store/buckets/batch=<id>/ partial bucket counts per batch
+    * }}}
+    *
+    * Band keys and bucket counts of an admitted batch never change, so
+    * they are written once at admission and only read afterwards: the
+    * batch's band rows join history band rows in buckets of at most
+    * `maxBucket` admitted members, and the candidates' signatures are
+    * fetched by `graft_id` (`maxVerifyFetch` is the fetch cap). One
+    * signature pass per batch feeds the probe, the store rows and the
+    * within-batch LSH self-join, which applies the same `maxBucket`. */
+  def applyNearDupBatch(
+      batch: DataFrame,
+      storePath: String,
+      batchId: Long,
+      idCol: String = "doc_id",
+      textCol: String = "text",
+      numHashes: Int = 128,
+      bands: Int = 16,
+      shingleN: Int = 3,
+      threshold: Double = 0.8,
+      maxBucket: Int = 1000,
+      maxVerifyFetch: Int = 100000): DataFrame = {
+    import graft.functions.TextFunctions._
+    val layout = Seq("numHashes" -> numHashes, "bands" -> bands, "shingleN" -> shingleN)
+      .map { case (key, v) => key -> Some(v.toString) }
+    admitBatch(batch, storePath, batchId, idCol, NearDupStore, layout, maxVerifyFetch) { p =>
+      val sigB = p.hold(batch.select(
+        col(idCol).as("graft_id"),
+        minhashTextSignature(col(textCol), shingleN, numHashes).as("graft_sig")).persist())
+      def banded(sigs: DataFrame) = sigs.select(col("graft_id"),
+        explode(bandKeys(col("graft_sig"), bands, numHashes)).as("graft_band"))
+      def bandRows(sigs: DataFrame) = banded(sigs)
+        .select(col("graft_id"), col("graft_band.band"), col("graft_band.bucket"))
+      new Keyed {
+        // every admission commit writes all three tables, so history that
+        // holds signatures also holds bands and buckets
+        lazy val candidates = p.hold(bandRows(sigB)
+          .join(p.history(Some("bands")).get.select("hist_id", "band", "bucket")
+            .join(p.history(Some("buckets")).get
+              .groupBy("band", "bucket").agg(sum("n").as("n"))
+              .filter(col("n") <= maxBucket), Seq("band", "bucket"), "left_semi"),
+            Seq("band", "bucket"))
+          .select("graft_id", "hist_id").distinct()
+          .persist()) // read twice: id-set probe + verify join
+        def probe = candidates.select("hist_id")
+        def dupOfHistory(h: DataFrame) = {
+          // MinHash estimator: fraction of agreeing signature positions
+          val agree = size(filter(
+            zip_with(col("graft_sig"), col("hist_sig"), (a, b) => a === b),
+            x => x)).cast("double") / numHashes
+          candidates
+            .join(sigB, "graft_id")
+            .join(h.select(col("graft_id").as("hist_id"), col("graft_sig").as("hist_sig")),
+              "hist_id")
+            .filter(agree >= threshold)
+            .select(col("graft_id").as(idCol))
+        }
+        def dupInBatch = p.hold(graft.operators.Dedup.lshSelfJoin(
+            batch, idCol, textCol, banded(sigB), shingleN, threshold, maxBucket))
+          .select(col("id_b").as(idCol))
+        def storeRows(a: DataFrame) = {
+          val sigA = p.hold(admittedOf(sigB, a, idCol).persist())
+          val bandA = bandRows(sigA).withColumnRenamed("graft_id", "hist_id")
+          Seq(sigA, bandA, bandA.groupBy("band", "bucket").agg(count(lit(1)).as("n")))
+        }
+      }
+    }
+  }
+
+  /** Maintenance for a [[nearDupStream]] store: [[foldStore]] over its
+    * three tables; the bucket partials re-aggregate to one row per
+    * bucket, so the bucket scan stays O(distinct buckets + deltas). */
+  def maintainNearDupStore(
+      spark: SparkSession,
+      storePath: String,
+      targetFileBytes: Long = 128L << 20): Unit =
+    foldStore(spark, storePath, NearDupStore, targetFileBytes)
+
+  private val ExactStore = AdmissionStore("fingerprint",
+    Seq(StoreTable(None, Seq("graft_fp"))), key = "graft_fp")
+
+  /** Incremental corpus EXACT dedup against a fingerprint store (the
+    * admission-store lifecycle; see [[AdmissionStore]]) — the
+    * restart-survivable form of `dropDuplicates`, whose state dies with
+    * its checkpoint. The store holds (id, md5-of-text) only; pass
+    * pre-normalized text (TextFunctions.normalize) when byte-identical is
+    * too strict a key. */
   def exactDedupStream(
       docs: DataFrame,
       storePath: String,
@@ -1496,148 +1400,62 @@ object StreamOps {
       textCol: String = "text",
       maintainEvery: Int = 32)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = applyExactDedupBatch(batch, storePath, batchId, idCol, textCol)
-        try sink(admitted, batchId)
-        finally admitted.unpersist()
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          maintainExactDedupStore(batch.sparkSession, storePath)
-      }
-      .start()
+    admissionStream(docs, checkpoint, maintainEvery, sink)(
+      applyExactDedupBatch(_, storePath, _, idCol, textCol),
+      maintainExactDedupStore(_, storePath))
 
-  /** The per-batch step behind [[exactDedupStream]] (driveable directly
-    * in tests and backfills). Returns the admitted rows of `batch`.
-    *
-    * History lookup: the batch's own distinct fingerprints are the
-    * candidate set, bounded by batch size — below `maxFetch` they push
-    * into the parquet read as an In filter plus a min/max range cover
-    * (maintenance folds sort the store by fingerprint, so row-group
-    * stats skip the bulk of a years-old store); above it, a full-scan
-    * semi-join. Within the batch the minimum id per fingerprint
-    * survives, matching Dedup.dedupExact's deterministic convention. */
+  /** The per-batch step behind [[exactDedupStream]]. The batch's own
+    * distinct fingerprints are the probe keys (`maxFetch` is the fetch
+    * cap); within the batch the minimum id per fingerprint survives,
+    * matching Dedup.dedupExact's deterministic convention. */
   def applyExactDedupBatch(
       batch: DataFrame,
       storePath: String,
       batchId: Long,
       idCol: String = "doc_id",
       textCol: String = "text",
-      maxFetch: Int = 100000): DataFrame = {
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      maxFetch: Int = 100000): DataFrame =
+    admitBatch(batch, storePath, batchId, idCol, ExactStore, Nil, maxFetch) { p =>
+      val fpB = p.hold(batch.select(
+        col(idCol).as("graft_id"),
+        md5(col(textCol).cast("string")).as("graft_fp")).persist())
+      new Keyed {
+        def probe = fpB.select("graft_fp")
+        def dupOfHistory(h: DataFrame) =
+          fpB.join(h.select("graft_fp"), Seq("graft_fp"), "left_semi")
+            .select(col("graft_id").as(idCol))
+        def dupInBatch = fpB
+          .join(fpB.groupBy("graft_fp").agg(min("graft_id").as("graft_keep")),
+            Seq("graft_fp"))
+          .filter(col("graft_id") =!= col("graft_keep"))
+          .select(col("graft_id").as(idCol))
+        def storeRows(a: DataFrame) = Seq(admittedOf(fpB, a, idCol))
+      }
+    }
 
-    adoptSingleRootStore(spark, store)
-    val baseV = CommitLog.currentVersion(fs, store)
-    requireReplayable(batchId,
-      admittedMaxBatch(fs, store, CommitLog.tipMeta(fs, store), baseV),
-      storePath)
-    // pinned snapshot minus the current batch (replay idempotence)
-    val histAll = CommitLog.read(spark, store, Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = histAll.isDefined
-
-    val fpB = batch.select(
-      col(idCol).as("graft_id"),
-      md5(col(textCol).cast("string")).as("graft_fp"))
-      .persist()
-
-    // cap+1 probe mirrors the near-dup verify fetch
-    val capProbe = math.min(maxFetch.toLong + 1L, Int.MaxValue.toLong).toInt
-    val batchFps: Array[Any] =
-      if (hasHistory) fpB.select("graft_fp").distinct().limit(capProbe)
-        .collect().map(_.get(0))
-      else Array.empty[Any]
-    val history =
-      if (!hasHistory || batchFps.isEmpty) fpB.select("graft_fp").limit(0)
-      else if (batchFps.length <= maxFetch) {
-        val cover = idCoverFilter(col("graft_fp"), batchFps)
-        // manifest-stats file pruning first (folds sort by fingerprint,
-        // so per-file ranges are tight), pushed filters inside the kept
-        // files second
-        prunedRead(spark, store, None, baseV, idRanges(batchFps)) match {
-          case None => fpB.select("graft_fp").limit(0)
-          case Some(df) => df
-            .filter(col("batch") =!= batchId)
-            .where(cover.getOrElse(lit(true)))
-            .filter(col("graft_fp").isInCollection(batchFps.toSeq))
-            .select("graft_fp")
-        }
-      } else histAll.get.select("graft_fp")
-
-    val dupOfHistory = fpB
-      .join(history, Seq("graft_fp"), "left_semi")
-      .select(col("graft_id").as(idCol))
-    // within-batch: min id per fingerprint survives
-    val dupInBatch = fpB
-      .join(fpB.groupBy("graft_fp").agg(min("graft_id").as("graft_keep")),
-        Seq("graft_fp"))
-      .filter(col("graft_id") =!= col("graft_keep"))
-      .select(col("graft_id").as(idCol))
-
-    val admitted = batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
-      .persist()
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    fpB.join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(s"batch=$batchId"),
-      wholeStore = false,
-      meta = Map("maxBatch" -> batchId.toString),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_fp"))
-    fpB.unpersist()
-    admitted
-  }
-
-  /** Maintenance for an [[exactDedupStream]] store: fold every batch
-    * partition except the latest into `batch=-1`, sorted by fingerprint
-    * (row-group-prunable history lookups, better compression). Same
-    * crash posture as the near-dup folds: one manifest, footer
-    * row-count parity before it. */
+  /** Maintenance for an [[exactDedupStream]] store: [[foldStore]],
+    * sorted by fingerprint. */
   def maintainExactDedupStore(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L << 20): Unit =
-    foldLogStoreBatches(spark, storePath, targetFileBytes,
-      sortCols = Seq("graft_fp"), statsCol = Some("graft_fp"))
+    foldStore(spark, storePath, ExactStore, targetFileBytes)
 
-  /** Incremental EMBEDDING near-dup dedup (r17 verdict item 5 — the
-    * semantic twin of [[nearDupStream]] / [[exactDedupStream]]): each
-    * micro-batch of (id, embedding) rows is checked against a
-    * persistent vector store of everything ever admitted; rows whose
-    * cosine to any admitted vector reaches `threshold` are dropped (and
-    * within the batch the larger id of a qualifying pair drops — the
-    * same pairwise convention as the text stream), and the admitted
-    * rows' vectors + replayable hyperplane buckets append to the store.
-    *
-    * Unlike the text store (whose cross-batch similarity is a MinHash
-    * ESTIMATE), the vector store holds the embeddings themselves —
-    * fixed-width per doc — so cross-batch cosine is EXACT and the
-    * streamed admission decomposes cleanly: a row's fate depends only
-    * on (row, admitted history), which is what the batch≡stream parity
-    * spec pins. Candidate blocking rides the SAME replayable hyperplane
-    * buckets as the batch operator ([[graft.operators.Dedup
-    * .embeddingNearDupReplayable]]); per-trigger history cost is
-    * O(bucket mates of the batch), pushed into the parquet read as an
-    * In + range-cover filter over the bucket column (maintenance folds
-    * sort the store by bucket, so row-group stats skip the bulk of an
-    * old store).
-    *
-    * Store protocol = the signature-store protocol verbatim: admitted
-    * rows land in a `batch=<id>` hive partition REPLACED per attempt
-    * (exactly-once admissions without a marker), only the newest batch
-    * may replay (guarded loudly), maintenance folds old partitions into
-    * `batch=-1`, and the manifest meta pins (planes, dim) — a store
-    * bucketed under different planes would block inconsistently, and a
-    * different dim would silently truncate every dot product. History
-    * reads pin a snapshot and prune files by the manifest's per-file
-    * bucket range. */
+  private val EmbeddingStore = AdmissionStore("embedding",
+    Seq(StoreTable(None, Seq("graft_bucket", "graft_id"))), key = "graft_bucket")
+
+  /** Incremental EMBEDDING near-dup dedup against a vector store (the
+    * admission-store lifecycle; see [[AdmissionStore]]): a row drops
+    * when its cosine to an admitted vector, or to a smaller-id row of
+    * its own batch, reaches `threshold`. The store holds the embeddings
+    * themselves, so cross-batch cosine is EXACT and a row's fate depends
+    * only on (row, admitted history) — streamed admission equals the
+    * batch operator's survivor set. Candidates are blocked by the same
+    * replayable hyperplane buckets as
+    * [[graft.operators.Dedup.embeddingNearDupReplayable]]. The layout
+    * meta pins `planes` and `dim` (a different dim would silently
+    * truncate every dot product); `dim` is recorded from the first
+    * non-empty batch. */
   def embeddingNearDupStream(
       vecs: DataFrame,
       storePath: String,
@@ -1648,21 +1466,13 @@ object StreamOps {
       planes: Int = 8,
       maintainEvery: Int = 32)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = applyEmbeddingNearDupBatch(
-          batch, storePath, batchId, idCol, vecCol, threshold, planes)
-        try sink(admitted, batchId)
-        finally admitted.unpersist()
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          maintainEmbeddingNearDupStore(batch.sparkSession, storePath)
-      }
-      .start()
+    admissionStream(vecs, checkpoint, maintainEvery, sink)(
+      applyEmbeddingNearDupBatch(_, storePath, _, idCol, vecCol, threshold, planes),
+      maintainEmbeddingNearDupStore(_, storePath))
 
-  /** The per-batch step behind [[embeddingNearDupStream]] (driveable
-    * directly in tests and backfills). Returns the admitted rows of
-    * `batch` (persisted — the caller unpersists after its sink). */
+  /** The per-batch step behind [[embeddingNearDupStream]]. Returns the
+    * admitted rows of `batch` (persisted — the caller unpersists after
+    * its sink). */
   def applyEmbeddingNearDupBatch(
       batch: DataFrame,
       storePath: String,
@@ -1673,171 +1483,69 @@ object StreamOps {
       planes: Int = 8,
       maxBucketFetch: Int = 100000): DataFrame = {
     require(planes >= 1 && planes <= 30, s"planes=$planes out of range")
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    adoptSingleRootStore(spark, store)
-    val baseV = CommitLog.currentVersion(fs, store)
-    val meta = CommitLog.tipMeta(fs, store)
-    requireReplayable(batchId, admittedMaxBatch(fs, store, meta, baseV), storePath)
-
+    import graft.operators.Similarity
     val dim = {
       val r = batch.agg(max(size(col(vecCol)))).head
       if (r.isNullAt(0)) 0 else r.getInt(0)
     }
-    val pinnedDim = meta.get("dim").map(_.toInt)
-    require(meta.get("planes").forall(_.toInt == planes) &&
-      (dim == 0 || pinnedDim.forall(_ == dim)),
-      s"embedding store at $storePath was built with " +
-        s"(planes=${meta.getOrElse("planes", "?")}, " +
-        s"dim=${meta.getOrElse("dim", "?")}), this stream uses " +
-        s"(planes=$planes, dim=$dim) — rebuild the store or match the " +
-        "configuration")
-
-    val histAll = CommitLog.read(spark, store, Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = histAll.isDefined
-
-    val sigB = batch.select(
-      col(idCol).as("graft_id"),
-      col(vecCol).as("graft_vec"),
-      (if (dim == 0) lit(0L)
-       else graft.operators.Similarity
-         .replayableHyperplaneBucket(col(vecCol), planes, dim))
-        .as("graft_bucket"))
-      .persist()
-
-    val histRead: Array[Any] => DataFrame = buckets => {
-      val cover = idCoverFilter(col("graft_bucket"), buckets)
-      prunedRead(spark, store, None, baseV, idRanges(buckets)) match {
-        case None => sigB.limit(0)
-        case Some(df) => df
-          .filter(col("batch") =!= batchId)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_bucket").isInCollection(buckets.toSeq))
+    val layout = Seq("planes" -> Some(planes.toString),
+      "dim" -> Some(dim).filter(_ > 0).map(_.toString))
+    admitBatch(batch, storePath, batchId, idCol, EmbeddingStore, layout, maxBucketFetch) { p =>
+      val sigB = p.hold(batch.select(
+        col(idCol).as("graft_id"),
+        col(vecCol).as("graft_vec"),
+        (if (dim == 0) lit(0L)
+         else Similarity.replayableHyperplaneBucket(col(vecCol), planes, dim))
+          .as("graft_bucket"))
+        .persist())
+      def close(a: String, b: String) =
+        round(Similarity.cosine(col(a), col(b)), 4) >= threshold
+      new Keyed {
+        def probe = sigB.select("graft_bucket")
+        def dupOfHistory(h: DataFrame) = sigB
+          .join(h.select(col("graft_vec").as("hist_vec"), col("graft_bucket").as("hist_bucket")),
+            col("graft_bucket") === col("hist_bucket"))
+          .filter(close("graft_vec", "hist_vec"))
+          .select(col("graft_id").as(idCol))
+        def dupInBatch = sigB.as("l")
+          .join(sigB.as("r"),
+            col("l.graft_bucket") === col("r.graft_bucket") &&
+              col("l.graft_id") < col("r.graft_id"))
+          .filter(close("l.graft_vec", "r.graft_vec"))
+          .select(col("r.graft_id").as(idCol))
+        def storeRows(a: DataFrame) = Seq(admittedOf(sigB, a, idCol))
       }
     }
-    val admitted = embeddingAdmitCore(
-      batch, idCol, sigB, histRead, () => histAll.get, hasHistory,
-      threshold, maxBucketFetch)
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    sigB.join(admitted.select(col(idCol).as("graft_id")), Seq("graft_id"), "left_semi")
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(s"batch=$batchId"),
-      wholeStore = false,
-      meta = Map("maxBatch" -> batchId.toString,
-        "planes" -> planes.toString) ++
-        (pinnedDim.orElse(if (dim > 0) Some(dim) else None)
-          .map(d => "dim" -> d.toString)),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_bucket"))
-    sigB.unpersist()
-    admitted
   }
 
-  /** The candidate → verify → admit middle of
-    * [[applyEmbeddingNearDupBatch]]. Cross-batch verify is EXACT
-    * cosine against bucket-mate history vectors (round-4, the
-    * [[graft.operators.Similarity.exactPairs]] contract); within-batch
-    * the larger id of a qualifying pair drops. */
-  private def embeddingAdmitCore(
-      batch: DataFrame,
-      idCol: String,
-      sigB: DataFrame,
-      histRead: Array[Any] => DataFrame,
-      histFull: () => DataFrame,
-      hasHistory: Boolean,
-      threshold: Double,
-      maxBucketFetch: Int): DataFrame = {
-    import graft.operators.Similarity
-    val capProbe = math.min(maxBucketFetch.toLong + 1L, Int.MaxValue.toLong).toInt
-    val batchBuckets: Array[Any] =
-      if (hasHistory) sigB.select("graft_bucket").distinct().limit(capProbe)
-        .collect().map(_.get(0))
-      else Array.empty[Any]
-    val history =
-      if (!hasHistory || batchBuckets.isEmpty)
-        sigB.select(col("graft_id").as("hist_id"),
-          col("graft_vec").as("hist_vec"),
-          col("graft_bucket").as("hist_bucket")).limit(0)
-      else {
-        val src = if (batchBuckets.length <= maxBucketFetch)
-          histRead(batchBuckets) else histFull()
-        src.select(col("graft_id").as("hist_id"),
-          col("graft_vec").as("hist_vec"),
-          col("graft_bucket").as("hist_bucket"))
-      }
-    val dupOfHistory = sigB
-      .join(history, col("graft_bucket") === col("hist_bucket"))
-      .filter(round(Similarity.cosine(col("graft_vec"), col("hist_vec")), 4)
-        >= threshold)
-      .select(col("graft_id").as(idCol)).distinct()
-    // within-batch: bucket-blocked exact pairs, larger id drops (the
-    // text stream's pairwise convention — Dedup.dedupNear's id_b rule)
-    val dupInBatch = sigB.as("l")
-      .join(sigB.as("r"),
-        col("l.graft_bucket") === col("r.graft_bucket") &&
-          col("l.graft_id") < col("r.graft_id"))
-      .filter(round(Similarity.cosine(col("l.graft_vec"), col("r.graft_vec")), 4)
-        >= threshold)
-      .select(col("r.graft_id").as(idCol)).distinct()
-    batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
-      .persist()
-  }
-
-  /** Maintenance for an [[embeddingNearDupStream]] store: fold every
-    * batch partition except the latest into `batch=-1`, sorted by
-    * bucket (the history lookup's pushed bucket cover then hits tight
-    * row groups) — same crash posture as the text-store folds. */
+  /** Maintenance for an [[embeddingNearDupStream]] store: [[foldStore]],
+    * sorted by bucket. */
   def maintainEmbeddingNearDupStore(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L << 20): Unit =
-    foldLogStoreBatches(spark, storePath, targetFileBytes,
-      sortCols = Seq("graft_bucket", "graft_id"), statsCol = Some("graft_bucket"))
+    foldStore(spark, storePath, EmbeddingStore, targetFileBytes)
 
-  /** Streaming near-dup admission over 64-bit HAMMING fingerprints — the
-    * media/simhash twin of [[embeddingNearDupStream]]: image dHash/pHash,
-    * audio energy fingerprints and text SimHash (anything that feeds
-    * [[graft.operators.Dedup.hammingNearDupPairs]]) gain a
-    * restart-survivable ingest store. Each micro-batch is checked against
-    * every fingerprint ADMITTED so far; a row drops when its hash is
-    * within `maxHamming` of an admitted hash (cross-batch is EXACT —
-    * `bit_count(xor)` on the stored 64-bit values, no estimate) or of a
-    * smaller-id row in its own batch (the pairwise larger-id-drops
-    * convention shared with the text and embedding stores).
+  private val HammingStore = AdmissionStore("hamming",
+    Seq(StoreTable(None, Seq("graft_bucket", "graft_sh"))), key = "graft_bucket")
+
+  /** Streaming near-dup admission over 64-bit HAMMING fingerprints (the
+    * admission-store lifecycle; see [[AdmissionStore]]) — image
+    * dHash/pHash, audio energy fingerprints and text SimHash (anything
+    * that feeds [[graft.operators.Dedup.hammingNearDupPairs]]). A row
+    * drops when its hash is within `maxHamming` of an admitted hash
+    * (cross-batch is EXACT `bit_count(xor)` on the stored values) or of a
+    * smaller-id row in its own batch. Rows with a NULL fingerprint never
+    * pair and are admitted.
     *
-    * The store exploits the measured saturation property of perceptual
-    * hashes (BandAudit, r18: the dHash SUPPORT grows far slower than the
-    * corpus): admission only needs the DISTINCT admitted hash values —
-    * an identical later copy is hamming-0 of its predecessor and drops,
-    * so the store is support-sized BY CONSTRUCTION and stops growing
-    * when the fingerprint manifold saturates, no matter how many rows
-    * stream through. Rows are the admitted support exploded into
-    * multi-index band rows (packed (chunk, value) key in `graft_bucket`,
-    * exact keys only); the PROBE side carries the radius-1 flip
-    * expansion, so per-trigger history cost is O(bucket mates of the
-    * batch support), pushed into the parquet read as an In + range-cover
-    * filter over the bucket column (maintenance folds sort by bucket).
-    * Within-batch dedup is the distinct-first collapse (class members
-    * drop against their min-id representative; representative pairs run
-    * over the support only — never a member-level pair expansion).
-    *
-    * Store protocol = the signature-store protocol verbatim: admitted
-    * rows land in a `batch=<id>` hive partition REPLACED per attempt,
-    * only the newest batch may replay (guarded loudly), maintenance
-    * folds old partitions into `batch=-1`, and the manifest meta pins
-    * `chunks` (the packed band-key layout — a store banded under a
-    * different chunk split would probe garbage silently). `maxHamming`
-    * is a per-call semantic knob like the embedding store's `threshold`,
-    * not a layout property. Rows with a NULL fingerprint never pair and
-    * are admitted (the batch core's convention). */
+    * The store holds only the DISTINCT admitted hash values (an identical
+    * later copy is hamming-0 and drops), so it is support-sized by
+    * construction and stops growing when the fingerprint manifold
+    * saturates (BandAudit, r18). Its rows are that support exploded into
+    * exact packed (chunk, value) band keys; the PROBE side carries the
+    * radius-1 flip expansion. Within a batch, class members drop against
+    * their min-id representative and representative pairs run over the
+    * support only. The layout meta pins `chunks`. */
   def hammingNearDupStream(
       fps: DataFrame,
       storePath: String,
@@ -1848,17 +1556,9 @@ object StreamOps {
       chunks: Int = 0,
       maintainEvery: Int = 32)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    fps.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = applyHammingNearDupBatch(
-          batch, storePath, batchId, idCol, hashCol, maxHamming, chunks)
-        try sink(admitted, batchId)
-        finally admitted.unpersist()
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          maintainHammingNearDupStore(batch.sparkSession, storePath)
-      }
-      .start()
+    admissionStream(fps, checkpoint, maintainEvery, sink)(
+      applyHammingNearDupBatch(_, storePath, _, idCol, hashCol, maxHamming, chunks),
+      maintainHammingNearDupStore(_, storePath))
 
   /** Streaming TEXT SimHash near-dup admission: docs(id, text) →
     * [[graft.functions.TextFunctions.simhash64Fast]] fingerprints (the
@@ -1917,9 +1617,9 @@ object StreamOps {
     }: _*)
   }
 
-  /** The per-batch step behind [[hammingNearDupStream]] (driveable
-    * directly in tests and backfills). Returns the admitted rows of
-    * `batch` (persisted — the caller unpersists after its sink). */
+  /** The per-batch step behind [[hammingNearDupStream]]. Returns the
+    * admitted rows of `batch` (persisted — the caller unpersists after
+    * its sink). */
   def applyHammingNearDupBatch(
       batch: DataFrame,
       storePath: String,
@@ -1930,170 +1630,74 @@ object StreamOps {
       chunks: Int = 0,
       maxBucketFetch: Int = 200000): DataFrame = {
     val nChunks = hammingStoreChunks(maxHamming, chunks)
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    adoptSingleRootStore(spark, store)
-    val baseV = CommitLog.currentVersion(fs, store)
-    val meta = CommitLog.tipMeta(fs, store)
-    requireReplayable(batchId, admittedMaxBatch(fs, store, meta, baseV), storePath)
-    require(meta.get("chunks").forall(_.toInt == nChunks),
-      s"hamming store at $storePath was banded with " +
-        s"chunks=${meta.getOrElse("chunks", "?")}, this stream uses " +
-        s"chunks=$nChunks — rebuild the store or match the layout")
-
-    val histAll = CommitLog.read(spark, store, Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = histAll.isDefined
-
-    val histRead: Array[Any] => DataFrame = buckets => {
-      val cover = idCoverFilter(col("graft_bucket"), buckets)
-      prunedRead(spark, store, None, baseV, idRanges(buckets)) match {
-        case None => batch.select(col(idCol).as("graft_id"),
-          col(hashCol).as("graft_sh"), lit(0L).as("graft_bucket")).limit(0)
-        case Some(df) => df
-          .filter(col("batch") =!= batchId)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_bucket").isInCollection(buckets.toSeq))
+    admitBatch(batch, storePath, batchId, idCol, HammingStore,
+      Seq("chunks" -> Some(nChunks.toString)), maxBucketFetch) { p =>
+      // within-batch: non-representative class members drop against their
+      // min-id representative (hamming 0), representative pairs drop
+      // their larger id — exactly the pairwise larger-id-drops convention
+      val (repPairs, members, _) = graft.operators.Dedup.hammingRepPairs(
+        batch, idCol, hashCol, maxHamming, nChunks)
+      // the cross-batch probe needs only the batch's distinct hash VALUES
+      val keys = p.hold(batch.filter(col(hashCol).isNotNull)
+        .select(col(hashCol).as("graft_sh")).distinct()
+        .withColumn("graft_bucket", explode(hammingBandKeys(
+          col("graft_sh"), nChunks, expand = maxHamming / nChunks == 1)))
+        .distinct().persist())
+      new Keyed {
+        def probe = keys.select("graft_bucket")
+        def dupOfHistory(h: DataFrame) = {
+          // exact verify on the support; ids recover by a hash join, so a
+          // whole identical class drops together
+          val dupHashes = keys
+            .join(h.select(col("graft_bucket"), col("graft_sh").as("hist_sh")),
+              Seq("graft_bucket"))
+            .filter(graft.functions.TextFunctions
+              .hamming64(col("graft_sh"), col("hist_sh")) <= maxHamming)
+            .select("graft_sh").distinct()
+          batch.join(dupHashes, batch(hashCol) === dupHashes("graft_sh")).select(col(idCol))
+        }
+        def dupInBatch = members
+          .filter(col("graft_id") =!= col("graft_rep"))
+          .select(col("graft_id").as(idCol))
+          .unionByName(repPairs.select(col("rep_b").as(idCol)))
+        // the distinct admitted support's exact band keys (NULL
+        // fingerprints are admitted but never occupy the store)
+        def storeRows(a: DataFrame) = Seq(a.filter(col(hashCol).isNotNull)
+          .select(col(idCol).as("graft_id"), col(hashCol).as("graft_sh"))
+          .withColumn("graft_bucket",
+            explode(hammingBandKeys(col("graft_sh"), nChunks, expand = false))))
       }
     }
-    val admitted = hammingAdmitCore(
-      batch, idCol, hashCol, histRead, () => histAll.get, hasHistory,
-      maxHamming, nChunks, maxBucketFetch)
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    admittedBandRows(admitted, idCol, hashCol, nChunks)
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(s"batch=$batchId"),
-      wholeStore = false,
-      meta = Map("maxBatch" -> batchId.toString,
-        "chunks" -> nChunks.toString),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_bucket"))
-    admitted
   }
 
-  /** The candidate → verify → admit middle of
-    * [[applyHammingNearDupBatch]]. Cross-batch: the batch SUPPORT
-    * (distinct hash values) probes bucket-mate history with the radius-1
-    * flip expansion, exact `bit_count(xor) <= maxHamming` verify, and
-    * ids recover by a hash join (whole identical classes drop together).
-    * Within-batch: distinct-first — non-representative class members
-    * drop against their min-id representative (hamming 0), and the
-    * support-level representative pairs drop their larger id. The union
-    * equals the pairwise larger-id-drops convention exactly (a non-min
-    * member always drops; a class min drops iff a smaller-id close row
-    * exists, whose own class min is a smaller-id close REPRESENTATIVE). */
-  private def hammingAdmitCore(
-      batch: DataFrame,
-      idCol: String,
-      hashCol: String,
-      histRead: Array[Any] => DataFrame,
-      histFull: () => DataFrame,
-      hasHistory: Boolean,
-      maxHamming: Int,
-      nChunks: Int,
-      maxBucketFetch: Int): DataFrame = {
-    val radius = maxHamming / nChunks
-    val (repPairs, members, _) = graft.operators.Dedup.hammingRepPairs(
-      batch, idCol, hashCol, maxHamming, nChunks)
-    // the cross-batch probe needs only the batch's distinct hash VALUES
-    val support = batch.filter(col(hashCol).isNotNull)
-      .select(col(hashCol).as("graft_sh")).distinct()
-
-    val probe = support
-      .withColumn("graft_bucket",
-        explode(hammingBandKeys(col("graft_sh"), nChunks, expand = radius == 1)))
-      .select("graft_sh", "graft_bucket").distinct().persist()
-    val capProbe = math.min(maxBucketFetch.toLong + 1L, Int.MaxValue.toLong).toInt
-    val batchBuckets: Array[Any] =
-      if (hasHistory) probe.select("graft_bucket").distinct().limit(capProbe)
-        .collect().map(_.get(0))
-      else Array.empty[Any]
-    val dupOfHistory =
-      if (!hasHistory || batchBuckets.isEmpty) batch.select(col(idCol)).limit(0)
-      else {
-        val src = if (batchBuckets.length <= maxBucketFetch)
-          histRead(batchBuckets) else histFull()
-        val dupHashes = probe
-          .join(src.select(col("graft_bucket"), col("graft_sh").as("hist_sh")),
-            Seq("graft_bucket"))
-          .filter(graft.functions.TextFunctions
-            .hamming64(col("graft_sh"), col("hist_sh")) <= maxHamming)
-          .select("graft_sh").distinct()
-        batch.join(dupHashes, batch(hashCol) === dupHashes("graft_sh"))
-          .select(col(idCol)).distinct()
-      }
-    val dupInBatch = members
-      .filter(col("graft_id") =!= col("graft_rep"))
-      .select(col("graft_id").as(idCol))
-      .unionByName(repPairs.select(col("rep_b").as(idCol)))
-      .distinct()
-    val admitted = batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(), Seq(idCol), "left_anti")
-      .persist()
-    admitted.count() // materialize before releasing the probe cache
-    probe.unpersist()
-    admitted
-  }
-
-  /** Admitted rows → store rows: the distinct admitted support exploded
-    * into exact band keys (NULL fingerprints are admitted but have no
-    * bands, so they never occupy the store). */
-  private def admittedBandRows(
-      admitted: DataFrame, idCol: String, hashCol: String,
-      nChunks: Int): DataFrame =
-    admitted
-      .filter(col(hashCol).isNotNull)
-      .select(col(idCol).as("graft_id"), col(hashCol).as("graft_sh"))
-      .withColumn("graft_bucket",
-        explode(hammingBandKeys(col("graft_sh"), nChunks, expand = false)))
-
-  /** Maintenance for a [[hammingNearDupStream]] store: fold every batch
-    * partition except the latest into `batch=-1`, sorted by bucket (the
-    * history lookup's pushed bucket cover then hits tight row groups). */
+  /** Maintenance for a [[hammingNearDupStream]] store: [[foldStore]],
+    * sorted by bucket. */
   def maintainHammingNearDupStore(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L << 20): Unit =
-    foldLogStoreBatches(spark, storePath, targetFileBytes,
-      sortCols = Seq("graft_bucket", "graft_sh"), statsCol = Some("graft_bucket"))
+    foldStore(spark, storePath, HammingStore, targetFileBytes)
 
-  /** Streaming FRAME-LEVEL (positional) hamming near-dup admission — the
-    * video twin of [[hammingNearDupStream]]: items are identified by a
-    * SET of aligned 64-bit fingerprints (one per sampled frame index),
-    * and an item is a near-dup of another iff at least
-    * `minMatchedFrames` of its SAME-INDEX frames are within `maxHamming`
-    * bits — exactly the batch
-    * [[graft.multimodal.Multimodal.videoNearDupPairs]] contract
-    * (alignment via `groupCols`). Input rows are FRAMES
-    * `(idCol, posCol, hashCol)`; admission is decided per ITEM.
+  private val FrameHammingStore = AdmissionStore("frame hamming",
+    Seq(StoreTable(None, Seq("graft_bucket", "graft_id"))), key = "graft_bucket")
+
+  /** Streaming FRAME-LEVEL (positional) hamming near-dup admission (the
+    * admission-store lifecycle; see [[AdmissionStore]]) — the video twin
+    * of [[hammingNearDupStream]]: items are SETS of aligned 64-bit frame
+    * fingerprints, and an item drops when at least `minMatchedFrames` of
+    * its SAME-INDEX frames are within `maxHamming` bits of ONE admitted
+    * item or of a smaller-id item in its batch — the batch
+    * [[graft.multimodal.Multimodal.videoNearDupPairs]] contract (matches
+    * spread across different admitted items do not sum). Input rows are
+    * FRAMES `(idCol, posCol, hashCol)`; admission is decided per ITEM.
     *
     * The store holds the admitted items' frame fingerprints exploded to
-    * multi-index band rows with the frame position FOLDED INTO the
-    * bucket key (`pos · chunks · 2^width + packed(chunk, value)`), so
-    * bucket equality implies frame alignment and the probe join needs
-    * no extra predicate; positions must be non-negative (a sampled
-    * frame index always is). Cross-batch verify is EXACT
-    * `bit_count(xor)` per aligned frame; an item drops when ≥
-    * `minMatchedFrames` of its frames match ONE admitted item (matches
-    * spread across different admitted items do not sum — the pair
-    * semantics of the batch operator). Unlike the scalar store there is
-    * no cross-item support collapse: admitted items are mutually
-    * non-dup by construction, so the store is admitted-items ×
-    * frames × chunks rows. Items whose frames are all NULL (or absent)
-    * never pair and are admitted; an item with fewer frames than
-    * `minMatchedFrames` can never DROP (the batch contract — callers
-    * sampling very short clips should lower the knob).
-    *
-    * Store protocol = the signature-store protocol verbatim (per-attempt
-    * `batch=<id>` replacement, only-newest replay guard, bucket-sorted
-    * `batch=-1` folds, manifest meta pins `chunks` — the key layout;
-    * `maxHamming`/`minMatchedFrames` are per-call semantic knobs). */
+    * band rows with the frame position FOLDED INTO the bucket key, so
+    * bucket equality implies frame alignment; positions must be
+    * non-negative. There is no cross-item support collapse: the store is
+    * admitted items × frames × chunks rows. Items whose frames are all
+    * NULL never pair and are admitted; an item with fewer frames than
+    * `minMatchedFrames` can never drop. The layout meta pins `chunks`. */
   def frameHammingNearDupStream(
       frames: DataFrame,
       storePath: String,
@@ -2106,18 +1710,10 @@ object StreamOps {
       chunks: Int = 0,
       maintainEvery: Int = 32)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    frames.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val admitted = applyFrameHammingNearDupBatch(
-          batch, storePath, batchId, idCol, posCol, hashCol, maxHamming,
-          minMatchedFrames, chunks)
-        try sink(admitted, batchId)
-        finally admitted.unpersist()
-        if (maintainEvery > 0 && batchId > 0 && batchId % maintainEvery == 0)
-          maintainFrameHammingNearDupStore(batch.sparkSession, storePath)
-      }
-      .start()
+    admissionStream(frames, checkpoint, maintainEvery, sink)(
+      applyFrameHammingNearDupBatch(_, storePath, _, idCol, posCol, hashCol,
+        maxHamming, minMatchedFrames, chunks),
+      maintainFrameHammingNearDupStore(_, storePath))
 
   /** Frame band keys: [[hammingBandKeys]] with the (non-negative) frame
     * position folded into every key — `pos · stride + packed` with
@@ -2131,9 +1727,9 @@ object StreamOps {
       k => pos.cast("long") * lit(stride) + k)
   }
 
-  /** The per-batch step behind [[frameHammingNearDupStream]] (driveable
-    * directly in tests and backfills). Returns the admitted FRAME rows
-    * of `batch` (persisted — the caller unpersists after its sink). */
+  /** The per-batch step behind [[frameHammingNearDupStream]]. Returns the
+    * admitted FRAME rows of `batch` (persisted — the caller unpersists
+    * after its sink). */
   def applyFrameHammingNearDupBatch(
       batch: DataFrame,
       storePath: String,
@@ -2146,203 +1742,129 @@ object StreamOps {
       chunks: Int = 0,
       maxBucketFetch: Int = 200000): DataFrame = {
     val nChunks = hammingStoreChunks(maxHamming, chunks)
-    import graft.operators.CommitLog
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    adoptSingleRootStore(spark, store)
-    val baseV = CommitLog.currentVersion(fs, store)
-    val meta = CommitLog.tipMeta(fs, store)
-    requireReplayable(batchId, admittedMaxBatch(fs, store, meta, baseV), storePath)
-    require(meta.get("chunks").forall(_.toInt == nChunks),
-      s"frame hamming store at $storePath was banded with " +
-        s"chunks=${meta.getOrElse("chunks", "?")}, this stream uses " +
-        s"chunks=$nChunks — rebuild the store or match the layout")
-
-    val histAll = CommitLog.read(spark, store, Some(baseV))
-      .map(_.filter(col("batch") =!= batchId))
-    val hasHistory = histAll.isDefined
-
-    val histRead: Array[Any] => DataFrame = buckets => {
-      val cover = idCoverFilter(col("graft_bucket"), buckets)
-      prunedRead(spark, store, None, baseV, idRanges(buckets)) match {
-        case None => batch.select(col(idCol).as("graft_id"),
-          lit(0L).as("graft_pos"), col(hashCol).as("graft_sh"),
-          lit(0L).as("graft_bucket")).limit(0)
-        case Some(df) => df
-          .filter(col("batch") =!= batchId)
-          .where(cover.getOrElse(lit(true)))
-          .filter(col("graft_bucket").isInCollection(buckets.toSeq))
-      }
-    }
-    val admitted = frameHammingAdmitCore(
-      batch, idCol, posCol, hashCol, histRead, () => histAll.get,
-      hasHistory, maxHamming, minMatchedFrames, nChunks, maxBucketFetch)
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    admittedFrameBandRows(admitted, idCol, posCol, hashCol, nChunks)
-      .write.parquet(
-        new org.apache.hadoop.fs.Path(staging, s"batch=$batchId").toString)
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = Seq(s"batch=$batchId"),
-      wholeStore = false,
-      meta = Map("maxBatch" -> batchId.toString,
-        "chunks" -> nChunks.toString),
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = Some("graft_bucket"))
-    admitted
-  }
-
-  /** The candidate → verify → admit middle of
-    * [[applyFrameHammingNearDupBatch]]. Within-batch: the batch operator
-    * verbatim — aligned-frame pairs via the distinct-first multi-index
-    * join (`groupCols = posCol`), count per item pair, larger id drops
-    * at ≥ `minMatchedFrames`. Cross-batch: batch frames probe
-    * bucket-mate history frames (position folded into the bucket key),
-    * exact per-frame hamming verify, then the SAME per-pair aligned
-    * count against each admitted item. */
-  private def frameHammingAdmitCore(
-      batch: DataFrame,
-      idCol: String,
-      posCol: String,
-      hashCol: String,
-      histRead: Array[Any] => DataFrame,
-      histFull: () => DataFrame,
-      hasHistory: Boolean,
-      maxHamming: Int,
-      minMatchedFrames: Int,
-      nChunks: Int,
-      maxBucketFetch: Int): DataFrame = {
-    val radius = maxHamming / nChunks
-    val valid = batch.filter(col(hashCol).isNotNull && col(posCol).isNotNull)
-    val dupInBatch = graft.operators.Dedup.hammingNearDupPairs(
-        valid, idCol, hashCol, maxHamming, nChunks, groupCols = Seq(posCol))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("graft_m"))
+    def aligned(pairs: DataFrame, a: String, b: String) = pairs
+      .groupBy(a, b).agg(count(lit(1)).as("graft_m"))
       .filter(col("graft_m") >= minMatchedFrames)
-      .select(col("id_b").as(idCol)).distinct()
-
-    val probe = valid
-      .select(col(idCol).as("graft_bid"),
-        col(posCol).cast("long").as("graft_pos"),
-        col(hashCol).as("graft_bh"))
-      .withColumn("graft_bucket", explode(frameBandKeys(
-        col("graft_bh"), col("graft_pos"), nChunks, expand = radius == 1)))
-      .select("graft_bid", "graft_pos", "graft_bh", "graft_bucket")
-      .distinct().persist()
-    val capProbe = math.min(maxBucketFetch.toLong + 1L, Int.MaxValue.toLong).toInt
-    val batchBuckets: Array[Any] =
-      if (hasHistory) probe.select("graft_bucket").distinct().limit(capProbe)
-        .collect().map(_.get(0))
-      else Array.empty[Any]
-    val dupOfHistory =
-      if (!hasHistory || batchBuckets.isEmpty) batch.select(col(idCol)).limit(0)
-      else {
-        val src = if (batchBuckets.length <= maxBucketFetch)
-          histRead(batchBuckets) else histFull()
-        probe
-          .join(src.select(col("graft_bucket"), col("graft_id").as("graft_hid"),
+    admitBatch(batch, storePath, batchId, idCol, FrameHammingStore,
+      Seq("chunks" -> Some(nChunks.toString)), maxBucketFetch) { p =>
+      val valid = batch.filter(col(hashCol).isNotNull && col(posCol).isNotNull)
+      val keys = p.hold(valid
+        .select(col(idCol).as("graft_bid"),
+          col(posCol).cast("long").as("graft_pos"),
+          col(hashCol).as("graft_bh"))
+        .withColumn("graft_bucket", explode(frameBandKeys(
+          col("graft_bh"), col("graft_pos"), nChunks, expand = maxHamming / nChunks == 1)))
+        .distinct().persist())
+      new Keyed {
+        def probe = keys.select("graft_bucket")
+        // exact per-frame verify, then the per-pair aligned count against
+        // each admitted item: one row per (item, admitted item, frame)
+        def dupOfHistory(h: DataFrame) = aligned(keys
+          .join(h.select(col("graft_bucket"), col("graft_id").as("graft_hid"),
             col("graft_sh").as("graft_hh")), Seq("graft_bucket"))
           .filter(graft.functions.TextFunctions
             .hamming64(col("graft_bh"), col("graft_hh")) <= maxHamming)
-          // one row per (batch item, admitted item, aligned frame)
-          .select("graft_bid", "graft_hid", "graft_pos").distinct()
-          .groupBy("graft_bid", "graft_hid")
-          .agg(count(lit(1)).as("graft_m"))
-          .filter(col("graft_m") >= minMatchedFrames)
-          .select(col("graft_bid").as(idCol)).distinct()
+          .select("graft_bid", "graft_hid", "graft_pos").distinct(),
+          "graft_bid", "graft_hid")
+          .select(col("graft_bid").as(idCol))
+        // within-batch: the batch operator verbatim (aligned-frame pairs
+        // via the distinct-first multi-index join, larger id drops)
+        def dupInBatch = aligned(graft.operators.Dedup.hammingNearDupPairs(
+            valid, idCol, hashCol, maxHamming, nChunks, groupCols = Seq(posCol)),
+          "id_a", "id_b")
+          .select(col("id_b").as(idCol))
+        def storeRows(a: DataFrame) = Seq(a.filter(col(hashCol).isNotNull && col(posCol).isNotNull)
+          .select(col(idCol).as("graft_id"),
+            col(posCol).cast("long").as("graft_pos"),
+            col(hashCol).as("graft_sh"))
+          .withColumn("graft_bucket", explode(frameBandKeys(
+            col("graft_sh"), col("graft_pos"), nChunks, expand = false))))
       }
-    val admitted = batch
-      .join(dupOfHistory.unionByName(dupInBatch).distinct(),
-        Seq(idCol), "left_anti")
-      .persist()
-    admitted.count() // materialize before releasing the probe cache
-    probe.unpersist()
-    admitted
+    }
   }
 
-  /** Admitted frame rows → store rows: exact band keys only (no flip
-    * expansion — that rides the probe side). */
-  private def admittedFrameBandRows(
-      admitted: DataFrame, idCol: String, posCol: String, hashCol: String,
-      nChunks: Int): DataFrame =
-    admitted
-      .filter(col(hashCol).isNotNull && col(posCol).isNotNull)
-      .select(col(idCol).as("graft_id"),
-        col(posCol).cast("long").as("graft_pos"),
-        col(hashCol).as("graft_sh"))
-      .withColumn("graft_bucket", explode(frameBandKeys(
-        col("graft_sh"), col("graft_pos"), nChunks, expand = false)))
-
-  /** Maintenance for a [[frameHammingNearDupStream]] store: fold every
-    * batch partition except the latest into `batch=-1`, sorted by bucket
-    * (the probe's pushed bucket cover then hits tight row groups). */
+  /** Maintenance for a [[frameHammingNearDupStream]] store:
+    * [[foldStore]], sorted by bucket. */
   def maintainFrameHammingNearDupStore(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L << 20): Unit =
-    foldLogStoreBatches(spark, storePath, targetFileBytes,
-      sortCols = Seq("graft_bucket", "graft_id"), statsCol = Some("graft_bucket"))
+    foldStore(spark, storePath, FrameHammingStore, targetFileBytes)
 
-  /** Shared single-level log-store fold (exact-dedup and embedding
-    * stores): one manifest folds every batch but the newest into
-    * `batch=-1`, range-partitioned and sorted by `sortCols` so the
-    * per-file stats ranges stay tight for the history lookups,
-    * parity-checked from footers pre-commit. */
-  private def foldLogStoreBatches(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      targetFileBytes: Long,
-      sortCols: Seq[String],
-      statsCol: Option[String]): Unit = {
-    import graft.operators.CommitLog
-    val store = new org.apache.hadoop.fs.Path(storePath)
+  /** Read a log store (or one sub-table) at a pinned version from an
+    * explicitly PRUNED file list: files whose manifest-recorded
+    * stats-column range overlaps none of the candidate `ranges` are
+    * skipped before any footer is opened — manifest-level pruning on
+    * top of the row-group pruning the pushed filters already do. Files
+    * without stats are always kept (conservative). None when no file
+    * survives — no file can contain the candidates. */
+  private[graft] def prunedRead(
+      spark: SparkSession,
+      store: Path,
+      sub: Option[String],
+      version: Long,
+      ranges: Option[Seq[(Any, Any)]]): Option[DataFrame] = {
     val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    adoptSingleRootStore(spark, store)
-    val baseV = CommitLog.currentVersion(fs, store)
-    if (baseV == 0) return
-    val files = CommitLog.snapshotFiles(fs, store, baseV)
-    val ids = files.flatMap(_.split('/').headOption).distinct
-      .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-    val live = ids.filter(_ >= 0)
-    if (live.isEmpty) return
-    val maxId = live.max
-    val foldIds = ids.filter(_ < maxId).sorted
-    if (!foldIds.exists(_ >= 0)) return
-
-    val inFiles = files.filter(f =>
-      foldIds.exists(i => f.startsWith(s"batch=$i/")))
-    val bytes = inFiles
-      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(store, f)).getLen)
-      .sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val folded = CommitLog.read(spark, store, Some(baseV)).get
-      .filter(col("batch").isin(foldIds: _*)).drop("batch")
-      .repartitionByRange(nOut, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-    val staging = graft.operators.Swap.Suffix.staging(
-      store, graft.operators.Swap.newTag())
-    val dest = new org.apache.hadoop.fs.Path(staging, "batch=-1")
-    folded.write.parquet(dest.toString)
-    val before = graft.operators.Compact.footerRowsOf(spark,
-      inFiles.map(new org.apache.hadoop.fs.Path(store, _)))
-    val after = graft.operators.Compact.footerRowsIn(spark, Seq(dest))
-    if (before != after) {
-      fs.delete(staging, true)
-      throw new IllegalStateException(
-        s"fold row mismatch for $storePath: $before -> $after (store untouched)")
+    val all = CommitLog.snapshotFilesWithStats(fs, store, version)
+    val slice = sub.fold(all)(s0 => all.filter(_._1.startsWith(s0 + "/")))
+    if (slice.isEmpty) return None
+    val kept = ranges match {
+      case None => slice
+      case Some(rs) => slice.filter { case (_, st) =>
+        st.forall(s => rs.exists { case (lo, hi) => s.overlaps(lo, hi) })
+      }
     }
-    CommitLog.commitStaged(spark, store, staging, baseV,
-      retireNames = foldIds.map("batch=" + _),
-      wholeStore = false,
-      // config + maxBatch carry forward; the tip's operation label does not
-      meta = CommitLog.tipMeta(fs, store) - "operation",
-      extraTouched = Seq(CommitLog.SerialToken),
-      statsCol = statsCol) // sorted fold → tight per-file ranges
-    // same rationale as the near-dup fold: maintenance is when the store
-    // physically shrinks
-    CommitLog.vacuum(spark, store)
-    ()
+    if (kept.isEmpty) None
+    else {
+      val basePath = sub.fold(store)(s0 => new Path(store, s0))
+      Some(spark.read.option("basePath", basePath.toString)
+        .parquet(kept.map { case (f, _) => new Path(store, f).toString }: _*))
+    }
+  }
+
+  /** Row-group-prunable cover for a candidate id set: sort the ids, split
+    * at the `maxRanges - 1` widest gaps, and return OR-of-BETWEEN over the
+    * resulting tight ranges (plus a single [min,max] range for string
+    * ids, whose gap widths are not meaningful). The cover is a SUPERSET
+    * of the ids — callers keep the exact In filter on top — so it only
+    * affects which row groups are read, never which rows qualify. None
+    * for empty or unsupported id types (cover skipped, exact filter still
+    * applies). */
+  private[graft] def idCoverFilter(
+      idCol: org.apache.spark.sql.Column,
+      ids: Array[Any],
+      maxRanges: Int = 32): Option[org.apache.spark.sql.Column] =
+    idRanges(ids, maxRanges).map(rs =>
+      rs.map { case (lo, hi) => idCol >= lit(lo) && idCol <= lit(hi) }
+        .reduce(_ || _))
+
+  /** The driver-side range cover behind [[idCoverFilter]], reusable for
+    * FILE-level pruning against commit-log manifest stats: a superset of
+    * `ids` as ≤ `maxRanges` [lo, hi] pairs (typed endpoints). */
+  private[graft] def idRanges(
+      ids: Array[Any],
+      maxRanges: Int = 32): Option[Seq[(Any, Any)]] = {
+    if (ids.isEmpty) None
+    else if (ids.forall(v => v.isInstanceOf[java.lang.Long] ||
+      v.isInstanceOf[java.lang.Integer] ||
+      v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Byte])) {
+      // endpoints keep their ORIGINAL boxed type: a widening cast on the
+      // column side (int col vs long literal) can block parquet pushdown
+      val sorted = ids.map(v => (v.asInstanceOf[Number].longValue, v))
+        .distinctBy(_._1).sortBy(_._1)
+      val gaps = (1 until sorted.length)
+        .map(i => (sorted(i)._1 - sorted(i - 1)._1, i))
+        .filter(_._1 > 1)
+        .sortBy(-_._1)
+        .take(maxRanges - 1)
+        .map(_._2).sorted
+      val bounds = (0 +: gaps) :+ sorted.length
+      Some(bounds.sliding(2)
+        .map { case Seq(a, b) => (sorted(a)._2, sorted(b - 1)._2) }.toSeq)
+    } else if (ids.forall(_.isInstanceOf[String])) {
+      val xs = ids.map(_.asInstanceOf[String])
+      Some(Seq((xs.min, xs.max)))
+    } else None
   }
 
 }
