@@ -81,11 +81,10 @@ object Compact {
       return CompactStats(files.length, files.length, bytes, before)
 
     val staging = Swap.Suffix.staging(target, Swap.newTag())
-    // repartition, not coalesce: coalesce folds into the SCAN tasks and
-    // would chain the read parallelism to nOut; repartition keeps the
-    // read wide and only funnels at the write.
+    // coalesce, not repartition: each writer task reads its own share of
+    // the input and nothing is shuffled (see docs/scale-sizing.md §10)
     CommitLog.read(spark, target, Some(readVersion)).get
-      .repartition(nOut).write.parquet(staging.toString)
+      .coalesce(nOut).write.parquet(staging.toString)
     val staged = dataFiles(spark, staging)
     val after = footerRows(spark, staged)
     if (after != before) {
@@ -124,6 +123,9 @@ object Compact {
     val live = CommitLog.snapshotFiles(fs, root, readVersion)
     val byDir = live.groupBy(f => f.takeWhile(_ != '/'))
       .filter { case (d, fls) => d.startsWith(pcol + "=") && fls.length > maxFilesPerDir }
+    // the recorded schema; a store without one is inferred once, not per dir
+    lazy val schema = CommitLog.schemaAt(fs, root, readVersion).getOrElse(
+      CommitLog.readFilesAt(spark, root, readVersion, byDir.values.flatten.toSeq).get.schema)
     byDir.flatMap { case (dirName, rels) =>
       val files = rels.map(r => fs.getFileStatus(new Path(root, r))).toArray
       val bytes = files.map(_.getLen).sum
@@ -132,13 +134,14 @@ object Compact {
       if (files.length <= nOut) None
       else {
         val staging = Swap.Hidden.staging(root, Swap.newTag())
-        spark.read
+        spark.read.schema(schema)
           .option("basePath", root.toString)
           .parquet(files.map(_.getPath.toString): _*)
           .drop(pcol) // partition col re-materializes from the dir name
-          .repartition(nOut)
+          .coalesce(nOut)
           .write.parquet(new Path(staging, dirName).toString)
-        val after = footerRows(spark, dataFiles(spark, new Path(staging, dirName)))
+        val staged = dataFiles(spark, new Path(staging, dirName))
+        val after = footerRows(spark, staged)
         if (after != before) {
           fs.delete(staging, true)
           throw new IllegalStateException(
@@ -148,7 +151,7 @@ object Compact {
         try {
           CommitLog.commitStaged(spark, root, staging, readVersion,
             Seq(dirName), wholeStore = false)
-          Some(dirName -> CompactStats(files.length, nOut, bytes, before))
+          Some(dirName -> CompactStats(files.length, staged.length, bytes, before))
         } catch {
           case _: CommitLog.ConflictException => None // ingest won; next tick
         }

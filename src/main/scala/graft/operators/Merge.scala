@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Delta-style MERGE into a parquet store — the store-level form of the
@@ -102,9 +103,9 @@ object Merge {
 
     // SQL MERGE semantics: a key matched by >1 source row is an error, not
     // a nondeterministic pick. One aggregate over the (small) source side.
-    val dupKeys = source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("graft_n")).filter(col("graft_n") > 1).limit(1).count()
-    require(dupKeys == 0, s"source has multiple rows for the same key ${keyCols.mkString(",")}")
+    require(source.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("graft_n")).filter(col("graft_n") > 1).isEmpty,
+      s"source has multiple rows for the same key ${keyCols.mkString(",")}")
 
     def mergedFrom(base: DataFrame): DataFrame =
       base.join(source.select(keyCols.map(col): _*), keyCols, "left_anti")
@@ -131,14 +132,14 @@ object Merge {
         // key whose partition value changed in the source: the old row
         // must be removed from its old partition or the key ends up
         // duplicated across partitions. (b) costs one column-pruned scan
-        // of the target's (key, pcol) columns behind a semi join; values
-        // collected driver-side are partition keys (few), never data rows.
+        // of the target's (key, pcol) columns behind a semi join on the
+        // (unique) source keys; values collected driver-side are
+        // partition keys (few), never data rows.
         val sourceParts = source.select(pcol).distinct()
         val touchedDf =
           if (keyCols.contains(pcol)) sourceParts
           else sourceParts.union(
-            current.join(
-              source.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
+            current.join(source.select(keyCols.map(col): _*), keyCols, "left_semi")
               .select(pcol)).distinct()
         val touched = touchedDf.collect().map(_.get(0))
         // NULL partition values can't be addressed by isin() filters or a
@@ -146,23 +147,17 @@ object Merge {
         require(!touched.contains(null),
           s"partition-scoped merge does not support NULL values in $pcol")
         val scoped = current.filter(col(pcol).isin(touched: _*))
-        // On-disk dirs currently holding touched partitions, taken from
-        // the files the scan itself reads — so the path encoding (dates,
-        // timestamps with escaped colons, special chars) is exactly what
-        // the writer produced, never reconstructed from a value's
-        // toString. Walk up from each file to the `pcol=` ancestor.
-        val oldDirs: Array[org.apache.hadoop.fs.Path] = scoped
-          .select(input_file_name().as("graft_f")).distinct()
-          .collect().map(_.getString(0))
-          .flatMap { f =>
-            // input_file_name() yields the file's URI form — percent-
-            // encoded (a literal "%3A" in a timestamp dir arrives as
-            // "%253A") — decode via URI before treating it as an FS path
-            var p = new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent
-            while (p != null && !p.getName.startsWith(pcol + "=")) p = p.getParent
-            Option(p)
-          }
-          .distinct
+        // On-disk dirs of the touched partitions, from the planner's pruned
+        // listing of `scoped` (no job): exactly the files the rewrite scans,
+        // zero-row ones included, in the writer's own path encoding (never
+        // a value's toString). No touched partition plans no scan: no dirs.
+        val oldDirs = scoped.queryExecution.sparkPlan.collect {
+          case scan: FileSourceScanExec => scan.selectedPartitions.filePartitionIterator.toSeq
+        }.flatten.flatMap(_.files).flatMap { f =>
+          var p = f.getPath.getParent
+          while (p != null && !p.getName.startsWith(pcol + "=")) p = p.getParent
+          Option(p)
+        }.distinct
         // Stage the merged output FULLY, then publish one manifest that
         // retires every file of the touched partition dirs. A touched
         // partition with no output rows simply has no staged dir: its

@@ -995,6 +995,13 @@ object StreamOps {
     def dir(batchId: Long): String = s"${prefix}batch=$batchId"
   }
 
+  /** Meta key of an admission table's written schema: the store's own
+    * [[CommitLog.SchemaMetaKey]] for the root table, `schema.<sub>` for a
+    * sub-table. [[prunedRead]] applies it, so a history read infers
+    * nothing; a store without it (adopted, pre-recording) is inferred. */
+  private def tableSchemaKey(sub: Option[String]): String =
+    sub.fold(CommitLog.SchemaMetaKey)(s => s"${CommitLog.SchemaMetaKey}.$s")
+
   /** A family's parts for one batch, evaluated by the lifecycle in this
     * order: the probe keys (only when the store has history), the
     * cross-batch check, the within-batch rule, the store rows. */
@@ -1056,8 +1063,8 @@ object StreamOps {
     try {
       val k = family(pinned)
       val head = spec.tables.head
-      // history presence from the manifest: building the history frame
-      // costs a schema-inference job that only the full-scan fallback needs
+      // history presence from the manifest, not from a history frame (on
+      // a store without recorded schemas, that costs an inference job)
       val hasHistory = CommitLog.snapshotFiles(fs, store, baseV)
         .exists(_.startsWith(head.prefix))
       // cap+1 probe, overflow-safe for maxFetch = Int.MaxValue
@@ -1081,14 +1088,15 @@ object StreamOps {
       try {
         // stage every table, publish ONE manifest
         val staging = Swap.Suffix.staging(store, Swap.newTag())
-        spec.tables.zip(k.storeRows(admitted)).foreach { case (t, rows) =>
+        val written = spec.tables.zip(k.storeRows(admitted)).map { case (t, rows) =>
           rows.write.parquet(new Path(staging, t.dir(batchId)).toString)
+          tableSchemaKey(t.sub) -> rows.schema.json
         }
         CommitLog.commitStaged(spark, store, staging, baseV,
           retireNames = spec.tables.map(_.dir(batchId)),
           wholeStore = false,
           meta = layout.flatMap { case (key, v) => v.orElse(meta.get(key)).map(key -> _) }
-            .toMap + ("maxBatch" -> batchId.toString),
+            .toMap ++ written + ("maxBatch" -> batchId.toString),
           extraTouched = Seq(CommitLog.SerialToken),
           statsCol = Some(spec.key))
       } catch { case e: Throwable => admitted.unpersist(); throw e }
@@ -1200,9 +1208,10 @@ object StreamOps {
     if (!foldIds.exists(_ >= 0)) return           // only the fold itself left
 
     val staging = Swap.Suffix.staging(store, Swap.newTag())
-    spec.tables.foreach { t =>
+    val written = spec.tables.flatMap { t =>
       val inFiles = files.filter(f => foldIds.exists(i => f.startsWith(t.dir(i) + "/")))
-      if (inFiles.nonEmpty) {
+      if (inFiles.isEmpty) None
+      else {
         val bytes = inFiles.map(f => fs.getFileStatus(new Path(store, f)).getLen).sum
         val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
         val folded = prunedRead(spark, store, t.sub, baseV, None).get
@@ -1211,8 +1220,8 @@ object StreamOps {
         val dest = new Path(staging, t.dir(-1))
         // range-partition + sort (not a global sort): each output file
         // holds a contiguous key range for row-group pruning + compression
-        t.reagg.fold(folded)(_(folded))
-          .repartitionByRange(nOut, sortCols: _*)
+        val rows = t.reagg.fold(folded)(_(folded))
+        rows.repartitionByRange(nOut, sortCols: _*)
           .sortWithinPartitions(sortCols: _*)
           .write.parquet(dest.toString)
         if (t.reagg.isEmpty) {
@@ -1226,13 +1235,15 @@ object StreamOps {
                 s"$before -> $after (store untouched)")
           }
         }
+        Some(tableSchemaKey(t.sub) -> rows.schema.json)
       }
     }
     CommitLog.commitStaged(spark, store, staging, baseV,
       retireNames = foldIds.flatMap(i => spec.tables.map(_.dir(i))),
       wholeStore = false,
-      // layout + maxBatch carry forward; the tip's operation label does not
-      meta = meta - "operation",
+      // layout, schemas + maxBatch carry forward; the tip's operation
+      // label does not
+      meta = meta - "operation" ++ written,
       extraTouched = Seq(CommitLog.SerialToken),
       statsCol = Some(spec.key)) // sorted fold → tight per-file ranges
     CommitLog.vacuum(spark, store)
@@ -1817,7 +1828,12 @@ object StreamOps {
     if (kept.isEmpty) None
     else {
       val basePath = sub.fold(store)(s0 => new Path(store, s0))
-      Some(spark.read.option("basePath", basePath.toString)
+      val reader = spark.read.option("basePath", basePath.toString)
+      // the recorded schema, when the commit carries one: no inference job
+      val schema = CommitLog.readManifest(fs, store, version).meta.get(tableSchemaKey(sub))
+        .map(org.apache.spark.sql.types.DataType.fromJson(_)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      Some(schema.fold(reader)(reader.schema)
         .parquet(kept.map { case (f, _) => new Path(store, f).toString }: _*))
     }
   }

@@ -230,4 +230,16 @@ class MergeSpec extends AnyFunSuite {
       (3L, "p2", "c", None)), // untouched partition: old schema, NULL evolved col
     "evolved column lost on read-back of a partially-evolved store")
   }
+
+  test("an empty source merged into a partitioned store changes no row") {
+    val path = freshStore()
+    Seq((1L, "p1", "a"), (2L, "p2", "b"))
+      .toDF("k", "part", "v").write.partitionBy("part").parquet(path)
+    // no source row: no touched partition, so the scoped read plans no scan
+    val src = Seq((0L, "p0", "x")).toDF("k", "part", "v").filter(lit(false))
+    val out = Merge.into(spark, path, src, Seq("k"), prunePartitions = Some("part"))
+      .select("k", "part", "v").as[(Long, String, String)].collect().toSet
+    assert(out == Set((1L, "p1", "a"), (2L, "p2", "b")))
+    assert(liveDirs(path) == Set("part=p1", "part=p2"))
+  }
 }

@@ -238,4 +238,26 @@ class AdmissionStoreSpec extends AnyFunSuite {
     assert(losers == Set(6L), s"batch operator dropped $losers")
     assert(got == (1L to 6L).filterNot(losers), s"admitted $got")
   }
+
+  test("every family: a history frame of a committed store, before and " +
+    "after maintenance, is built without a Spark job") {
+    families.foreach { f =>
+      val store = tmp() + "/store"
+      val bs = f.batches()
+      (0 until 3).foreach(i => admit(f, store, i.toLong, bs(i)))
+      def histories(): Unit = {
+        val p = new Path(store)
+        val v = version(store)
+        val tables = CommitLog.snapshotFiles(fsOf(p), p, v).map(_.split('/').head).distinct
+          .map(t => if (t.startsWith("batch=")) None else Some(t))
+        val (frames, counts) = org.apache.spark.graft.JobTrace(spark.sparkContext)(
+          tables.map(StreamOps.prunedRead(spark, p, _, v, None)))
+        assert(frames.forall(_.isDefined))
+        assert(counts.jobs == 0, s"${f.name}: $counts building ${tables.mkString(",")}")
+      }
+      histories()
+      f.maintain(store)
+      histories()
+    }
+  }
 }
