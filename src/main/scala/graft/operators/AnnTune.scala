@@ -69,21 +69,7 @@ object AnnTune {
 
       // --- IVF flat: R² + nprobe sweep
       val ivf = IvfIndex.build(corpus, "vec_id", "embedding", nlist = 8)
-      // total variance of normalized vectors around their global mean
-      val nv = corpus.select(IvfIndex.nvecExpr("embedding").as("nv"))
-      val meanVec = nv.select(
-        (0 until dim).map(j => avg(element_at(col("nv"), j + 1)).as(s"m$j")): _*)
-        .head().toSeq.map(_.asInstanceOf[Double]).toArray
-      val totSse = nv.select(avg(
-        IvfIndex.dist2Expr(col("nv"),
-          typedLit(meanVec.toSeq))).as("t")).head().getDouble(0)
-      val withinMap = IvfIndex.meanAssignDist2(
-        ivf.assigned, "embedding", ivf.centroids)
-      val sizes = ivf.assigned.groupBy("list_id").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val within = sizes.map { case (l, c) => withinMap(l) * c }.sum / sizes.values.sum
-      val r2 = 1.0 - within / totSse
-      println(f"[$label] n=$n dim=$dim IVF nlist=8 R2=$r2%.4f within=$within%.4f total=$totSse%.4f")
+      println(f"[$label] n=$n dim=$dim IVF nlist=8 R2=${ivf.clusterR2}%.4f")
       for (np <- Seq(2, 3, 4, 5, 6, 7, 8)) {
         val r = recallOf((_, p) => ivf.topK(p, k + 1, nprobe = np))
         println(f"[$label] ivf_flat nprobe=$np recall=$r%.3f")

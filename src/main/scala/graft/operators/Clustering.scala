@@ -95,7 +95,7 @@ object Clustering {
     * merge of exactly `maxFitRows` rows), so the driver copy is capped by
     * contract NO MATTER the input size. A fraction would not be: a
     * fraction of 100 TB is still unbounded (the round-9 q_semantic_dedup
-    * failure mode — `sampleFraction=1.0` collected the whole table).
+    * failure mode — a sampling fraction of 1.0 collected the whole table).
     *
     * The id-prefix sample is deterministic and independent of upstream
     * partitioning (ids must be unique — the same contract every dedup

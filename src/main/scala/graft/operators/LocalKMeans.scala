@@ -1,9 +1,10 @@
 package graft.operators
 
 /** Deterministic driver-local k-means (k-means++ seeding + Lloyd's) for
-  * fits whose INPUT is already driver-bounded by contract — the IVF-PQ
-  * codebook fits, where the sample is a few-hundred-k rows at most and
-  * the output is a handful of centroids.
+  * fits whose INPUT is already driver-bounded by contract — the IVF
+  * coarse quantizer both index families share and the IVF-PQ codebook
+  * fits, where the sample is a few-hundred-k rows at most and the output
+  * is a handful of centroids.
   *
   * Why not MLlib: each `KMeans.fit` is a multi-stage distributed job with
   * seconds of fixed scheduling overhead, and IVF-PQ needs 1 + m of them
@@ -11,7 +12,7 @@ package graft.operators
   * sample — measured 18 s of pure overhead per index build on a 2 k-row
   * fixture. The sample is collected once and every fit is an in-memory
   * loop: the same 9 fits take milliseconds, and at the documented
-  * 100 TB shape (`sampleFraction` bounds the fit input) the sample is
+  * 100 TB shape (`maxFitRows` caps the fit input) the sample is
   * driver-scale by construction, so nothing is lost vs the coalesce(1)
   * single-partition fit this replaces.
   *

@@ -320,4 +320,39 @@ class IvfPqSpec extends AnyFunSuite {
       .map(_.takeWhile(_ != '/')).toSet
     assert(tables == Set("data", "centroids", "codebooks"), tables)
   }
+
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+  private def hex(d: Double): String =
+    java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+
+  /** MD5 of the coarse centroids, the codebooks and the sorted
+    * (id, list_id, pq_code) rows, each over exact double bits, and the
+    * raw bits of clusterR2. */
+  private def digests(idx: IvfPqIndex): Seq[String] = Seq(
+    md5(idx.coarse.map { case (i, c) => s"$i:${c.map(hex).mkString(",")}" }.mkString(";")),
+    md5(idx.codebooks.map(_.map(_.map(hex).mkString(",")).mkString("|")).mkString(";")),
+    md5(idx.codes.select($"vec_id", $"list_id", $"pq_code").as[(Long, Int, Seq[Int])]
+      .collect().sortBy(_._1).map { case (i, l, c) => s"$i,$l,${c.mkString(" ")}" }
+      .mkString(";")),
+    hex(idx.clusterR2))
+
+  test("pinned index digests: coarse quantizer, codebooks and codes are " +
+    "bit-identical to the pre-shared-core build on the fixture and on a " +
+    "clustered corpus") {
+    val base = tmpDir("graft_pq_pins")
+    val e = graft.sources.Tables.embeddings(spark, sfDir)
+    val fixture = IvfPqIndex.buildAndSave(e, s"$base/fixture", "vec_id", "embedding",
+      nlist = 8, m = 8, ksub = 32, seed = 42L)
+    assert(digests(fixture) == Seq(
+      "3d7a152e68e873ed0c0c8070ed5228f5", "32f62565ee20bb19b198f985081eda84",
+      "fc3eb5cf74eedd44c4ec427e50654211", "3fb2a3b02a77ca20"))
+    val clustered = IvfPqIndex.buildAndSave(corpus(600), s"$base/clustered",
+      "vec_id", "embedding", nlist = 4, m = 8, ksub = 16, seed = 5L)
+    assert(digests(clustered) == Seq(
+      "6e9b6e420766a04db9cbb1da8d4e191b", "f0fb741cb2151e0853962b26702d9a0c",
+      "17794e0febdb1a9595a3698a5ebe4f69", "3fed7177b870d846"))
+  }
 }
