@@ -77,12 +77,12 @@ object OptProbe {
         time("media image labels") {
           graft.operators.Dedup.hammingNearDupClusters(
             mm.imageDhash(mm.syntheticImageCorpusMemo(s, d)).toDF(),
-            "media_id", "dhash", maxHamming = 6).count()
+            "media_id", "dhash", maxHamming = 6).unpersist()
         }
         time("media audio labels") {
           graft.operators.Dedup.hammingNearDupClusters(
             mm.audioFingerprints(mm.syntheticAudioCorpusMemo(s, d)).toDF(),
-            "media_id", "afp", maxHamming = 6).count()
+            "media_id", "afp", maxHamming = 6).unpersist()
         }
         time("media video pairs") {
           mm.videoNearDupPairs(

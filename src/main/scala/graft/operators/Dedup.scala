@@ -1,12 +1,17 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{SortedIntersectSize, SortedLongIntersectSize}
 
 /** Deduplication operators for corpus pipelines (BASELINE.json
   * north_star): exact, MinHash+LSH, SimHash, n-gram Jaccard, and
-  * embedding-cosine near-dup.
+  * embedding-cosine near-dup. The MinHash self-joins share one LSH core
+  * ([[Dedup.lshSelfJoin]]); the exact set-similarity joins — prefix and
+  * weighted Jaccard, containment within a corpus and against a frozen
+  * reference — share one PPJoin core ([[Dedup.ppjoin]]).
   *
   * Scale design (100 TB):
   *  - Nothing ever materializes the O(n²) pair space. Candidates come from
@@ -288,23 +293,34 @@ object Dedup {
       .select(col("graft_id").as("cand_id"), col("ref_id")).distinct()
       .persist()
 
-    // exact verify over candidate docs only, never either corpus
-    val candC = corpus
-      .join(candidates.select(col("cand_id").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("cand_id"), sort_array(array_distinct(shingles(col(textCol), shingleN))).as("sh_c"))
-    val candR = reference
-      .join(candidates.select(col("ref_id").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("ref_id"), sort_array(array_distinct(shingles(col(textCol), shingleN))).as("sh_r"))
-    val dupIds = candidates
-      .join(candC, "cand_id")
-      .join(candR, "ref_id")
+    val dupIds = verifiedDupIds(candidates, corpus, reference, idCol, textCol,
+      shingleN, threshold)
+    (corpus.join(dupIds, Seq(idCol), "left_anti"),
+      () => { candidates.unpersist(); () })
+  }
+
+  /** The exact-verify tail of [[dedupAgainstReleasable]] and
+    * [[dedupAgainstFrozen]]: the `corpus` ids of the candidate pairs
+    * (cand_id, ref_id) whose shingle Jaccard reaches `threshold`. Shingles
+    * are recomputed for candidate docs only, never either whole corpus. */
+  private def verifiedDupIds(
+      candidates: DataFrame,
+      corpus: DataFrame,
+      reference: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleN: Int,
+      threshold: Double): DataFrame = {
+    def candSets(side: DataFrame, id: String, sh: String) = side
+      .join(candidates.select(col(id).as(idCol)).distinct(), Seq(idCol), "left_semi")
+      .select(col(idCol).as(id),
+        sort_array(array_distinct(shingles(col(textCol), shingleN))).as(sh))
+    candidates
+      .join(candSets(corpus, "cand_id", "sh_c"), "cand_id")
+      .join(candSets(reference, "ref_id", "sh_r"), "ref_id")
       .withColumn("graft_j", jaccardSortedDistinct(col("sh_c"), col("sh_r")))
       .filter(col("graft_j") >= threshold)
       .select(col("cand_id").as(idCol)).distinct()
-    (corpus.join(dupIds, Seq(idCol), "left_anti"),
-      () => { candidates.unpersist(); () })
   }
 
   /** Frozen-reference handle for streaming/incremental [[dedupAgainst]]:
@@ -396,20 +412,8 @@ object Dedup {
     val candidates = bandB.join(frozen.refBands, Seq("band", "bucket"))
       .select(col("cand_id"), col("ref_id")).distinct()
       .persist()
-    val candC = batch
-      .join(candidates.select(col("cand_id").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("cand_id"), sort_array(array_distinct(shingles(col(textCol), frozen.shingleN))).as("sh_c"))
-    val candR = frozen.reference
-      .join(candidates.select(col("ref_id").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("ref_id"), sort_array(array_distinct(shingles(col(textCol), frozen.shingleN))).as("sh_r"))
-    val dupIds = candidates
-      .join(candC, "cand_id")
-      .join(candR, "ref_id")
-      .withColumn("graft_j", jaccardSortedDistinct(col("sh_c"), col("sh_r")))
-      .filter(col("graft_j") >= threshold)
-      .select(col("cand_id").as(idCol)).distinct()
+    val dupIds = verifiedDupIds(candidates, batch, frozen.reference, idCol,
+      textCol, frozen.shingleN, threshold)
     val admitted = batch.join(dupIds, Seq(idCol), "left_anti").persist()
     admitted.count()
     candidates.unpersist()
@@ -419,11 +423,11 @@ object Dedup {
   /** Frozen-reference handle for streaming/incremental directional
     * containment ([[containmentAgainstFrozen]]) — the
     * [[FrozenReference]] sibling on the containment axis. State is the
-    * reference's doc-packed sorted shingle arrays plus its
-    * vocabulary-sized document frequencies, both persisted ONCE —
-    * deliberately NOT the exploded token table (the r15 second-decade
-    * lesson: same bytes, ~1/100th the cached rows). `release()` drops
-    * both caches; nothing else is held across batches. */
+    * reference's doc-packed sorted shingle sets, their tier-1 hash arrays
+    * ([[hashSets]]) and the vocabulary-sized document frequencies, each
+    * persisted ONCE — deliberately NOT the exploded token table (the r15
+    * second-decade lesson: same bytes, ~1/100th the cached rows).
+    * `release()` drops the caches; nothing else is held across batches. */
   final case class FrozenContainmentReference private[operators] (
       refSets: DataFrame,
       refDfs: DataFrame,
@@ -440,58 +444,35 @@ object Dedup {
     * month's corpus" — quotation/excerpt leakage the symmetric
     * [[dedupAgainstFrozen]] misses by construction (a short probe inside
     * a long reference doc has Jaccard ≈ |A|/|B| → 0). Shingle sets are
-    * sorted at build (merge-walk verify), document frequencies computed
-    * once; both caches are materialized eagerly so every micro-batch
-    * reuses them instead of re-shingling the reference per trigger. */
+    * sorted, hashed and counted ONCE, eagerly, so every micro-batch
+    * reuses the caches instead of re-shingling the reference per
+    * trigger. */
   def freezeContainmentReference(
       reference: DataFrame,
       idCol: String,
       textCol: String,
       shingleN: Int = 3,
       maxTokenDf: Long = 100000L): FrozenContainmentReference = {
-    val refSets = reference
-      .select(col(idCol).as("ref_id"),
-        sort_array(array_distinct(shingles(col(textCol), shingleN))).as("sh_r"))
-      .persist()
-    val refDfs = refSets
-      .select(explode(col("sh_r")).as("graft_tok"))
-      .groupBy("graft_tok")
-      .agg(count(lit(1)).as("graft_df"))
-      .persist()
-    // tier-1 hash arrays (the r16 two-tier verify, frozen side computed
-    // ONCE): sorted xxhash64 per doc + the per-doc injectivity check
-    // that makes the hash intersection a provable upper bound
-    val refHsh = refSets
-      .select(col("ref_id"), size(col("sh_r")).as("ref_n"),
-        sort_array(array_distinct(
-          transform(col("sh_r"), x => xxhash64(x)))).as("hs_r"))
-      .persist()
-    refSets.count(); refDfs.count()
-    val refInjective = {
-      val row = refHsh.agg(max(col("ref_n") - size(col("hs_r")))).first()
-      row.isNullAt(0) || row.getInt(0) == 0
+    val caches = new Caches
+    caches.onFailure {
+      val refSets = caches.keep(shingleSets(reference, idCol, textCol, shingleN))
+      val refDfs = caches.keep(refSets
+        .select(explode(col("graft_sh")).as("graft_tok"))
+        .groupBy("graft_tok")
+        .agg(count(lit(1)).as("graft_df")))
+      refDfs.count()
+      val (refHsh, refInjective) = hashSets(refSets, caches)
+      FrozenContainmentReference(refSets, refDfs, refHsh, refInjective,
+        idCol, textCol, shingleN, maxTokenDf, () => caches.release())
     }
-    FrozenContainmentReference(refSets, refDfs, refHsh, refInjective,
-      idCol, textCol, shingleN, maxTokenDf,
-      () => { refSets.unpersist(); refDfs.unpersist(); refHsh.unpersist(); () })
   }
 
   /** One batch of probe docs gated against a
     * [[FrozenContainmentReference]]: drop every doc A with
-    * C(A→B) = |A∩B| / |A| ≥ threshold for SOME reference doc B.
-    *
-    * Exact asymmetric prefix filter against a frozen side: order each
-    * probe doc's shingles by ascending REFERENCE df (prefix-filter
-    * soundness holds for ANY fixed total order — pigeonhole: if C ≥ t
-    * then among A's first |A| − ⌈t·|A|⌉ + 1 ordered shingles at least
-    * one is shared with B). Probe shingles unseen in the reference have
-    * df 0: they sort FIRST (maximally pruning — they generate no
-    * candidates, and a doc whose whole prefix is unseen provably cannot
-    * reach t) and are dropped from the posting join. The length filter
-    * |B| ≥ t·|A| rides the join predicate; exact merge-walk verify runs
-    * on candidates only. Hot-shingle exactness guard is EAGER (the
-    * [[containmentNearDupReleasable]] r16 discipline): it fires at CALL
-    * time from a batch-sized aggregate, before any action.
+    * C(A→B) = |A∩B| / |A| ≥ threshold for SOME reference doc B — the
+    * [[ppjoin]] core with the reference as the df source and posting
+    * side. Its refusal is eager: it fires at CALL time from a
+    * batch-sized aggregate, before any action.
     *
     * Per-doc decisions depend ONLY on (doc, reference) → batches
     * decompose EXACTLY: the union of per-batch admissions equals
@@ -502,148 +483,14 @@ object Dedup {
   def containmentAgainstFrozen(
       batch: DataFrame,
       frozen: FrozenContainmentReference,
-      threshold: Double = 0.8,
-      verifyStrategy: String = "auto"): DataFrame = {
-    require(threshold > 0 && threshold <= 1, s"threshold=$threshold outside (0,1]")
+      threshold: Double = 0.8): DataFrame = {
     import frozen.idCol
-    val aSets = batch
-      .select(col(idCol).as("cand_id"),
-        sort_array(array_distinct(shingles(col(frozen.textCol), frozen.shingleN)))
-          .as("sh_a"))
-      .persist()
-    val ordered = aSets
-      .select(col("cand_id"), explode(col("sh_a")).as("graft_tok"))
-      .join(frozen.refDfs, Seq("graft_tok"), "left")
-      .withColumn("graft_df", coalesce(col("graft_df"), lit(0L)))
-      .groupBy("cand_id")
-      .agg(sort_array(collect_list(struct(col("graft_df"), col("graft_tok"))))
-        .as("graft_ord"))
-      .persist()
-    val plen = (size(col("graft_ord")) -
-      ceil(lit(threshold) * size(col("graft_ord")) - lit(1e-9)).cast("int") + 1)
-    // eager guard riding the cache materialization (batch-sized scan):
-    // arrays sort by ascending (df, tok), so the hottest prefix shingle
-    // per doc is the element at position plen
-    // the same one-scan aggregate also prices the candidate join: each
-    // prefix entry with token s joins df(s) reference postings (df ≥ 1;
-    // no self-exclusion cross-corpus), so the exact pre-length-filter
-    // volume is Σ_docs Σ_{s ∈ prefix} df(s) — the two-tier switch below
-    val (maxPrefixDf, candVolume) = {
-      val row = ordered
-        .select(
-          max(element_at(col("graft_ord"), plen.cast("int"))
-            .getField("graft_df")).as("mx"),
-          sum(aggregate(slice(col("graft_ord"), lit(1), plen), lit(0L),
-            (acc, e) => acc + e.getField("graft_df"))).as("cv"))
-        .first()
-      (if (row.isNullAt(0)) 0L else row.getLong(0),
-        if (row.isNullAt(1)) 0L else row.getLong(1))
-    }
-    if (maxPrefixDf > frozen.maxTokenDf) {
-      val hot = ordered
-        .select(explode(slice(col("graft_ord"), lit(1), plen)).as("graft_e"))
-        .filter(col("graft_e.graft_df") > frozen.maxTokenDf)
-        .select(col("graft_e.graft_tok")).head().getString(0)
-      aSets.unpersist(); ordered.unpersist()
-      throw new IllegalStateException(
-        s"containmentAgainstFrozen: prefix shingle '$hot' has reference " +
-          s"document frequency above maxTokenDf=${frozen.maxTokenDf} — " +
-          "run exact dedup first, or raise the bound knowingly")
-    }
-    val prefixes = ordered
-      .select(col("cand_id"), size(col("graft_ord")).as("graft_sz"),
-        explode(slice(col("graft_ord"), lit(1), plen)).as("graft_e"))
-      .select(col("cand_id"), col("graft_sz"),
-        col("graft_e.graft_tok").as("graft_tok"),
-        col("graft_e.graft_df").as("graft_df"))
-    // df-0 tail drop: unseen in the reference → no postings to join
-    // (cross-corpus, so df ≥ 1 suffices — the self-join path's df ≥ 2
-    // argument does not apply here)
-    val candidates = prefixes.filter(col("graft_df") >= 1).as("a")
-      .join(
-        frozen.refSets.select(col("ref_id"), size(col("sh_r")).as("ref_sz"),
-          explode(col("sh_r")).as("graft_tok")).as("b"),
-        col("a.graft_tok") === col("b.graft_tok") &&
-          col("b.ref_sz").cast("double") >=
-            lit(threshold) * col("a.graft_sz") - lit(1e-9))
-      .select(col("cand_id"), col("ref_id")).distinct()
-    // Verify-strategy switch (the containmentNearDup r16 two-tier
-    // design, frozen-reference spelling): at large candidate volume the
-    // verify join's payload — full string shingle arrays per candidate
-    // pair — dominates the wall (measured 18× on a 10× decade before
-    // this path existed). Tier 1 intersects int64 hash arrays (the
-    // reference side pre-hashed ONCE at freeze; the probe side is
-    // batch-sized), a provable upper bound given per-doc injectivity on
-    // BOTH sides; tier 2 string-verifies survivors only. Any collision
-    // (either side) → one-tier string verify: exact either way.
-    def stringVerifyIds(pairs: DataFrame): DataFrame = pairs
-      .join(aSets, "cand_id")
-      .join(frozen.refSets, "ref_id")
-      .withColumn("graft_cm",
-        org.apache.spark.sql.graft.SortedIntersectSize
-          .sortedIntersectSize(col("sh_a"), col("sh_r")).cast("double") /
-          size(col("sh_a")))
-      .filter(col("graft_cm") >= threshold)
-      .select(col("cand_id").as(idCol)).distinct()
-    val twoTier = (verifyStrategy match {
-      case "string" => false
-      case "hash" => true
-      case _ => candVolume >= 8000000L
-    }) && frozen.refInjective
-    val (containedIds, extraRelease): (DataFrame, () => Unit) =
-      if (!twoTier) (stringVerifyIds(candidates), () => ())
-      else {
-        val aHsh = aSets
-          .select(col("cand_id"), size(col("sh_a")).as("n_a"),
-            sort_array(array_distinct(
-              transform(col("sh_a"), x => xxhash64(x)))).as("hs_a"))
-          .persist()
-        val aInjective = {
-          val row = aHsh.agg(max(col("n_a") - size(col("hs_a")))).first()
-          row.isNullAt(0) || row.getInt(0) == 0
-        }
-        if (!aInjective) {
-          System.err.println(
-            "[graft.Dedup] containmentAgainstFrozen: intra-doc hash " +
-              "collision in the batch — one-tier string verify")
-          aHsh.unpersist()
-          (stringVerifyIds(candidates), () => ())
-        } else {
-          val surv = candidates
-            .join(aHsh, "cand_id")
-            .join(frozen.refHsh.select(col("ref_id"), col("hs_r")), "ref_id")
-            .filter(
-              org.apache.spark.sql.graft.SortedLongIntersectSize
-                .sortedLongIntersectSize(col("hs_a"), col("hs_r"))
-                .cast("double") >= lit(threshold) * col("n_a") - lit(1e-9))
-            .select(col("cand_id"), col("ref_id"))
-            .distinct()
-            .persist()
-          surv.count()
-          // tier 2: cut BOTH set caches to survivor docs by broadcast
-          // semi-joins before the (tiny) pair joins
-          val aS = aSets.join(
-            broadcast(surv.select(col("cand_id")).distinct()),
-            Seq("cand_id"), "left_semi")
-          val rS = frozen.refSets.join(
-            broadcast(surv.select(col("ref_id")).distinct()),
-            Seq("ref_id"), "left_semi")
-          val ids = surv
-            .join(aS, "cand_id")
-            .join(rS, "ref_id")
-            .withColumn("graft_cm",
-              org.apache.spark.sql.graft.SortedIntersectSize
-                .sortedIntersectSize(col("sh_a"), col("sh_r")).cast("double") /
-                size(col("sh_a")))
-            .filter(col("graft_cm") >= threshold)
-            .select(col("cand_id").as(idCol)).distinct()
-          (ids, () => { aHsh.unpersist(); surv.unpersist(); () })
-        }
-      }
-    val admitted = batch.join(containedIds, Seq(idCol), "left_anti").persist()
-    admitted.count()
-    aSets.unpersist(); ordered.unpersist(); extraRelease()
-    admitted
+    val (contained, release) = ppjoin(
+      shingleSets(batch, idCol, frozen.textCol, frozen.shingleN), Some(frozen),
+      jaccard = false, threshold, frozen.maxTokenDf)
+    try materialized(batch.join(
+      contained.select(col("id_a").as(idCol)).distinct(), Seq(idCol), "left_anti"))
+    finally release()
   }
 
   /** Batch cross-corpus directional containment: admit the corpus docs
@@ -658,14 +505,13 @@ object Dedup {
       textCol: String,
       shingleN: Int = 3,
       threshold: Double = 0.8,
-      maxTokenDf: Long = 100000L,
-      verifyStrategy: String = "auto"): DataFrame = {
+      maxTokenDf: Long = 100000L): DataFrame = {
     val frozen = freezeContainmentReference(
       reference, idCol, textCol, shingleN, maxTokenDf)
     // the returned frame is persisted+materialized by the frozen core,
     // so dropping the reference caches here is safe (recompute keeps a
     // valid lineage; it just stops being cached)
-    try containmentAgainstFrozen(corpus, frozen, threshold, verifyStrategy)
+    try containmentAgainstFrozen(corpus, frozen, threshold)
     finally frozen.release()
   }
 
@@ -982,7 +828,12 @@ object Dedup {
     * node (its min-id representative) to the component graph and the
     * members inherit the representative's label by a linear join — on
     * saturated perceptual-hash corpora this is the difference between a
-    * quadratic pair expansion and a corpus-linear manifest. */
+    * quadratic pair expansion and a corpus-linear manifest.
+    *
+    * Eager and caller-owned (the [[lshSelfJoin]] convention): the labels
+    * come back persisted and materialized with the fingerprint cache
+    * already released — unpersist them once everything derived from
+    * them has materialized. */
   def hammingNearDupClusters(
       hashes: DataFrame,
       idCol: String,
@@ -996,28 +847,28 @@ object Dedup {
     // member attach) — unpersisted, each subtree re-decoded the whole
     // corpus (~4 decode scans per call measured at sf0.1). The cache
     // holds (id, hash): 16 bytes/row, nothing like the media bytes.
-    // Retention matches the simhashNearDup fingerprint-cache contract
-    // (plan-keyed; multi-corpus sessions clearCache between corpora).
     val fp = hashes
       .select(col(idCol).as("graft_id"), col(hashCol).as("graft_sh"))
       .filter(col("graft_sh").isNotNull)
       .persist()
-    val (repPairs, _, classes) =
-      hammingRepPairs(fp, "graft_id", "graft_sh", maxHamming, chunks)
-    val repClusters = nearDupClusters(
-      repPairs.select(col("rep_a").as("id_a"), col("rep_b").as("id_b")))
-    // Label at CLASS level first (support-sized join — repClusters only
-    // has rows for reps that paired), then attach members by hash value:
-    // ONE corpus-sized join instead of the members-construction join
-    // plus a member-level label join (r19, guide §2.4). Identical
-    // output: classes has exactly one row per hash value, so every
-    // member picks up exactly the label its class representative got.
-    val classLabels = classes
-      .join(repClusters, classes("graft_rep") === repClusters("id"), "left")
-      .select(col("graft_sh"),
-        coalesce(col("cluster"), col("graft_rep")).as("cluster"))
-    fp.join(classLabels, "graft_sh")
-      .select(col("graft_id").as("id"), col("cluster"))
+    try {
+      val (repPairs, _, classes) =
+        hammingRepPairs(fp, "graft_id", "graft_sh", maxHamming, chunks)
+      val repClusters = nearDupClusters(
+        repPairs.select(col("rep_a").as("id_a"), col("rep_b").as("id_b")))
+      // Label at CLASS level first (support-sized join — repClusters only
+      // has rows for reps that paired), then attach members by hash value:
+      // ONE corpus-sized join instead of the members-construction join
+      // plus a member-level label join (r19, guide §2.4). Identical
+      // output: classes has exactly one row per hash value, so every
+      // member picks up exactly the label its class representative got.
+      val classLabels = classes
+        .join(repClusters, classes("graft_rep") === repClusters("id"), "left")
+        .select(col("graft_sh"),
+          coalesce(col("cluster"), col("graft_rep")).as("cluster"))
+      materialized(fp.join(classLabels, "graft_sh")
+        .select(col("graft_id").as("id"), col("cluster")))
+    } finally fp.unpersist()
   }
 
   /** n-gram Jaccard near-dup: like minhashNearDup but the verify step IS
@@ -1036,36 +887,14 @@ object Dedup {
     // candidates cover the requested exact-Jaccard threshold.
     minhashNearDup(df, idCol, textCol, numHashes, bands, shingleN, threshold, seed)
 
-  /** Exact-threshold Jaccard pair join via PREFIX FILTERING (the
-    * SSJoin/PPJoin family — Chaudhuri et al. ICDE 2006, Xiao et al.
-    * WWW 2008) — the LSH-free exact alternative to
-    * [[ngramJaccardNearDup]]: no signatures, no probabilistic recall
-    * argument, same output CONTRACT (every pair with true Jaccard ≥
+  /** Exact-threshold Jaccard pair join via PREFIX FILTERING — the
+    * LSH-free exact alternative to [[ngramJaccardNearDup]]: no
+    * signatures, no probabilistic recall argument, same output CONTRACT
+    * (every pair (id_a < id_b, jaccard) with true shingle Jaccard ≥
     * threshold, exactly — q_jaccard_prefix shares q_ngram_jaccard's
     * oracle verbatim, two different distributed algorithms gated on one
-    * ground truth).
-    *
-    * The filter: order all shingles by GLOBAL RARITY (document
-    * frequency asc, shingle asc — a strict total order), and for each
-    * doc keep only its prefix of p = |A| − ⌈t·|A|⌉ + 1 rarest
-    * shingles. Any two docs with Jaccard ≥ t must share a shingle in
-    * BOTH prefixes (their overlap o ≥ ⌈t·|A|⌉ exceeds what fits
-    * outside either prefix), so the candidate join runs on prefix
-    * shingles only — and prefixes are each doc's RAREST tokens, which
-    * is what keeps candidate buckets small: the boilerplate shingle
-    * every doc shares is at the END of the rarity order and never
-    * joins. ⌈·⌉ is computed with a −1e-9 epsilon so a last-ulp
-    * overestimate of t·|A| can only LENGTHEN a prefix (more
-    * candidates, still exact), never shorten one (missed pairs).
-    *
-    * Scale shape: one df aggregate (shuffle on shingle), one per-doc
-    * sort of its own shingle list (narrow after a co-partitioned
-    * join), a candidate equi-join on prefix shingles, exact verify on
-    * candidate docs only. The loud guard: any prefix shingle whose df
-    * exceeds `maxTokenDf` THROWS (capping would silently break
-    * exactness) — a corpus tripping it should run [[exact]] dedup
-    * first, which removes the identical-doc mass that makes rare-token
-    * prefixes common.
+    * ground truth). Filter, refusal and verify are the [[ppjoin]]
+    * core's.
     *
     * Cache contract: the returned frame is LAZY and backed by two
     * corpus-sized internal caches that are RETAINED on purpose — they
@@ -1101,11 +930,8 @@ object Dedup {
       shingleN: Int = 3,
       threshold: Double = 0.5,
       maxTokenDf: Long = 100000L): (DataFrame, () => Unit) =
-    prefixJaccardOnSetsReleasable(
-      df.select(
-        col(idCol).as("graft_id"),
-        array_distinct(shingles(col(textCol), shingleN)).as("graft_sh")),
-      threshold, maxTokenDf)
+    ppjoin(shingleSets(df, idCol, textCol, shingleN), None,
+      jaccard = true, threshold, maxTokenDf)
 
   /** Capped WEIGHTED shingle Jaccard near-dup (w-shingling with
     * multiplicity): pairs (a < b) with
@@ -1122,17 +948,14 @@ object Dedup {
     * shingles.)
     *
     * Mechanism (and why it is EXACT, not approximate): expand every
-    * shingle into min(occurrences, cap) distinct elements (s,1)…(s,w).
-    * Plain Jaccard over the expanded sets equals capped-weight Jaccard —
-    * |A∩B| counts (s, i ≤ min(wA, wB)) and |A∪B| counts
-    * (s, i ≤ max(wA, wB)) — so the verified PPJoin prefix-filter
-    * machinery runs UNCHANGED on the expanded sets, inheriting its
-    * exactness proof, hot-token guard and scale shape (expansion
-    * multiplies set sizes by ≤ cap — a constant — and candidate volume
-    * stays df-bounded). The oracle replays the same expansion in SQL,
-    * so the whole operator is hash-gated. Elements are separated from
-    * their repeat index by U+0001; shingles containing that control
-    * char would collide (not a natural-text concern). */
+    * shingle into min(occurrences, cap) distinct elements (s,1)…(s,w)
+    * ([[weightedSets]]). Plain Jaccard over the expanded sets equals
+    * capped-weight Jaccard — |A∩B| counts (s, i ≤ min(wA, wB)) and |A∪B|
+    * counts (s, i ≤ max(wA, wB)) — so the [[ppjoin]] core runs UNCHANGED
+    * on the expanded sets, inheriting its exactness proof, refusal and
+    * scale shape (expansion multiplies set sizes by ≤ cap — a constant —
+    * and candidate volume stays df-bounded). The oracle replays the same
+    * expansion in SQL, so the whole operator is hash-gated. */
   def weightedJaccardNearDup(
       df: DataFrame,
       idCol: String,
@@ -1145,10 +968,8 @@ object Dedup {
       df, idCol, textCol, shingleN, cap, threshold, maxTokenDf)._1
 
   /** [[weightedJaccardNearDup]] plus the explicit cache-release handle —
-    * the multi-corpus-session contract every other near-dup operator in
-    * this family carries ([[prefixJaccardNearDupReleasable]]): without
-    * it, a long-lived session churning through corpora cannot return
-    * the PPJoin core's two persisted caches. */
+    * the multi-corpus-session contract of
+    * [[prefixJaccardNearDupReleasable]]. */
   def weightedJaccardNearDupReleasable(
       df: DataFrame,
       idCol: String,
@@ -1156,20 +977,31 @@ object Dedup {
       shingleN: Int = 3,
       cap: Int = 3,
       threshold: Double = 0.5,
-      maxTokenDf: Long = 100000L): (DataFrame, () => Unit) = {
+      maxTokenDf: Long = 100000L): (DataFrame, () => Unit) =
+    ppjoin(weightedSets(df, idCol, textCol, shingleN, cap), None,
+      jaccard = true, threshold, maxTokenDf)
+
+  /** Capped-tf expanded shingle sets (graft_id, graft_sh sorted): shingle
+    * s occurring c times in a doc becomes the elements s␁1 … s␁min(c, cap).
+    * Elements are separated from their repeat index by U+0001; shingles
+    * containing that control char would collide (not a natural-text
+    * concern). */
+  private[graft] def weightedSets(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleN: Int,
+      cap: Int): DataFrame = {
     require(cap >= 1, s"cap=$cap must be >= 1")
-    val counts = df
-      .select(col(idCol).as("graft_id"),
+    df.select(col(idCol).as("graft_id"),
         explode(shingles(col(textCol), shingleN)).as("graft_tok"))
       .groupBy("graft_id", "graft_tok")
       .agg(count(lit(1)).as("graft_c"))
-    val sets = counts
       .select(col("graft_id"), explode(transform(
         sequence(lit(1), least(col("graft_c"), lit(cap.toLong)).cast("int")),
         i => concat_ws("\u0001", col("graft_tok"), i.cast("string")))).as("graft_el"))
       .groupBy("graft_id")
-      .agg(collect_list("graft_el").as("graft_sh"))
-    prefixJaccardOnSetsReleasable(sets, threshold, maxTokenDf)
+      .agg(sort_array(collect_list("graft_el")).as("graft_sh"))
   }
 
   /** Directional CONTAINMENT near-dup: pairs (a, b), a ≠ b, with
@@ -1180,19 +1012,9 @@ object Dedup {
     * (a short doc inside a long one has |A∩B|/|A∪B| ≈ |A|/|B| → 0), and
     * PPJoin's size-ratio filter explicitly prunes them; containment has
     * no size constraint between the sides, which is exactly its point.
-    *
-    * Exact asymmetric prefix filter: order every doc's shingles by
-    * ascending global document frequency (rarest first — any fixed
-    * total order is sound; df order minimizes candidate volume). If
-    * C(A→B) ≥ t then |A∩B| ≥ ⌈t·|A|⌉, so A's first
-    * |A| − ⌈t·|A|⌉ + 1 ordered shingles must contain a shared one
-    * (pigeonhole) — candidates come from joining A-prefixes against the
-    * FULL posting list of the other side (no B-prefix exists: a huge B
-    * can contain a tiny A, so only the probe side shrinks). Exactness
-    * guard as in PPJoin: a prefix shingle hotter than `maxTokenDf`
-    * fails loudly rather than silently exploding the posting join.
-    * Candidate volume = Σ_prefix-shingles df(s) — df-bounded, never
-    * all-pairs. Exact verify |A∩B|/|A| on candidates.
+    * The [[ppjoin]] core joins A's prefix against the FULL posting lists
+    * of the corpus and refuses a hot prefix shingle eagerly, at call
+    * time.
     *
     * EXECUTOR SIZING (measured, r17 sf30 sweep — the rule a 100 TB run
     * needs): the verify step holds the candidate docs' shingle sets in
@@ -1213,450 +1035,268 @@ object Dedup {
       threshold: Double = 0.8,
       maxTokenDf: Long = 100000L): DataFrame = {
     // EAGER by design (r16 advice): the releasable variant's internal
-    // caches are CORPUS-sized (sorted shingle sets; the two-tier path
-    // adds the hash cache and the persisted survivor frame), so a lazy
-    // wrapper that drops the release handle accumulates unbounded cached
-    // state across calls in a long session. Materialize the pair result
-    // (dup-rate-sized, orders of magnitude smaller) into an eager
-    // localCheckpoint, then release every internal cache immediately —
-    // long-session callers wanting lazy plans use the Releasable variant
-    // and release after their own action.
+    // caches are CORPUS-sized, so a lazy wrapper that drops the release
+    // handle accumulates unbounded cached state across calls in a long
+    // session. Materialize the pair result (dup-rate-sized, orders of
+    // magnitude smaller) into an eager localCheckpoint, then release
+    // every internal cache immediately — long-session callers wanting
+    // lazy plans use the Releasable variant and release after their own
+    // action.
     val (res, release) = containmentNearDupReleasable(
       df, idCol, textCol, shingleN, threshold, maxTokenDf)
     try res.localCheckpoint(true) finally release()
   }
 
   /** [[containmentNearDup]] plus an explicit release handle for its
-    * internal shingle-set cache — the multi-corpus-session contract of
-    * [[prefixJaccardNearDupReleasable]].
-    *
-    * `verifyStrategy`: "auto" (default — pick by exact candidate volume,
-    * see the switch comment in the body), "string" (force the one-tier
-    * exact verify), "hash" (force the two-tier hash-prefilter verify).
-    * Both paths are exact; results are identical (DedupSpec pins it). */
+    * internal caches — the multi-corpus-session contract of
+    * [[prefixJaccardNearDupReleasable]]. */
   def containmentNearDupReleasable(
       df: DataFrame,
       idCol: String,
       textCol: String,
       shingleN: Int = 3,
       threshold: Double = 0.8,
-      maxTokenDf: Long = 100000L,
-      verifyStrategy: String = "auto"): (DataFrame, () => Unit) = {
-    require(threshold > 0 && threshold <= 1, s"threshold=$threshold outside (0,1]")
-    // sorted at build (once, cached) so the verify below is the
-    // zero-allocation SortedIntersectSize merge walk instead of
-    // array_intersect's hash-set + materialized-array per candidate pair
-    // experiment knob (r16 task 2): storage level for the containment
-    // caches — "ser" = MEMORY_AND_DISK_SER
-    val level = sys.env.get("SPARK_GRAFT_CONTAIN_STORAGE") match {
-      case Some("ser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
-    val sh = df.select(
-        col(idCol).as("graft_id"),
-        sort_array(array_distinct(shingles(col(textCol), shingleN))).as("graft_sh"))
-      .persist(level)
-    val docTok = sh.select(col("graft_id"), explode(col("graft_sh")).as("graft_tok"))
-    // Document frequency as a WINDOW count over partitionBy(tok) rather
-    // than groupBy + join-back: ONE exchange of the token table instead
-    // of three (the groupBy, the join's re-shuffle of docTok, and the
-    // dfs side — the minhash path's bucket-cap window plays the same
-    // trick).
-    val tokWin = org.apache.spark.sql.expressions.Window.partitionBy("graft_tok")
-    val withDf = docTok.withColumn("graft_df", count(lit(1)).over(tokWin))
-    // What PERSISTS is `ordered` — the doc-packed (df, tok) arrays —
-    // not the raw windowed token table: both the probe-prefix branch
-    // and the posting side below derive from it, the window pipeline
-    // runs exactly once (its output is consumed only here), and the
-    // cache holds corpus-tokens bytes in ~n_docs array rows instead of
-    // ~n_tokens row objects. That row-count difference is what decides
-    // the second scale decade: at sf10 the token-table cache exceeded
-    // the heap's storage share and thrashed (123 s wall on exactly-10×
-    // work); the array-packed cache holds the same bytes in 1/100th
-    // the rows.
-    val ordered = withDf
-      .groupBy("graft_id")
-      .agg(sort_array(collect_list(struct(col("graft_df"), col("graft_tok"))))
-        .as("graft_ord"))
-      .persist(level)
-    // prefix length |A| − ⌈t·|A|⌉ + 1 (PPJoin's ceil spelling, proven
-    // cross-engine). (A row_number/count window spelling of this stage
-    // was measured ~0.5 s SLOWER at sf0.1 — two WindowExec passes over
-    // the full token table lose to one ObjectHashAggregate whose
-    // per-doc arrays are small.)
-    val plen = (size(col("graft_ord")) -
-      ceil(lit(threshold) * size(col("graft_ord")) - lit(1e-9)).cast("int") + 1)
-    // EAGER exactness guard riding the cache materialization (closes the
-    // r15 lazy-guard hole, VERDICT r15 item 4): the arrays are sorted by
-    // ascending (df, tok), so each doc's hottest PREFIX shingle is the
-    // element at position plen — one max() over the persisted doc-packed
-    // frame costs the same scan the old `ordered.count()` already paid,
-    // and the guard now fires HERE, at operator-construction time,
-    // before any caller action. A partial action (take/limit/show) on
-    // the returned frame can no longer bypass it — there is nothing left
-    // to bypass downstream.
-    // The same one-scan aggregate also prices the CANDIDATE JOIN exactly
-    // before running it: each prefix entry with token s (df ≥ 2) joins
-    // df(s) − 1 partner docs, so the pre-length-filter candidate volume
-    // is Σ_docs Σ_{s ∈ prefix, df≥2} (df(s) − 1) — the number that
-    // decides the verify strategy below.
-    val (maxPrefixDf, candVolume) = {
-      val row = ordered
-        .select(
-          max(element_at(col("graft_ord"), plen.cast("int"))
-            .getField("graft_df")).as("mx"),
-          sum(aggregate(slice(col("graft_ord"), lit(1), plen), lit(0L),
-            (acc, e) => acc + when(e.getField("graft_df") >= 2,
-              e.getField("graft_df") - 1).otherwise(lit(0L)))).as("cv"))
-        .first()
-      (if (row.isNullAt(0)) 0L else row.getLong(0), // null = empty corpus
-        if (row.isNullAt(1)) 0L else row.getLong(1))
-    }
-    if (maxPrefixDf > maxTokenDf) {
-      // failure path only: name one offending shingle for the message
-      val hot = ordered
-        .select(explode(slice(col("graft_ord"), lit(1), plen)).as("graft_e"))
-        .filter(col("graft_e.graft_df") > maxTokenDf)
-        .select(col("graft_e.graft_tok")).head().getString(0)
-      sh.unpersist(); ordered.unpersist()
-      throw new IllegalStateException(
-        s"containmentNearDup: prefix shingle '$hot' has document " +
-          s"frequency above maxTokenDf=$maxTokenDf — run exact dedup " +
-          "first, or raise the bound knowingly")
-    }
-    val prefixes = ordered
-      .select(col("graft_id"), size(col("graft_ord")).as("graft_sz"),
-        explode(slice(col("graft_ord"), lit(1), plen)).as("graft_e"))
-      .select(col("graft_id"), col("graft_sz"),
-        col("graft_e.graft_tok").as("graft_tok"),
-        col("graft_e.graft_df").as("graft_df"))
-    // df-1 tail drop: a prefix shingle with global df 1 occurs only in
-    // its own doc, so it cannot produce an a ≠ b candidate
-    // (exactness-neutral) — and it is the BULK of a rarity-ordered
-    // prefix. `prefixes` is consumed exactly once → no persist.
-    val candidates = prefixes.filter(col("graft_df") >= 2).as("a")
-      // the LENGTH filter lives in the join predicate (row-local): both
-      // sides carry their doc's set size, so |A∩B| ≤ |B| ⇒ the container
-      // must satisfy |B| ≥ t·|A| — pruned pairs never reach the verify
-      // join, i.e. their shingle ARRAYS are never shuffled at all
-      .join(
-        // posting side: the FULL token list, re-derived from the same
-        // persisted doc-packed cache the prefix side reads
-        ordered.select(col("graft_id"), size(col("graft_ord")).as("graft_sz"),
-            explode(col("graft_ord.graft_tok")).as("graft_tok")).as("b"),
-        col("a.graft_tok") === col("b.graft_tok") &&
-          col("a.graft_id") =!= col("b.graft_id") &&
-          col("b.graft_sz").cast("double") >=
-            lit(threshold) * col("a.graft_sz") - lit(1e-9))
-      .select(col("a.graft_id").as("id_a"), col("b.graft_id").as("id_b"))
-    // NO mid-pipeline distinct: measured at sf0.1, the candidate join
-    // emits 308k pairs of which 300k are already unique (a pair repeats
-    // only when it shares SEVERAL prefix shingles — rare by
-    // construction, since one shared prefix shingle suffices), so a
-    // distinct here pays a full exchange+aggregate of the candidate set
-    // to trim 3%. Verification processes the few duplicates instead.
-    //
-    // TWO-TIER verify (r16 task 2 — measured at sf10: the old one-tier
-    // string verify was ~55 s of an ~89 s wall, 21.4M candidate pairs
-    // each dragging two full STRING shingle arrays through the pair
-    // table's exchanges). Tier 1 intersects per-doc xxhash64 shingle
-    // hashes — sorted long arrays, ~6× lighter through the shuffle and
-    // long-compare merge walks — which is a provable UPPER bound on the
-    // string intersection when each doc's hashes are collision-free
-    // (h injective on A ⇒ every x ∈ A∩B contributes a distinct element
-    // of h(A)∩h(B)); spurious cross-doc collisions only ADD, so no true
-    // pair is dropped. Injectivity is CHECKED per doc while the hash
-    // cache materializes; on any intra-doc collision (needs a 64-bit
-    // collision inside one doc — never observed) the call falls back to
-    // the one-tier string verify, so exactness is UNCONDITIONAL either
-    // way. Tier 2 string-verifies only the tiny survivor set
-    // (dup-rate-sized: 51k pairs where candidates were 21.4M at sf10),
-    // with the sh cache cut to survivor docs by BROADCAST semi-joins
-    // before any exchange.
-    // Strategy switch: the hash tier costs a fixed overhead (the hsh
-    // cache build + collision aggregate + the survivor materialization —
-    // ~6 extra jobs) that only amortizes when the pair table is big
-    // enough for its exchange payload to dominate. Measured on the scale
-    // fixtures (cold, CPUS=32): at 30.8M candidates (sf10) two-tier wins
-    // ~1.7×; at ≤3.1M (sf1 and below) the one-tier string verify wins.
-    // The volume is known EXACTLY before either path runs (candVolume
-    // above), so the switch is deterministic data logic, not host luck —
-    // and both paths are exact, so the result is identical either way.
-    val twoTier = verifyStrategy match {
-      case "string" => false
-      case "hash" => true
-      case _ => sys.env.get("SPARK_GRAFT_CONTAIN_VERIFY") match {
-        // builder-local A/B hook; only consulted when the caller left
-        // the strategy on auto
-        case Some("string") => false
-        case Some("hash") => true
-        case _ => candVolume >= 8000000L
-      }
-    }
-    def exactVerify(pairs: DataFrame): DataFrame = {
-      val withArrays = pairs
-        .join(sh.select(col("graft_id").as("id_a"), col("graft_sh").as("sh_a")), "id_a")
-        .join(sh.select(col("graft_id").as("id_b"), col("graft_sh").as("sh_b")), "id_b")
-      // sh arrays are sorted at build → the verify intersect is the
-      // zero-allocation merge-walk kernel (parity: IntersectSizeSpec)
-      withArrays
-        .withColumn("containment",
-          org.apache.spark.sql.graft.SortedIntersectSize
-            .sortedIntersectSize(col("sh_a"), col("sh_b")).cast("double") /
-            size(col("sh_a")))
-        .filter(col("containment") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("containment"), 4).as("containment"))
-        .distinct()
-    }
-    if (!twoTier) {
-      val result = exactVerify(candidates)
-      return (result, () => { sh.unpersist(); ordered.unpersist(); () })
-    }
-    val hsh = sh.select(col("graft_id"),
-        size(col("graft_sh")).as("graft_n"),
-        sort_array(array_distinct(
-          transform(col("graft_sh"), x => xxhash64(x)))).as("graft_hs"))
-      .persist(level)
-    val collisions = {
-      val row = hsh.agg(max(col("graft_n") - size(col("graft_hs")))).first()
-      if (row.isNullAt(0)) 0 else row.getInt(0)
-    }
-    if (collisions > 0) {
-      // one-tier fallback: exact string verify over all candidates
-      System.err.println(
-        "[graft.Dedup] containment: intra-doc shingle-hash collision " +
-          "detected — falling back to the one-tier string verify")
-      val result = exactVerify(candidates)
-      (result, () => { sh.unpersist(); ordered.unpersist(); hsh.unpersist(); () })
-    } else {
-      val surv = candidates
-        .join(hsh.select(col("graft_id").as("id_a"), col("graft_n").as("n_a"),
-          col("graft_hs").as("hs_a")), "id_a")
-        .join(hsh.select(col("graft_id").as("id_b"),
-          col("graft_hs").as("hs_b")), "id_b")
-        .filter(
-          org.apache.spark.sql.graft.SortedLongIntersectSize
-            .sortedLongIntersectSize(col("hs_a"), col("hs_b")).cast("double") >=
-            lit(threshold) * col("n_a") - lit(1e-9))
-        .select(col("id_a"), col("id_b"))
-        .distinct()
-        .persist(level)
-      surv.count()
-      // tier 2: survivor docs only — broadcast the (tiny) id sets so the
-      // sh cache is FILTERED without being exchanged
-      val shA = sh
-        .join(broadcast(surv.select(col("id_a").as("graft_id")).distinct()),
-          Seq("graft_id"), "left_semi")
-        .select(col("graft_id").as("id_a"), col("graft_sh").as("sh_a"))
-      val shB = sh
-        .join(broadcast(surv.select(col("id_b").as("graft_id")).distinct()),
-          Seq("graft_id"), "left_semi")
-        .select(col("graft_id").as("id_b"), col("graft_sh").as("sh_b"))
-      val result = surv
-        .join(shA, "id_a")
-        .join(shB, "id_b")
-        .withColumn("containment",
-          org.apache.spark.sql.graft.SortedIntersectSize
-            .sortedIntersectSize(col("sh_a"), col("sh_b")).cast("double") /
-            size(col("sh_a")))
-        .filter(col("containment") >= threshold)
-        .select(col("id_a"), col("id_b"), round(col("containment"), 4).as("containment"))
-        // survivor-scale distinct: surv is already pair-distinct, but a
-        // caller passing DUPLICATE ids would multiply rows through the
-        // set joins — keep exact output parity with the one-tier path
-        .distinct()
-      (result, () => {
-        sh.unpersist(); ordered.unpersist(); hsh.unpersist(); surv.unpersist(); ()
-      })
-    }
+      maxTokenDf: Long = 100000L): (DataFrame, () => Unit) = {
+    val (pairs, release) = ppjoin(shingleSets(df, idCol, textCol, shingleN),
+      None, jaccard = false, threshold, maxTokenDf)
+    (pairs.distinct(), release)
   }
 
-  /** The PPJoin prefix-filter core over ANY per-row element-set frame
-    * `(graft_id, graft_sh: array<string>)` — elements must be distinct
-    * within a row. [[prefixJaccardNearDupReleasable]] feeds it shingle
-    * sets; [[weightedJaccardNearDup]] feeds capped-tf expanded sets. */
+  /** [[prefixJaccardNearDupReleasable]] over ANY per-row element-set
+    * frame `(graft_id, graft_sh: array<string>)` — elements must be
+    * distinct within a row. */
   def prefixJaccardOnSetsReleasable(
       sets: DataFrame,
       threshold: Double,
-      maxTokenDf: Long,
-      verifyStrategy: String = "auto"): (DataFrame, () => Unit) = {
-    require(threshold > 0 && threshold <= 1, s"threshold=$threshold outside (0,1]")
-    // element order inside a set is semantically free — sort at cache
-    // build (once) so the verify runs the zero-allocation
-    // SortedIntersectSize merge walk instead of array_intersect
-    val sh = sets.withColumn("graft_sh", sort_array(col("graft_sh"))).persist()
-    val docTok = sh.select(col("graft_id"), explode(col("graft_sh")).as("graft_tok"))
-    val dfs = docTok.groupBy("graft_tok").agg(count(lit(1)).as("graft_df"))
-    val ordered = docTok.join(dfs, "graft_tok")
-      .groupBy("graft_id")
-      .agg(sort_array(collect_list(struct(col("graft_df"), col("graft_tok"))))
-        .as("graft_ord"))
-    val plen = (size(col("graft_ord")) -
-      ceil(lit(threshold) * size(col("graft_ord")) - lit(1e-9)).cast("int") + 1)
-    // prefix entries carry their 1-based position and the doc's set size
-    // for the POSITION FILTER below
-    val prefixes = ordered
-      .select(col("graft_id"), size(col("graft_ord")).as("graft_sz"),
-        posexplode(slice(col("graft_ord"), lit(1), plen)))
-      .select(col("graft_id"), col("graft_sz"),
-        (col("pos") + 1).as("graft_pos"),
-        col("col.graft_tok").as("graft_tok"),
-        col("col.graft_df").as("graft_df"))
-    // Loud exactness guard FUSED into the prefix filter (not a separate
-    // guard-only job): a hot shingle raises before it can reach the
-    // self-join, and the df-1 tail drop rides the same predicate — a
-    // shared prefix shingle has df >= 2 by definition, so the df-1 tail
-    // (the BULK of a rarity-ordered prefix) can never produce a
-    // candidate (exactness untouched). The POST-filter frame is what
-    // persists: it is a fraction of the raw prefix set, and the
-    // self-join below reads it twice. The count() is NOT a guard relic —
-    // it materializes the cache before the join kicks off, because two
-    // concurrent scans of a cold cache each compute the full
-    // sh→dfs→ordered pipeline (measured 2× on q_jaccard_prefix when the
-    // eager step was dropped in favor of join-time population) — and it
-    // fires the guard loudly BEFORE any join work as a side effect.
-    val joinable = prefixes.filter(
-      when(col("graft_df") > maxTokenDf,
-        raise_error(concat(
-          lit("prefixJaccardNearDup: prefix shingle '"), col("graft_tok"),
-          lit(s"' has document frequency above maxTokenDf=$maxTokenDf " +
-            "— run exact dedup first (identical-doc mass makes rare " +
-            "prefixes hot), or raise the bound knowingly")))
-          .cast("boolean"))
-        .otherwise(col("graft_df") >= 2))
-      .persist()
-    // ONE materializing job does three things (r18-opt: this was a bare
-    // count() plus a SECOND full-scan aggregate for the verify switch —
-    // two jobs where one suffices): it populates the cache before the
-    // self-join reads it twice (two concurrent scans of a cold cache
-    // each recompute the full sh→dfs→ordered pipeline — measured 2× on
-    // q_jaccard_prefix), it fires the loud exactness guard BEFORE any
-    // join work, and it prices the candidate join exactly — each prefix
-    // bucket of n docs contributes n·(n−1)/2 same-token id-ordered
-    // pairs, the number that decides the verify strategy below.
-    val candVolume = joinable.groupBy("graft_tok")
-      .agg(count(lit(1)).as("graft_n"))
-      .agg(sum(col("graft_n") * (col("graft_n") - 1) / 2))
-      .first().getAs[Any](0) match {
-        case null => 0L
-        case d: java.math.BigDecimal => d.longValue()
-        case d: Double => d.toLong
-        case l: Long => l
-      }
-    // Candidate join with the PPJoin LENGTH and POSITION filters:
-    //  - length: J >= t forces t·|B| <= |A| (sizes within factor t);
-    //  - position: matching token at 1-based positions (i, j) bounds the
-    //    overlap by 1 + min(|A|-i, |B|-j), which must reach the
-    //    equivalent-overlap threshold α = ⌈t/(1+t)·(|A|+|B|)⌉. Sound
-    //    because the FIRST common token in the global order has every
-    //    other common token after it on both sides, so the pair's
-    //    qualifying match always survives; pairs pruned here cannot
-    //    reach t. Both are row-local predicates on the joined row —
-    //    they cost nothing and cut the verify set, which is where the
-    //    time goes (array intersections over the candidate pairs).
-    val alpha = ceil(
-      lit(threshold / (1 + threshold)) *
-        (col("a.graft_sz") + col("b.graft_sz")) - lit(1e-9))
-    val candidates = joinable.as("a")
-      .join(joinable.as("b"),
-        col("a.graft_tok") === col("b.graft_tok") &&
-          col("a.graft_id") < col("b.graft_id") &&
-          col("a.graft_sz") >= lit(threshold) * col("b.graft_sz") - lit(1e-9) &&
-          col("b.graft_sz") >= lit(threshold) * col("a.graft_sz") - lit(1e-9) &&
-          (lit(1) + least(
-            col("a.graft_sz") - col("a.graft_pos"),
-            col("b.graft_sz") - col("b.graft_pos"))) >= alpha)
-      .select(col("a.graft_id").as("id_a"), col("b.graft_id").as("id_b"))
-      .distinct()
-    // Verify with SET-SIZE algebra: |A∪B| = |A|+|B|−|A∩B| (shingle
-    // arrays are distinct), so only the intersection is materialized —
-    // array_union would build a deduped 2×-size array per pair for a
-    // number the sizes already determine.
-    def exactVerify(pairs: DataFrame, shSrc: DataFrame): DataFrame = pairs
-      .join(shSrc.select(col("graft_id").as("id_a"), col("graft_sh").as("sh_a")), "id_a")
-      .join(shSrc.select(col("graft_id").as("id_b"), col("graft_sh").as("sh_b")), "id_b")
-      // sh arrays sorted at build → merge-walk kernel (IntersectSizeSpec)
-      .withColumn("graft_o",
-        org.apache.spark.sql.graft.SortedIntersectSize
-          .sortedIntersectSize(col("sh_a"), col("sh_b")).cast("double"))
-      .withColumn("jaccard",
-        col("graft_o") / (size(col("sh_a")) + size(col("sh_b")) - col("graft_o")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+      maxTokenDf: Long): (DataFrame, () => Unit) =
+    ppjoin(sets.withColumn("graft_sh", sort_array(col("graft_sh"))), None,
+      jaccard = true, threshold, maxTokenDf)
 
-    // TWO-TIER verify (r18 — the containment path's r16 structure,
-    // ported verbatim; VERDICT r17 item 2 named the one-tier string
-    // verify as what blocked the sf30 sweep of the pair-cluster
-    // queries: every candidate pair dragged two full STRING shingle
-    // arrays through the verify exchanges, ~45 GB of shuffle temp at
-    // sf30). Tier 1 intersects per-doc xxhash64 shingle hashes — sorted
-    // long arrays, ~6× lighter — an UPPER bound on the string overlap
-    // when each doc's hashes are collision-free (checked while the hash
-    // cache materializes; any intra-doc collision falls back to the
-    // one-tier exact verify, so exactness is UNCONDITIONAL). Jaccard is
-    // increasing in the overlap, so the tier-1 bound admits every true
-    // pair; tier 2 string-verifies only the dup-rate-sized survivor
-    // set, with the sh cache cut to survivor docs by BROADCAST
-    // semi-joins before any exchange. The switch mirrors containment:
-    // the hash tier's fixed overhead (hsh cache + collision aggregate +
-    // survivor materialization) only amortizes on big candidate sets —
-    // measured crossover ~8M pairs; the volume is known exactly from
-    // the prefix buckets (candVolume above, computed by the same job
-    // that materialized the cache) before either path runs.
-    val twoTier = verifyStrategy match {
-      case "string" => false
-      case "hash" => true
-      case _ => sys.env.get("SPARK_GRAFT_JACCARD_VERIFY") match {
-        // builder-local A/B hook; only consulted on auto
-        case Some("string") => false
-        case Some("hash") => true
-        case _ => candVolume >= 8000000L
+  /** (graft_id, graft_sh): each doc's distinct n-gram shingles, sorted. */
+  private[graft] def shingleSets(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleN: Int): DataFrame =
+    df.select(col(idCol).as("graft_id"),
+      sort_array(array_distinct(shingles(col(textCol), shingleN))).as("graft_sh"))
+
+  /** Exact candidate volume from which [[ppjoin]] verifies in two tiers. */
+  private[graft] val TwoTierCandidates = 8000000L
+
+  /** The PPJoin core (SSJoin/PPJoin — Chaudhuri et al. ICDE 2006, Xiao et
+    * al. WWW 2008) behind every exact set-similarity join here:
+    * [[prefixJaccardNearDup]], [[weightedJaccardNearDup]],
+    * [[containmentNearDup]] and [[containmentAgainstFrozen]]. `sets` is
+    * (graft_id, graft_sh: sorted distinct array<string>). Returns the
+    * LAZY verified pairs (id_a, id_b, jaccard | containment) and a
+    * release handle for every cache the call made; on any failure,
+    * the refusal included, the call releases them itself.
+    *
+    * Prefix builder. Each doc's elements are ordered by ascending
+    * document frequency (df, then the element — a strict total order),
+    * df counted over the corpus itself or, with a `reference`, looked up
+    * in the frozen reference (unseen elements get df 0). A doc's prefix
+    * is its first p = |A| − ⌈t·|A|⌉ + 1 elements: a pair reaching t
+    * shares at least ⌈t·|A|⌉ elements, so one lies in A's prefix
+    * (pigeonhole) — for Jaccard in both prefixes. ⌈·⌉ carries a −1e-9
+    * epsilon, so a last-ulp overestimate of t·|A| can only LENGTHEN a
+    * prefix. Rarest-first keeps posting lists short: the boilerplate
+    * shingle every doc shares sorts last and never joins. What persists
+    * is the doc-packed (df, element) arrays — ~n_docs rows, not the
+    * ~n_tokens of the token table, which at sf10 outgrew the heap's
+    * storage share and thrashed (123 s on 10× work). Document frequency
+    * within a corpus is a window count over the element: one exchange.
+    *
+    * One eager aggregate over the prefixes, inside the call:
+    *  - the refusal: a prefix element with df above `maxTokenDf` THROWS,
+    *    naming it (capping would silently break exactness) — a corpus
+    *    tripping it should run [[exact]] dedup first, which removes the
+    *    identical-doc mass that makes rare prefixes common;
+    *  - the exact candidate volume before any join: Jaccard joins prefix
+    *    to prefix (Σ over elements of n·(n−1)/2, n = docs holding it in
+    *    their prefix); containment joins A's prefix to the FULL posting
+    *    lists of the other side — no B prefix exists, a huge B can
+    *    contain a tiny A — (Σ n·(df − 1) within a corpus, Σ n·df against
+    *    a reference).
+    *
+    * Candidates. Prefix elements whose postings hold no other doc (df 1
+    * within a corpus, df 0 against a reference) — the bulk of a
+    * rarity-ordered prefix — never join. The LENGTH filter rides the join
+    * predicate (containment |B| ≥ t·|A|; Jaccard both ways), and Jaccard
+    * adds PPJoin's POSITION filter: a match at 1-based positions (i, j)
+    * bounds the overlap by 1 + min(|A|−i, |B|−j), which must reach
+    * α = ⌈t/(1+t)·(|A|+|B|)⌉ — sound because the pair's first common
+    * element in the global order has every other one after it on both
+    * sides. Jaccard pairs are deduplicated before the verify; containment
+    * pairs repeat only when they share several prefix elements (3% at
+    * sf0.1: 308k candidates, 300k unique), so their callers deduplicate
+    * the verified result instead of paying an exchange of the candidates.
+    *
+    * Two-tier verify. The exact verify joins both sorted sets onto each
+    * pair and merge-walks their intersection o (Jaccard o/(|A|+|B|−o) by
+    * set-size algebra, containment o/|A|). From `twoTierAt` candidates
+    * on, tier 1 first intersects per-doc sorted xxhash64 arrays (~6×
+    * lighter through the shuffle): when every doc's hashes are
+    * collision-free ([[hashSets]]) that intersection bounds o from above
+    * and both measures grow with o, so no true pair is dropped. Tier 2
+    * string-verifies the survivors only, each side's sets cut to
+    * survivor docs by broadcast semi-joins. An intra-doc hash collision
+    * (never observed) falls back to the one-tier verify, so both tiers
+    * return identical pairs. The switch is data logic, not host luck:
+    * the hash tier's fixed cost (hash cache, injectivity aggregate,
+    * survivor materialization) paid back only on big candidate sets —
+    * at sf10, 21.4M candidates each dragging two string arrays made the
+    * one-tier verify ~55 s of an ~89 s wall and two-tier won ~1.7× at
+    * 30.8M; at ≤3.1M one-tier won. Tests force a tier with `twoTierAt`
+    * 0 or Long.MaxValue. */
+  private[graft] def ppjoin(
+      sets: DataFrame,
+      reference: Option[FrozenContainmentReference],
+      jaccard: Boolean,
+      threshold: Double,
+      maxTokenDf: Long,
+      twoTierAt: Long = TwoTierCandidates): (DataFrame, () => Unit) = {
+    require(threshold > 0 && threshold <= 1, s"threshold=$threshold outside (0,1]")
+    val caches = new Caches
+    caches.onFailure {
+      val sh = caches.keep(sets)
+      val tokens = sh.select(col("graft_id"), explode(col("graft_sh")).as("graft_tok"))
+      val withDf = reference match {
+        case None => tokens.withColumn("graft_df", count(lit(1)).over(Window.partitionBy("graft_tok")))
+        case Some(ref) => tokens.join(ref.refDfs, Seq("graft_tok"), "left")
+          .withColumn("graft_df", coalesce(col("graft_df"), lit(0L)))
       }
+      val ordered = caches.keep(withDf.groupBy("graft_id")
+        .agg(sort_array(collect_list(struct(col("graft_df"), col("graft_tok")))).as("graft_ord")))
+      val plen = size(col("graft_ord")) -
+        ceil(lit(threshold) * size(col("graft_ord")) - lit(1e-9)).cast("int") + 1
+      val prefixes = ordered
+        .select(col("graft_id"), size(col("graft_ord")).as("graft_sz"),
+          posexplode(slice(col("graft_ord"), lit(1), plen)))
+        .select(col("graft_id"), col("graft_sz"), (col("pos") + 1).as("graft_pos"),
+          col("col.graft_tok").as("graft_tok"), col("col.graft_df").as("graft_df"))
+      // a doc's own postings entry: within a corpus every df counts it
+      val own = if (reference.isEmpty) 1L else 0L
+      // graft_v: the candidates each prefix entry (containment) or each
+      // prefix element (Jaccard) contributes
+      val (maxPrefixDf, volume) = {
+        val perEntry =
+          if (jaccard) prefixes.groupBy("graft_tok")
+            .agg(max(col("graft_df")).as("graft_df"), count(lit(1)).as("graft_n"))
+            .select(col("graft_df"),
+              shiftright(col("graft_n") * (col("graft_n") - 1), 1).as("graft_v"))
+          else prefixes.select(col("graft_df"),
+            greatest(col("graft_df") - own, lit(0L)).as("graft_v"))
+        val row = perEntry.agg(max(col("graft_df")), sum(col("graft_v"))).first()
+        (if (row.isNullAt(0)) 0L else row.getLong(0),
+          if (row.isNullAt(1)) 0L else row.getLong(1))
+      }
+      if (maxPrefixDf > maxTokenDf) {
+        val hot = prefixes.filter(col("graft_df") > maxTokenDf)
+          .select(col("graft_tok")).head().getString(0)
+        throw new IllegalStateException(
+          s"PPJoin: prefix element '$hot' has document frequency above " +
+            s"maxTokenDf=$maxTokenDf — run exact dedup first, or raise the " +
+            "bound knowingly")
+      }
+      val joinable = prefixes.filter(col("graft_df") > own)
+      val setsB = reference.fold(sh)(_.refSets)
+      val candidates =
+        if (jaccard) joinable.as("a")
+          .join(joinable.as("b"),
+            col("a.graft_tok") === col("b.graft_tok") &&
+              col("a.graft_id") < col("b.graft_id") &&
+              col("a.graft_sz") >= lit(threshold) * col("b.graft_sz") - lit(1e-9) &&
+              col("b.graft_sz") >= lit(threshold) * col("a.graft_sz") - lit(1e-9) &&
+              (lit(1) + least(
+                col("a.graft_sz") - col("a.graft_pos"),
+                col("b.graft_sz") - col("b.graft_pos"))) >=
+                ceil(lit(threshold / (1 + threshold)) *
+                  (col("a.graft_sz") + col("b.graft_sz")) - lit(1e-9)))
+          .select(col("a.graft_id").as("id_a"), col("b.graft_id").as("id_b"))
+          .distinct()
+        else joinable.as("a")
+          .join(
+            setsB.select(col("graft_id"), size(col("graft_sh")).as("graft_sz"),
+              explode(col("graft_sh")).as("graft_tok")).as("b"),
+            col("a.graft_tok") === col("b.graft_tok") &&
+              (if (own == 1L) col("a.graft_id") =!= col("b.graft_id") else lit(true)) &&
+              col("b.graft_sz").cast("double") >= lit(threshold) * col("a.graft_sz") - lit(1e-9))
+          .select(col("a.graft_id").as("id_a"), col("b.graft_id").as("id_b"))
+      def measure(o: Column, na: Column, nb: Column): Column =
+        if (jaccard) o / (na + nb - o) else o / na
+      def exactVerify(pairs: DataFrame, a: DataFrame, b: DataFrame): DataFrame = pairs
+        .join(a.select(col("graft_id").as("id_a"), col("graft_sh").as("sh_a")), "id_a")
+        .join(b.select(col("graft_id").as("id_b"), col("graft_sh").as("sh_b")), "id_b")
+        .withColumn("graft_m", measure(
+          SortedIntersectSize.sortedIntersectSize(col("sh_a"), col("sh_b")).cast("double"),
+          size(col("sh_a")), size(col("sh_b"))))
+        .filter(col("graft_m") >= threshold)
+        .select(col("id_a"), col("id_b"),
+          round(col("graft_m"), 4).as(if (jaccard) "jaccard" else "containment"))
+      val verified =
+        if (volume < twoTierAt) exactVerify(candidates, sh, setsB)
+        else {
+          val (hshA, injectiveA) = hashSets(sh, caches)
+          val (hshB, injectiveB) =
+            reference.fold((hshA, injectiveA))(r => (r.refHsh, r.refInjective))
+          if (!(injectiveA && injectiveB)) {
+            System.err.println("[graft.Dedup] PPJoin: intra-doc shingle-hash " +
+              "collision — falling back to the one-tier string verify")
+            exactVerify(candidates, sh, setsB)
+          } else {
+            def hashes(h: DataFrame, side: String) = h.select(col("graft_id").as(s"id_$side"),
+              col("graft_n").as(s"n_$side"), col("graft_hs").as(s"hs_$side"))
+            val surv = caches.keep(candidates
+              .join(hashes(hshA, "a"), "id_a")
+              .join(hashes(hshB, "b"), "id_b")
+              .filter(measure(SortedLongIntersectSize.sortedLongIntersectSize(
+                col("hs_a"), col("hs_b")).cast("double"), col("n_a"), col("n_b")) >= threshold)
+              .select(col("id_a"), col("id_b")))
+            surv.count()
+            def survivors(s: DataFrame, id: String) = s.join(
+              broadcast(surv.select(col(id).as("graft_id"))), Seq("graft_id"), "left_semi")
+            exactVerify(surv, survivors(sh, "id_a"), survivors(setsB, "id_b"))
+          }
+        }
+      (verified, () => caches.release())
     }
-    if (!twoTier) {
-      (exactVerify(candidates, sh),
-        () => { sh.unpersist(); joinable.unpersist(); () })
-    } else {
-      val hsh = sh.select(col("graft_id"),
-          size(col("graft_sh")).as("graft_n"),
-          sort_array(array_distinct(
-            transform(col("graft_sh"), x => xxhash64(x)))).as("graft_hs"))
-        .persist()
-      val collisions = {
-        val row = hsh.agg(max(col("graft_n") - size(col("graft_hs")))).first()
-        if (row.isNullAt(0)) 0 else row.getInt(0)
-      }
-      if (collisions > 0) {
-        System.err.println(
-          "[graft.Dedup] prefixJaccard: intra-doc shingle-hash collision " +
-            "detected — falling back to the one-tier string verify")
-        (exactVerify(candidates, sh),
-          () => { sh.unpersist(); joinable.unpersist(); hsh.unpersist(); () })
-      } else {
-        val surv = candidates
-          .join(hsh.select(col("graft_id").as("id_a"), col("graft_n").as("n_a"),
-            col("graft_hs").as("hs_a")), "id_a")
-          .join(hsh.select(col("graft_id").as("id_b"), col("graft_n").as("n_b"),
-            col("graft_hs").as("hs_b")), "id_b")
-          .withColumn("graft_oh",
-            org.apache.spark.sql.graft.SortedLongIntersectSize
-              .sortedLongIntersectSize(col("hs_a"), col("hs_b")).cast("double"))
-          // upper-bound Jaccard: o_h ≥ o and x/(na+nb−x) is increasing,
-          // so every true pair survives tier 1
-          .filter(col("graft_oh") /
-            (col("n_a") + col("n_b") - col("graft_oh")) >= threshold)
-          .select(col("id_a"), col("id_b"))
-          .persist()
-        surv.count()
-        val survDocs = surv.select(col("id_a").as("graft_id"))
-          .unionByName(surv.select(col("id_b").as("graft_id"))).distinct()
-        val shSurv = sh
-          .join(broadcast(survDocs), Seq("graft_id"), "left_semi")
-        (exactVerify(surv, shSurv),
-          () => { sh.unpersist(); joinable.unpersist()
-            hsh.unpersist(); surv.unpersist(); () })
-      }
+  }
+
+  /** Tier-1 hash arrays of sorted sets, persisted into `caches`:
+    * (graft_id, graft_n = set size, graft_hs = sorted distinct xxhash64
+    * of the elements), and whether every row's hashes are collision-free
+    * (graft_n = |graft_hs|) — what makes a hash intersection an upper
+    * bound on the string one. */
+  private def hashSets(sets: DataFrame, caches: Caches): (DataFrame, Boolean) = {
+    val hsh = caches.keep(sets.select(col("graft_id"), size(col("graft_sh")).as("graft_n"),
+      sort_array(array_distinct(transform(col("graft_sh"), x => xxhash64(x)))).as("graft_hs")))
+    val row = hsh.agg(max(col("graft_n") - size(col("graft_hs")))).first()
+    (hsh, row.isNullAt(0) || row.getInt(0) == 0)
+  }
+
+  /** The caches one call persists, released together on whichever exit
+    * the call takes. A plan something else already cached stays that
+    * owner's: caches are plan-keyed, so a batch identical to a frozen
+    * reference shares the reference's cache, and releasing it here would
+    * drop the reference's. */
+  private final class Caches {
+    private var held = List.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = {
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) held ::= df
+      df.persist()
     }
+    def release(): Unit = held.reverse.foreach(_.unpersist())
+    def onFailure[T](body: => T): T =
+      try body catch { case e: Throwable => release(); throw e }
+  }
+
+  /** `df` persisted and materialized, or nothing left cached if that fails. */
+  private def materialized(df: DataFrame): DataFrame = {
+    val cached = df.persist()
+    try { cached.count(); cached }
+    catch { case e: Throwable => cached.unpersist(); throw e }
   }
 
   /** Collapse a near-dup pair graph into clusters: returns (id, cluster)

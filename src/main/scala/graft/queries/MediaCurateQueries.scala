@@ -126,9 +126,14 @@ object MediaCurateQueries {
         val videoPairs = mm.videoNearDupPairs(
           mm.syntheticVideoCorpusMemo(s, d),
           everyMs = 200L, maxHamming = 6, minMatchedFrames = 3)
-        manifest(docs, "doc_id", textPairs, "text")
-          .unionAll(manifestFromLabels(images, "media_id", imageLabels, "image"))
+        // the label frames are caller-owned caches: materialize their
+        // (item-sized) manifest rows before releasing them
+        val labelled = manifestFromLabels(images, "media_id", imageLabels, "image")
           .unionAll(manifestFromLabels(audios, "media_id", audioLabels, "audio"))
+          .localCheckpoint(true)
+        imageLabels.unpersist(); audioLabels.unpersist()
+        manifest(docs, "doc_id", textPairs, "text")
+          .unionAll(labelled)
           .unionAll(manifest(videos, "media_id", videoPairs, "video"))
           .orderBy("modality", "item_id")
       }))

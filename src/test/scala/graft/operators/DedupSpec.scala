@@ -285,9 +285,8 @@ class DedupSpec extends AnyFunSuite {
   test("prefixJaccardNearDup throws loudly on a hot prefix shingle instead of capping") {
     val clones = (1L to 40L).map(i => (i, "the same exact boilerplate text everywhere"))
       .toDF("doc_id", "text")
-    // The guard is fused into the candidate pass (raise_error in the
-    // prefix filter — r14 it was an eager count() job), so it surfaces
-    // when the plan RUNS, wrapped in Spark's task-failure chain.
+    // The guard rides the PPJoin core's eager prefix aggregate, so it
+    // fires inside the call, before any action.
     val e = intercept[Throwable] {
       Dedup.prefixJaccardNearDup(clones, "doc_id", "text",
         shingleN = 3, threshold = 0.5, maxTokenDf = 10L).collect()
@@ -326,9 +325,10 @@ class DedupSpec extends AnyFunSuite {
     "string verify on the fixture corpus") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     def run(strategy: String): Set[(Long, Long, Double)] = {
-      val (res, release) = Dedup.containmentNearDupReleasable(
-        docs, "doc_id", "text", shingleN = 3, threshold = 0.8,
-        maxTokenDf = 100000L, verifyStrategy = strategy)
+      val (res, release) = Dedup.ppjoin(
+        Dedup.shingleSets(docs, "doc_id", "text", shingleN = 3), None,
+        jaccard = false, threshold = 0.8, maxTokenDf = 100000L,
+        twoTierAt = if (strategy == "hash") 0L else Long.MaxValue)
       val got = res.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       release()
@@ -340,6 +340,29 @@ class DedupSpec extends AnyFunSuite {
       s"strategy drift: onlyString=${viaString -- viaHash} " +
         s"onlyHash=${viaHash -- viaString}")
     assert(viaString.nonEmpty, "fixture must produce containment pairs")
+  }
+
+  test("prefix and weighted Jaccard verify tiers are interchangeable: the " +
+    "forced hash tier returns byte-identical pairs to the string verify") {
+    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+    for ((name, sets) <- Seq(
+        "prefix" -> Dedup.shingleSets(docs, "doc_id", "text", 3),
+        "weighted" -> Dedup.weightedSets(docs, "doc_id", "text", 3, 3))) {
+      def run(twoTierAt: Long): Set[(Long, Long, Double)] = {
+        val (res, release) = Dedup.ppjoin(sets, None, jaccard = true,
+          threshold = 0.5, maxTokenDf = 100000L, twoTierAt = twoTierAt)
+        val got = res.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        release()
+        got
+      }
+      val viaString = run(Long.MaxValue)
+      val viaHash = run(0L)
+      assert(viaString == viaHash,
+        s"$name tier drift: onlyString=${viaString -- viaHash} " +
+          s"onlyHash=${viaHash -- viaString}")
+      assert(viaString.nonEmpty, s"$name: fixture must produce pairs")
+    }
   }
 
   test("containmentNearDup's eager guard stays quiet on a cool corpus " +

@@ -90,4 +90,53 @@ class PpjoinReleaseSpec extends AnyFunSuite {
           s"(leftover=${cachedIds -- baseline})")
     }
   }
+
+  test("every PPJoin-family refusal returns the persisted-RDD set to " +
+    "baseline") {
+    val spark = this.spark
+    import spark.implicits._
+    def cachedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // plan-distinct text: a refusal must release ITS caches, never one
+    // another suite cached for an identical plan
+    val clones = (1L to 40L).map(i => (i, "the same exact boilerplate text releasespec"))
+      .toDF("doc_id", "text")
+    def refuses(name: String)(call: => Any): Unit = {
+      val baseline = cachedIds
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+      val e = intercept[Throwable](call)
+      assert(chain(e).exists(_.contains("exact dedup first")), s"$name: ${chain(e)}")
+      assert(cachedIds == baseline,
+        s"$name: refusal left ${cachedIds -- baseline} persisted")
+    }
+    refuses("prefixJaccardNearDup")(Dedup.prefixJaccardNearDup(
+      clones, "doc_id", "text", shingleN = 3, threshold = 0.5, maxTokenDf = 10L))
+    refuses("weightedJaccardNearDup")(Dedup.weightedJaccardNearDup(
+      clones, "doc_id", "text", shingleN = 3, cap = 3, threshold = 0.5, maxTokenDf = 10L))
+    refuses("containmentNearDup")(Dedup.containmentNearDup(
+      clones, "doc_id", "text", shingleN = 3, threshold = 0.8, maxTokenDf = 10L))
+    refuses("containmentAgainst")(Dedup.containmentAgainst(
+      clones, clones, "doc_id", "text", shingleN = 3, threshold = 0.8, maxTokenDf = 10L))
+    val frozen = Dedup.freezeContainmentReference(
+      clones, "doc_id", "text", shingleN = 3, maxTokenDf = 10L)
+    try refuses("containmentAgainstFrozen")(
+      Dedup.containmentAgainstFrozen(clones, frozen, threshold = 0.8))
+    finally frozen.release()
+  }
+
+  test("hammingNearDupClusters hands back its labels caller-owned and " +
+    "keeps nothing else persisted") {
+    val spark = this.spark
+    import spark.implicits._
+    def cachedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val hashes = (0L until 400L).map(i => (i, i * 7919L % 97L)).toDF("id", "h")
+    val baseline = cachedIds
+    val labels = Dedup.hammingNearDupClusters(hashes, "id", "h", maxHamming = 3)
+    assert(labels.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "labels come back persisted")
+    assert((cachedIds -- baseline).size == 1, s"only the labels: ${cachedIds -- baseline}")
+    assert(labels.count() == 400)
+    labels.unpersist()
+    assert(cachedIds == baseline, s"leftover=${cachedIds -- baseline}")
+  }
 }

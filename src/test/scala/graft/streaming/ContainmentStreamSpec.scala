@@ -120,10 +120,14 @@ class ContainmentStreamSpec extends AnyFunSuite {
     def run(strategy: String): Set[Long] = {
       val frozen = Dedup.freezeContainmentReference(reference, "doc_id", "text")
       try {
-        val adm = Dedup.containmentAgainstFrozen(
-          corpus, frozen, threshold = 0.8, verifyStrategy = strategy)
+        val (contained, release) = Dedup.ppjoin(
+          Dedup.shingleSets(corpus, "doc_id", "text", shingleN = 3), Some(frozen),
+          jaccard = false, threshold = 0.8, maxTokenDf = frozen.maxTokenDf,
+          twoTierAt = if (strategy == "hash") 0L else Long.MaxValue)
+        val adm = corpus.join(contained.select(col("id_a").as("doc_id")),
+          Seq("doc_id"), "left_anti")
         val ids = adm.select("doc_id").as[Long].collect().toSet
-        adm.unpersist()
+        release()
         ids
       } finally frozen.release()
     }
